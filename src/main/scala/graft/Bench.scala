@@ -7,6 +7,37 @@ import org.apache.spark.sql.SparkSession
   * (count() alone would let Catalyst prune the projections).
   */
 object Bench {
+
+  /** The timed passes reduced to the figures of the final line.
+    * `samples` keeps each query with at least one successful pass (name
+    * order); `failed` names every query with a failed pass; `total` sums
+    * the per-query minima of `samples`, so a query that failed every pass
+    * adds nothing to it.
+    */
+  final case class Summary(samples: Seq[(String, Seq[Double])], failed: Seq[String],
+                           total: Double, stallP: Double, mtSt: Double)
+
+  /** `runs` holds, per query, one entry per pass: its elapsed seconds, or
+    * None when the pass threw — a failed pass records no sample, so it
+    * can never read as a fast one. `stallP` is the fraction of samples
+    * that are both ≥ 1.5× and ≥ 0.25 s over their query's min (the floor
+    * keeps sub-second jitter on tiny queries from counting as stalls);
+    * `mtSt` is the calibration contention ratio min(mt)/min(st).
+    */
+  def summarize(runs: Seq[(String, Seq[Option[Double]])],
+                calibSt: Seq[Double], calibMt: Seq[Double]): Summary = {
+    val samples = runs.map { case (n, rs) => n -> rs.flatten }.filter(_._2.nonEmpty)
+    val failed = runs.collect { case (n, rs) if rs.contains(None) => n }
+    val nStalled = samples.map { case (_, ts) =>
+      val m = ts.min
+      ts.count(t => t >= 1.5 * m && t - m >= 0.25)
+    }.sum
+    val nSamples = samples.map(_._2.size).sum
+    Summary(samples, failed, samples.map(_._2.min).sum,
+      if (nSamples > 0) nStalled.toDouble / nSamples else 0.0,
+      if (calibSt.nonEmpty && calibSt.min > 0 && calibMt.nonEmpty) calibMt.min / calibSt.min else 0.0)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -78,7 +109,7 @@ object Bench {
 
     val names = SparkEntry.queries.toSeq.sortBy(_._1).map(_._1)
       .filter(n => only.forall(_.contains(n)))
-    val perPass = scala.collection.mutable.Map.empty[String, List[Double]]
+    val perPass = scala.collection.mutable.Map.empty[String, List[Option[Double]]]
     val calibSt = scala.collection.mutable.ListBuffer.empty[Double]
     val calibMt = scala.collection.mutable.ListBuffer.empty[Double]
     for (p <- 1 to passes) {
@@ -87,18 +118,24 @@ object Bench {
       // steal), which reads as a spurious whole-catalog regression when
       // rounds are compared. calib_st is one thread of branch-free
       // xorshift (single-core speed); calib_mt runs the identical loop on
-      // 32 threads and reports wall time (steal under full load — the
-      // regime the queries run in). Comparing rounds: divide query times
-      // by the calib ratio before calling anything a regression.
+      // the session's SPARK_GRAFT_CPUS threads and reports wall time
+      // (steal under full load — the regime the queries run in).
+      // Comparing rounds: divide query times by the calib ratio before
+      // calling anything a regression.
       calibSt += Calib.singleThread()
-      calibMt += Calib.multiThread(32)
+      calibMt += Calib.multiThread(cpus.toInt)
       val order = new scala.util.Random(p).shuffle(names)
       for (name <- order) {
         val fn = SparkEntry.queries(name)
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-        val dt = (System.nanoTime() - t0) / 1e9
+        val dt =
+          try {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            Some((System.nanoTime() - t0) / 1e9)
+          } catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            None
+          }
         // queries persist intermediates internally (exploded shingles, edge
         // lists); dropping them between queries keeps each measurement
         // independent and bounds heap growth over the 70+ query run (an 8g
@@ -107,8 +144,9 @@ object Bench {
         perPass(name) = perPass.getOrElse(name, Nil) :+ dt
       }
     }
-    val results = names.map(n => n -> perPass(n).min)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+    val sum = summarize(names.map(n => n -> perPass(n)), calibSt.toSeq, calibMt.toSeq)
+    val qs = sum.samples.map { case (k, ts) => "\"" + k + "\":" + f"${ts.min}%.3f" }
+      .mkString("{", ",", "}")
     // Detail-line entries ordered by ASCENDING per-query min so the most
     // expensive queries print LAST: the driver's artifact keeps only the
     // final ~2 KB of stdout, which preserves the end of this line — the
@@ -116,10 +154,9 @@ object Bench {
     // comparison flags) now survive in the driver's own file instead of
     // being cut off (round-16 VERDICT residual #1). Full map still goes
     // to bench_passes.json.
-    val raw = names.sortBy(n => perPass(n).min).map { n =>
-      "\"" + n + "\":[" + perPass(n).map(v => f"$v%.3f").mkString(",") + "]"
+    val raw = sum.samples.sortBy(_._2.min).map { case (n, ts) =>
+      "\"" + n + "\":[" + ts.map(v => f"$v%.3f").mkString(",") + "]"
     }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
     // Two-line emission (BENCH_r05 lesson): the driver tail-captures stdout
     // (last ~2000 chars) and parses the LAST line, so the per-pass arrays —
     // which tripled the line and truncated the head 28 queries in r5 — go
@@ -131,26 +168,23 @@ object Bench {
     // line instead carries two SCALAR stall-attribution keys (additive,
     // ~30 chars): "mtst" = the calib contention ratio min(mt)/min(st)
     // (clean host ≈ 1.0; the contended r16 window read 1.17) and
-    // "stallp" = the fraction of all per-pass samples ≥ 1.5× their
-    // query's min (episodic-stall density; a clean window reads < ~0.05).
-    // Together with the reordered detail line a contended driver window
-    // self-classifies from the artifact alone.
+    // "stallp" = the fraction of all per-pass samples ≥ 1.5× and
+    // ≥ 0.25 s over their query's min (episodic-stall density; a clean
+    // window reads < ~0.05). Together with the reordered detail line a
+    // contended bench window self-classifies from the artifact alone.
+    // "failed" (additive) lists the queries with a failed pass; a failed
+    // pass records no sample, and a query that failed every pass is left
+    // out of "queries" and "value".
     val calibJson = "{\"st\":[" + calibSt.map(v => f"$v%.3f").mkString(",") +
       "],\"mt\":[" + calibMt.map(v => f"$v%.3f").mkString(",") + "]}"
-    val allSamples = names.flatMap(n => perPass(n))
-    val nStalled = names.map { n =>
-      val m = perPass(n).min
-      perPass(n).count(_ >= 1.5 * m)
-    }.sum
-    val stallP = if (allSamples.nonEmpty) nStalled.toDouble / allSamples.size else 0.0
-    val mtSt = if (calibSt.nonEmpty && calibSt.min > 0) calibMt.min / calibSt.min else 0.0
+    val failedJson = sum.failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val detail = f"""{"detail":"per-pass","passes":$passes,"warmup":$warmed,"calib":$calibJson,"times":$raw}"""
     println(detail)
     try {
       val out = new java.io.PrintWriter("bench_passes.json")
       try out.println(detail) finally out.close()
     } catch { case e: Throwable => System.err.println(s"[bench] pass file write failed: ${e.getMessage}") }
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"warmup":$warmed,"calib":$calibJson,"mtst":$mtSt%.2f,"stallp":$stallP%.3f,"sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":${sum.total}%.3f,"unit":"sec","queries":$qs,"warmup":$warmed,"calib":$calibJson,"mtst":${sum.mtSt}%.2f,"stallp":${sum.stallP}%.3f,"failed":$failedJson,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

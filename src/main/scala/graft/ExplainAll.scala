@@ -9,9 +9,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.ExplainAll <outDir> <suffix> [sfDir] [q1,q2,...]
   *
-  * Plans are captured at bench parity: local[32], shuffle partitions 32
-  * (the bench's session shape — ExplainQ's local[4] prints a different
-  * partitioning). Queries are PLANNED, not executed; iterative builds
+  * Plans are captured at bench parity: local[SPARK_GRAFT_CPUS], shuffle
+  * partitions to match (default 32, the bench's session shape — a
+  * different core count prints a different partitioning). Queries are
+  * PLANNED, not executed; iterative builds
   * (graph loops, quantizer fits) still run their small construction jobs
   * at frame build, exactly as PlanAudit does.
   */

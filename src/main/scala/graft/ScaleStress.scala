@@ -302,7 +302,7 @@ object ScaleStress {
     // first-compile costs (same rationale as Bench's warm pass). The warm
     // runs the STRESS plan (stressFn at copies=1), not the catalog query:
     // five stressed ops override with scale-path kernels whose codegen
-    // (e.g. SimHashPoly128) the catalog plan never compiles, so a catalog
+    // (e.g. SimHashPoly128Text) the catalog plan never compiles, so a catalog
     // warm left the override's first-compile cost inside the timed base
     // rep (round-9 ADVICE). For un-overridden queries stressFn IS the
     // catalog query, so nothing changes there.

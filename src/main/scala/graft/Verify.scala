@@ -2,10 +2,18 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare (tools/compare.py).
+  * Usage: runMain graft.Verify <sfDir> <outDir> [q1 q2 ...] — trailing
+  * query names dump just those queries (and their oracles), so a new
+  * oracle can be DuckDB-checked without a full catalog dump.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val Array(sfDir, outDir) = args.take(2)
+    val only = args.drop(2).toSet
+    require(only.subsetOf(SparkEntry.queries.keySet),
+      s"unknown queries: ${(only -- SparkEntry.queries.keySet).mkString(", ")}")
+    def chosen(name: String) = only.isEmpty || only(name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -15,7 +23,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.iterator.filter { case (n, _) => chosen(n) }.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -36,7 +44,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.iterator.filter { case (k, _) => chosen(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

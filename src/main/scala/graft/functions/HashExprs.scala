@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftx.Bridge
@@ -14,49 +14,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * per seed (round 1: SimHash = fold carrying a 64-element array with a
   * 64-wide zip_with per token; MinHash = 64 separate array_min(transform)
   * passes re-hashing every shingle). These kernels hash each token ONCE
-  * and keep the 64 counters / minima in local primitive arrays — same
-  * xxhash64 bit-stream (seed 42, Spark's own XXH64), same outputs.
+  * and keep the 64 counters / minima in local primitive arrays.
   */
 object HashKernels {
-
-  private def hashStr(s: UTF8String, seed: Long): Long =
-    XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, seed)
-
-  /** SimHash64 over a token array: per token h = xxhash64(token); counter
-    * b gets +1 when bit b of h is set else −1; signature bit b is set when
-    * counter b ends positive. Exactly the round-1 Column-fold semantics.
-    */
-  def simhash64(tokens: ArrayData): Long = {
-    val n = tokens.numElements()
-    val counts = new Array[Int](64)
-    var i = 0
-    while (i < n) {
-      if (!tokens.isNullAt(i)) {
-        val h = hashStr(tokens.getUTF8String(i), 42L)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-          b += 1
-        }
-      }
-      i += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < 64) {
-      if (counts(b) > 0) sig |= (1L << b)
-      b += 1
-    }
-    sig
-  }
 
   // --- cross-engine polynomial hashing (the ORACLE-CHECKABLE family) ---
   // Two byte-fold polynomial hashes mod large primes, combined into a
   // 61-bit value: pure integer arithmetic that any SQL engine replays
-  // exactly (DuckDB list_reduce over ascii codes). The xxhash64 kernels
-  // below remain the higher-quality alternates; the NearDup defaults use
-  // the poly family so the driver's DuckDB differential covers the FULL
-  // minhash/simhash pipelines, not just row counts.
+  // exactly (DuckDB list_reduce over ascii codes), so the DuckDB
+  // differential covers the FULL minhash/simhash pipelines, not just row
+  // counts.
   private val P1 = 1000000007L
   private val P2 = 998244353L
   private val M31 = 2147483647L
@@ -92,131 +59,28 @@ object HashKernels {
     h1 * 2147483648L + h2
   }
 
-  /** 62-bit token hash for SimHash: the two polynomial folds are each
-    * passed through the double-Lehmer mix, so every bit of both 31-bit
-    * halves is balanced (the RAW folds have biased top bits — h1 < 2³⁰
-    * etc. — which made random docs agree on many signature bits and
-    * exploded the hamming<=8 candidate set ~600x).
-    */
-  def polyMix62(s: UTF8String): Long = {
-    val n = s.numBytes
-    var h1 = 0L
-    var h2 = 0L
-    var i = 0
-    while (i < n) {
-      val c = s.getByte(i) & 0xffL
-      h1 = (h1 * 31 + c) % P1
-      h2 = (h2 * 131 + c) % P2
-      i += 1
-    }
-    val m1 = ((h1 + 1) * 48271L % M31 * 16807L) % M31
-    val m2 = ((h2 + 40503L) * 48271L % M31 * 16807L) % M31
-    m1 * 2147483648L + m2
-  }
-
-  /** SimHash64 over tokens with [[polyMix62]] (bits 62-63 structurally
-    * zero — a 62-effective-bit simhash; banding/hamming semantics
-    * unchanged).
-    */
-  def simhashPoly(tokens: ArrayData): Long = {
-    val n = tokens.numElements()
-    val counts = new Array[Int](64)
-    var i = 0
-    while (i < n) {
-      if (!tokens.isNullAt(i)) {
-        val h = polyMix62(tokens.getUTF8String(i))
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-          b += 1
-        }
-      }
-      i += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < 64) {
-      if (counts(b) > 0) sig |= (1L << b)
-      b += 1
-    }
-    sig
-  }
-
-  /** 124-effective-bit SimHash over tokens: TWO independent 62-bit
-    * sign-sum signatures from one pass (array<long> of 2). Halves use
-    * disjoint polynomial bases (31/131 and 37/137) AND disjoint Lehmer
-    * multiplier products (half 1: 48271·16807 on both lanes; half 2:
-    * 69621·48271 and 69621·16807 — every product includes 69621, absent
-    * from half 1; all three factors are full-period minstd multipliers
-    * mod M31). The multiplier sets must
-    * genuinely differ: an earlier revision merely swapped the 16807/48271
-    * multiplication ORDER, which commutes mod M31, leaving half 2 an
-    * affine image of half 1 for single-char tokens (where every poly
-    * base folds to h = c) — round-9 ADVICE. This is the
-    * corpus-scale width: banded candidate generation over a FIXED w-bit
-    * signature collides ~N²/2^(w/(h+1)) — measured super-linear at the
-    * ×81 stress for the 64-bit op (ratio 158 vs linear 81) exactly as
-    * the collision math predicts; 9 bands over 124 bits give a 2¹²⁺
-    * per-band floor, 32–256× the 64-bit op's 2⁷.
-    */
-  def simhashPoly128(tokens: ArrayData): ArrayData = {
-    val n = tokens.numElements()
-    val counts = new Array[Int](124)
-    var i = 0
-    while (i < n) {
-      if (!tokens.isNullAt(i)) {
-        val t = tokens.getUTF8String(i)
-        val nb = t.numBytes
-        var h1 = 0L; var h2 = 0L; var h3 = 0L; var h4 = 0L
-        var j = 0
-        while (j < nb) {
-          val c = t.getByte(j) & 0xffL
-          h1 = (h1 * 31 + c) % P1
-          h2 = (h2 * 131 + c) % P2
-          h3 = (h3 * 37 + c) % P1
-          h4 = (h4 * 137 + c) % P2
-          j += 1
-        }
-        val m1 = ((h1 + 1) * 48271L % M31 * 16807L) % M31
-        val m2 = ((h2 + 40503L) * 48271L % M31 * 16807L) % M31
-        val m3 = ((h3 + 7) * 69621L % M31 * 48271L) % M31
-        val m4 = ((h4 + 1009L) * 69621L % M31 * 16807L) % M31
-        val w1 = m1 * 2147483648L + m2
-        val w2 = m3 * 2147483648L + m4
-        var b = 0
-        while (b < 62) {
-          if (((w1 >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-          if (((w2 >>> b) & 1L) == 1L) counts(62 + b) += 1 else counts(62 + b) -= 1
-          b += 1
-        }
-      }
-      i += 1
-    }
-    var s1 = 0L; var s2 = 0L
-    var b = 0
-    while (b < 62) {
-      if (counts(b) > 0) s1 |= (1L << b)
-      if (counts(62 + b) > 0) s2 |= (1L << b)
-      b += 1
-    }
-    new GenericArrayData(Array[Any](s1, s2))
-  }
-
   @inline private def isWordByte(b: Byte): Boolean =
     (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || b == '_'
 
-  /** Fused tokenizer → [[simhashPoly]]: ONE pass over the raw text
-    * bytes — no lowercase copy, no regex split, no token-string array.
+  /** 64-bit SimHash of the word tokens of a raw text, in ONE pass over
+    * the bytes — no lowercase copy, no regex split, no token-string
+    * array. Per token, the two polynomial folds each pass through the
+    * double-Lehmer mix into a 62-bit hash, so every bit of both 31-bit
+    * halves is balanced (the RAW folds have biased top bits — h1 < 2³⁰
+    * etc. — which made random docs agree on many signature bits and
+    * exploded the hamming<=8 candidate set ~600x); counter b gets +1
+    * when bit b of the hash is set else −1, and signature bit b is set
+    * when counter b ends positive (bits 62-63 structurally zero).
     * Tokens are maximal `[a-zA-Z_]` byte runs of length ≥ 3, lowered
-    * ASCII-wise, hashed incrementally with the same dual-prime folds +
-    * Lehmer mix; the sign-sum fold is unchanged. Same semantics
+    * ASCII-wise and hashed incrementally. Same semantics
     * contract as [[ShingleHashKernel.shingleHashes]] (which adjudicated
     * the tokenizer fusion first): non-ASCII bytes are never `[a-zA-Z_]`
     * so they separate tokens exactly like the regex split of the
     * lowercased string, with the one documented divergence that exotic
     * code points whose Java `toLowerCase` maps INTO ASCII (U+212A → 'k',
     * U+0130 → 'i'+combining) tokenize as separators here.
-    * SimHashFusedSpec pins fused ≡ simhashPoly(tokens(text)).
+    * SimHashFusedSpec pins it against the composed
+    * tokens(text) → per-token hash form.
     */
   def simhashPolyText(text: UTF8String): Long = {
     val nb = text.numBytes
@@ -255,7 +119,23 @@ object HashKernels {
     sig
   }
 
-  /** Fused tokenizer → [[simhashPoly128]] (see [[simhashPolyText]]). */
+  /** 124-effective-bit SimHash (see [[simhashPolyText]]): TWO
+    * independent 62-bit sign-sum signatures from one pass (array<long>
+    * of 2). Halves use disjoint polynomial bases (31/131 and 37/137) AND
+    * disjoint Lehmer multiplier products (half 1: 48271·16807 on both
+    * lanes; half 2: 69621·48271 and 69621·16807 — every product includes
+    * 69621, absent from half 1; all three factors are full-period minstd
+    * multipliers mod M31). The multiplier sets must genuinely differ: an
+    * earlier revision merely swapped the 16807/48271 multiplication
+    * ORDER, which commutes mod M31, leaving half 2 an affine image of
+    * half 1 for single-char tokens (where every poly base folds to
+    * h = c) — round-9 ADVICE. This is the corpus-scale width: banded
+    * candidate generation over a FIXED w-bit signature collides
+    * ~N²/2^(w/(h+1)) — measured super-linear at the ×81 stress for the
+    * 64-bit op (ratio 158 vs linear 81) exactly as the collision math
+    * predicts; 9 bands over 124 bits give a 2¹²⁺ per-band floor,
+    * 32–256× the 64-bit op's 2⁷.
+    */
   def simhashPoly128Text(text: UTF8String): ArrayData = {
     val nb = text.numBytes
     val counts = new Array[Int](124)
@@ -303,7 +183,7 @@ object HashKernels {
   /** MinHash signature with the poly hash: per shingle x = h61 mod
     * (2³¹−1); element s = min over shingles of the double-Lehmer mix
     * ((s·2654435761 + x + 1)·48271 mod M·16807) mod M. Empty input →
-    * all-null signature (mirroring the xxhash64 kernel).
+    * all-null signature (array_min over an empty transform is null).
     */
   def minhashPolySig(shingles: ArrayData, numHashes: Int): ArrayData = {
     val n = shingles.numElements()
@@ -367,46 +247,6 @@ object HashKernels {
     else new GenericArrayData(mins)
   }
 
-  /** MinHash signature: element s is min over shingles of
-    * xxhash64(shingle, s) — Spark's two-child xxhash64 stream: base =
-    * hash(shingle, 42), then hashInt(s, base). Signed min, matching
-    * array_min on LongType. Empty input → all-null signature (array_min
-    * over an empty transform is null).
-    */
-  def minhashSig(shingles: ArrayData, numHashes: Int): ArrayData = {
-    val n = shingles.numElements()
-    if (n == 0) return new GenericArrayData(Array.fill[Any](numHashes)(null))
-    val mins = Array.fill[Long](numHashes)(Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      if (!shingles.isNullAt(i)) {
-        val base = hashStr(shingles.getUTF8String(i), 42L)
-        var s = 0
-        while (s < numHashes) {
-          val h = XXH64.hashInt(s, base)
-          if (h < mins(s)) mins(s) = h
-          s += 1
-        }
-      }
-      i += 1
-    }
-    new GenericArrayData(mins)
-  }
-}
-
-/** 64-bit SimHash of an `array<string>` token column (codegen'd). */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash64"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.simhash64(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.simhash64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
 }
 
 /** [[HashKernels.simhashPolyText]] as a codegen'd expression. */
@@ -430,38 +270,6 @@ case class SimHashPoly128Text(child: Expression) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.simhashPoly128Text($c)")
   override protected def withNewChildInternal(newChild: Expression): SimHashPoly128Text =
-    copy(child = newChild)
-}
-
-/** SimHash64 via the cross-engine polynomial hash (codegen'd). */
-case class SimHashPoly(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash_poly"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.simhashPoly(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.simhashPoly($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashPoly =
-    copy(child = newChild)
-}
-
-/** 124-bit two-half SimHash (`array<long>` of 2) — the corpus-scale
-  * signature width (codegen'd; see [[HashKernels.simhashPoly128]]).
-  */
-case class SimHashPoly128(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_simhash_poly128"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.simhashPoly128(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.simhashPoly128($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashPoly128 =
     copy(child = newChild)
 }
 
@@ -494,25 +302,8 @@ case class MinHashPolySignature(child: Expression, numHashes: Int) extends Unary
     copy(child = newChild)
 }
 
-/** MinHash signature (`array<long>` of length `numHashes`) of an
-  * `array<string>` shingle column (codegen'd).
-  */
-case class MinHashSignature(child: Expression, numHashes: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "graft_minhash"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.minhashSig(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.minhashSig($c, $numHashes)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
-}
-
 /** Word n-gram shingles of a raw text column — the native twin of
-  * `TextOps.shinglesOf(tokens(text), n)`: lowercase (UTF8String
+  * `SpecTwins.shinglesOf(tokens(text), n)`: lowercase (UTF8String
   * semantics, matching Spark's `lower`), split on `[^a-zA-Z_]+`, keep
   * tokens of length ≥ 3, space-join each n-gram, distinct preserving
   * first occurrence; empty when fewer than n tokens.
@@ -687,28 +478,6 @@ case class ShingleHash61(child: Expression, n: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** [[HashKernels.polyHash61]] as a scalar codegen'd expression: string →
-  * 61-bit cross-engine polynomial hash. Joining / windowing exploded
-  * shingles on this long instead of the shingle STRING shrinks the
-  * shuffle payload and makes the join key a primitive compare, while the
-  * identical fold replays in DuckDB (the t_minhash `hx` CTE without the
-  * final mod) — so hashed pipelines stay oracle-checkable, collisions
-  * included.
-  */
-case class PolyHash61(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_polyhash61"
-
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.polyHash61(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.polyHash61($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): PolyHash61 =
-    copy(child = newChild)
-}
-
 case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_shingles"
@@ -723,12 +492,13 @@ case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Stopword-count language ID — native twin of `TextOps.langIdHof`:
-  * per language, Σ over its stopwords of the `size(split(padded,
-  * "\\ssw\\s")) − 1` count (= non-overlapping matcher-find count, the
-  * exact regex-split semantics both the Column form and the DuckDB
-  * oracle use); zh scores 2× the non-ASCII code-point count. First
-  * language in {en,es,de,fr,zh} order wins ties (strict > replaces).
+/** Stopword-count language ID (Column twin: the specs'
+  * `SpecTwins.langIdHof`): per language, Σ over its stopwords of the
+  * `size(split(padded, "\\ssw\\s")) − 1` count (= non-overlapping
+  * matcher-find count, the exact regex-split semantics both the Column
+  * form and the DuckDB oracle use); zh scores 2× the non-ASCII
+  * code-point count. First language in {en,es,de,fr,zh} order wins ties
+  * (strict > replaces).
   */
 object LangKernel {
   private val langWords: Seq[(String, Seq[String])] = Seq(
@@ -736,11 +506,7 @@ object LangKernel {
     "es" -> Seq("el", "la", "de", "que", "y", "los"),
     "de" -> Seq("der", "die", "und", "das", "ist", "ein"),
     "fr" -> Seq("le", "la", "les", "de", "et", "est"))
-  private val pats: Seq[(String, Array[java.util.regex.Pattern])] =
-    langWords.map { case (l, ws) =>
-      l -> ws.map(w => java.util.regex.Pattern.compile("\\s" + w + "\\s")).toArray
-    }
-  private val labels = (pats.map(_._1) :+ "zh").map(UTF8String.fromString).toArray
+  private val labels = (langWords.map(_._1) :+ "zh").map(UTF8String.fromString).toArray
 
   // --- byte-pass tables (r16): the 22 UNIQUE stopwords ("la"/"de" are
   // shared by es and fr — identical patterns scan independently, so one
@@ -765,7 +531,8 @@ object LangKernel {
     if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
 
   /** One byte pass replacing the 24 `\sword\s` matcher runs (plus the
-    * lowercase copy and the padded concat) of [[langIdRegex]]. Exact on
+    * lowercase copy and the padded concat) of the pre-r16 regex kernel
+    * (LangIdKernelSpec keeps it as the differential twin). Exact on
     * the regex semantics, including the non-overlapping CONSUMED-
     * SEPARATOR quirk: a match eats its trailing `\s`, so of two equal
     * stopword tokens separated by a SINGLE whitespace char only the
@@ -823,7 +590,7 @@ object LangKernel {
         }
       }
     }
-    val scores = new Array[Int](pats.length)
+    val scores = new Array[Int](langWords.length)
     var w = 0
     while (w < nWords) {
       val ls = wordLangs(w)
@@ -837,39 +604,6 @@ object LangKernel {
     while (li < scores.length) {
       if (scores(li) > bestScore) { bestScore = scores(li); bestIdx = li }
       li += 1
-    }
-    if (zh * 2 > bestScore) bestIdx = labels.length - 1
-    labels(bestIdx)
-  }
-
-  /** The pre-r16 matcher implementation, kept as the differential twin
-    * (LangIdKernelSpec pins [[langId]] ≡ this on adversarial inputs).
-    */
-  def langIdRegex(text: UTF8String): UTF8String = {
-    val padded = " " + text.toLowerCase.toString + " "
-    var bestIdx = 0
-    var bestScore = Integer.MIN_VALUE
-    var li = 0
-    while (li < pats.length) {
-      var s = 0
-      val ps = pats(li)._2
-      var pi = 0
-      while (pi < ps.length) {
-        val m = ps(pi).matcher(padded)
-        while (m.find()) s += 1
-        pi += 1
-      }
-      if (s > bestScore) { bestScore = s; bestIdx = li }
-      li += 1
-    }
-    // zh: 2x non-ASCII code points of the ORIGINAL text
-    val raw = text.toString
-    var zh = 0
-    var i = 0
-    while (i < raw.length) {
-      val cp = raw.codePointAt(i)
-      if (cp > 0x7f) zh += 1
-      i += Character.charCount(cp)
     }
     if (zh * 2 > bestScore) bestIdx = labels.length - 1
     labels(bestIdx)
@@ -1010,20 +744,10 @@ object HashF {
     Bridge.column(RepetitionStats(Bridge.expression(text)))
   def wsShingleHash61(text: Column, n: Int): Column =
     Bridge.column(WsShingleHash61(Bridge.expression(text), n))
-  def polyHash61(s: Column): Column =
-    Bridge.column(PolyHash61(Bridge.expression(s)))
-  def simhash64(tokens: Column): Column =
-    Bridge.column(SimHash64(Bridge.expression(tokens)))
-  def simhashPoly(tokens: Column): Column =
-    Bridge.column(SimHashPoly(Bridge.expression(tokens)))
   def simhashPolyText(text: Column): Column =
     Bridge.column(SimHashPolyText(Bridge.expression(text)))
   def simhashPoly128Text(text: Column): Column =
     Bridge.column(SimHashPoly128Text(Bridge.expression(text)))
-  def simhashPoly128(tokens: Column): Column =
-    Bridge.column(SimHashPoly128(Bridge.expression(tokens)))
-  def minhashSig(shingles: Column, numHashes: Int): Column =
-    Bridge.column(MinHashSignature(Bridge.expression(shingles), numHashes))
   def minhashPolySig(shingles: Column, numHashes: Int): Column =
     Bridge.column(MinHashPolySignature(Bridge.expression(shingles), numHashes))
   def minhashPolySigHashes(hashes: Column, numHashes: Int): Column =

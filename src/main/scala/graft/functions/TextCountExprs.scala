@@ -8,7 +8,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Counting kernels for the per-document scoring surface — native twins
   * of the regex/split Column forms they replace (kept as `...Hof` in
-  * [[graft.text.TextOps]] and pinned equal by TextCountSpec):
+  * the specs' `SpecTwins` and pinned equal by TextCountSpec):
   *
   *  - [[TextCountKernel.counts]] replaces the FOUR passes behind
   *    `qualityScore` (two `regexp_replace` + one `split`+`filter` + one

@@ -135,7 +135,7 @@ case class DotProductFloat(left: Expression, right: Expression)
 }
 
 /** All `planes x tables` LSH hyperplane projections of one vector in one
-  * compiled pass — the native twin of `Similarity.lshProjectionsHof`
+  * compiled pass — the native twin of `SpecTwins.lshProjectionsHof`
   * (whose aggregate/zip_with fold is interpreted and cost ~1 ms/row).
   * Components are the cross-engine Lehmer-mixed values, precomputed once
   * per (nProj, dims) into a process-wide cache (the mix is ~8 integer ops

@@ -34,7 +34,7 @@ object BacktestQ {
       // year caps, the drifted holding-period panel) — persist so the
       // orders aggregation runs once, not once per consumer. Catalog
       // queries return lazy frames, so these persists are released by
-      // the harness (Bench/TimeQ/Verify clearCache between queries); an
+      // the harness (Bench/Verify clearCache between queries); an
       // embedding driver should unpersist via the plan's cached nodes or
       // re-compose from the Backtesting API with its own lifecycle.
       // PERSIST AUDIT (r17, the round-16 VERDICT #4 item): dropping the

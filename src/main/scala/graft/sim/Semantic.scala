@@ -455,17 +455,6 @@ object Semantic {
       cProbe, seed, maxList), idCol, keepFarthest)
   }
 
-  /** [[semanticDedupTwoLevel]] with the [[Capacity.twoLevelNLists]]
-    * occupancy-preserving chooser, like [[semanticDupsTwoLevelAuto]].
-    */
-  def semanticDedupTwoLevelAuto(vecs: DataFrame, idCol: String, vecCol: String,
-                                threshold: Double, corpusRows: Long, cProbe: Int = 2,
-                                seed: Long = 42L, maxList: Int = Int.MaxValue,
-                                keepFarthest: Boolean = false): DataFrame =
-    semanticDedupTwoLevel(vecs, idCol, vecCol, threshold,
-      nLists = Capacity.twoLevelNLists(corpusRows, cProbe), cProbe = cProbe,
-      seed = seed, maxList = maxList, keepFarthest = keepFarthest)
-
   /** Two-level pairs + the frames the keep-policy re-pick needs — the
     * [[dupsParts]] tuple shape: (pairs, prepped vectors (persisted),
     * first-membership assignment (id, list), flat fine-centroid frame,

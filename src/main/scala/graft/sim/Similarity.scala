@@ -317,47 +317,15 @@ object Similarity extends org.apache.spark.internal.Logging {
     topK(a.join(b, col("query_id") =!= col("neighbor_id")), k)
   }
 
-  /** Deterministic pseudo-random hyperplane component for (plane p, dim d)
-    * mapped to [-1, 1]. PURE integer arithmetic (a Knuth-mix seed through
-    * the double-Lehmer step) rather than an engine-specific hash — the
-    * identical expression runs in DuckDB, which makes the full LSH
-    * pipeline oracle-checkable. Products stay far below 2^63 for any
-    * realistic (p, d).
-    */
-  private def planeComponent(p: Column, d: Column): Column = {
-    val seed = p * lit(2654435761L) + d * lit(40503L) + 1
-    val h = (seed * 48271L % 2147483647L * 16807L) % 2147483647L
-    ((h % 2000001L).cast("double") / 1000000.0) - 1.0
-  }
-
   /** All `planes × tables` hyperplane projections of `vec` in ONE pass —
     * the native codegen'd kernel ([[graft.functions.LshKernel]]; component
-    * table precomputed once per process). [[lshProjectionsHof]] is the
-    * Column-fold twin kept for the equivalence spec; both produce
-    * bit-identical sums (same per-element accumulation order), which the
-    * s_lsh DuckDB oracle replays.
+    * table precomputed once per process). The Column-fold twin
+    * `SpecTwins.lshProjectionsHof` produces bit-identical sums (same
+    * per-element accumulation order), which the s_lsh DuckDB oracle
+    * replays.
     */
   def lshProjections(vec: Column, planes: Int, tables: Int): Column =
     VectorF.lshProj(vec.cast("array<double>"), planes * tables)
-
-  /** HOF fold form of [[lshProjections]] — the accumulator carries
-    * (partial sums, element index); interpreted, spec-only.
-    */
-  def lshProjectionsHof(vec: Column, planes: Int, tables: Int): Column = {
-    val nProj = planes * tables
-    val planeIdx = sequence(lit(0), lit(nProj - 1))
-    val init = struct(
-      array_repeat(lit(0.0), nProj).as("s"),
-      lit(0).as("i"))
-    aggregate(
-      vec,
-      init,
-      (acc, x) => struct(
-        zip_with(acc.getField("s"), planeIdx,
-          (s, p) => s + x.cast("double") * planeComponent(p, acc.getField("i"))).as("s"),
-        (acc.getField("i") + 1).as("i")),
-      acc => acc.getField("s"))
-  }
 
   /** Pack the sign bits of table `t`'s `planes` projections into a long. */
   def packSignature(proj: Column, table: Int, planes: Int): Column =
@@ -365,12 +333,6 @@ object Similarity extends org.apache.spark.internal.Logging {
       when(element_at(proj, table * planes + p + 1) >= 0,
         shiftleft(lit(1L), p)).otherwise(lit(0L))
     }.reduce(_ bitwiseOR _)
-
-  /** Random-hyperplane LSH signature for one table (kept for spec-level
-    * use; [[lshTopK]] computes all tables in one pass).
-    */
-  def lshSignature(vec: Column, planes: Int, seed: Int = 0): Column =
-    packSignature(lshProjections(vec, planes, seed + 1), seed, planes)
 
   /** Embedding-cosine near-duplicate pairs, EXACT form: all (a < b) pairs
     * with cosine ≥ `threshold`. O(n²) pair scoring — the verification
@@ -770,40 +732,17 @@ object Similarity extends org.apache.spark.internal.Logging {
     */
   private[graft] def nearestLists(v: DataFrame, idCol: String,
                                   centroids: DataFrame, nProbe: Int,
-                                  extra: Seq[String] = Nil): DataFrame =
-    nearestListsImpl(v, idCol, centroids, nProbe, useKernel = true, extra)
-
-  /** `useKernel = false` runs the interpreted HOF formulation (transform →
-    * array_sort → slice) — spec-only twin pinning the native kernel
-    * bit-identical ([[graft.functions.NearestKernel]] scaladoc has the
-    * measured reason the production path is compiled: the HOF's
-    * interpreted O(N·nLists·dim) went super-linear in the ×30 stress).
-    */
-  private[graft] def nearestListsImpl(v: DataFrame, idCol: String,
-                                      centroids: DataFrame, nProbe: Int,
-                                      useKernel: Boolean,
-                                      extra: Seq[String] = Nil): DataFrame = {
+                                  extra: Seq[String] = Nil): DataFrame = {
     val centArr = centroids.agg(
       array_sort(collect_list(struct(col("list"), col("centroid"),
         VectorF.dotp(col("centroid"), col("centroid")).as("cc")))).as("__cents"))
     // `extra` columns of v ride along unchanged (the big-regime top-k
     // prefilter carries the quantized payload through probing); the
     // default Nil keeps the catalog projection — and plan — as-was
-    val joined = v.select((col(idCol) +: extra.map(col) :+ col("__v")): _*)
+    v.select((col(idCol) +: extra.map(col) :+ col("__v")): _*)
       .crossJoin(broadcast(centArr))
-    if (useKernel)
-      joined.select(col(idCol) +: extra.map(col) :+
+      .select(col(idCol) +: extra.map(col) :+
         VectorF.nearestLists(col("__v"), col("__cents"), nProbe).as("lists"): _*)
-    else
-      joined
-        .withColumn("__vv", VectorF.dotp(col("__v"), col("__v")))
-        .select(col(idCol) +: extra.map(col) :+
-          slice(array_sort(transform(col("__cents"), c =>
-            struct((col("__vv") + c.getField("cc")
-              - lit(2.0) * VectorF.dotp(col("__v"), c.getField("centroid"))).as("d"),
-              c.getField("list").as("list")))), 1, nProbe).as("__near"): _*)
-        .select(col(idCol) +: extra.map(col) :+
-          transform(col("__near"), x => x.getField("list")).as("lists"): _*)
   }
 
   /** Bounded-sample k-means coarse quantizer shared by [[ivfTopK]] and

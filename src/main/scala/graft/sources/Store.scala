@@ -92,6 +92,23 @@ class Store(folder: String, gz: Boolean = false) {
   def loadFrame(spark: SparkSession, name: String): DataFrame =
     spark.read.parquet(framePath(name))
 
+  /** Read-first frame cache (SURVEY.md §2.1 S5; reference: the
+    * `RedisDB.dump/load` `redisdb.py:60-81` result cache behind the
+    * read-first `'r'/'w'` mode flags of `stocks.py:123-126` and the
+    * `crsp.py:450-461` `cache_ret` pregeneration): the frame stored
+    * under [[Store.cacheName]]`(op, args)` when present, else `build`
+    * dumped there first. Either way the result is a parquet scan, so
+    * downstream consumers get column pruning and pushdown instead of
+    * recomputing the lineage, and a later session over the same folder
+    * is served without building.
+    */
+  def cached(spark: SparkSession, op: String, args: Seq[Any])
+            (build: => DataFrame): DataFrame = {
+    val name = Store.cacheName(op, args)
+    if (!new File(framePath(name)).exists()) dumpFrame(build, name)
+    loadFrame(spark, name)
+  }
+
   /** store.py `dump(obj, name)` for small named values (JSON / gzip).
     * A dump shadows any sibling/legacy-format entry of the same name, so
     * they are deleted first — otherwise a second Store handle of the
@@ -145,6 +162,15 @@ class Store(folder: String, gz: Boolean = false) {
     rm(resolved(name + otherExt))
     rm(resolved(name + legacyGzExt))
     rm(resolved(name + ".parquet"))
+  }
+}
+
+object Store {
+  /** Deterministic filesystem-safe frame name for (op, args). */
+  def cacheName(op: String, args: Seq[Any]): String = {
+    val raw = op + "|" + args.mkString("|")
+    val safe = op.replaceAll("[^A-Za-z0-9_-]", "_").take(40)
+    f"$safe-${raw.hashCode & 0x7fffffff}%08x"
   }
 }
 

@@ -17,23 +17,10 @@ object NearDup {
   /** MinHash signature (DEFAULT = the cross-engine polynomial hash, so
     * the whole minhash pipeline is oracle-checkable in DuckDB): element s
     * is the min over shingles of a double-Lehmer mix of the shingle's
-    * 61-bit poly hash. [[minHashSigXx]] is the xxhash64 alternate (better
-    * mixing, engine-specific); its HOF twin [[minHashSigHof]] backs the
-    * kernel-equivalence spec.
+    * 61-bit poly hash.
     */
   def minHashSig(shingles: Column, numHashes: Int): Column =
     graft.functions.HashF.minhashPolySig(shingles, numHashes)
-
-  /** xxhash64-based MinHash signature (native one-pass kernel). */
-  def minHashSigXx(shingles: Column, numHashes: Int): Column =
-    graft.functions.HashF.minhashSig(shingles, numHashes)
-
-  /** HOF formulation of [[minHashSigXx]] — one array_min(transform) pass
-    * per seed; spec-only (the kernel must produce identical signatures).
-    */
-  def minHashSigHof(shingles: Column, numHashes: Int): Column =
-    array((0 until numHashes).map(s =>
-      array_min(transform(shingles, sh => xxhash64(sh, lit(s))))): _*)
 
   /** LSH banding: (docId, band, bucket) rows; docs sharing any
     * (band, bucket) become candidate pairs. The bucket is the signature
@@ -257,8 +244,6 @@ object NearDup {
     * Per-row map — no shuffle; near-dups share low Hamming distance.
     * DEFAULT = the cross-engine polynomial token hash (oracle-checkable;
     * bits 61-63 structurally zero — a 61-effective-bit simhash).
-    * [[simHashXx]] is the xxhash64 alternate; its Column twin
-    * [[simHashHof]] backs the kernel-equivalence spec.
     */
   def simHash(text: Column): Column =
     // fused tokenizer→hash kernel (r16): the composed form split the
@@ -266,27 +251,6 @@ object NearDup {
     // token — the ShingleHashKernel lesson applied to simhash;
     // SimHashFusedSpec pins fused ≡ composed
     graft.functions.HashF.simhashPolyText(text)
-
-  /** Composed tokenize→hash formulation of [[simHash]] (spec-only twin). */
-  def simHashComposed(text: Column): Column =
-    graft.functions.HashF.simhashPoly(TextOps.tokens(text))
-
-  /** xxhash64-based SimHash (native one-pass kernel). */
-  def simHashXx(text: Column): Column =
-    graft.functions.HashF.simhash64(TextOps.tokens(text))
-
-  /** HOF formulation of [[simHashXx]] — spec-only equivalence twin. */
-  def simHashHof(text: Column): Column = {
-    val hashes = transform(TextOps.tokens(text), t => xxhash64(t))
-    val bitIdx = sequence(lit(0), lit(63))
-    val counts = aggregate(hashes, array_repeat(lit(0), 64),
-      (acc, h) => zip_with(acc, bitIdx,
-        (v, b) => v + when(call_function("getbit", h, b) === 1, 1).otherwise(-1)))
-    aggregate(
-      zip_with(counts, bitIdx,
-        (s, b) => when(s > 0, call_function("shiftleft", lit(1L), b)).otherwise(lit(0L))),
-      lit(0L), (acc, v) => acc.bitwiseOR(v))
-  }
 
   /** Hamming distance between two simhash longs. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -358,15 +322,11 @@ object NearDup {
 
   /** 124-bit SimHash token column (array<long> of 2 halves) — the
     * corpus-scale signature width; see
-    * [[graft.functions.HashKernels.simhashPoly128]].
+    * [[graft.functions.HashKernels.simhashPoly128Text]].
     */
   def simHash128(text: Column): Column =
     // fused tokenizer→hash kernel (r16, see simHash)
     graft.functions.HashF.simhashPoly128Text(text)
-
-  /** Composed tokenize→hash formulation of [[simHash128]] (spec twin). */
-  def simHash128Composed(text: Column): Column =
-    graft.functions.HashF.simhashPoly128(TextOps.tokens(text))
 
   /** [[simHashPairs]] at the corpus-scale 124-bit signature width.
     *

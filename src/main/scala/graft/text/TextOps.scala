@@ -20,32 +20,21 @@ object TextOps {
     filter(split(lower(text), "[^a-zA-Z_]+"), t => length(t) >= 3)
 
   /** Whitespace token count (LLM token-count baseline). One byte-pass
-    * kernel ([[graft.functions.TextCountKernel]]); [[wsTokenCountHof]]
-    * is the split/filter Column twin kept for the equivalence spec.
+    * kernel ([[graft.functions.TextCountKernel]]); its split/filter
+    * Column twin lives with the specs (`SpecTwins.wsTokenCountHof`).
     */
   def wsTokenCount(text: Column): Column =
     graft.functions.HashF.textCounts(text).getField("ws_words")
-
-  /** Column-HOF formulation of [[wsTokenCount]] (spec-only twin). */
-  def wsTokenCountHof(text: Column): Column =
-    size(filter(split(text, "\\s+"), t => length(t) > 0))
 
   /** BPE-ish subword count: letter runs + digit runs + single punctuation
     * marks — a deterministic regex proxy for tokenizer cost estimation.
     * One counting byte-pass kernel ([[graft.functions.TextCountKernel]]
     * — the regex form materialized every matched token into an array
-    * just to take its size); [[bpeishTokenCountHof]] is the regex twin
-    * kept for the equivalence spec.
+    * just to take its size); its regex twin lives with the specs
+    * (`SpecTwins.bpeishTokenCountHof`).
     */
   def bpeishTokenCount(text: Column): Column =
     graft.functions.HashF.bpeishCount(text)
-
-  /** Regex formulation of [[bpeishTokenCount]] (spec-only twin; the
-    * alternation has no lookarounds so the same pattern also runs on RE2
-    * engines for differential testing).
-    */
-  def bpeishTokenCountHof(text: Column): Column =
-    size(regexp_extract_all(text, lit("[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"), lit(0)))
 
   /** Long-document chunking: windows of at most `maxTokens` whitespace
     * tokens, consecutive windows sharing `overlap` tokens of context —
@@ -84,28 +73,12 @@ object TextOps {
     // form ran two regexp_replace passes plus a split per doc, and the
     // gate's pushed-down filter evaluated them a second time); the
     // blend arithmetic below is unchanged, so the rounded double is
-    // bit-identical to the Hof twin (TextCountSpec pins it)
+    // bit-identical to the Column twin (TextCountSpec pins it)
     val c = graft.functions.HashF.textCounts(text)
     val n = c.getField("n_chars").cast("double")
     val alpha = c.getField("alpha").cast("double")
     val punct = c.getField("punct").cast("double")
     val words = c.getField("ws_words").cast("double")
-    val lenScore = least(n / lit(500.0), lit(1.0))
-    val alphaRatio = when(n > 0, alpha / n).otherwise(0.0)
-    val punctPenalty = when(n > 0, least(punct / n * 10.0, lit(1.0))).otherwise(0.0)
-    val meanWord = when(words > 0, alpha / words).otherwise(0.0)
-    val wordScore = least(meanWord / lit(8.0), lit(1.0))
-    round(lenScore * 0.3 + alphaRatio * 0.4 + (lit(1.0) - punctPenalty) * 0.1 + wordScore * 0.2, 6)
-  }
-
-  /** Column-builtin formulation of [[qualityScore]] (spec-only twin —
-    * the pre-kernel implementation, kept for the equivalence spec).
-    */
-  def qualityScoreHof(text: Column): Column = {
-    val n = length(text).cast("double")
-    val alpha = length(regexp_replace(text, "[^a-zA-Z]", "")).cast("double")
-    val punct = length(regexp_replace(text, "[^.,;:!?]", "")).cast("double")
-    val words = wsTokenCountHof(text).cast("double")
     val lenScore = least(n / lit(500.0), lit(1.0))
     val alphaRatio = when(n > 0, alpha / n).otherwise(0.0)
     val punctPenalty = when(n > 0, least(punct / n * 10.0, lit(1.0))).otherwise(0.0)
@@ -123,27 +96,13 @@ object TextOps {
     * (math benchmarks, dates, quantities) is detectable. Tokens are
     * ASCII-lowercased; hashes are the cross-engine polyHash61 fold of
     * the space-joined n-gram — a native one-byte-pass kernel
-    * ([[graft.functions.WsShingleHashKernel]]; [[wsShingleHashesHof]]
-    * is the Column twin kept for the equivalence spec, measured
-    * ~20–35× slower as the operative path).
+    * ([[graft.functions.WsShingleHashKernel]]; its Column twin
+    * `SpecTwins.wsShingleHashesHof` measured ~20–35× slower as the
+    * operative path).
     */
   def wsShingleHashes(text: Column, n: Int): Column = {
     require(n >= 2, s"shingle width must be >= 2, got $n")
     graft.functions.HashF.wsShingleHash61(text, n)
-  }
-
-  /** Column-HOF formulation of [[wsShingleHashes]] (spec-only twin;
-    * equivalence is exact on ASCII text — its `lower()` also folds
-    * non-ASCII case where the kernel is ASCII-wise).
-    */
-  def wsShingleHashesHof(text: Column, n: Int): Column = {
-    require(n >= 2, s"shingle width must be >= 2, got $n")
-    val toks = filter(split(lower(text), "\\s+"), t => length(t) > 0)
-    when(size(toks) >= n,
-      array_distinct(transform(sequence(lit(0), size(toks) - n),
-        i => graft.functions.HashF.polyHash61(
-          concat_ws(" ", slice(toks, i + 1, lit(n)))))))
-      .otherwise(array().cast("array<bigint>"))
   }
 
   /** Repetition quality signals (the Gopher/RefinedWeb heuristic
@@ -162,8 +121,8 @@ object TextOps {
     * addresses, and US SSNs with fixed placeholder tokens. Native
     * staged byte-scan kernel ([[graft.functions.PiiRedactKernel]] —
     * the four chained regex passes it replaces were the pipeline
-    * family's dominant per-byte cost); [[redactPiiHof]] is the
-    * regexp_replace chain kept as the equivalence-spec twin. Order
+    * family's dominant per-byte cost); `SpecTwins.redactPiiHof` is the
+    * regexp_replace chain it reproduces. Order
     * matters (e-mail before phone so a numeric local-part is not
     * half-eaten, SSN before phone so the more specific \d3-\d2-\d4
     * shape wins). Patterns are deliberately conservative (anchored on
@@ -177,128 +136,26 @@ object TextOps {
   def redactPii(text: Column): Column =
     graft.functions.HashF.redactPii(text)
 
-  /** Chained-`regexp_replace` formulation of [[redactPii]] (spec-only
-    * twin; each pass runs on the previous pass's output, placeholders
-    * included — the kernel reproduces exactly this staging).
-    */
-  def redactPiiHof(text: Column): Column = {
-    val email = regexp_replace(text,
-      "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}", "<EMAIL>")
-    val ssn = regexp_replace(email,
-      "(^|[^0-9A-Za-z-])[0-9]{3}-[0-9]{2}-[0-9]{4}(?=$|[^0-9-])", "$1<SSN>")
-    val phone = regexp_replace(ssn,
-      "(^|[^0-9A-Za-z])(\\+?[0-9]{1,3}[-. ])?(\\([0-9]{3}\\)[-. ]?|[0-9]{3}[-. ])[0-9]{3}[-. ][0-9]{4}(?=$|[^0-9])",
-      "$1<PHONE>")
-    // trailing boundary: no digit/dot may follow, EXCEPT a sentence-final
-    // period (a dot that is itself last or followed by a non-digit
-    // non-dot) — otherwise every IP ending a sentence survives the scrub
-    regexp_replace(phone,
-      "(^|[^0-9A-Za-z.])([0-9]{1,3}\\.){3}[0-9]{1,3}(?=$|[^0-9.]|\\.(?=$|[^0-9.]))",
-      "$1<IP>")
-  }
-
   /** Stopword-count language ID over {en, es, de, fr, zh} — native
-    * kernel ([[graft.functions.LangKernel]]); [[langIdHof]] is the
-    * Column twin for the equivalence spec.
+    * kernel ([[graft.functions.LangKernel]]); `SpecTwins.langIdHof` is
+    * the Column twin for the equivalence spec.
     */
   def langId(text: Column): Column = graft.functions.HashF.langId(text)
-
-  /** Column-expression formulation of [[langId]] (spec-only twin). */
-  def langIdHof(text: Column): Column = {
-    def score(words: Seq[String]): Column = {
-      val padded = concat(lit(" "), lower(text), lit(" "))
-      words.map(sw => size(split(padded, s"\\s$sw\\s")) - 1)
-        .reduce(_ + _)
-    }
-    val scores = Seq(
-      "en" -> score(Seq("the", "and", "of", "to", "is", "a")),
-      "es" -> score(Seq("el", "la", "de", "que", "y", "los")),
-      "de" -> score(Seq("der", "die", "und", "das", "ist", "ein")),
-      "fr" -> score(Seq("le", "la", "les", "de", "et", "est")),
-      "zh" -> (length(regexp_replace(text, "[\\x00-\\x7F]", "")) * 2))
-    // argmax with alphabetical tie-break: fold keeping (best, lang)
-    val first = scores.head
-    val best = scores.tail.foldLeft(struct(first._2.as("s"), lit(first._1).as("l"))) {
-      case (acc, (lang, s)) =>
-        when(s > acc.getField("s"), struct(s.as("s"), lit(lang).as("l"))).otherwise(acc)
-    }
-    best.getField("l")
-  }
 
   /** Polynomial rolling-hash document fingerprint over the printable-ASCII
     * projection of the lowercased text, mod 1e9+7 so the arithmetic never
     * exceeds 63 bits (portable: no engine-specific overflow wrapping).
     * acc = (acc·31 + codepoint) mod p; empty text → 0. Native one-byte-pass
     * kernel ([[graft.functions.FingerprintKernel]] — no lowercase copy, no
-    * regex, no per-char string boxing); [[fingerprintHof]] is the Column
-    * twin kept for the equivalence spec.
+    * regex, no per-char string boxing); `SpecTwins.fingerprintHof` is the
+    * Column twin for the equivalence spec.
     */
   def fingerprint(text: Column): Column =
     graft.functions.HashF.fingerprint(text)
 
-  /** Column-HOF formulation of [[fingerprint]] (spec-only twin).
-    * Chars are enumerated via `split` (Spark's `split(s, "")` keeps a
-    * trailing empty token that other engines drop).
-    */
-  def fingerprintHof(text: Column): Column = {
-    val t = regexp_replace(lower(text), "[^\\x20-\\x7e]", "")
-    // split("", -1) semantics keep a trailing empty token — drop it rather
-    // than enumerate positions with substr (substr-per-index is O(n²)).
-    val chars = filter(split(t, ""), c => length(c) > 0)
-    when(length(t) > 0,
-      aggregate(
-        transform(chars, ch => ascii(ch).cast("long")),
-        lit(0L),
-        (acc, c) => (acc * 31L + c) % 1000000007L))
-      .otherwise(0L)
-  }
-
-  /** Distinct character n-gram shingles of the lowercased text. */
-  def charShingles(text: Column, n: Int): Column = {
-    val t = lower(text)
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(t) - (n - 1), lit(1))),
-      i => t.substr(i, lit(n))))
-  }
-
-  /** Distinct word n-gram shingles (space-joined) of a token array;
-    * empty when the doc has fewer than `n` tokens (a short doc must not
-    * collapse to a single partial shingle — that would make all short
-    * docs mutual near-duplicates).
-    *
-    * Implemented as ONE left fold (`aggregate`) carrying a rolling queue
-    * of the previous n−1 tokens. A Catalyst lambda re-evaluates any
-    * non-bound subtree it references once PER ELEMENT, so the naive
-    * `transform(sequence(...), i => slice(tok, i+1, n))` form re-derives
-    * the whole token array per shingle index — O(len²) regex work when
-    * `tok` is an inline tokens(...) expression (measured 17 s vs 0.5 s
-    * over 5k docs). In the fold, `tok` is only the aggregate argument
-    * (evaluated once) and the lambdas touch bound variables only.
-    */
-  def shinglesOf(tok: Column, n: Int): Column = {
-    require(n >= 2, "shingle width must be >= 2")
-    val init = struct(
-      array().cast("array<string>").as("sh"),
-      array().cast("array<string>").as("q"))
-    aggregate(
-      tok,
-      init,
-      (acc, w) => {
-        val sh = acc.getField("sh")
-        val q = acc.getField("q")
-        val full = size(q) === (n - 1)
-        struct(
-          when(full, array_append(sh, concat_ws(" ", array_append(q, w))))
-            .otherwise(sh).as("sh"),
-          when(full, array_append(slice(q, 2, n - 2), w))
-            .otherwise(array_append(q, w)).as("q"))
-      },
-      acc => array_distinct(acc.getField("sh")))
-  }
-
   /** Shingles straight from text — native one-pass kernel
-    * ([[graft.functions.ShingleKernel]]); [[shinglesOf]] is the Column
-    * fold twin kept for the equivalence spec.
+    * ([[graft.functions.ShingleKernel]]); `SpecTwins.shinglesOf` is the
+    * Column fold twin for the equivalence spec.
     */
   def wordShingles(text: Column, n: Int): Column =
     graft.functions.HashF.wordShingles(text, n)

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.RDDScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import graft.graph.GraphOps
 
@@ -23,14 +26,15 @@ import graft.graph.GraphOps
   *  - Tier equivalence: the shuffle tier (forced via broadcast
   *    threshold -1) must produce exactly the broadcast tier's labels.
   */
-class CCRoundShapeSpec extends SparkSpec {
+class CCRoundShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def testEdges = spark.range(0, 5000)
     .select((col("id") % 123).as("src"), (col("id") % 77).as("dst"))
 
   test("shuffle-tier round body: shuffle-hash joins, no SMJ, no |E| re-shuffle") {
-    val p = GraphOps.ccRoundForAudit(testEdges).queryExecution.executedPlan.toString
+    val plan = GraphOps.ccRoundForAudit(testEdges).queryExecution.executedPlan
+    val p = plan.toString
 
     assert("ShuffledHashJoin".r.findAllIn(p).length == 2, p)
     assert(!p.contains("SortMergeJoin"), p)
@@ -39,12 +43,11 @@ class CCRoundShapeSpec extends SparkSpec {
     // the checkpointed edge frame surfaces as `Scan ExistingRDD`; if its
     // HashPartitioning were lost, EnsureRequirements would insert an
     // Exchange directly above the scan
-    val lines = p.linesIterator.toVector
-    lines.zipWithIndex.filter(_._1.contains("Exchange hashpartitioning")).foreach {
-      case (_, i) =>
-        val child = lines.drop(i + 1).find(l => l.trim.startsWith("+-") || l.trim.startsWith(":-"))
-        assert(!child.exists(_.contains("Scan ExistingRDD")),
-          s"edge frame re-shuffled at line $i:\n$p")
+    val exchanges = collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.nonEmpty, p)
+    exchanges.foreach { e =>
+      assert(!e.child.isInstanceOf[RDDScanExec],
+        s"edge frame re-shuffled by ${e.simpleString(80)}:\n$p")
     }
   }
 

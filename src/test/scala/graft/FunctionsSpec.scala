@@ -45,14 +45,6 @@ class FunctionsSpec extends SparkSpec {
     "one two three", "")
     .zipWithIndex.map { case (t, i) => (i.toLong, t) }
 
-  test("simhash64 kernel matches the HOF formulation exactly") {
-    import graft.text.NearDup
-    val docs = sampleDocs.toDF("id", "text")
-    val out = docs.select(NearDup.simHashXx(col("text")).as("a"),
-      NearDup.simHashHof(col("text")).as("b")).as[(Long, Long)].collect()
-    out.foreach { case (a, b) => assert(a == b) }
-  }
-
   test("poly hash kernels match an independent Scala re-computation") {
     import graft.text.NearDup
     // pin the poly family against a from-scratch reimplementation of the
@@ -86,7 +78,7 @@ class FunctionsSpec extends SparkSpec {
       (0 until 64).map(b => if (counts(b) > 0) 1L << b else 0L).reduce(_ | _)
     }
     val gotSim = Seq(Tuple1(toks)).toDF("t")
-      .select(graft.functions.HashF.simhashPoly(col("t"))).as[Long].head()
+      .select(SpecTwins.simhashPoly(col("t"))).as[Long].head()
     assert(gotSim == expectedSim)
 
     val expectedMins = (0 until 8).map { s =>
@@ -133,7 +125,7 @@ class FunctionsSpec extends SparkSpec {
       .toDF("id", "text")
     val out = docs.select(
         TextOps.wordShingles(col("text"), 3).as("a"),
-        TextOps.shinglesOf(TextOps.tokens(col("text")), 3).as("b"))
+        SpecTwins.shinglesOf(TextOps.tokens(col("text")), 3).as("b"))
       .as[(Seq[String], Seq[String])].collect()
     out.foreach { case (a, b) => assert(a == b, s"$a != $b") }
   }
@@ -155,7 +147,7 @@ class FunctionsSpec extends SparkSpec {
     val out = docs.select(
         TextOps.shingleHashes(col("text"), 3).as("a"),
         transform(TextOps.wordShingles(col("text"), 3),
-          s => graft.functions.HashF.polyHash61(s)).as("b"))
+          s => SpecTwins.polyHash61(s)).as("b"))
       .as[(Seq[Long], Seq[Long])].collect()
     assert(out.nonEmpty)
     out.foreach { case (a, b) => assert(a == b, s"$a != $b") }
@@ -172,7 +164,7 @@ class FunctionsSpec extends SparkSpec {
       val out = docs.select(
           TextOps.shingleHashes(col("text"), n).as("a"),
           transform(TextOps.wordShingles(col("text"), n),
-            s => graft.functions.HashF.polyHash61(s)).as("b"))
+            s => SpecTwins.polyHash61(s)).as("b"))
         .as[(Seq[Long], Seq[Long])].collect()
       out.foreach { case (a, b) => assert(a == b, s"n=$n: $a != $b") }
     }
@@ -206,7 +198,7 @@ class FunctionsSpec extends SparkSpec {
     for (n <- Seq(2, 3, 8)) {
       val out = df.select(
           TextOps.wsShingleHashes(col("text"), n).as("a"),
-          TextOps.wsShingleHashesHof(col("text"), n).as("b"))
+          SpecTwins.wsShingleHashesHof(col("text"), n).as("b"))
         .as[(Seq[Long], Seq[Long])].collect()
       out.zip(docs).foreach { case ((a, b), d) =>
         assert(a == b, s"n=$n doc=[${d.take(30)}]: $a != $b")
@@ -254,7 +246,7 @@ class FunctionsSpec extends SparkSpec {
       (0x20 to 0x7e).map(_.toChar).mkString)   // every printable ASCII char
     val df = docs.zipWithIndex.map { case (d, i) => (i, d) }.toDF("id", "text")
     val out = df.select(TextOps.fingerprint(col("text")).as("a"),
-      TextOps.fingerprintHof(col("text")).as("b")).as[(Long, Long)].collect()
+      SpecTwins.fingerprintHof(col("text")).as("b")).as[(Long, Long)].collect()
     out.zip(docs).foreach { case ((a, b), d) =>
       assert(a == b, s"doc=[${d.take(30)}]: $a != $b")
     }
@@ -267,7 +259,7 @@ class FunctionsSpec extends SparkSpec {
     }
     val rout = rand.toDF("id", "text")
       .select(TextOps.fingerprint(col("text")).as("a"),
-        TextOps.fingerprintHof(col("text")).as("b")).as[(Long, Long)].collect()
+        SpecTwins.fingerprintHof(col("text")).as("b")).as[(Long, Long)].collect()
     rout.zip(rand).foreach { case ((a, b), (_, d)) =>
       assert(a == b, s"rand doc=[${d.take(40)}]: $a != $b")
     }
@@ -284,7 +276,7 @@ class FunctionsSpec extends SparkSpec {
       (15L, "a b c")))
       .toDF("id", "text")
     val out = docs.select(TextOps.langId(col("text")).as("a"),
-      TextOps.langIdHof(col("text")).as("b")).as[(String, String)].collect()
+      SpecTwins.langIdHof(col("text")).as("b")).as[(String, String)].collect()
     out.foreach { case (a, b) => assert(a == b, s"$a != $b") }
   }
 
@@ -305,18 +297,6 @@ class FunctionsSpec extends SparkSpec {
       .as[(Long, Int, Int)].collect().toSet
     assert(packed == structs)
     assert(packed.count(_._1 == 1L) == 6) // 4 choose 2
-  }
-
-  test("minhash kernel matches the HOF formulation exactly") {
-    import graft.text.{NearDup, TextOps}
-    val docs = sampleDocs.toDF("id", "text")
-    val sh = docs.select(TextOps.wordShingles(col("text"), 3).as("sh"))
-      .where(size(col("sh")) > 0)
-    val out = sh.select(NearDup.minHashSigXx(col("sh"), 16).as("a"),
-        NearDup.minHashSigHof(col("sh"), 16).as("b"))
-      .as[(Seq[Long], Seq[Long])].collect()
-    assert(out.nonEmpty)
-    out.foreach { case (a, b) => assert(a == b) }
   }
 
   test("cappedSortedSet: distinct, sorted, cap overflow -> null, nulls ignored") {

@@ -13,7 +13,7 @@ class LangIdKernelSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private def both(s: String): (String, String) = {
     val u = UTF8String.fromString(s)
-    (LangKernel.langId(u).toString, LangKernel.langIdRegex(u).toString)
+    (LangKernel.langId(u).toString, SpecTwins.langIdRegex(u).toString)
   }
 
   private val cases = Seq(

@@ -52,8 +52,7 @@ class NearestListsSpec extends SparkSpec {
       .select(col("vec_id"), (col("pos") + 1).as("pr"), col("col").as("list"))
       .as[(Long, Int, Int)].collect().toSet
     val fast = ranks(Similarity.nearestLists(v, "vec_id", centroids, nProbe))
-    val hof = ranks(Similarity.nearestListsImpl(v, "vec_id", centroids, nProbe,
-      useKernel = false))
+    val hof = ranks(SpecTwins.nearestListsHof(v, "vec_id", centroids, nProbe))
 
     // the replaced shape, verbatim: crossJoin + row_number window
     val dist = VectorF.dotp(col("__v"), col("__v")) +

@@ -22,7 +22,7 @@ object ProfileJacStages {
       val sh = docs.select(col("doc_id"), TextOps.wordShingles(col("text"), 3).as("sh"))
         .where(size(col("sh")) > 0)
       val ex0 = sh.select(col("doc_id"), explode(col("sh")).as("s"))
-        .select(col("doc_id"), graft.functions.HashF.polyHash61(col("s")).as("h"))
+        .select(col("doc_id"), SpecTwins.polyHash61(col("s")).as("h"))
       val nex = time(s"[$rep] shingle+hash explode count")(ex0.count())
       val grouped = ex0.groupBy("h").agg(sort_array(collect_list("doc_id")).as("ds"))
         .where(size(col("ds")) <= 1000)

@@ -35,7 +35,7 @@ object ProfileJaccard {
         .where(size(col("sh")) > 0)
       val wdf = Window.partitionBy("h")
       val ex = sh.select(col("doc_id"), explode(col("sh")).as("s"))
-        .select(col("doc_id"), graft.functions.HashF.polyHash61(col("s")).as("h"))
+        .select(col("doc_id"), SpecTwins.polyHash61(col("s")).as("h"))
         .withColumn("__df", count(lit(1)).over(wdf))
         .where(col("__df") <= 1000)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -64,7 +64,7 @@ object ProfileJaccard {
       val sh = docs.select(col("doc_id"), TextOps.wordShingles(col("text"), 3).as("sh"))
         .where(size(col("sh")) > 0)
       val grouped = sh.select(col("doc_id"), explode(col("sh")).as("s"))
-        .select(col("doc_id"), graft.functions.HashF.polyHash61(col("s")).as("h"))
+        .select(col("doc_id"), SpecTwins.polyHash61(col("s")).as("h"))
         .groupBy("h").agg(sort_array(collect_list("doc_id")).as("ds"))
         .where(size(col("ds")) <= 1000)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -95,7 +95,7 @@ object ProfileJaccard {
       val sh = docs.select(col("doc_id"), TextOps.wordShingles(col("text"), 3).as("sh"))
         .where(size(col("sh")) > 0)
       val grouped = sh.select(col("doc_id"), explode(col("sh")).as("s"))
-        .select(col("doc_id"), graft.functions.HashF.polyHash61(col("s")).as("h"))
+        .select(col("doc_id"), SpecTwins.polyHash61(col("s")).as("h"))
         .groupBy("h").agg(collect_list("doc_id").as("ds"))
         .where(size(col("ds")) <= 1000)
       val docsets = grouped

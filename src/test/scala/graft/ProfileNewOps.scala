@@ -150,7 +150,7 @@ object ProfileNewOps {
     }
     def redactHof(dir: String): Unit = {
       val d = spark.read.parquet(s"$dir/documents.parquet")
-      d.select(TextOps.redactPiiHof(col("text")).as("t"))
+      d.select(SpecTwins.redactPiiHof(col("text")).as("t"))
         .agg(sum(length(col("t")))).collect(): Unit
     }
     def decontam(dir: String): Unit = {

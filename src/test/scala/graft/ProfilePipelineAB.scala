@@ -50,13 +50,13 @@ object ProfilePipelineAB {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
     // warm all arms (JIT + codegen for both fingerprint forms)
-    pipeline(TextOps.fingerprint); pipeline(TextOps.fingerprintHof); dupgroups()
+    pipeline(TextOps.fingerprint); pipeline(SpecTwins.fingerprintHof); dupgroups()
     val (ks, hs, ds) = (collection.mutable.Buffer[Double](),
       collection.mutable.Buffer[Double](), collection.mutable.Buffer[Double]())
     for (rep <- 1 to 6) {
       val st = Calib.singleThread()
       val k = time(pipeline(TextOps.fingerprint))
-      val h = time(pipeline(TextOps.fingerprintHof))
+      val h = time(pipeline(SpecTwins.fingerprintHof))
       val d = time(dupgroups())
       ks += k; hs += h; ds += d
       println(f"rep$rep st=$st%.3f kernel=$k%.3f hof=$h%.3f dupgroups=$d%.3f")

@@ -39,10 +39,10 @@ object ProfileTextKernelsAB {
     // one row of corpus-wide aggregates over every kernel output — forces
     // full evaluation and doubles as the cross-arm equality witness
     def score(kernel: Boolean): org.apache.spark.sql.Row = {
-      val lang: Column => Column = if (kernel) TextOps.langId else TextOps.langIdHof
-      val qual: Column => Column = if (kernel) TextOps.qualityScore else TextOps.qualityScoreHof
-      val bpe: Column => Column = if (kernel) TextOps.bpeishTokenCount else TextOps.bpeishTokenCountHof
-      val ws: Column => Column = if (kernel) TextOps.wsTokenCount else TextOps.wsTokenCountHof
+      val lang: Column => Column = if (kernel) TextOps.langId else SpecTwins.langIdHof
+      val qual: Column => Column = if (kernel) TextOps.qualityScore else SpecTwins.qualityScoreHof
+      val bpe: Column => Column = if (kernel) TextOps.bpeishTokenCount else SpecTwins.bpeishTokenCountHof
+      val ws: Column => Column = if (kernel) TextOps.wsTokenCount else SpecTwins.wsTokenCountHof
       scaledDocs().select(
           lang(col("text")).as("l"),
           qual(col("text")).as("q"),

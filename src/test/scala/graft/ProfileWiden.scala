@@ -43,13 +43,13 @@ object ProfileWiden {
       }
       time(s"[$rep] minhash sig, as-scanned") {
         docs.select(graft.functions.HashF.minhashPolySig(
-          graft.text.TextOps.shinglesOf(graft.text.TextOps.tokens(col("text")), 5), 64).as("sig"))
+          SpecTwins.shinglesOf(graft.text.TextOps.tokens(col("text")), 5), 64).as("sig"))
           .write.format("noop").mode("overwrite").save()
       }
       time(s"[$rep] minhash sig, repartition(32) first") {
         docs.repartition(32)
           .select(graft.functions.HashF.minhashPolySig(
-            graft.text.TextOps.shinglesOf(graft.text.TextOps.tokens(col("text")), 5), 64).as("sig"))
+            SpecTwins.shinglesOf(graft.text.TextOps.tokens(col("text")), 5), 64).as("sig"))
           .write.format("noop").mode("overwrite").save()
       }
     }

@@ -60,7 +60,7 @@ class SimHash128Spec extends SparkSpec {
     val sigs = (0 until 40).map { _ =>
       val toks = (0 until 30).map(_ => ('a' + rnd.nextInt(26)).toChar.toString)
       val arr = new GenericArrayData(toks.map(t => UTF8String.fromString(t): Any).toArray)
-      val s = graft.functions.HashKernels.simhashPoly128(arr)
+      val s = SpecTwins.simhashPoly128(arr)
       (s.getLong(0), s.getLong(1))
     }
     val diffBits = sigs.map { case (a, b) => java.lang.Long.bitCount(a ^ b) }

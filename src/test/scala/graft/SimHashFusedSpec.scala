@@ -33,7 +33,7 @@ class SimHashFusedSpec extends SparkSpec {
     val df = cases.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val out = df.select(col("id"),
       NearDup.simHash(col("text")).as("fused"),
-      NearDup.simHashComposed(col("text")).as("composed")).collect()
+      SpecTwins.simHashComposed(col("text")).as("composed")).collect()
     out.foreach { r =>
       assert(r.getLong(1) == r.getLong(2), s"simhash64 mismatch id=${r.getLong(0)}")
     }
@@ -43,7 +43,7 @@ class SimHashFusedSpec extends SparkSpec {
     val df = cases.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val out = df.select(col("id"),
       NearDup.simHash128(col("text")).as("fused"),
-      NearDup.simHash128Composed(col("text")).as("composed")).collect()
+      SpecTwins.simHash128Composed(col("text")).as("composed")).collect()
     out.foreach { r =>
       assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"simhash128 mismatch id=${r.getLong(0)}")
     }
@@ -67,7 +67,7 @@ class SimHashFusedSpec extends SparkSpec {
     val df = divergent.toDF("id", "text")
     val out = df.select(col("id"),
       NearDup.simHash(col("text")).as("fused"),
-      NearDup.simHashComposed(col("text")).as("composed")).collect()
+      SpecTwins.simHashComposed(col("text")).as("composed")).collect()
     out.foreach { r =>
       assert(r.getLong(1) != r.getLong(2),
         s"expected documented fused/composed divergence on id=${r.getLong(0)} — " +
@@ -88,9 +88,9 @@ class SimHashFusedSpec extends SparkSpec {
     val df = docs.toDF("id", "text")
     val out = df.select(col("id"),
       NearDup.simHash(col("text")).as("f64"),
-      NearDup.simHashComposed(col("text")).as("c64"),
+      SpecTwins.simHashComposed(col("text")).as("c64"),
       NearDup.simHash128(col("text")).as("f128"),
-      NearDup.simHash128Composed(col("text")).as("c128")).collect()
+      SpecTwins.simHash128Composed(col("text")).as("c128")).collect()
     out.foreach { r =>
       assert(r.getLong(1) == r.getLong(2), s"64 mismatch id=${r.getLong(0)}")
       assert(r.getSeq[Long](3) == r.getSeq[Long](4), s"128 mismatch id=${r.getLong(0)}")

@@ -7,7 +7,8 @@ import graft.sources.Store
 /** S7 keyed object store (`utils/store.py:19-128`): named dump/load of
   * small JSON values (plain + gzip) and DataFrames-as-parquet, contains,
   * name iteration, remove — and cross-format parity with what Python's
-  * `json.dump` would have written.
+  * `json.dump` would have written. Plus the S5 read-first frame cache
+  * ([[Store.cached]]).
   */
 class StoreSpec extends SparkSpec {
   import spark.implicits._
@@ -63,6 +64,52 @@ class StoreSpec extends SparkSpec {
     assert(plan.contains("Parquet") && plan.contains("PushedFilters"))
     store.remove("signals")
     assert(!store.contains("signals"))
+  }
+
+  test("read-first round trip: second call reads parquet, not the builder") {
+    val store = new Store(Files.createTempDirectory("rcache").toString)
+    var builds = 0
+    def build = { builds += 1; Seq((1, "a"), (2, "b")).toDF("k", "v") }
+    val first = store.cached(spark, "op", Seq("x", 5))(build)
+    assert(first.count() == 2 && builds == 1)
+    val second = store.cached(spark, "op", Seq("x", 5))(build)
+    assert(builds == 1) // cache hit — build not invoked again
+    assert(second.orderBy("k").as[(Int, String)].collect().toSeq ==
+      Seq((1, "a"), (2, "b")))
+    // different args -> different name -> rebuild
+    store.cached(spark, "op", Seq("x", 6))(build)
+    assert(builds == 2)
+    // dumpFrame overwrites ('w' mode)
+    store.dumpFrame(Seq((9, "z")).toDF("k", "v"), Store.cacheName("op", Seq("x", 5)))
+    val re = store.loadFrame(spark, Store.cacheName("op", Seq("x", 5)))
+    assert(re.as[(Int, String)].collect().toSeq == Seq((9, "z")))
+  }
+
+  test("cross-session: session A materializes, session B serves reads (cache_ret)") {
+    // the reference pregenerates `cache_ret` in a scheduled job and serves
+    // lookups from the cache in later sessions (`crsp.py:450-461`); here
+    // the store is a filesystem prefix, so a SECOND SparkSession —
+    // sharing nothing with the writer but the folder — must hit the
+    // materialization without invoking the build (round-9 verdict #6).
+    val store = new Store(Files.createTempDirectory("rcache-x").toString)
+    var builds = 0
+    def build = { builds += 1; Seq((1, 0.05), (2, -0.02), (3, 0.11)).toDF("permno", "ret") }
+    // session A: the scheduled materialization round
+    store.cached(spark, "cache_ret", Seq(19950101, 20011231))(build)
+    assert(builds == 1)
+    // session B: a fresh session (own state, own catalog) over the same folder
+    val b = spark.newSession()
+    assert(b ne spark)
+    val served = store.cached(b, "cache_ret", Seq(19950101, 20011231)) {
+      fail("session B must serve from the cache, not rebuild"); ???
+    }
+    assert(served.sparkSession eq b)
+    assert(served.orderBy("permno").collect().map(r => (r.getInt(0), r.getDouble(1))).toSeq ==
+      Seq((1, 0.05), (2, -0.02), (3, 0.11)))
+    assert(builds == 1) // the build never ran in session B
+    // and the served frame is a parquet SCAN (pushdown-capable), not lineage
+    val scanned = served.where(col("permno") === 2)
+    assert(scanned.queryExecution.executedPlan.toString.contains("Parquet"))
   }
 
   test("gz mode uses store.py's '<name>.gz' pathname and mixed-format folders read as one store") {

@@ -44,7 +44,7 @@ class TextCountSpec extends SparkSpec {
       length(col("text")).as("n"),
       length(regexp_replace(col("text"), "[^a-zA-Z]", "")).as("alpha"),
       length(regexp_replace(col("text"), "[^.,;:!?]", "")).as("punct"),
-      TextOps.wsTokenCountHof(col("text")).as("words"))
+      SpecTwins.wsTokenCountHof(col("text")).as("words"))
       .selectExpr("id", "k.n_chars", "k.alpha as ka", "k.punct as kp",
         "k.ws_words as kw", "n", "alpha", "punct", "words")
       .collect()
@@ -60,7 +60,7 @@ class TextCountSpec extends SparkSpec {
     val df = tricky.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val out = df.select(col("id"),
       TextOps.bpeishTokenCount(col("text")).as("k"),
-      TextOps.bpeishTokenCountHof(col("text")).as("h")).collect()
+      SpecTwins.bpeishTokenCountHof(col("text")).as("h")).collect()
     out.foreach { r =>
       assert(r.getInt(1) == r.getInt(2),
         s"bpeish mismatch id=${r.getLong(0)}: kernel=${r.getInt(1)} regex=${r.getInt(2)}")
@@ -71,7 +71,7 @@ class TextCountSpec extends SparkSpec {
     val df = tricky.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val out = df.select(col("id"),
       TextOps.qualityScore(col("text")).as("k"),
-      TextOps.qualityScoreHof(col("text")).as("h")).collect()
+      SpecTwins.qualityScoreHof(col("text")).as("h")).collect()
     out.foreach { r =>
       val k = r.getDouble(1); val h = r.getDouble(2)
       assert(java.lang.Double.doubleToRawLongBits(k) ==
@@ -95,9 +95,9 @@ class TextCountSpec extends SparkSpec {
       length(col("text")).as("n"),
       length(regexp_replace(col("text"), "[^a-zA-Z]", "")).as("alpha"),
       length(regexp_replace(col("text"), "[^.,;:!?]", "")).as("punct"),
-      TextOps.wsTokenCountHof(col("text")).as("words"),
+      SpecTwins.wsTokenCountHof(col("text")).as("words"),
       TextOps.bpeishTokenCount(col("text")).as("bk"),
-      TextOps.bpeishTokenCountHof(col("text")).as("bh"))
+      SpecTwins.bpeishTokenCountHof(col("text")).as("bh"))
       .selectExpr("id", "k.n_chars", "k.alpha", "k.punct", "k.ws_words",
         "n", "alpha", "punct", "words", "bk", "bh")
       .collect()
@@ -117,7 +117,7 @@ class TextCountSpec extends SparkSpec {
       graft.functions.HashF.textCounts(col("text")).as("k"),
       TextOps.bpeishTokenCount(col("text")).as("b"),
       TextOps.qualityScore(col("text")).as("q"),
-      TextOps.qualityScoreHof(col("text")).as("qh")).head()
+      SpecTwins.qualityScoreHof(col("text")).as("qh")).head()
     assert(r.isNullAt(0) && r.isNullAt(1))
     // the blend is NOT null on null text: least(null, 1.0) skips the null
     // (so lenScore=1.0·0.3 + punct term 0.1 = 0.4); the kernel form must

@@ -211,7 +211,7 @@ class TextOpsSpec extends SparkSpec {
     val docs = (adversarial ++ fuzz ++ glued).zipWithIndex.map(_.swap)
     val out = docs.toDF("id", "t")
       .select(col("t"), TextOps.redactPii(col("t")).as("a"),
-        TextOps.redactPiiHof(col("t")).as("b"))
+        SpecTwins.redactPiiHof(col("t")).as("b"))
       .as[(String, String, String)].collect()
     out.foreach { case (t, a, b) =>
       assert(a == b, s"input [$t]:\n kernel [$a]\n regex  [$b]")
@@ -431,7 +431,7 @@ class SimilaritySpec extends SparkSpec {
     }.toDF("vec_id", "v")
     val out = vecs.select(
         Similarity.lshProjections(col("v"), 12, 4).as("a"),
-        Similarity.lshProjectionsHof(col("v"), 12, 4).as("b"))
+        SpecTwins.lshProjectionsHof(col("v"), 12, 4).as("b"))
       .as[(Seq[Double], Seq[Double])].collect()
     out.foreach { case (a, b) => assert(a == b) }
   }

@@ -6,7 +6,9 @@ Usage: python3 tools/benchdiff.py BENCH_r04.json BENCH_r05.json [threshold]
 Queries only in one file are listed separately; per-pass times (present
 from round 5 on under "passes") are shown for flagged rows so a host
 stall (one inflated pass) is distinguishable from a real regression
-(all passes slow).
+(all passes slow). Queries a side lists under "failed" (a pass threw;
+older files have no such key) are printed and left out of the
+shared-query comparison.
 """
 import json, sys
 
@@ -101,7 +103,12 @@ if ca and cb and ca.get("st") and cb.get("st"):
           f"ratio column is st-normalized, rmt is mt-normalized; "
           f"flags need BOTH >= {thr}")
     qb = {q: t / speed_st for q, t in qb.items()}
-shared = sorted(set(qa) & set(qb), key=lambda q: -(qb[q] / max(qa[q], 1e-9)))
+failed = set()
+for tag, d in (("old", a), ("new", b)):
+    if d.get("failed"):
+        failed |= set(d["failed"])
+        print(f"{tag} failed: " + ", ".join(d["failed"]))
+shared = sorted((set(qa) & set(qb)) - failed, key=lambda q: -(qb[q] / max(qa[q], 1e-9)))
 print(f"{'query':18s} {'old':>8s} {'new':>8s} {'ratio':>6s} {'rmt':>6s}")
 for q in shared:
     r = qb[q] / max(qa[q], 1e-9)
@@ -117,8 +124,8 @@ for q in shared:
         if speed_st != 1.0:
             passes += " (calib-normalized)"
     print(f"{q:18s} {qa[q]:8.2f} {qb[q]:8.2f} {r:6.2f} {r_mt:6.2f}{flag}{passes}")
-only_a = sorted(set(qa) - set(qb))
-only_b = sorted(set(qb) - set(qa))
+only_a = sorted(set(qa) - set(qb) - failed)
+only_b = sorted(set(qb) - set(qa) - failed)
 if only_a:
     print("removed:", ", ".join(only_a))
 if only_b:

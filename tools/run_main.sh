@@ -1,7 +1,9 @@
 #!/bin/bash
-# Direct-JVM runner for graft mains (ScaleStress, Profile* harnesses,
-# Verify, Bench) — mirrors build.sbt's forked javaOptions without taking
-# the sbt project lock, so a long stress run can coexist with sbt test.
+# Direct-JVM runner for graft mains (Verify, Bench, ExplainAll, PlanAudit,
+# ScaleStress, the Profile* harnesses in src/test) — mirrors build.sbt's
+# forked javaOptions without taking the sbt project lock, so a long
+# stress run can coexist with sbt test. Time a few queries with
+# `SPARK_GRAFT_ONLY=q1,q2 tools/run_main.sh graft.Bench`.
 # Usage: tools/run_main.sh <mainClass> [args...]   (env vars pass through)
 set -euo pipefail
 cd "$(dirname "$0")/.."
