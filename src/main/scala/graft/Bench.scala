@@ -48,6 +48,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.core.Tables.tune(spark)
 
     // Warm-up: run the WHOLE catalog once at the SMALLEST scale factor
     // before timing. Each query compiles its own Catalyst-generated

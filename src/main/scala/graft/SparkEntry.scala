@@ -16,7 +16,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("b1_backtest")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Run them on a
+    * session tuned once with [[graft.core.Tables.tune]].
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     graft.queries.Catalog.queries
 

@@ -1,4 +1,5 @@
 package graft
+import graft.core.Tables
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -6,6 +7,9 @@ import java.nio.file.{Files, Paths}
   * Usage: runMain graft.Verify <sfDir> <outDir> [q1 q2 ...] — trailing
   * query names dump just those queries (and their oracles), so a new
   * oracle can be DuckDB-checked without a full catalog dump.
+  * Before dumping, every table's declared schema is checked against its
+  * file (`Tables.schemaDrift`); any difference exits 1 and names the
+  * table and column.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -22,6 +26,13 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    Tables.tune(spark)
+    val drift = Tables.schemaDrift(spark, sfDir)
+    if (drift.nonEmpty) {
+      drift.foreach(d => System.err.println(s"[verify] schema drift: $d"))
+      spark.stop()
+      sys.exit(1)
+    }
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.iterator.filter { case (n, _) => chosen(n) }.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

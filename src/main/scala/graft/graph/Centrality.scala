@@ -88,16 +88,18 @@ object Centrality {
     * hint pins SHUFFLE_HASH on the rank side: |E| streams exchange-free
     * and unsorted every round. Mechanism evidence: ProfileCC
     * "tree 4000000" (4M nodes, 23 rounds) 152.3/145.6 -> 55.2/36.8 s.
-    * The |V| probe is one map-side approx_count_distinct pass riding the
-    * materialization the loop needs anyway (±2% vs a threshold with wide
-    * headroom).
+    * The |V| probe is one map-side approx_count_distinct pass over
+    * src ∪ dst riding the materialization the loop needs anyway (±2% vs
+    * a threshold with wide headroom); counting `src` alone would miss
+    * pageRank's sink-only nodes, which its rank frame still carries.
     */
   private[graph] def tieredByKey(edges0: DataFrame, key: String)
       : (DataFrame, DataFrame => DataFrame) = {
     val bcThresh = org.apache.spark.sql.graftx.Bridge
       .broadcastThreshold(edges0.sparkSession)
     val cached = edges0.persist(StorageLevel.MEMORY_AND_DISK)
-    val nv = cached.agg(approx_count_distinct(col(key))).head().getLong(0)
+    val nv = cached.select(explode(array(col("src"), col("dst"))).as("node"))
+      .agg(approx_count_distinct(col("node"))).head().getLong(0)
     val big = bcThresh < 0 || nv * 48L > bcThresh
     if (!big) (cached, (df: DataFrame) => df)
     else {

@@ -45,8 +45,7 @@ class AsOfStrategySpec extends SparkSpec {
   }
 
   test("spark.graft.asof.native flag routes joinBackward to the native operator") {
-    spark.conf.set("spark.graft.asof.native", "true")
-    try {
+    withConf("spark.graft.asof.native" -> "true") {
       val out = AsOf.joinBackward(trades, quotes, Seq("sym"), "t", Seq("mid"))
       val plan = out.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeAsOf"), plan)
@@ -55,7 +54,7 @@ class AsOfStrategySpec extends SparkSpec {
         AsOf.joinBackward(trades, quotes, Seq("sym"), "t", Seq("mid"))
       }
       assert(sortedRows(out).toSeq == sortedRows(base).toSeq)
-    } finally spark.conf.set("spark.graft.asof.native", "false")
+    }
   }
 
   test("native plan has one exchange+sort per side and no window") {

@@ -61,10 +61,7 @@ class CCRoundShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .as[(Long, Double)].collect().toMap
     val pr0 = graft.graph.GraphOps.pageRank(e, iters = 10)
       .as[(Long, Double)].collect().toMap
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val ev1 = graft.graph.Centrality.eigenvector(e, iters = 30)
         .as[(Long, Double)].collect().toMap
       val pr1 = graft.graph.GraphOps.pageRank(e, iters = 10)
@@ -72,7 +69,7 @@ class CCRoundShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(ev0.keySet == ev1.keySet && pr0.keySet == pr1.keySet)
       ev0.foreach { case (k2, v) => assert(math.abs(ev1(k2) - v) < 1e-9, s"eigen $k2") }
       pr0.foreach { case (k2, v) => assert(math.abs(pr1(k2) - v) < 1e-9, s"pagerank $k2") }
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   test("shuffle tier equals broadcast tier exactly (forced via threshold -1)") {
@@ -80,12 +77,9 @@ class CCRoundShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .select((col("id") % 211).as("src"), ((col("id") * 7) % 191 + 300).as("dst"))
     val expect = GraphOps.connectedComponents(e)
       .as[(Long, Long)].collect().toMap
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val got = GraphOps.connectedComponents(e).as[(Long, Long)].collect().toMap
       assert(got == expect, "shuffle-tier labels diverge from broadcast tier")
-    } finally spark.conf.set(key, prev)
+    }
   }
 }

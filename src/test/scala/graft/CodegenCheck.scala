@@ -14,6 +14,7 @@ object CodegenCheck {
       .master("local[8]").config("spark.sql.shuffle.partitions", 32)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    graft.core.Tables.tune(spark)
     spark.listenerManager.register(new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
         last = qe.executedPlan.toString

@@ -22,25 +22,14 @@ class Float32RescoreSpec extends SparkSpec {
   import spark.implicits._
 
   private val dir = "/root/testdata/sf0.01"
-  // lazy VAL, not def: Tables.table runs tune(), which (re)sets the
-  // session broadcast threshold — a def evaluated inside inBigRegime
-  // would silently undo the -1 and make every comparison vacuous
   private lazy val vecs = graft.core.Tables.embeddings(spark, dir)
 
   /** Run `f` with auto-broadcast disabled — [[Similarity]]'s size gate
     * reads that as "broadcast unavailable", i.e. the corpus-scale
-    * regime. Restores the PRIOR threshold (tune()'s 64 MB), never
-    * unset-to-default: the 10 MB default could silently flip a later
-    * "catalog" arm into the big regime and leak into other suites.
+    * regime.
     */
-  private def inBigRegime[A](f: => A): A = {
-    val prior = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    try f finally prior match {
-      case Some(p) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", p)
-      case None => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    }
-  }
+  private def inBigRegime[A](f: => A): A =
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(f)
 
   test("dotpF matches dotp within float-rounding and keeps null semantics") {
     val rows = Seq(

@@ -5,12 +5,10 @@ package graft
   * parallelism. The shipped sf0.1 parquet carries ~3 row groups per
   * table, so scan stages run 3 tasks regardless of core count and the
   * 8c-vs-32c ratio reads ≈1 forever (an input artifact, not an engine
-  * property). Every table except events is re-written as 32 files
-  * (row-identical, order-free — every catalog query is order-insensitive
-  * and the oracle compare sorts); events.parquet is COPIED byte-for-byte
-  * because its TIMESTAMP(NANOS) column cannot be round-tripped through a
-  * Spark write (it would silently become micros and shift Tables.events'
-  * div-1000 conversion).
+  * property). Every table is re-written as 32 files (row-identical,
+  * order-free — every catalog query is order-insensitive and the oracle
+  * compare sorts). Timestamps are TIMESTAMP(MICROS) in and out, read as
+  * plain TimestampType in the UTC session, so instants are unchanged.
   *
   * Usage: runMain graft.MrgGen <srcDir> <outDir>
   */
@@ -29,21 +27,9 @@ object MrgGen {
     val tables = new java.io.File(src).listFiles().map(_.getName)
       .filter(_.endsWith(".parquet")).sorted
     for (t <- tables) {
-      if (t == "events.parquet") {
-        // byte copy (file or directory) — see scaladoc
-        val from = java.nio.file.Paths.get(src, t)
-        val to = java.nio.file.Paths.get(out, t)
-        if (from.toFile.isDirectory)
-          org.apache.commons.io.FileUtils.copyDirectory(from.toFile, to.toFile)
-        else
-          java.nio.file.Files.copy(from, to,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        println(s"copied $t")
-      } else {
-        val df = spark.read.parquet(s"$src/$t")
-        df.repartition(32).write.mode("overwrite").parquet(s"$out/$t")
-        println(s"rewrote $t as 32 files")
-      }
+      spark.read.parquet(s"$src/$t").repartition(32)
+        .write.mode("overwrite").parquet(s"$out/$t")
+      println(s"rewrote $t as 32 files")
     }
     spark.stop()
   }

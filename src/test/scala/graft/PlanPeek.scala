@@ -19,6 +19,7 @@ object PlanPeek {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.core.Tables.tune(spark)
     val df = Catalog.queries(name)(spark, dir)
     df.write.format("noop").mode("overwrite").save()
     // executedPlan after execution reflects AQE's final choices

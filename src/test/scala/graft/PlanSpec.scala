@@ -80,15 +80,14 @@ class PlanSpec extends SparkSpec {
     import graft.ops.AsOf
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("asofbuckets").toString
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.graft.asof.native" -> "true") {
       val left = (0 until 2000).map(i => (i % 50, i / 50 * 10, i.toDouble))
         .toDF("k", "t", "x")
       val right = (0 until 1000).map(i => (i % 50, i / 50 * 23, i * 1.5))
         .toDF("k", "t", "v")
       Bucketing.writeBucketed(left, "asof_l", s"$dir/l", Seq("k"), 8)
       Bucketing.writeBucketed(right, "asof_r", s"$dir/r", Seq("k"), 8)
-      spark.conf.set("spark.graft.asof.native", "true")
       val j = AsOf.joinBackward(Bucketing.table(spark, "asof_l"),
         Bucketing.table(spark, "asof_r"), Seq("k"), "t", Seq("v"),
         allowExact = true)
@@ -106,8 +105,6 @@ class PlanSpec extends SparkSpec {
         .collect().sorted.toSeq
       assert(a == b)
     } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.graft.asof.native")
       spark.sql("DROP TABLE IF EXISTS asof_l")
       spark.sql("DROP TABLE IF EXISTS asof_r")
     }
@@ -117,8 +114,7 @@ class PlanSpec extends SparkSpec {
     import graft.sources.Bucketing
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("buckets").toString
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val a = (0 until 1000).map(i => (i % 100, i.toDouble)).toDF("k", "x")
       val b = (0 until 500).map(i => (i % 100, i.toString)).toDF("k", "s")
       Bucketing.writeBucketed(a, "bspec_a", s"$dir/a", Seq("k"), 8)
@@ -130,7 +126,6 @@ class PlanSpec extends SparkSpec {
       assert(!p.contains("Exchange"), p) // co-located: zero shuffle
       assert(joined.count() == 5000)     // 10 x 5 per key over 100 keys
     } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.sql("DROP TABLE IF EXISTS bspec_a")
       spark.sql("DROP TABLE IF EXISTS bspec_b")
     }

@@ -17,6 +17,7 @@ object ProfileHitsLocal {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.core.Tables.tune(spark)
     for (rep <- 1 to 4) {
       val t0 = System.nanoTime()
       val edges = Tables.lineitem(spark, dir)

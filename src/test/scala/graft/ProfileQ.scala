@@ -17,6 +17,7 @@ object ProfileQ {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    graft.core.Tables.tune(spark)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
     })

@@ -43,15 +43,7 @@ class SemanticSpec extends SparkSpec {
         out
       }
       val cat = run()
-      // restore the PRIOR threshold (tune()'s 64 MB), never the 10 MB
-      // default — unset would silently shrink the later arms' catalog
-      // regime and leak into every suite sharing this session
-      val prior = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-      val big = try run() finally prior match {
-        case Some(p) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", p)
-        case None => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      }
+      val big = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(run())
       assert(cat.nonEmpty, s"t=$threshold produced no pairs — vacuous despite planted dups")
       assert(cat.keySet == big.keySet,
         s"t=$threshold: onlyCat=${(cat.keySet -- big.keySet).take(5)} " +

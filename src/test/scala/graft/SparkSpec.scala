@@ -4,10 +4,26 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs (one JVM per `sbt test` fork). */
+/** Shared local session for specs (one JVM per `sbt test` fork), tuned
+  * once with `Tables.tune`: a spec that needs another setting sets it
+  * itself and restores the prior value (`withConf`).
+  */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // session shared across suites
+
+  /** Run `body` with the given session confs, then restore each key's
+    * prior value (or unset it) so no setting leaks into later suites.
+    */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prior = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {
@@ -19,6 +35,6 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    s
+    graft.core.Tables.tune(s)
   }
 }

@@ -31,11 +31,8 @@ class BarAggSpec extends SparkSpec {
           .as("__thr"))
       .as[(Long, Double)].collect().toMap
 
-  private def withFallback[A](threshold: Int)(f: => A): A = {
-    val prev = spark.conf.get(fbKey)
-    spark.conf.set(fbKey, threshold.toString)
-    try f finally spark.conf.set(fbKey, prev)
-  }
+  private def withFallback[A](threshold: Int)(f: => A): A =
+    withConf(fbKey -> threshold.toString)(f)
 
   private def randomBounds(seed: Int, n: Int, queries: Int, parts: Int) = {
     val rnd = new scala.util.Random(seed)
@@ -81,9 +78,7 @@ class BarAggSpec extends SparkSpec {
 
   test("big-regime top-k restores the session fallback threshold") {
     val before = spark.conf.get(fbKey)
-    val prior = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val rnd = new scala.util.Random(3)
       val vecs = Seq.tabulate(300)(i => (i.toLong, Array.fill(8)(rnd.nextGaussian())))
         .toDF("id", "v").withColumn("v", col("v").cast("array<double>"))
@@ -93,9 +88,6 @@ class BarAggSpec extends SparkSpec {
       assert(out.count() > 0)
       assert(spark.conf.get(fbKey) == before,
         s"fallback threshold leaked: ${spark.conf.get(fbKey)} != $before")
-    } finally prior match {
-      case Some(p) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", p)
-      case None => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 

@@ -47,6 +47,7 @@ object ProfileAnnStreamDecomp {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.core.Tables.tune(spark)
     import spark.implicits._
 
     val planes = Capacity.lshPlanes(copies * Capacity.RefEmbeddingRows)

@@ -20,14 +20,13 @@ object ProfileBarPlan {
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[8]").appName("barplan")
       .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.autoBroadcastJoinThreshold", -1)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // load FIRST (Tables.tune resets the broadcast threshold to 64 MB),
-    // then force the big regime the QuantPrefilterSpec way
-    val emb = graft.core.Tables.embeddings(spark, dir)
+    graft.core.Tables.tune(spark)
+    // force the big regime the QuantPrefilterSpec way
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
+    val emb = graft.core.Tables.embeddings(spark, dir)
     println(s"vectorSideTooBig=${Similarity.vectorSideTooBig(
       Similarity.prepped(emb, "vec_id", "embedding"))}")
     val df = Similarity.ivfTopKTwoLevel(emb, "vec_id", "embedding",

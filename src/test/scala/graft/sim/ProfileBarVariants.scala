@@ -41,6 +41,7 @@ object ProfileBarVariants {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.core.Tables.tune(spark)
 
     val k = 5
     val nLists = Capacity.ivfNLists(copies * Capacity.RefEmbeddingRows)

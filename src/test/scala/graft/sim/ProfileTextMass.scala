@@ -29,6 +29,7 @@ object ProfileTextMass {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.core.Tables.tune(spark)
 
     dirs.foreach { dir =>
       val docs = graft.core.Tables.documents(spark, dir)

@@ -20,22 +20,10 @@ class QuantPrefilterSpec extends graft.SparkSpec {
   import spark.implicits._
 
   private val dir = "/root/testdata/sf0.01"
-  // lazy val: Tables.table runs tune(), which (re)sets the broadcast
-  // threshold — evaluating it inside inBigRegime would undo the -1
   private lazy val vecs = graft.core.Tables.embeddings(spark, dir)
 
-  /** Restore the PRIOR threshold (tune()'s 64 MB), never unset-to-
-    * default — the 10 MB default could silently flip a later "catalog"
-    * arm into the big regime and leak into suites sharing the session.
-    */
-  private def inBigRegime[A](f: => A): A = {
-    val prior = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    try f finally prior match {
-      case Some(p) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", p)
-      case None => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    }
-  }
+  private def inBigRegime[A](f: => A): A =
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(f)
 
   test("quantI8: layout, zero vector, null semantics; dotpI8 exactness") {
     val out = Seq(

@@ -120,12 +120,7 @@ class TwoLevelSpec extends graft.SparkSpec {
       out
     }
     val cat = run()
-    val prior = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    val big = try run() finally prior match {
-      case Some(p) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", p)
-      case None => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    }
+    val big = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(run())
     assert(cat.nonEmpty, "vacuous despite planted exact copies")
     assert(cat.keySet == big.keySet,
       s"onlyCat=${(cat.keySet -- big.keySet).take(5)} onlyBig=${(big.keySet -- cat.keySet).take(5)}")
@@ -281,12 +276,7 @@ class TwoLevelSpec extends graft.SparkSpec {
     assert(rTwo >= rFlat - 0.12 && rTwo >= 0.45,
       s"two-level recall@$k $rTwo vs flat $rFlat — outside the pinned contract")
     // cross-regime: the big (int8 bounds + bar) path is output-identical
-    val prior = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    val big = try run() finally prior match {
-      case Some(p) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", p)
-      case None => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    }
+    val big = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(run())
     assert(a.map(t => (t._1, t._3)).toSet == big.map(t => (t._1, t._3)).toSet)
     val bigM = big.map(t => (t._1, t._3) -> (t._2, t._4)).toMap
     a.foreach { case (q, n, r, c) =>
