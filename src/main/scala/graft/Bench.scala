@@ -1,12 +1,51 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Results are forced with a noop-format write
   * (count() alone would let Catalyst prune the projections).
+  *
+  * It also writes `bench_layers.json`: one record per (query, timed
+  * pass) with the wall time and the [[Layers]] counters of each phase —
+  * `build` (the query function building its plan, including any eager
+  * jobs it runs) and `run` (the noop write).
   */
 object Bench {
+
+  /** Wall seconds of one timed run's two phases; `ok` is false when the
+    * query threw (in `build` when `run` is 0).
+    */
+  final case class Phases(build: Double, run: Double, ok: Boolean)
+
+  /** Builds `fn`'s plan under the job group `<tag>|build` and forces it
+    * with a noop write under `<tag>|run`, so a [[Layers]] listener can
+    * split the run's jobs by phase. A failure is reported on stderr and
+    * returned as `ok = false`.
+    */
+  def runTagged(spark: SparkSession, tag: String, name: String,
+                fn: (SparkSession, String) => DataFrame, dir: String): Phases = {
+    val sc = spark.sparkContext
+    val t0 = System.nanoTime()
+    var t1 = 0L
+    def secs(a: Long, b: Long) = (b - a) / 1e9
+    try {
+      sc.setJobGroup(s"$tag|build", name)
+      val df = fn(spark, dir)
+      t1 = System.nanoTime()
+      sc.setJobGroup(s"$tag|run", name)
+      df.write.format("noop").mode("overwrite").save()
+      Phases(secs(t0, t1), secs(t1, System.nanoTime()), ok = true)
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      val t2 = System.nanoTime()
+      val built = if (t1 == 0L) t2 else t1
+      Phases(secs(t0, built), secs(built, t2), ok = false)
+    } finally sc.clearJobGroup()
+  }
 
   /** The timed passes reduced to the figures of the final line.
     * `samples` keeps each query with at least one successful pass (name
@@ -111,6 +150,10 @@ object Bench {
     val names = SparkEntry.queries.toSeq.sortBy(_._1).map(_._1)
       .filter(n => only.forall(_.contains(n)))
     val perPass = scala.collection.mutable.Map.empty[String, List[Option[Double]]]
+    // warm-up jobs carry no job group, so the collector ignores them
+    val layers = new Layers
+    spark.sparkContext.addSparkListener(layers)
+    val phases = mutable.ListBuffer.empty[(Int, String, Phases)]
     val calibSt = scala.collection.mutable.ListBuffer.empty[Double]
     val calibMt = scala.collection.mutable.ListBuffer.empty[Double]
     for (p <- 1 to passes) {
@@ -127,16 +170,9 @@ object Bench {
       calibMt += Calib.multiThread(cpus.toInt)
       val order = new scala.util.Random(p).shuffle(names)
       for (name <- order) {
-        val fn = SparkEntry.queries(name)
-        val t0 = System.nanoTime()
-        val dt =
-          try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            None
-          }
+        val ph = runTagged(spark, s"$p|$name", name, SparkEntry.queries(name), sfDir)
+        phases += ((p, name, ph))
+        val dt = if (ph.ok) Some(ph.build + ph.run) else None
         // queries persist intermediates internally (exploded shingles, edge
         // lists); dropping them between queries keeps each measurement
         // independent and bounds heap growth over the 70+ query run (an 8g
@@ -186,8 +222,73 @@ object Bench {
       try out.println(detail) finally out.close()
     } catch { case e: Throwable => System.err.println(s"[bench] pass file write failed: ${e.getMessage}") }
     println(f"""{"metric":"total","value":${sum.total}%.3f,"unit":"sec","queries":$qs,"warmup":$warmed,"calib":$calibJson,"mtst":${sum.mtSt}%.2f,"stallp":${sum.stallP}%.3f,"failed":$failedJson,"sf":"$sfDir"}""")
+    // stop() drains the listener bus, so every task of every tagged job
+    // has reached `layers` before the records are read
     spark.stop()
+    def phase(p: Int, name: String, ph: String, wall: Double) =
+      (f""""wall_ms":${wall * 1e3}%.1f""" +: layers.of(s"$p|$name|$ph").map { case (k, v) => s""""$k":$v""" })
+        .mkString("{", ",", "}")
+    val records = phases.map { case (p, name, ph) =>
+      s"""{"query":"$name","pass":$p,"ok":${ph.ok},"build":${phase(p, name, "build", ph.build)},""" +
+        s""""run":${phase(p, name, "run", ph.run)}}"""
+    }
+    try {
+      val out = new java.io.PrintWriter("bench_layers.json")
+      try out.println(records.mkString("[\n", ",\n", "\n]")) finally out.close()
+    } catch { case e: Throwable => System.err.println(s"[bench] layer file write failed: ${e.getMessage}") }
   }
+}
+
+/** Per-job-group layer counters, summed over every job submitted under
+  * a job group (`SparkContext.setJobGroup`); a stage and its tasks count
+  * toward the group of the first job that lists the stage. Jobs with no
+  * group (Bench's warm-up) are not recorded. Callbacks run on the listener-bus
+  * thread: read [[of]] only once the bus has delivered the jobs of
+  * interest (after `spark.stop()`, or after a later job was seen).
+  */
+final class Layers extends SparkListener {
+  private val sums = mutable.Map.empty[String, Array[Long]]
+  private val taskMs = mutable.Map.empty[String, mutable.ArrayBuffer[Long]]
+  private val stageGroup = mutable.Map.empty[Int, String]
+
+  private def add(group: String, i: Int, v: Long): Unit =
+    sums.getOrElseUpdate(group, new Array[Long](Layers.Sums.size))(i) += v
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    org.apache.spark.sql.graftx.Bridge.jobGroup(e.properties).foreach { g =>
+      add(g, 0, 1)
+      e.stageIds.foreach(stageGroup.getOrElseUpdate(_, g))
+    }
+
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+    stageGroup.get(e.stageInfo.stageId).foreach(add(_, 1, 1))
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+    for (g <- stageGroup.get(e.stageId); m <- Option(e.taskMetrics)) {
+      Seq(1L, m.executorRunTime, m.executorCpuTime / 1000000L, m.jvmGCTime,
+        m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
+        m.memoryBytesSpilled, m.diskBytesSpilled)
+        .zipWithIndex.foreach { case (v, i) => add(g, i + 2, v) }
+      taskMs.getOrElseUpdate(g, mutable.ArrayBuffer.empty) += m.executorRunTime
+    }
+
+  /** The group's counters in [[Layers.Sums]] order, then the max and the
+    * (lower) median task run ms; all 0 for a group that ran no job.
+    */
+  def of(group: String): Seq[(String, Long)] = {
+    val ms = taskMs.get(group).map(_.sorted).getOrElse(Nil)
+    Layers.Sums.zip(sums.getOrElse(group, new Array[Long](Layers.Sums.size))) ++ Seq(
+      "task_max_ms" -> ms.lastOption.getOrElse(0L),
+      "task_median_ms" -> (if (ms.isEmpty) 0L else ms((ms.size - 1) / 2)))
+  }
+}
+
+object Layers {
+  /** Summed per group: jobs, stage attempts run, tasks, executor run /
+    * CPU / GC ms, shuffle bytes read / written, spill bytes.
+    */
+  val Sums: Seq[String] = Seq("jobs", "stages", "tasks", "run_ms", "cpu_ms", "gc_ms",
+    "shuffle_read_bytes", "shuffle_write_bytes", "spill_mem_bytes", "spill_disk_bytes")
 }
 
 /** Fixed-work CPU probes for cross-round normalization (see the calib

@@ -48,7 +48,7 @@ object PlanAudit {
     // r17: the connectedComponents SHUFFLE tier's un-checkpointed round
     // (labels past broadcast — the corpus-scale regime; the catalog-scale
     // broadcast tier is the unchanged round-16 shape). CCRoundShapeSpec
-    // pins the shape; ProfileCC "tree 4000000" is the wall evidence.
+    // pins the shape; a 4M-node tree (152 -> 55 s) is the wall evidence.
     "g_components__round_body" -> ((s: SparkSession, dir: String) =>
       graft.graph.GraphOps.ccRoundForAudit(graft.queries.GraphQ.nationGraph(s, dir))),
     "a10_kpp__bydate" -> ((s: SparkSession, dir: String) =>

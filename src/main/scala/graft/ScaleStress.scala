@@ -126,13 +126,6 @@ object ScaleStress {
     * two-level scope; no catalog twin by design — the catalog stays
     * frozen at 88).
     */
-  /** The stress plan for one query — exposed for the Profile* A/B
-    * harnesses (same override table the timed runs use).
-    */
-  private[graft] def stressPlan(q: String, s: SparkSession, dir: String,
-                                copies: Int): org.apache.spark.sql.DataFrame =
-    stressFn(q)(s, dir, copies)
-
   private def stressFn(q: String): (SparkSession, String, Int) => org.apache.spark.sql.DataFrame =
     q match {
       // Overrides derive their parameters from graft.sim.Capacity (the
@@ -169,7 +162,7 @@ object ScaleStress {
         // the unthresholded op's ×729 slope was its full-f64 dot volume
         // plus the candidate-volume output. NOT comparable row-to-row
         // with pre-round-13 committed e_annstream decades (those
-        // measured the unthresholded op; disclosed in the README table).
+        // measured the unthresholded op; disclosed in the LEDGER.md table).
         graft.streaming.AnnStream.cosineCandidates(Tables.embeddings(s, dir),
             "vec_id", "embedding",
             planes = graft.sim.Capacity.lshPlanes(copies * graft.sim.Capacity.RefEmbeddingRows),
@@ -320,7 +313,7 @@ object ScaleStress {
     // data. The fixed-32 default measures the OTHER regime (same
     // hardware, more data): per-partition sort/hash work grows n·log n
     // and steepens the slope (t_jaccard at 30×, round-6 verdict #3);
-    // partitions ∝ data is the claim the README makes, so this mode
+    // partitions ∝ data is the claim LEDGER.md makes, so this mode
     // turns it into a measurement.
     val scaleParts = sys.env.get("SPARK_GRAFT_STRESS_SCALEPARTS").contains("1")
     val baseParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -398,14 +391,14 @@ object ScaleStress {
       QRow(q, b, s, s / math.max(b, 1e-9), reps, stFloor)
     }
 
-    // Steady-state protocol (round-11; the README's near-gate watch
+    // Steady-state protocol (round-11; LEDGER.md's near-gate watch
     // argued for it and round-10 measured the cause): ITERATIVE queries
     // re-plan per AQE round and per data size, so their first scaled
     // reps carry scaled-plan compile that min-of-2 cannot amortize —
-    // ProfileLinkpred30 measured five same-JVM ×30 reps declining
+    // g_linkpred measured five same-JVM ×30 reps declining
     // monotonically 49.2/41.8/33.4/28.5 s to steady state (~18 s of the
-    // old 46 s min-of-2 reading was compile; ProfileHitsBcast saw the
-    // same shape for g_hits, 23.7→9.6→6.7). Those queries get 4
+    // old 46 s min-of-2 reading was compile; g_hits showed the
+    // same shape, 23.7→9.6→6.7). Those queries get 4
     // interleaved reps UP FRONT — not only on a gate breach — so the
     // committed table reports steady-state wall time instead of
     // hovering at 84% of the gate on compile cost. The
@@ -534,7 +527,7 @@ object ScaleStress {
       "rotation alphabets must be disjoint")
     // v6 (round 14): FULL Lehmer-coded permutations per set replace the
     // mixed-radix rotation family (and the short-lived v5 dihedral
-    // reflection). The measured flaw in v4/v5 (ProfileTextMass exact
+    // reflection). The measured flaw in v4/v5 (exact candidate-mass
     // counts): with per-set rotations indexed by mixed-radix digits,
     // copies at distance 405 share the set-1/2/3 elements and differ
     // ONLY in the 3-letter rare set "qjz" (~1.5% of chars) — whole
@@ -555,7 +548,7 @@ object ScaleStress {
     // elements agree on E[1] letter, so the expected unchanged char
     // mass between any two copies is ~11% and cross-copy shingle
     // survival ~0.11^(chars/shingle) — vanishing; the v6 ×243
-    // equivalence run against the v4 corpus (README round 14) is the
+    // equivalence run against the v4 corpus (LEDGER.md round 14) is the
     // measured check at an artifact-free decade. Within-copy shingle
     // equality is preserved exactly as before (any char bijection);
     // c = 0 is the identity permutation of every set, so the base
@@ -679,7 +672,7 @@ object ScaleStress {
   *     classes, so past 162 copies some copy pair differs only on the
   *     rare sets by pigeonhole — measured as cross-copy near-duplicate
   *     doc pairs (J ≈ 0.85 at copy distance 405) inflating minhash
-  *     candidate mass 4.4× at ×729 / 7.7× at ×2187 (ProfileTextMass,
+  *     candidate mass 4.4× at ×729 / 7.7× at ×2187 (exact counts,
   *     the v4/v5 rotation family).
   *   - STRIDED index, not raw c: Lehmer unranking of a SMALL index
   *     permutes only the string's tail — raw k = c < 6! fixes the

@@ -53,14 +53,6 @@ object Tables {
     // calendars, breakpoints) are small even at 100 TB fact scale.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    // the native sort-merge as-of operator (plans.AsOfJoin: custom
-    // LogicalPlan + Strategy + SparkPlan) is the DEFAULT backward-as-of
-    // path: one exchange + one sort per side, no window — the 100 TB
-    // shape. Differential + ScalaCheck specs pin it to the union-merge
-    // semantics, and every oracle-checked as-of query re-proves it
-    // against DuckDB per verify run. Unset/false falls back to
-    // union-merge (AsOf.joinBackward keeps both).
-    spark.conf.set("spark.graft.asof.native", "true")
     spark
   }
 

@@ -49,7 +49,7 @@ object Centrality {
     * Deliberately ONE lazy plan, no per-round materialization: the
     * round-9 verdict suggested checkpoint-interval batching (materialize
     * every 2nd round) against the 20-shuffle/deep-tree plan. Measured
-    * interleaved in one JVM (ProfileEigen, sf0.1, min-of-3): catalog
+    * interleaved in one JVM (sf0.1, min-of-3): catalog
     * 1.02 s, +persist(und) 1.15 s, +localCheckpoint every 2nd round
     * 1.05 s — no variant wins; the eager checkpoints serialize rounds
     * that the lazy plan overlaps, and at this iterate size (|V| rows)
@@ -86,8 +86,8 @@ object Centrality {
     * the eager checkpoints), so the edges are hash-partitioned by the
     * join key ONCE through an AQE-stable checkpoint and the returned
     * hint pins SHUFFLE_HASH on the rank side: |E| streams exchange-free
-    * and unsorted every round. Mechanism evidence: ProfileCC
-    * "tree 4000000" (4M nodes, 23 rounds) 152.3/145.6 -> 55.2/36.8 s.
+    * and unsorted every round. Mechanism evidence: a 4M-node tree
+    * (23 rounds) 152.3/145.6 -> 55.2/36.8 s.
     * The |V| probe is one map-side approx_count_distinct pass over
     * src ∪ dst riding the materialization the loop needs anyway (±2% vs
     * a threshold with wide headroom); counting `src` alone would miss
@@ -388,7 +388,7 @@ object Centrality {
     *    real job is the final output action. The previous formulation
     *    ran 2 joins + 1 eager localCheckpoint per round (6 eager jobs
     *    at iters=3) and its measured bottleneck was per-job scheduler
-    *    floor, not data (VERDICT r6 #2; ProfileHits breakdown). This is
+    *    floor, not data (VERDICT r6 #2; per-job breakdown). This is
     *    the path ScaleStress exercises (×10/×30 exceed the local |E|
     *    guard but keep |V| ≈ 0.5M) — many-edges-few-nodes is the common
     *    corpus shape, so this tier carries most real scale.

@@ -85,7 +85,7 @@ object GraphOps {
     // is ~|N| compact array rows (a few MB at sf0.1), so the
     // pair-generation stage — explode to Σ d²/2 rows + partial pair
     // aggregation — was coalesced to 2 tasks and ran 1.6 s of the
-    // query's 2.6 s on two cores (ProfileQ stage trace, round 7). An
+    // query's 2.6 s on two cores (stage trace, round 7). An
     // explicit round-robin repartition to the session's shuffle
     // parallelism pins the explode's input width: the extra exchange
     // moves only the compact array rows, and the d²/2-row explosion
@@ -220,8 +220,8 @@ object GraphOps {
     //    checkpoint (Ckpt.partitioned) and SHUFFLE_HASH the label
     //    builds: the |E| side streams exchange-free and unsorted every
     //    round, the |V|-row label joins pair already-co-partitioned
-    //    frames sort-free. Measured in the tier's REAL regime (ProfileCC
-    //    "tree 4000000": 4M nodes — labels ~190 MB, genuinely past
+    //    frames sort-free. Measured in the tier's REAL regime (a
+    //    4M-node tree — labels ~190 MB, genuinely past
     //    broadcast — 8M symmetrized edges, 23 rounds): old
     //    152.3/145.6 s vs new 55.2/36.8 s, a 3-4x win.
     //

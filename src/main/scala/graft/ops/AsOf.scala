@@ -31,6 +31,12 @@ object AsOf {
     * Right-side ties at the same timestamp resolve to the last row by
     * `tieBreak` ordering (reference sorts then `keep='last'`,
     * `stocks.py:347-350`).
+    *
+    * One path per call shape: without `tieBreak` this is the native
+    * sort-merge operator ([[graft.plans.AsOfJoin]], SURVEY §4.2.1: one
+    * exchange + one sort per side, no window); with it, the union-merge
+    * form, because the native merge keeps input order for right-side
+    * time ties.
     */
   def joinBackward(
       left: DataFrame,
@@ -39,17 +45,24 @@ object AsOf {
       timeCol: String,
       valueCols: Seq[String],
       allowExact: Boolean = true,
+      tieBreak: Option[String] = None): DataFrame =
+    if (tieBreak.isEmpty)
+      graft.plans.AsOfJoin.joinBackward(left, right, keys, timeCol, valueCols, allowExact)
+    else unionMergeBackward(left, right, keys, timeCol, valueCols, allowExact, tieBreak)
+
+  /** The union-merge backward as-of join: the `tieBreak` path of
+    * [[joinBackward]] and the reference the native operator is
+    * differential-tested against (AsOfStrategySpec, AsOfPropertySpec,
+    * PlanSpec).
+    */
+  private[graft] def unionMergeBackward(
+      left: DataFrame,
+      right: DataFrame,
+      keys: Seq[String],
+      timeCol: String,
+      valueCols: Seq[String],
+      allowExact: Boolean = true,
       tieBreak: Option[String] = None): DataFrame = {
-
-    // behind-the-flag native path (SURVEY §4.2.1): the custom sort-merge
-    // as-of operator — differential-tested vs this union-merge form
-    // (AsOfStrategySpec). tieBreak stays on the union-merge path (the
-    // native merge keeps input order for right-side time ties).
-    if (tieBreak.isEmpty &&
-        left.sparkSession.conf.getOption("spark.graft.asof.native").contains("true"))
-      return graft.plans.AsOfJoin.joinBackward(
-        left, right, keys, timeCol, valueCols, allowExact)
-
     val leftCols = left.columns
     // side marker orders right rows before left rows at equal time when
     // exact matches are allowed (so left sees them), after when not.

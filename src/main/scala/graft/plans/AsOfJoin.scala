@@ -21,11 +21,11 @@ import org.apache.spark.sql.graftx.Bridge
   * range-join form), no window materialization of the union frame (vs the
   * union-merge form); memory per task is O(1) beyond the sorters.
   *
-  * Enabled behind the `spark.graft.asof.native` flag via
-  * `spark.experimental.extraStrategies` (so it works on any session, no
-  * builder-time extension wiring); [[graft.ops.AsOf.joinBackward]]
-  * dispatches on that flag and is differential-tested against the
-  * union-merge form (AsOfStrategySpec).
+  * Installed through `spark.experimental.extraStrategies` (so it works
+  * on any session, no builder-time extension wiring). It is the path
+  * [[graft.ops.AsOf.joinBackward]] takes whenever no `tieBreak` is
+  * given, and is differential-tested against the union-merge form
+  * `AsOf.unionMergeBackward` (AsOfStrategySpec, AsOfPropertySpec).
   */
 case class AsOfJoinPlan(left: LogicalPlan, right: LogicalPlan,
                         leftKeys: Seq[Attribute], rightKeys: Seq[Attribute],

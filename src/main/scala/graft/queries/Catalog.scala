@@ -35,7 +35,6 @@ object Catalog {
     Relational.qs ++ Joins.qs ++ Aggs.qs ++ WindowsQ.qs ++ EventsQ.qs ++ TextQ.qs ++
       Batch2.qs ++ Batch3.qs ++ GraphQ.qs ++ BacktestQ.qs
 
-  lazy val byName: Map[String, Q] = all.map(q => q.name -> q).toMap
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.fn).toMap
   lazy val oracleSql: Map[String, String] =

@@ -287,7 +287,7 @@ object TextQ {
       // NOT width-pinned: measured 1.71 s -> 1.85 s with pinWidth — the
       // shingle+hash head overlaps the df-window/self-join shuffles that
       // dominate this plan, so the extra text exchange only adds cost
-      // (same verdict as ProfileWiden's t_minhash experiment)
+      // (same verdict as the t_minhash widening experiment)
       val docs = Tables.documents(s, dir)
       // Shingles are distinct per doc, so |A∩B| = the count of matching
       // shingle rows per pair and |A∪B| = |A|+|B|−|A∩B| — the join carries
@@ -299,7 +299,7 @@ object TextQ {
       // Exchange(h) that the df-window forces, and ReuseExchange dedups
       // it — the shingle fold and the shuffle run ONCE either way, so
       // the persist only added an eager materialization on the serial
-      // path. Measured (ProfileJacDf, min of 3 interleaved reps):
+      // path. Measured (min of 3 interleaved reps):
       // sf0.1 1.76 -> 1.42 s, ×30 8.94 -> 4.69 s. A df-via-groupBy+join
       // variant (B) measured 2.22 s sf0.1 / 4.41 s ×30 — no better than
       // the window once un-persisted; rejected to keep the oracle-
@@ -311,7 +311,7 @@ object TextQ {
       // there (and 1.17 s at sf0.1 vs 1.85 catalog). An AllPairs
       // prefix-filter topology (rarest-first prefixes + intersect-verify)
       // measured better at sf0.1 (0.90) but worse at ×30 (6.1) and tied
-      // at ×81 — topology kept, head replaced (ProfileJaccard). The
+      // at ×81 — topology kept, head replaced. The
       // judge-suggested df>=2 join-side semi-prune measured as a wash
       // (1.78 base vs 1.92 at sf0.1, 22.8 vs 22.2 at ×30) — rejected.
       val ex = docs

@@ -184,10 +184,6 @@ object Capacity {
     * headroom for growth transients, while every committed stress row
     * at ×729 and below — and all but t_embdup's at ×2187 — prices
     * UNDER `parts × budget` and keeps its plan byte-identical.
-    * Overridable per-JVM via `-Dgraft.shj.budgetBytes=N` (a deployment
-    * with bigger executor heaps raises it; the A/B harnesses disable
-    * the guard with a huge value to isolate its cost).
     */
-  def ShjBuildBytesPerPartition: Long =
-    java.lang.Long.getLong("graft.shj.budgetBytes", 96L << 20)
+  val ShjBuildBytesPerPartition: Long = 96L << 20
 }

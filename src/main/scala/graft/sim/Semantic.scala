@@ -101,21 +101,6 @@ object Semantic {
     (pairs, release)
   }
 
-  /** UNGUARDED mid-threshold twin of [[semanticDups]] for the
-    * sim-internal scope-contract specs and the overlap profile: the
-    * specs that PROVE the scope contract (pairs ≡ brute force filtered
-    * to shared membership) need mid thresholds precisely because
-    * qualifying pairs there are plentiful and scope-straddling — that
-    * measurement is exactly why the PUBLIC surface refuses them.
-    * private[sim]; never API.
-    */
-  private[sim] def semanticDupsUnguarded(vecs: DataFrame, idCol: String,
-                                         vecCol: String, threshold: Double,
-                                         nLists: Int = 16, nProbe: Int = 1,
-                                         seed: Long = 42L,
-                                         maxList: Int = Int.MaxValue): DataFrame =
-    dupsParts(vecs, idCol, vecCol, threshold, nLists, nProbe, seed, maxList)._1
-
   /** [[semanticDups]] with the list count chosen from the corpus size
     * ([[Capacity.ivfNLists]]: lists ∝ corpus at ~125 rows/list keeps
     * per-list pair volume constant). `corpusRows` is an explicit caller
@@ -318,17 +303,6 @@ object Semantic {
     (out, release)
   }
 
-  /** [[semanticDedup]] with the list count chosen from the corpus size
-    * ([[Capacity.ivfNLists]]), like [[semanticDupsAuto]].
-    */
-  def semanticDedupAuto(vecs: DataFrame, idCol: String, vecCol: String,
-                        threshold: Double, corpusRows: Long, nProbe: Int = 1,
-                        seed: Long = 42L, maxList: Int = Int.MaxValue,
-                        keepFarthest: Boolean = false): DataFrame =
-    semanticDedup(vecs, idCol, vecCol, threshold,
-      nLists = Capacity.ivfNLists(corpusRows), nProbe = nProbe, seed = seed,
-      maxList = maxList, keepFarthest = keepFarthest)
-
   // ───────────────────────────────────────────────────────────────────
   // Two-level (hierarchical) scope — the corpus-scale quantizer
   // ───────────────────────────────────────────────────────────────────
@@ -398,9 +372,11 @@ object Semantic {
     (pairs, release)
   }
 
-  /** [[semanticDupsUnguarded]]'s two-level twin — private[sim], for the
-    * TwoLevelSpec scope-contract proofs and ProfileTwoLevelAssign's
-    * overlap disclosure only.
+  /** UNGUARDED mid-threshold twin of [[semanticDupsTwoLevel]] for the
+    * TwoLevelSpec scope-contract proofs: they need mid thresholds
+    * precisely because qualifying pairs there are plentiful and
+    * scope-straddling — that measurement is exactly why the PUBLIC
+    * surface refuses them. private[sim]; never API.
     */
   private[sim] def semanticDupsTwoLevelUnguarded(vecs: DataFrame, idCol: String,
                                                  vecCol: String, threshold: Double,

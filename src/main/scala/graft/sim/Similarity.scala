@@ -96,9 +96,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     thresh < 0 || org.apache.spark.sql.graftx.Bridge.sizeEstimate(v) > thresh
   }
 
-  private[sim] def hashHinted(side: DataFrame, big: Boolean): DataFrame =
-    if (big) side.hint("SHUFFLE_HASH") else side
-
   /** Big-regime SHUFFLE_HASH equi-join with a MEMORY-BOUNDED build side
     * (round 15). The hinted joins below all build corpus-proportional
     * hash maps — at the session's fixed partition count the per-
@@ -295,7 +292,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     // for finite cosines; a zero-norm vector's null/NaN cos is excluded
     // rather than ranked (the window's desc sort put NaN first), so
     // degenerate embeddings never surface as neighbors;
-    // measured interleaved in one JVM (ProfileTopK, min-of-3): the
+    // measured interleaved in one JVM (min-of-3): the
     // brute-force all-pairs shape 5.06 → 3.51 s, an IVF-shaped 2M-row
     // synthetic candidates frame 0.38 → 0.36 s (wash — its 1000-row
     // groups sort cheaply; the win grows with rescored volume per group).
@@ -583,8 +580,8 @@ object Similarity extends org.apache.spark.internal.Logging {
     * was stage 4's 52 GB spill in the s_lsh byte trail). The first fix
     * attempt — a mapPartitions pre-reduce with explicit flush epochs
     * (`BarPartial`, commit faedd20) — was MEASURED SLOWER than the
-    * fallback sort it replaced (same-JVM interleaved A/B/C,
-    * ProfileBarVariants: ×243 pre-reduce 18.1 s vs fallback-sort
+    * fallback sort it replaced (same-JVM interleaved A/B/C:
+    * ×243 pre-reduce 18.1 s vs fallback-sort
     * 12.4 s vs raised-threshold 7.6 s; ×729 36.3 / 29.0 / 19.0 s):
     * leaving Tungsten rows for Scala tuples across the candidate
     * volume costs more than the sequential spill sort it avoids. The
@@ -619,7 +616,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     // around thr.count(), which executes the already-planned cached
     // child, so the raise never reached the aggregate and the partial
     // still sort-spilled the whole candidate stream (round-15
-    // ProfileIvf2lDecomp, stage-attributed: 11.18 GB spill and +10 s at
+    // stage-attributed decomposition: 11.18 GB spill and +10 s at
     // ×729, 0.00 GB with this ordering; the ×2187 run's 34 GB
     // "transient" was the same inert raise). Restored in `finally`
     // after the count materializes the cache; the downstream join
@@ -1269,7 +1266,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     * query BY CONSTRUCTION); lshTopK stays the right op for
     * high-threshold near-dup candidate generation and for corpora
     * whose similarity mass is thin. Five stress decades (through ×729,
-    * 56.3 s ratio 112) are committed in the README.
+    * 56.3 s ratio 112) are committed in LEDGER.md.
     */
   def lshTopK(vecs: DataFrame, idCol: String, vecCol: String,
               k: Int, planes: Int = 12, tables: Int = 4,

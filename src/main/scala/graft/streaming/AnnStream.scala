@@ -63,7 +63,7 @@ case class AnnCandidate(id_a: Long, id_b: Long, cos: Double)
   *     candidate-volume output; the thresholded loop does int8 dots
   *     and emits only true near-dups.
   *
-  * SCALE LAW (round 14, ProfileAnnStreamDecomp — exact counts at
+  * SCALE LAW (round 14, exact counts at
   * ×243/×729/×2187 of the reference corpus): per-arrival work splits
   * into a planes/banding term that grows linear×log (never binding)
   * and a COLLISION-MASS term — int8 bound checks per arrival = bucket

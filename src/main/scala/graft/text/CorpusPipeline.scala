@@ -136,7 +136,7 @@ object CorpusPipeline {
     // The `pinned` upstream matters here: the fused kernel projection is
     // the plan's serial head — on an under-split scan it would run at
     // scan width (the t_pipeline pathology, Tables.pinWidth scaladoc).
-    // Measured in ProfileNewOps' interleaved A/B: 2.54 → 2.14 s at
+    // Measured in an interleaved A/B: 2.54 → 2.14 s at
     // sf0.1, 9.93 → 8.99 s at ×30; a corpus-scale scan has thousands of
     // splits, where the pin is a no-op.
     val text = col(textCol)

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   *
   * The "corpus never shuffled" invariant holds UP TO the broadcast
   * ceiling. Round 15 made the forced broadcast size-aware: a caller
-  * handing a corpus-PROPORTIONAL "benchmark" (ProfileBcastSweep's 2%
+  * handing a corpus-PROPORTIONAL "benchmark" (a measured 2%
   * corpus slice measured the shape monotone but the driver relation
   * grows without bound) gets a SHUFFLE_HASH membership join instead —
   * the corpus exchanges once on the gram hash rather than building a

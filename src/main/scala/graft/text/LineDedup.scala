@@ -123,7 +123,7 @@ object LineDedup {
     // boilerplate — corpus-proportional on any corpus with prevalent
     // repeated lines — and their repetitive long/prefix streams
     // lz4-compress far below the 64 MB threshold, so AQE's
-    // compressed-size re-plan can broadcast them (ProfileBcastSweep
+    // compressed-size re-plan can broadcast them (broadcast
     // census: the ×243 stress corpus ran ALL TEN joins as broadcasts,
     // including the patch joins whose build side carries the REBUILT
     // DOCUMENT TEXT of ~1.2 M affected docs, and read 14.7 s where

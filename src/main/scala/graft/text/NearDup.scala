@@ -121,8 +121,8 @@ object NearDup {
     // measured t_minhash 0.93 -> 1.08 s, t_dupgroups 1.49 -> 2.01 s —
     // the repartition exchange feeds a PERSIST, so its cost lands on the
     // serial materialization path while the fold it widens already
-    // overlaps the candidate/verify shuffles (ProfileWiden's original
-    // verdict, still true).
+    // overlaps the candidate/verify shuffles (the original widening
+    // A/B's verdict, still true).
     val sh = docs
       .select(col(idCol), TextOps.shingleHashes(col(textCol), shingleWidth).as("hs"))
       .where(size(col("hs")) > 0)
@@ -264,7 +264,7 @@ object NearDup {
     * broadcast threshold — at the ×243 stress decade it materialized a
     * BroadcastQueryStage whose 10.9 M-row hash relation built on the
     * driver while the ×729 stream priced above threshold and ran SMJ
-    * (ProfileBcastSweep census; the t_minhash incident's signature).
+    * (broadcast census; the t_minhash incident's signature).
     * The probe is ONE cheap count over the docs frame (metadata-only on
     * a parquet scan); banded rows = nDocs × nBands EXACTLY, bytes
     * estimated at in-memory row width. Catalog scale sits ≥ 30× under
@@ -351,7 +351,7 @@ object NearDup {
       (0, 0, 12), (0, 12, 12), (0, 24, 12), (0, 36, 13), (0, 49, 13),
       (1, 0, 15), (1, 15, 15), (1, 30, 16), (1, 46, 16))
     // array<long>(2) signature ≈ 24 B in-memory (see simHashBandedBig —
-    // the round-15 broadcast-lie guard; ProfileBcastSweep caught the
+    // the round-15 broadcast-lie guard; a broadcast census caught the
     // ×243 banded self-join broadcasting a 10.9 M-row driver relation
     // while ×729 ran SMJ)
     val bandsBig = simHashBandedBig(docs, bandCuts.length, sigBytes = 24)

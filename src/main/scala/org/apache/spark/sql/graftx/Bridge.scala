@@ -43,4 +43,10 @@ object Bridge {
   def sizeEstimate(df: org.apache.spark.sql.DataFrame): BigInt =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .queryExecution.optimizedPlan.stats.sizeInBytes
+
+  /** The job group a job was submitted under, read with Spark's own
+    * (`private[spark]`) property key.
+    */
+  def jobGroup(props: java.util.Properties): Option[String] =
+    Option(props).flatMap(p => Option(p.getProperty(org.apache.spark.SparkContext.SPARK_JOB_GROUP_ID)))
 }

@@ -61,7 +61,7 @@ class AsOfPropertySpec extends SparkSpec {
           df.select("rid", "v", "v2").as[(Long, Option[Double], Option[Double])]
             .collect().map(r => r._1 -> (r._2, r._3)).toMap
 
-        val merged = collectOut(AsOf.joinBackward(left, right, Seq("k"), "t",
+        val merged = collectOut(AsOf.unionMergeBackward(left, right, Seq("k"), "t",
           Seq("v", "v2"), allowExact = exact))
         val native = collectOut(AsOfJoin.joinBackward(left, right, Seq("k"), "t",
           Seq("v", "v2"), allowExact = exact))

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.AsOf
-import graft.plans.AsOfJoin
+import graft.plans.{AsOfJoin, SortMergeAsOfExec}
 
 /** Differential tests: the native sort-merge as-of operator must agree
   * with the union-merge form on every (key, time) shape — matches,
@@ -30,31 +30,30 @@ class AsOfStrategySpec extends SparkSpec {
       .as[(String, Int, Long, Option[Double])].collect().sortBy(r => (r._1, r._2, r._3))
 
   test("native sort-merge as-of equals union-merge (allowExact = true)") {
-    val base = AsOf.joinBackward(trades, quotes, Seq("sym"), "t", Seq("mid"))
+    val base = AsOf.unionMergeBackward(trades, quotes, Seq("sym"), "t", Seq("mid"))
     val native = AsOfJoin.joinBackward(trades, quotes, Seq("sym"), "t", Seq("mid"))
     assert(sortedRows(native).toSeq == sortedRows(base).toSeq)
     assert(native.count() == trades.count())
   }
 
   test("native sort-merge as-of equals union-merge (strict <)") {
-    val base = AsOf.joinBackward(trades, quotes, Seq("sym"), "t", Seq("mid"),
+    val base = AsOf.unionMergeBackward(trades, quotes, Seq("sym"), "t", Seq("mid"),
       allowExact = false)
     val native = AsOfJoin.joinBackward(trades, quotes, Seq("sym"), "t", Seq("mid"),
       allowExact = false)
     assert(sortedRows(native).toSeq == sortedRows(base).toSeq)
   }
 
-  test("spark.graft.asof.native flag routes joinBackward to the native operator") {
-    withConf("spark.graft.asof.native" -> "true") {
-      val out = AsOf.joinBackward(trades, quotes, Seq("sym"), "t", Seq("mid"))
-      val plan = out.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeAsOf"), plan)
-      val base = {
-        spark.conf.set("spark.graft.asof.native", "false")
-        AsOf.joinBackward(trades, quotes, Seq("sym"), "t", Seq("mid"))
-      }
-      assert(sortedRows(out).toSeq == sortedRows(base).toSeq)
-    }
+  test("joinBackward takes the native operator without tieBreak, union-merge with it") {
+    def native(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.sparkPlan.collectFirst { case p: SortMergeAsOfExec => p }.isDefined
+    val out = AsOf.joinBackward(trades, quotes, Seq("sym"), "t", Seq("mid"))
+    assert(native(out), out.queryExecution.sparkPlan.treeString)
+    val tied = AsOf.joinBackward(trades, quotes, Seq("sym"), "t", Seq("mid"),
+      tieBreak = Some("mid"))
+    assert(!native(tied), tied.queryExecution.sparkPlan.treeString)
+    // quotes are unique per (sym, t), so the tie-break changes nothing
+    assert(sortedRows(out).toSeq == sortedRows(tied).toSeq)
   }
 
   test("native plan has one exchange+sort per side and no window") {

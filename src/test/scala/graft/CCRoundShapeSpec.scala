@@ -16,8 +16,8 @@ import graft.graph.GraphOps
   *    both joins SHUFFLE_HASH (an SMJ would re-sort the |E| side every
   *    round), the pre-partitioned |E| leg joins WITHOUT a fresh Exchange
   *    (the point of Ckpt.partitioned), and only the |V|-row exchanges
-  *    remain. ProfileCC "tree 4000000" is the wall-clock evidence
-  *    (152.3/145.6 s -> 55.2/36.8 s, 23 rounds, 4M nodes).
+  *    remain. Wall-clock evidence on a 4M-node tree (23 rounds):
+  *    152.3/145.6 s -> 55.2/36.8 s.
   *  - BROADCAST tier (small |V| — every catalog-scale call): the
   *    round-16 shape unchanged; AQE broadcasts the label side, so the
   *    |E| side is never re-shuffled (pre-partitioning there measured as

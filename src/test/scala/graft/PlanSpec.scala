@@ -70,6 +70,25 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
   }
 
+  test("t_jaccard's adaptive final plan reuses the shingle exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    // the shingle fold is not persisted: exchange reuse is what runs it
+    // once for the sizes and both sides of the self-join
+    def reused(): Int = {
+      val df = Catalog.queries("t_jaccard")(spark, dir)
+      df.collect() // runs df's own QueryExecution, so its final plan is set
+      helper.collectWithSubqueries(df.queryExecution.executedPlan) {
+        case r: ReusedExchangeExec => r
+      }.size
+    }
+    assert(reused() >= 1)
+    withConf("spark.sql.exchange.reuse" -> "false") {
+      assert(reused() == 0)
+    }
+  }
+
   test("t_split is a pure projection + window — no joins at all") {
     val p = plan("t_split")
     assert(!p.contains("Join"), p)
@@ -80,8 +99,7 @@ class PlanSpec extends SparkSpec {
     import graft.ops.AsOf
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("asofbuckets").toString
-    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        "spark.graft.asof.native" -> "true") {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val left = (0 until 2000).map(i => (i % 50, i / 50 * 10, i.toDouble))
         .toDF("k", "t", "x")
       val right = (0 until 1000).map(i => (i % 50, i / 50 * 23, i * 1.5))
@@ -95,8 +113,7 @@ class PlanSpec extends SparkSpec {
       assert(p.contains("SortMergeAsOf"), p.take(800)) // native operator engaged
       assert(!p.contains("Exchange"), p.take(2000)) // co-located: zero shuffle
       // values still correct vs the union-merge library form
-      spark.conf.set("spark.graft.asof.native", "false")
-      val lib = AsOf.joinBackward(Bucketing.table(spark, "asof_l"),
+      val lib = AsOf.unionMergeBackward(Bucketing.table(spark, "asof_l"),
         Bucketing.table(spark, "asof_r"), Seq("k"), "t", Seq("v"),
         allowExact = true)
       val a = j.select("k", "t", "x", "v").as[(Int, Int, Double, Option[Double])]

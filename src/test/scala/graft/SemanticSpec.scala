@@ -24,7 +24,7 @@ class SemanticSpec extends SparkSpec {
   test("big-regime semanticDups (int8 prefilter in the list join) equals the catalog branch") {
     // the real catalog embeddings PLUS 20 planted exact copies, so the
     // tight-threshold arm can never pass vacuously (this corpus has no
-    // natural cos ≥ 0.9 pairs — the ProfileRescoreBytes lesson); the
+    // natural cos ≥ 0.9 pairs — a measured rescore-bytes lesson); the
     // big regime fuses the lossless int8 upper bound into the per-list
     // pair join (round 12) — outputs must match pair-for-pair
     val base = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.01")

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The v6 stress-generator permutations ([[StressGen]]) — the
   * decorrelation contract every text stress decade depends on, pinned
-  * after TWO measured generator defects (both found by ProfileTextMass
-  * exact counts, README round 14): the rotation family's pigeonhole
+  * after TWO measured generator defects (both found by exact
+  * candidate-mass counts, LEDGER.md round 14): the rotation family's pigeonhole
   * (copies at distance 405 differing only on rare letters → planted
   * cross-copy near-dups) and the raw-index Lehmer cut's fixed prefixes
   * (half the copies fixing the set's first letters → frequent words
