@@ -40,9 +40,15 @@ object Tables {
   ).map { case (t, ddl) => t -> StructType.fromDDL(ddl) }
 
   /** Session defaults; call once when a session is built, before any
-    * query is planned on it. Idempotent.
+    * query is planned on it. Idempotent. Also installs the native as-of
+    * join's planner strategy ([[graft.plans.AsOfStrategy]]), after any
+    * strategies the session already has, so building a query never
+    * writes session state.
     */
   def tune(spark: SparkSession): SparkSession = {
+    val strategies = spark.experimental.extraStrategies
+    if (!strategies.contains(graft.plans.AsOfStrategy))
+      spark.experimental.extraStrategies = strategies :+ graft.plans.AsOfStrategy
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     // testdata timestamps carry isAdjustedToUTC=false; a schema-inferring
     // read ([[schemaDrift]]) must type them as plain TimestampType

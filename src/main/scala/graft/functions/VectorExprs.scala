@@ -218,10 +218,10 @@ case class LshProjectionsExpr(child: Expression, nProj: Int)
   * The HOF formulation (`transform(cents, dist-struct)` → `array_sort` →
   * `slice`) is INTERPRETED — higher-order functions sit outside
   * whole-stage codegen — and its cost is O(N·nLists·dim) per pass over
-  * the corpus: with the stress harness growing BOTH N and nLists with
-  * the copy count (standard IVF sizing — lists ∝ corpus), the
-  * interpreted form measured super-linear wall time at ×30 (ratio 76 vs
-  * a gate of 36) purely from lambda/allocation overhead on 30× × 30×
+  * the corpus: with BOTH N and nLists growing with the copy count
+  * (standard IVF sizing — lists ∝ corpus), the interpreted form
+  * measured super-linear wall time at ×30 (ratio 76 vs a gate of 36;
+  * LEDGER.md) purely from lambda/allocation overhead on 30× × 30×
   * the arithmetic. This kernel runs the identical arithmetic as a tight
   * primitive loop with an insertion top-k buffer (no per-centroid
   * struct/array allocation, no sort of the full distance array).

@@ -32,6 +32,29 @@ object Centrality {
       .where(col("src") =!= col("dst")).distinct()
   }
 
+  /** The [[symmetrize]]d edge list collected to the driver as (src, dst)
+    * longs, for the driver-local tiers: refuses (`require`) above
+    * `maxEdges` symmetrized edges unless the caller has `preGuarded` the
+    * count itself.
+    *
+    * The guard stays count-then-collect (2 jobs): the tempting one-job
+    * limit(maxEdges+1).collect() plans CollectLimitExec, whose
+    * incremental partition fetch (1, then 4x, ...) runs FOUR sequential
+    * rounds when a tiny graph never fills the limit — measured
+    * g_components 0.60 -> 0.94 s before reverting (round 10).
+    */
+  private[graph] def collectGuarded(edges: DataFrame, maxEdges: Long, fallback: String,
+                                    preGuarded: Boolean = false): Array[(Long, Long)] = {
+    val und = symmetrize(edges)
+    if (!preGuarded) {
+      val cnt = und.count()
+      require(cnt <= maxEdges,
+        s"driver-local guard: $cnt symmetrized edges > $maxEdges — use $fallback")
+    }
+    und.selectExpr("cast(src as long)", "cast(dst as long)")
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+  }
+
   /** Undirected degrees from a symmetrized edge list. */
   private def degs(und: DataFrame): DataFrame =
     und.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
@@ -332,12 +355,7 @@ object Centrality {
     */
   private def bfsLocalStats(edges: DataFrame, maxEdges: Long)
       : (Array[(Long, Int, Long, Int)], Int) = {
-    val und = symmetrize(edges)
-    val cnt = und.count()
-    require(cnt <= maxEdges,
-      s"local BFS guard: $cnt symmetrized edges > $maxEdges — use the distributed form")
-    val es = und.selectExpr("cast(src as long)", "cast(dst as long)")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val es = collectGuarded(edges, maxEdges, "the distributed form")
     val adj = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
     val nodes = adj.keySet.toArray.sorted
     val stats = nodes.map { s =>
@@ -389,9 +407,9 @@ object Centrality {
     *    ran 2 joins + 1 eager localCheckpoint per round (6 eager jobs
     *    at iters=3) and its measured bottleneck was per-job scheduler
     *    floor, not data (VERDICT r6 #2; per-job breakdown). This is
-    *    the path ScaleStress exercises (×10/×30 exceed the local |E|
-    *    guard but keep |V| ≈ 0.5M) — many-edges-few-nodes is the common
-    *    corpus shape, so this tier carries most real scale.
+    *    the path the ×10/×30 scale runs in LEDGER.md took (they exceed
+    *    the local |E| guard but keep |V| ≈ 0.5M) — many-edges-few-nodes
+    *    is the common corpus shape, so this tier carries most real scale.
     *  - SHUFFLE path (large |V|, where broadcasting the count frames
     *    would be driver-side poison): the round-6 structure — edge list
     *    pre-partitioned by join side through Ckpt.partitioned (keeps
@@ -447,7 +465,7 @@ object Centrality {
     // every graph the broadcast path actually serves is ≥ maxLocalEdges,
     // where the two eager |E| repartition+checkpoint jobs cost far more
     // than the tiny |V|-row agg exchanges they remove. Measured at the
-    // scale the path exists for (ScaleStress ×30, 16.5M edges): 9.4 s
+    // scale the path exists for (×30, 16.5M edges; LEDGER.md): 9.4 s
     // off `raw` vs 24.4 s off the checkpointed pair. The broadcast
     // chain therefore consumes `raw` directly — its joins broadcast the
     // count frames, so it has NO distribution requirement on the edge
@@ -627,12 +645,7 @@ object Centrality {
                        maxEdges: Long = 200000L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val und = symmetrize(edges)
-    val cnt = und.count()
-    require(cnt <= maxEdges,
-      s"local Brandes guard: $cnt symmetrized edges > $maxEdges — use the distributed form")
-    val es = und.selectExpr("cast(src as long)", "cast(dst as long)")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val es = collectGuarded(edges, maxEdges, "the distributed form")
     val adj = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sorted }
     val nodes = adj.keySet.toArray.sorted
     val bc = scala.collection.mutable.LongMap[Double]().withDefaultValue(0.0)

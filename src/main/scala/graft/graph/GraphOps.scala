@@ -143,50 +143,6 @@ object GraphOps {
       .withColumn("pref_attach", col("deg_a") * col("deg_b"))
   }
 
-  /** [[linkPrediction]]'s candidate-pair OCCURRENCE count — Σ over kept
-    * shared neighbors of C(d, 2), i.e. exactly the number of pair rows
-    * the explode stage would emit — WITHOUT emitting them: the same
-    * capped adjacency aggregation (one shuffle of compact array rows),
-    * then one scalar sum of size·(size−1)/2. No d²-row explode, no
-    * pair aggregation, no edge materialization.
-    *
-    * Exists for the stress harness's wall-time-independent linearity
-    * gate (round-13 verdict #5): the DISTINCT-pair count
-    * (`linkPrediction(...).count()`) proved exact ×10/×30/×81/×243
-    * linearity across four decades, but at ×729 materializing the pair
-    * set (plus the checkpointed edge build feeding it) exceeded one
-    * node's local disk — generator volume, not a plan regression. The
-    * occurrence count carries the same signal at a fraction of the
-    * cost: over `copies` disjoint isomorphic graph copies it must be
-    * EXACTLY copies × the base count, and it is strictly MORE sensitive
-    * than the distinct count (any cross-copy adjacency contamination
-    * inflates occurrences even where pair dedup could mask it; a pair
-    * gaining a shared neighbor changes occurrences but not distinct
-    * pairs). GraphSpec pins it equal to `sum(common)` of the full op.
-    */
-  def linkPredictionPairOccurrences(edges: DataFrame, node: String, neighbor: String,
-                                    maxNeighborDegree: Int = Int.MaxValue): Long = {
-    val cappable = edges.schema(node).dataType match {
-      case org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    val adj =
-      if (cappable)
-        edges.groupBy(col(neighbor).as("nb"))
-          .agg(graft.functions.AggF.cappedSortedSet(col(node), maxNeighborDegree).as("ns"))
-          .where(col("ns").isNotNull)
-      else
-        edges.groupBy(col(neighbor).as("nb"))
-          .agg(sort_array(collect_set(col(node))).as("ns"))
-          .where(size(col("ns")) <= maxNeighborDegree)
-    // sum d·(d−1) in LONG and halve on the driver: Spark's `/` on longs
-    // is double division, and the gate's whole point is exact integers
-    val d = size(col("ns")).cast("long")
-    val twice = adj.agg(sum(d * (d - 1L)).as("occ2")).head()
-    if (twice.isNullAt(0)) 0L else twice.getLong(0) / 2L
-  }
-
   /** Connected components of an undirected graph by iterated min-label
     * propagation: every node repeatedly adopts the smallest component id
     * in its closed neighborhood until a fixed point (≤ component-diameter
@@ -306,23 +262,11 @@ object GraphOps {
   def connectedComponentsLocalPairs(edges: DataFrame,
                                     maxEdges: Long = 200000L,
                                     preGuarded: Boolean = false): Array[(Long, Long)] = {
-    // guard stays count-then-collect (2 jobs): the tempting one-job
-    // limit(maxEdges+1).collect() plans CollectLimitExec, whose
-    // incremental partition fetch (1, then 4x, ...) runs FOUR sequential
-    // rounds when a tiny graph never fills the limit — measured
-    // g_components 0.60 -> 0.94 s before reverting (round 10).
     // preGuarded (r17): a caller that has ALREADY proven the symmetrized
     // count fits (symmetrize dedups and drops self-loops, so it emits
     // ≤ 2× the input pairs — dupGroups knows its exact pair count from
     // the persist-materializing probe) skips the redundant count job.
-    val und = Centrality.symmetrize(edges)
-    if (!preGuarded) {
-      val cnt = und.count()
-      require(cnt <= maxEdges,
-        s"local components guard: $cnt symmetrized edges > $maxEdges — use connectedComponents")
-    }
-    val es = und.selectExpr("cast(src as long)", "cast(dst as long)")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val es = Centrality.collectGuarded(edges, maxEdges, "connectedComponents", preGuarded)
     val find = unionFind(es)
     es.map(_._1).distinct.map(n => (n, find(n)))
   }
@@ -406,14 +350,7 @@ object GraphOps {
   def graphInfoLocal(edges: DataFrame, maxEdges: Long = 200000L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // count-then-collect guard, NOT limit+collect — see the measured
-    // CollectLimitExec note in connectedComponentsLocal
-    val und = Centrality.symmetrize(edges)
-    val cnt = und.count()
-    require(cnt <= maxEdges,
-      s"local graphInfo guard: $cnt symmetrized edges > $maxEdges — use graphInfo(smallGraph=false)")
-    val es = und.selectExpr("cast(src as long)", "cast(dst as long)")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val es = Centrality.collectGuarded(edges, maxEdges, "graphInfo(smallGraph=false)")
     val schema = Seq("nodes", "edges", "density", "transitivity",
       "avg_clustering", "components", "largest_component")
     // empty graph: the distributed twin's global aggregates over zero

@@ -21,8 +21,9 @@ import org.apache.spark.sql.graftx.Bridge
   * range-join form), no window materialization of the union frame (vs the
   * union-merge form); memory per task is O(1) beyond the sorters.
   *
-  * Installed through `spark.experimental.extraStrategies` (so it works
-  * on any session, no builder-time extension wiring). It is the path
+  * Installed through `spark.experimental.extraStrategies` by
+  * [[graft.core.Tables.tune]], so only a tuned session can plan it (an
+  * untuned one finds no plan for `AsOfJoinPlan`). It is the path
   * [[graft.ops.AsOf.joinBackward]] takes whenever no `tieBreak` is
   * given, and is differential-tested against the union-merge form
   * `AsOf.unionMergeBackward` (AsOfStrategySpec, AsOfPropertySpec).
@@ -154,13 +155,6 @@ case class SortMergeAsOfExec(leftKeys: Seq[Attribute], rightKeys: Seq[Attribute]
 
 object AsOfJoin {
 
-  /** Install the strategy into the session (idempotent). */
-  def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsOfStrategy))
-      spark.experimental.extraStrategies = cur :+ AsOfStrategy
-  }
-
   /** Backward as-of join through the native operator: left columns plus
     * `valueCols` from the latest right row with rightTime ≤ leftTime
     * (strict < when `allowExact` is false), matched on `keys`.
@@ -170,7 +164,6 @@ object AsOfJoin {
                    timeCol: String, valueCols: Seq[String],
                    allowExact: Boolean = true): DataFrame = {
     val spark = left.sparkSession
-    ensureStrategy(spark)
     val lPlan = Bridge.analyzed(left)
     val rPlan = Bridge.analyzed(right)
     def attr(p: LogicalPlan, n: String): Attribute =

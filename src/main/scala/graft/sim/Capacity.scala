@@ -15,9 +15,10 @@ package graft.sim
   * Every rule is anchored to the sf0.1 reference corpus the recall
   * specs pin (2 000 embeddings, 5 000 documents) and degenerates to the
   * catalog configuration there, so "choose from your row count" and
-  * "what the oracle checked" agree at the base scale. [[graft.ScaleStress]]
-  * derives its per-scale overrides from THESE rules, so the chooser's
-  * outputs are exactly what the stress harness measures at every decade.
+  * "what the oracle checked" agree at the base scale. The per-decade
+  * scale runs recorded in LEDGER.md took their overrides from THESE
+  * rules, so the chooser's outputs are exactly the configurations
+  * measured there.
   */
 object Capacity {
 
@@ -52,8 +53,8 @@ object Capacity {
     * corpus, +1 per corpus doubling (2^planes buckets ∝ rows keeps
     * expected occupancy constant). Per-table recall drops with each
     * added plane — deployments offset with more `tables`; the chooser
-    * follows the stress harness in growing planes only, which makes its
-    * measured ratios a conservative (lower-recall, same-cost) bound.
+    * grows planes only, as the LEDGER.md scale runs did, which makes
+    * their measured ratios a conservative (lower-recall, same-cost) bound.
     * Defaults match [[Similarity.lshTopK]] / `e_annstream` (12 planes at
     * 2 000 rows); pass basePlanes = 8 for [[Similarity.cosineDups]].
     */
@@ -181,7 +182,7 @@ object Capacity {
     * exchange the join needed anyway, just wider) once the estimated
     * build bytes exceed this budget × the session partition count.
     * 96 MB: ≤ ~3 GB of concurrent build memory at 32 cores with ~2×
-    * headroom for growth transients, while every committed stress row
+    * headroom for growth transients, while every LEDGER.md scale row
     * at ×729 and below — and all but t_embdup's at ×2187 — prices
     * UNDER `parts × budget` and keeps its plan byte-identical.
     */

@@ -62,4 +62,20 @@ class AsOfStrategySpec extends SparkSpec {
     assert(plan.contains("SortMergeAsOf"), plan)
     assert(!plan.contains("Window"), plan)
   }
+
+  test("the strategy is installed by Tables.tune, once; building a query writes no session state") {
+    val ns = spark.newSession()
+    def installed = ns.experimental.extraStrategies.count(_ == graft.plans.AsOfStrategy)
+    val l = ns.range(20).selectExpr("'K' AS sym", "CAST(id AS INT) AS t", "id AS trade_id")
+    val r = ns.range(10).selectExpr("'K' AS sym", "CAST(id * 2 AS INT) AS t", "id * 0.5 AS mid")
+    AsOfJoin.joinBackward(l, r, Seq("sym"), "t", Seq("mid"))
+    assert(installed == 0)
+    graft.core.Tables.tune(ns)
+    graft.core.Tables.tune(ns)
+    assert(installed == 1)
+    val before = ns.experimental.extraStrategies
+    val out = AsOfJoin.joinBackward(l, r, Seq("sym"), "t", Seq("mid"))
+    assert(ns.experimental.extraStrategies == before)
+    assert(out.queryExecution.sparkPlan.collectFirst { case p: SortMergeAsOfExec => p }.isDefined)
+  }
 }

@@ -21,8 +21,8 @@ class CapacitySpec extends AnyFunSuite {
   }
 
   test("three stress decades reproduce the measured-near-linear configs") {
-    // x10 / x30 / x81 of the sf0.1 base — the exact overrides
-    // ScaleStress ran and the LEDGER.md tables report
+    // x10 / x30 / x81 of the sf0.1 base — the exact overrides the
+    // LEDGER.md scale tables report
     for ((copies, extra) <- Seq(10 -> 4, 30 -> 5, 81 -> 7)) {
       val rows = copies * ref
       assert(Capacity.lshPlanes(rows) == 12 + extra, s"x$copies")

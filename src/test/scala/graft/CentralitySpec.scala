@@ -172,12 +172,18 @@ class CommunitySpec extends SparkSpec {
     val eDist = m(Centrality.eccentricity(edges), "eccentricity")
     val eLoc = m(Centrality.eccentricityLocal(edges), "eccentricity")
     assert(eDist == eLoc)
-    // the guard refuses oversized graphs
+    import graft.graph.GraphOps
+    // the guard refuses oversized graphs, on every local tier
     intercept[IllegalArgumentException] {
       Centrality.closenessLocal(edges, maxEdges = 10)
     }
+    intercept[IllegalArgumentException] {
+      Centrality.eccentricityLocal(edges, maxEdges = 10)
+    }
+    intercept[IllegalArgumentException] {
+      GraphOps.connectedComponentsLocal(edges, maxEdges = 10)
+    }
     // local union-find components equal the distributed min-label form
-    import graft.graph.GraphOps
     val ccDist = GraphOps.connectedComponents(edges)
       .select(col("node").cast("long"), col("component").cast("long"))
       .as[(Long, Long)].collect().toMap

@@ -368,11 +368,5 @@ class FunctionsSpec extends SparkSpec {
       assert(c == wc && pa == wpa, s"$k")
       assert(math.abs(j - wj) < 1e-12 && math.abs(aa - waa) < 1e-9, s"$k")
     }
-    // the stress gate's cheap pair-OCCURRENCE count == sum(common) of
-    // the full op (each occurrence is one shared neighbor of one pair)
-    val occ = GraphOps.linkPredictionPairOccurrences(edges, "n", "nb",
-      maxNeighborDegree = 60)
-    assert(occ == got.values.map(_._1).sum, s"occ=$occ")
-    assert(occ > 0)
   }
 }

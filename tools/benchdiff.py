@@ -2,6 +2,14 @@
 """Compare two bench JSON lines per query (old new -> sorted ratio table).
 
 Usage: python3 tools/benchdiff.py BENCH_r04.json BENCH_r05.json [threshold]
+       python3 tools/benchdiff.py --layers OLD/bench_layers.json NEW/bench_layers.json
+
+--layers compares two `bench_layers.json` files (graft.Bench writes one
+per run): for each (query, phase) shared by both, the minimum over
+passes of wall_ms and the lower medians of jobs, tasks, cpu_ms and
+shuffle_write_bytes, each as old -> new with the ratio, sorted by wall
+delta (largest slowdown first). Records with "ok": false are listed
+separately and left out.
 
 Queries only in one file are listed separately; per-pass times (present
 from round 5 on under "passes") are shown for flagged rows so a host
@@ -10,7 +18,54 @@ stall (one inflated pass) is distinguishable from a real regression
 older files have no such key) are printed and left out of the
 shared-query comparison.
 """
-import json, sys
+import json, statistics, sys
+
+LAYER_MEDIANS = ("jobs", "tasks", "cpu_ms", "shuffle_write_bytes")
+
+def load_layers(p):
+    """(query, phase) -> {"wall_ms": min, <LAYER_MEDIANS>: median}, and the
+    failed (query, pass) records."""
+    with open(p) as f:
+        recs = json.load(f)
+    failed = [(r["query"], r["pass"]) for r in recs if not r.get("ok")]
+    by = {}
+    for r in recs:
+        if r.get("ok"):
+            for phase in ("build", "run"):
+                by.setdefault((r["query"], phase), []).append(r[phase])
+    out = {}
+    for k, phases in by.items():
+        row = {"wall_ms": min(x["wall_ms"] for x in phases)}
+        for m in LAYER_MEDIANS:
+            row[m] = statistics.median_low(x[m] for x in phases)
+        out[k] = row
+    return out, failed
+
+def layers_diff(old_path, new_path):
+    (a, fa), (b, fb) = load_layers(old_path), load_layers(new_path)
+    for tag, f in (("old", fa), ("new", fb)):
+        if f:
+            print(f"{tag} failed (left out): " +
+                  ", ".join(f"{q} pass {n}" for q, n in sorted(f)))
+    def cell(o, n):
+        num = lambda x: f"{x:.1f}" if isinstance(x, float) else str(x)
+        r = f"{n / o:.2f}x" if o else "-"
+        return f"{num(o)}->{num(n)} ({r})"
+    cols = ("wall_ms",) + LAYER_MEDIANS
+    shared = sorted(set(a) & set(b), key=lambda k: -(b[k]["wall_ms"] - a[k]["wall_ms"]))
+    print(f"{'query':18s} {'phase':5s} " + " ".join(f"{c:>26s}" for c in cols))
+    for k in shared:
+        print(f"{k[0]:18s} {k[1]:5s} " +
+              " ".join(f"{cell(a[k][c], b[k][c]):>26s}" for c in cols))
+    for tag, only in (("only old", set(a) - set(b)), ("only new", set(b) - set(a))):
+        if only:
+            print(f"{tag}: " + ", ".join(f"{q}/{ph}" for q, ph in sorted(only)))
+
+if len(sys.argv) > 1 and sys.argv[1] == "--layers":
+    if len(sys.argv) != 4:
+        raise SystemExit("usage: benchdiff.py --layers OLD.json NEW.json")
+    layers_diff(sys.argv[2], sys.argv[3])
+    sys.exit(0)
 
 def attach_passes(d, text):
     # from round 6 the per-pass detail is a separate preceding line

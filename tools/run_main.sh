@@ -1,8 +1,8 @@
 #!/bin/bash
 # Direct-JVM runner for graft mains (Verify, Bench, ExplainAll, PlanAudit,
-# ScaleStress, the dev mains in src/test) — mirrors build.sbt's forked
-# javaOptions without taking the sbt project lock, so a long stress run
-# can coexist with sbt test. Time a few queries with
+# the dev mains in src/test) — mirrors build.sbt's forked javaOptions
+# without taking the sbt project lock, so a long run can coexist with
+# sbt test. Time a few queries with
 # `SPARK_GRAFT_ONLY=q1,q2 tools/run_main.sh graft.Bench`; besides its two
 # stdout lines, Bench writes bench_layers.json: one record per (query,
 # timed pass) with the wall time, jobs, stages, tasks, executor run/CPU/GC
