@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
+import graft.graph.{Centrality, GraphOps}
 
 /** Plan-discipline audit: builds the physical plan of EVERY catalog
   * query and writes a one-line-per-query summary to PLANS.md — join
@@ -36,21 +38,22 @@ object PlanAudit {
   )
 
   /** Audit-only frames for plan shapes the catalog queries hide from the
-    * gate: `g_hits` eagerly checkpoints each loop round (the final plan
-    * shows only the last round + output joins), and `a10_kpp` collects
-    * its distributed matrix during construction (the returned frame is
-    * 1 local row, so its row was all zeros through round 5). These rows
-    * audit one un-checkpointed hits round and the pre-collect a10 matrix.
+    * gate: `g_hits` and `g_components` eagerly checkpoint each loop round
+    * (the final plan shows only the last round + output joins), and
+    * `a10_kpp` collects its distributed matrix during construction (the
+    * returned frame is 1 local row, so its row was all zeros through
+    * round 5). The `__round_body` rows run the production round function
+    * once, un-checkpointed ([[hitsRoundBody]], [[ccRoundBody]]); the a10
+    * row audits the pre-collect matrix.
     */
-  private val extras: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] = Seq(
+  private val extras: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "g_hits__round_body" -> ((s: SparkSession, dir: String) =>
-      graft.graph.Centrality.hitsRoundForAudit(graft.queries.GraphQ.hitsEdges(s, dir))),
-    // r17: the connectedComponents SHUFFLE tier's un-checkpointed round
-    // (labels past broadcast — the corpus-scale regime; the catalog-scale
-    // broadcast tier is the unchanged round-16 shape). CCRoundShapeSpec
-    // pins the shape; a 4M-node tree (152 -> 55 s) is the wall evidence.
+      hitsRoundBody(graft.queries.GraphQ.hitsEdges(s, dir))),
+    // the connectedComponents SHUFFLE tier (labels past broadcast, the
+    // corpus-scale regime); the catalog-scale broadcast tier is the
+    // round-16 shape
     "g_components__round_body" -> ((s: SparkSession, dir: String) =>
-      graft.graph.GraphOps.ccRoundForAudit(graft.queries.GraphQ.nationGraph(s, dir))),
+      ccRoundBody(graft.queries.GraphQ.nationGraph(s, dir))),
     "a10_kpp__bydate" -> ((s: SparkSession, dir: String) =>
       graft.queries.BacktestQ.a10ByDate(s, dir)._1),
     // g_info's catalog row went driver-local in round 10 (size-guarded
@@ -120,6 +123,27 @@ object PlanAudit {
         "doc_id", "text", maxChunkTokens = 64, overlap = 8, packBudget = 2048L)
     })
   )
+
+  /** One un-checkpointed [[graft.graph.Centrality.hitsRound]] over the
+    * shuffle-path edge pair, with in-degree counts standing in for the
+    * previous round's auth. HitsRoundShapeSpec pins its shape.
+    */
+  private[graft] def hitsRoundBody(edges: DataFrame): DataFrame = {
+    val (eByD, eByS) = Centrality.hitsShuffleEdges(Centrality.hitsRaw(edges, "src", "dst"))
+    val auth = eByS.groupBy(col("d").as("node")).agg(count(lit(1)).as("a"))
+    Centrality.hitsRound(eByD, eByS, Some(auth))._2
+  }
+
+  /** One un-checkpointed [[graft.graph.GraphOps.ccRound]] over the
+    * shuffle-tier edges, from the seed labels (every node its own
+    * component). CCRoundShapeSpec pins its shape.
+    */
+  private[graft] def ccRoundBody(edges: DataFrame): DataFrame = {
+    val (und, hinted) = Centrality.shuffleTier(Centrality.symmetrize(edges), "dst")
+    val labels = und.select(col("src").as("node")).distinct()
+      .withColumn("component", col("node"))
+    GraphOps.ccRound(und, labels, hinted)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")

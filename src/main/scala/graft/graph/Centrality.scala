@@ -98,39 +98,53 @@ object Centrality {
   private def allNodes(und: DataFrame): DataFrame =
     und.select(col("src").as("node")).distinct()
 
-  /** Materialized edge frame + join-side hint for per-round rank joins
-    * (r17, the connectedComponents two-tier recipe shared with
-    * [[eigenvector]] / [[GraphOps.pageRank]]): below the broadcast
-    * threshold the |V|-row rank frame broadcasts at runtime (AQE), so
-    * the edges stay a plain persisted cache and joins stay un-hinted —
-    * the round-16 shapes bit-for-bit. Past it, the un-hinted planner
-    * degrades to a per-round SortMergeJoin that re-shuffles AND re-sorts
-    * the |E| side (rounds are separate jobs — exchange reuse never spans
-    * the eager checkpoints), so the edges are hash-partitioned by the
-    * join key ONCE through an AQE-stable checkpoint and the returned
-    * hint pins SHUFFLE_HASH on the rank side: |E| streams exchange-free
-    * and unsorted every round. Mechanism evidence: a 4M-node tree
-    * (23 rounds) 152.3/145.6 -> 55.2/36.8 s.
+  /** Materialized edge frame, join-side hint and release handle for the
+    * per-round joins of [[GraphOps.connectedComponents]], [[eigenvector]]
+    * and [[GraphOps.pageRank]], tiered on |V|. Below the broadcast
+    * threshold AQE broadcasts the |V|-row state frame at runtime, so the
+    * edges stay a plain persisted cache and the joins stay un-hinted;
+    * pre-partitioning there is a strict loss (measured on a
+    * 1.17M-edge/16k-node graph: 39.5 MB shuffled vs 18.2 MB). Past it,
+    * the edges take [[shuffleTier]].
+    *
     * The |V| probe is one map-side approx_count_distinct pass over
     * src ∪ dst riding the materialization the loop needs anyway (±2% vs
     * a threshold with wide headroom); counting `src` alone would miss
     * pageRank's sink-only nodes, which its rank frame still carries.
+    * The handle unpersists the broadcast tier's cache; the shuffle tier
+    * has already dropped it for the checkpoint.
     */
   private[graph] def tieredByKey(edges0: DataFrame, key: String)
-      : (DataFrame, DataFrame => DataFrame) = {
+      : (DataFrame, DataFrame => DataFrame, () => Unit) = {
     val bcThresh = org.apache.spark.sql.graftx.Bridge
       .broadcastThreshold(edges0.sparkSession)
     val cached = edges0.persist(StorageLevel.MEMORY_AND_DISK)
     val nv = cached.select(explode(array(col("src"), col("dst"))).as("node"))
       .agg(approx_count_distinct(col("node"))).head().getLong(0)
+    // a state row ≈ two longs + row overhead in the broadcast relation
     val big = bcThresh < 0 || nv * 48L > bcThresh
-    if (!big) (cached, (df: DataFrame) => df)
+    if (!big) (cached, (df: DataFrame) => df, () => cached.unpersist(blocking = false))
     else {
-      val p = graft.core.Ckpt.partitioned(cached.repartition(col(key)))
+      val (p, hinted) = shuffleTier(cached, key)
       cached.unpersist(blocking = false)
-      (p, (df: DataFrame) => df.hint("shuffle_hash"))
+      (p, hinted, () => ())
     }
   }
+
+  /** The shuffle tier of [[tieredByKey]]: the edges hash-partitioned by
+    * the join key ONCE through an AQE-stable checkpoint, plus the hint
+    * that pins SHUFFLE_HASH on the |V|-row state side. Un-hinted, the
+    * planner degrades to a per-round SortMergeJoin that re-shuffles AND
+    * re-sorts the |E| side (rounds are separate jobs, so exchange reuse
+    * never spans the eager checkpoints); this way |E| streams
+    * exchange-free and unsorted every round. Measured on a 4M-node tree
+    * (labels ~190 MB, past broadcast; 8M symmetrized edges, 23 rounds):
+    * 152.3/145.6 -> 55.2/36.8 s.
+    */
+  private[graft] def shuffleTier(edges: DataFrame, key: String)
+      : (DataFrame, DataFrame => DataFrame) =
+    (graft.core.Ckpt.partitioned(edges.repartition(col(key))),
+      (df: DataFrame) => df.hint("shuffle_hash"))
 
   /** Per-node triangle counts (graph.py `nx.triangles`). Compact-forward:
     * orient each undirected edge from the (degree, id)-smaller endpoint to
@@ -195,11 +209,8 @@ object Centrality {
     */
   def eigenvector(edges: DataFrame, iters: Int = 100,
                   normalizeEvery: Int = 10): DataFrame = {
-    // per-round edge join tiered like connectedComponents (r17): small
-    // |V| keeps the persisted-cache + AQE-broadcast shape unchanged;
-    // past broadcast the edges are pre-partitioned by src once and the
-    // iterate side rides SHUFFLE_HASH — see [[tieredByKey]]
-    val (und, hinted) = tieredByKey(symmetrize(edges), "src")
+    // per-round edge join tiered on |V| — see [[tieredByKey]]
+    val (und, hinted, release) = tieredByKey(symmetrize(edges), "src")
     val nodes = allNodes(und).persist(StorageLevel.MEMORY_AND_DISK)
     def normalized(v: DataFrame): DataFrame = {
       val n2 = v.agg(sqrt(sum(col("x") * col("x"))).as("__n2"))
@@ -227,6 +238,9 @@ object Centrality {
         x = next.localCheckpoint()
       }
     }
+    // the result reads only the checkpointed iterate
+    nodes.unpersist(blocking = false)
+    release()
     normalized(x).select(col("node"), col("x").as("eigenvector"))
   }
 
@@ -428,8 +442,7 @@ object Centrality {
     // the g_hits edge build; forcing this step non-adaptive measured
     // 2.5x slower end-to-end), then ONE materialization feeds whichever
     // path the probe picks.
-    val raw = edges0.select(col(src).as("s"), col(dst).as("d"))
-      .distinct().localCheckpoint()
+    val raw = hitsRaw(edges0, src, dst)
     // one probe job: exact |E| (free — count(1) rides the same agg) +
     // HLL |V| — one map-side pass over the in-memory partitions, no
     // shuffle, no exact distinct. ±2% HLL error is irrelevant against a
@@ -495,34 +508,14 @@ object Centrality {
           .select(col("d").as("node"), col("a"))
       }
     } else {
-      // nPart is sized to the DATA (what AQE coalesced `raw` to), not
-      // the static shuffle.partitions — 32 one-row-per-task stages
-      // measured ~2x slower per round than data-sized stages; at corpus
-      // scale AQE picks correspondingly more partitions, same code.
-      val nPart = raw.rdd.getNumPartitions.max(1)
-      val eByD = graft.core.Ckpt.partitioned(raw.repartition(nPart, col("d")))
-      val eByS = graft.core.Ckpt.partitioned(raw.repartition(nPart, col("s")))
-      // SHUFFLE path — see scaladoc; nPart above sizes the two edge
-      // repartitions to the DATA rather than the static
-      // shuffle.partitions (32 one-row-per-task stages measured ~2x
-      // slower per round than data-sized stages; at corpus scale AQE
-      // picks correspondingly more partitions and the same code holds).
+      val (eByD, eByS) = hitsShuffleEdges(raw)
       for (i <- 1 to iters) {
-        // SHUFFLE_HASH on the |V|-row count side: SMJ would re-SORT the
-        // |E| side every round; hashing the per-partition slice of the
-        // count frame streams the pre-partitioned edges unsorted
-        // (HitsRoundShapeSpec asserts the exchange-free |E| legs).
         // Checkpointing auth per round truncates the lineage (hub is a
         // prefix of auth: un-checkpointed, the final hub⋈auth would
         // re-execute the whole chain twice — 13 SMJs at iters=3).
-        hub =
-          if (i == 1) eByD.groupBy(col("s").as("node"))
-            .agg(count(lit(1)).as("h"))
-          else eByD.join(auth.hint("shuffle_hash"), eByD("d") === auth("node"))
-            .groupBy(eByD("s").as("node")).agg(sum("a").as("h"))
-        auth = eByS.join(hub.hint("shuffle_hash"), eByS("s") === hub("node"))
-          .groupBy(eByS("d").as("node")).agg(sum("h").as("a"))
-          .localCheckpoint()
+        val (h, a) = hitsRound(eByD, eByS, if (i == 1) None else Some(auth))
+        hub = h
+        auth = a.localCheckpoint()
       }
     }
     // Final assembly WITHOUT re-aggregating the edge list: after round 1
@@ -540,6 +533,46 @@ object Centrality {
     hub.join(auth.hint("shuffle_hash"), Seq("node"), "full_outer")
       .select(col("node"), coalesce(col("h"), lit(0L)).as("hub_walks"),
         coalesce(col("a"), lit(0L)).as("auth_walks"))
+  }
+
+  /** The deduped, materialized (s, d) edge list every [[hitsCounts]]
+    * tier reads.
+    */
+  private[graft] def hitsRaw(edges0: DataFrame, src: String, dst: String): DataFrame =
+    edges0.select(col(src).as("s"), col(dst).as("d")).distinct().localCheckpoint()
+
+  /** The SHUFFLE path's edge pair over [[hitsRaw]]: partitioned by d
+    * (the hub leg) and by s (the auth leg) through Ckpt.partitioned, so
+    * both |E| legs keep HashPartitioning under AQE. The partition count
+    * is sized to the DATA (what AQE coalesced `raw` to), not the static
+    * shuffle.partitions — 32 one-row-per-task stages measured ~2x slower
+    * per round than data-sized stages; at corpus scale AQE picks
+    * correspondingly more partitions, same code.
+    */
+  private[graft] def hitsShuffleEdges(raw: DataFrame): (DataFrame, DataFrame) = {
+    val nPart = raw.rdd.getNumPartitions.max(1)
+    (graft.core.Ckpt.partitioned(raw.repartition(nPart, col("d"))),
+      graft.core.Ckpt.partitioned(raw.repartition(nPart, col("s"))))
+  }
+
+  /** One hub+auth round of the [[hitsCounts]] SHUFFLE path, from the
+    * previous auth counts to (hub, auth) over [[hitsShuffleEdges]];
+    * `None` is round 1, where a_0 ≡ 1 makes h_1(u) = outdeg(u).
+    * SHUFFLE_HASH on the |V|-row count side: SMJ would re-SORT the |E|
+    * side every round; hashing the per-partition slice of the count
+    * frame streams the pre-partitioned edges unsorted
+    * (HitsRoundShapeSpec asserts the exchange-free |E| legs).
+    */
+  private[graft] def hitsRound(eByD: DataFrame, eByS: DataFrame,
+                               prevAuth: Option[DataFrame]): (DataFrame, DataFrame) = {
+    val hub = prevAuth match {
+      case None => eByD.groupBy(col("s").as("node")).agg(count(lit(1)).as("h"))
+      case Some(auth) =>
+        eByD.join(auth.hint("shuffle_hash"), eByD("d") === auth("node"))
+          .groupBy(eByD("s").as("node")).agg(sum("a").as("h"))
+    }
+    (hub, eByS.join(hub.hint("shuffle_hash"), eByS("s") === hub("node"))
+      .groupBy(eByS("d").as("node")).agg(sum("h").as("a")))
   }
 
   /** Driver-local tier of [[hitsCounts]]: the identical integer
@@ -587,29 +620,6 @@ object Centrality {
       .toDF("node", "hub_walks", "auth_walks")
       .select(col("node").cast(nodeType).as("node"),
         col("hub_walks"), col("auth_walks"))
-  }
-
-  /** One UN-checkpointed hub+auth round of the SHUFFLE path over the
-    * same materialized edge pair [[hitsCounts]] builds for large |V| —
-    * exposed so the plan gate can audit the loop-body shape that the
-    * eager per-round checkpoints hide from the final [[hitsCounts]]
-    * plan (the PlanAudit blind spot called out in round 5). The
-    * broadcast path needs no twin: its rounds stay lazy, so the
-    * catalog `g_hits` plan itself exposes them to PlanAudit. Not a
-    * query path.
-    */
-  def hitsRoundForAudit(edges0: DataFrame,
-                        src: String = "src", dst: String = "dst"): DataFrame = {
-    val raw = edges0.select(col(src).as("s"), col(dst).as("d"))
-      .distinct().localCheckpoint()
-    val nPart = raw.rdd.getNumPartitions.max(1)
-    val eByD = graft.core.Ckpt.partitioned(raw.repartition(nPart, col("d")))
-    val eByS = graft.core.Ckpt.partitioned(raw.repartition(nPart, col("s")))
-    val auth = eByS.groupBy(col("d").as("node")).agg(count(lit(1)).as("a"))
-    val hub = eByD.join(auth.hint("shuffle_hash"), eByD("d") === auth("node"))
-      .groupBy(eByD("s").as("node")).agg(sum("a").as("h"))
-    eByS.join(hub.hint("shuffle_hash"), eByS("s") === hub("node"))
-      .groupBy(eByS("d").as("node")).agg(sum("h").as("a"))
   }
 
   /** [[closeness]] (wf_improved), computed driver-locally under the

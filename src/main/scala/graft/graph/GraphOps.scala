@@ -155,66 +155,17 @@ object GraphOps {
     * round).
     */
   def connectedComponents(edges: DataFrame, maxIters: Int = 50): DataFrame = {
-    // TWO round-body tiers behind one probe (r17, round-16 VERDICT #1 —
-    // the hitsCounts small/large-|V| split applied to min-label
-    // propagation). The label frame is re-joined to the edges every
-    // round, and WHICH side should move depends on |V|, not |E|:
-    //
-    //  - BROADCAST tier (|V|-row label frame under the session broadcast
-    //    threshold): keep the round-16 shape — persisted unpartitioned
-    //    edges, un-hinted joins. AQE broadcasts the label side at
-    //    runtime, so the |E| side never shuffles AT ALL; pre-partitioning
-    //    here is a strict loss (measured on a 1.17M-edge/16k-node graph:
-    //    the co-partitioned shape shuffled 39.5 MB vs 18.2 MB — the
-    //    upfront |E| repartition pays for exchanges AQE never runs, and
-    //    the SHUFFLE_HASH hint would FORBID the broadcast).
-    //  - SHUFFLE tier (labels past broadcast): the un-hinted planner
-    //    degrades to a per-round SortMergeJoin that re-shuffles AND
-    //    re-sorts the |E| side every round (each round is its own job —
-    //    eager localCheckpoint — so exchange reuse never spans rounds).
-    //    Pre-partition the edges by dst ONCE through an AQE-stable
-    //    checkpoint (Ckpt.partitioned) and SHUFFLE_HASH the label
-    //    builds: the |E| side streams exchange-free and unsorted every
-    //    round, the |V|-row label joins pair already-co-partitioned
-    //    frames sort-free. Measured in the tier's REAL regime (a
-    //    4M-node tree — labels ~190 MB, genuinely past
-    //    broadcast — 8M symmetrized edges, 23 rounds): old
-    //    152.3/145.6 s vs new 55.2/36.8 s, a 3-4x win.
-    //
-    // The probe is ONE map-side pass (approx_count_distinct of src; ±2%
-    // against a threshold with wide headroom), riding the persist/
-    // checkpoint materialization the loop needs anyway.
-    val bcThresh = org.apache.spark.sql.graftx.Bridge
-      .broadcastThreshold(edges.sparkSession)
-    val und0 = graft.graph.Centrality.symmetrize(edges)
-    val undSmall = und0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nv = undSmall.agg(approx_count_distinct(col("src"))).head().getLong(0)
-    // label row ≈ two longs + row overhead in the broadcast relation
-    val labelsBig = bcThresh < 0 || nv * 48L > bcThresh
-    val und =
-      if (!labelsBig) undSmall
-      else {
-        // shuffle tier re-materializes partitioned-by-dst and drops the
-        // columnar cache (the checkpointed rows replace it)
-        val p = graft.core.Ckpt.partitioned(undSmall.repartition(col("dst")))
-        undSmall.unpersist(blocking = false)
-        p
-      }
-    def hinted(df: DataFrame): DataFrame =
-      if (labelsBig) df.hint("shuffle_hash") else df
+    // the label frame is re-joined to the edges every round, so which
+    // side moves depends on |V| — see [[Centrality.tieredByKey]]
+    // no release: graphInfo's later symmetrize(edges) reads this cache
+    val (und, hinted, _) = Centrality.tieredByKey(Centrality.symmetrize(edges), "dst")
     var labels = und.select(col("src").as("node")).distinct()
       .withColumn("component", col("node")).localCheckpoint()
     var changed = true
     var it = 0
     while (changed && it < maxIters) {
       it += 1
-      val nbrMin = und.join(hinted(labels), und("dst") === labels("node"))
-        .groupBy(und("src").as("node")).agg(min("component").as("__nc"))
-      val next = labels.join(hinted(nbrMin), Seq("node"), "left")
-        .select(col("node"),
-          least(col("component"), coalesce(col("__nc"), col("component"))).as("component"))
-        .localCheckpoint()
+      val next = ccRound(und, labels, hinted).localCheckpoint()
       changed = !next.as("a").join(hinted(labels.as("b")), "node")
         .where(col("a.component") =!= col("b.component")).isEmpty
       labels = next
@@ -222,21 +173,15 @@ object GraphOps {
     labels
   }
 
-  /** One UN-checkpointed SHUFFLE-tier round of [[connectedComponents]]
-    * over the same pre-partitioned edge frame — exposed so PlanAudit can
-    * see the loop shape the eager per-round checkpoints hide (the
-    * [[graft.graph.Centrality.hitsRoundForAudit]] precedent). The
-    * broadcast tier needs no twin: it is the round-16 shape, unchanged.
-    * Not a query path.
+  /** One min-label round of [[connectedComponents]]: every node adopts
+    * the smallest label among itself and its neighbors in `und` (the
+    * symmetrized edges). `hinted` is the tier's join-side hint.
     */
-  def ccRoundForAudit(edges: DataFrame): DataFrame = {
-    val und = graft.core.Ckpt.partitioned(
-      graft.graph.Centrality.symmetrize(edges).repartition(col("dst")))
-    val labels = und.select(col("src").as("node")).distinct()
-      .withColumn("component", col("node"))
-    val nbrMin = und.join(labels.hint("shuffle_hash"), und("dst") === labels("node"))
+  private[graft] def ccRound(und: DataFrame, labels: DataFrame,
+                             hinted: DataFrame => DataFrame): DataFrame = {
+    val nbrMin = und.join(hinted(labels), und("dst") === labels("node"))
       .groupBy(und("src").as("node")).agg(min("component").as("__nc"))
-    labels.join(nbrMin.hint("shuffle_hash"), Seq("node"), "left")
+    labels.join(hinted(nbrMin), Seq("node"), "left")
       .select(col("node"),
         least(col("component"), coalesce(col("__nc"), col("component"))).as("component"))
   }
@@ -440,14 +385,11 @@ object GraphOps {
     * GraphX-Pregel per-round materialization pattern).
     */
   def pageRank(edges0: DataFrame, iters: Int = 10, d: Double = 0.85): DataFrame = {
-    // per-round edge join tiered like connectedComponents (r17): the
-    // edge frame is materialized ONCE (it used to re-run its upstream
-    // subtree every round — each round is its own job) and, past the
-    // broadcast threshold, pre-partitioned by src with the rank side
-    // riding SHUFFLE_HASH — see [[graft.graph.Centrality.tieredByKey]].
-    val (edges, hinted) =
-      graft.graph.Centrality.tieredByKey(
-        edges0.select(col("src"), col("dst")), "src")
+    // per-round edge join tiered on |V|: the edge frame is materialized
+    // ONCE (it used to re-run its upstream subtree every round — each
+    // round is its own job) — see [[Centrality.tieredByKey]]
+    val (edges, hinted, release) =
+      Centrality.tieredByKey(edges0.select(col("src"), col("dst")), "src")
     val nodes = edges.select(col("src").as("node"))
       .unionAll(edges.select(col("dst").as("node"))).distinct().cache()
     val n = nodes.count().toDouble
@@ -467,6 +409,9 @@ object GraphOps {
             .as("rank"))
         .localCheckpoint()
     }
+    // the result reads only the checkpointed ranks
+    nodes.unpersist(blocking = false)
+    release()
     ranks
   }
 }

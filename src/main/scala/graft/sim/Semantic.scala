@@ -31,9 +31,9 @@ import graft.functions.VectorF
   *   - assignment is the zero-shuffle broadcast-centroid kernel
   *     ([[Similarity.nearestLists]]) — no N×nLists row materialization;
   *   - candidate generation is one equi-join on the list id over
-  *     id-only rows; with lists ∝ corpus ([[Capacity.ivfNLists]],
-  *     [[semanticDupsAuto]]) per-list occupancy — and so per-list pair
-  *     count — is constant in corpus size;
+  *     id-only rows; with lists ∝ corpus ([[Capacity.ivfNLists]])
+  *     per-list occupancy — and so per-list pair count — is constant in
+  *     corpus size;
   *   - `maxList` drops degenerate clusters (a near-identical crawl
   *     shard collapses into one list and would emit b² pairs) from pair
   *     generation, the same guard as `cosineDups`' `maxBucket`;
@@ -100,18 +100,6 @@ object Semantic {
       nLists, nProbe, seed, maxList)
     (pairs, release)
   }
-
-  /** [[semanticDups]] with the list count chosen from the corpus size
-    * ([[Capacity.ivfNLists]]: lists ∝ corpus at ~125 rows/list keeps
-    * per-list pair volume constant). `corpusRows` is an explicit caller
-    * estimate — no hidden `count()`.
-    */
-  def semanticDupsAuto(vecs: DataFrame, idCol: String, vecCol: String,
-                       threshold: Double, corpusRows: Long, nProbe: Int = 1,
-                       seed: Long = 42L, maxList: Int = Int.MaxValue): DataFrame =
-    semanticDups(vecs, idCol, vecCol, threshold,
-      nLists = Capacity.ivfNLists(corpusRows), nProbe = nProbe, seed = seed,
-      maxList = maxList)
 
   /** Pairs + the frames the keep-policy re-pick needs: (pairs, prepped
     * vectors (persisted), nearest-list assignment (id, list) — one row
@@ -341,10 +329,9 @@ object Semantic {
     *     the flat op, with per-list occupancy (and so pair volume per
     *     list) unchanged and ~2× total memberships;
     *   - cProbe = 3 at 125/3: 0.992.
-    * The [[semanticDupsTwoLevelAuto]] chooser applies exactly that
-    * rowsPerList = 125/cProbe rule, so occupancy — and with it the
-    * candidate-pair work per list — matches the flat capacity rule at
-    * every scale.
+    * [[Capacity.twoLevelNLists]] applies exactly that rowsPerList =
+    * 125/cProbe rule, so occupancy — and with it the candidate-pair work
+    * per list — matches the flat capacity rule at every scale.
     *
     * Scale shape: quantizer fit is √nLists-per-row
     * ([[Similarity.fitTwoLevelQuantizer]]), memberships are one
@@ -385,21 +372,6 @@ object Semantic {
                                                  maxList: Int = Int.MaxValue): DataFrame =
     dupsPartsTwoLevel(vecs, idCol, vecCol, threshold, nLists, cProbe, seed,
       maxList)._1
-
-  /** [[semanticDupsTwoLevel]] with the list count chosen from the
-    * corpus size at rowsPerList = ~125/cProbe — the measured
-    * occupancy-preserving rule (see the recall table in
-    * [[semanticDupsTwoLevel]]): cProbe memberships per vector over
-    * cProbe× the lists keeps rows/list — and so per-list pair work —
-    * at the flat op's 125-row target. `corpusRows` is an explicit
-    * caller estimate — no hidden `count()`.
-    */
-  def semanticDupsTwoLevelAuto(vecs: DataFrame, idCol: String, vecCol: String,
-                               threshold: Double, corpusRows: Long, cProbe: Int = 2,
-                               seed: Long = 42L, maxList: Int = Int.MaxValue): DataFrame =
-    semanticDupsTwoLevel(vecs, idCol, vecCol, threshold,
-      nLists = Capacity.twoLevelNLists(corpusRows, cProbe), cProbe = cProbe,
-      seed = seed, maxList = maxList)
 
   /** [[semanticDedup]]'s two-level twin: keep/drop decisions over the
     * [[semanticDupsTwoLevel]] pair graph — same keep policies (min-id

@@ -11,8 +11,9 @@ import graft.graph.GraphOps
   *
   *  - SHUFFLE tier (labels past broadcast): the eager per-round
   *    checkpoints hide the loop's joins from the audited plan, so
-  *    `GraphOps.ccRoundForAudit` rebuilds one un-checkpointed round over
-  *    the same pre-partitioned edge frame; this spec pins its shape —
+  *    `PlanAudit.ccRoundBody` runs the production `GraphOps.ccRound`
+  *    once, un-checkpointed, over the shuffle-tier edge frame (the
+  *    `g_components__round_body` row); this spec pins its shape —
   *    both joins SHUFFLE_HASH (an SMJ would re-sort the |E| side every
   *    round), the pre-partitioned |E| leg joins WITHOUT a fresh Exchange
   *    (the point of Ckpt.partitioned), and only the |V|-row exchanges
@@ -25,6 +26,8 @@ import graft.graph.GraphOps
   *    16k-node graph).
   *  - Tier equivalence: the shuffle tier (forced via broadcast
   *    threshold -1) must produce exactly the broadcast tier's labels.
+  *  - eigenvector/pageRank release every cache they persist, on both
+  *    tiers (`Centrality.tieredByKey`'s handle plus their node frame).
   */
 class CCRoundShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -33,7 +36,7 @@ class CCRoundShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     .select((col("id") % 123).as("src"), (col("id") % 77).as("dst"))
 
   test("shuffle-tier round body: shuffle-hash joins, no SMJ, no |E| re-shuffle") {
-    val plan = GraphOps.ccRoundForAudit(testEdges).queryExecution.executedPlan
+    val plan = PlanAudit.ccRoundBody(testEdges).queryExecution.executedPlan
     val p = plan.toString
 
     assert("ShuffledHashJoin".r.findAllIn(p).length == 2, p)
@@ -57,15 +60,21 @@ class CCRoundShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // and the catalog projections round to 6dp)
     val e = spark.range(0, 2000)
       .select((col("id") % 97).as("src"), ((col("id") * 13) % 89).as("dst"))
+    val cache = spark.sharedState.cacheManager
+    cache.clearCache()
     val ev0 = graft.graph.Centrality.eigenvector(e, iters = 30)
       .as[(Long, Double)].collect().toMap
+    assert(cache.isEmpty, "eigenvector left a cache (broadcast tier)")
     val pr0 = graft.graph.GraphOps.pageRank(e, iters = 10)
       .as[(Long, Double)].collect().toMap
+    assert(cache.isEmpty, "pageRank left a cache (broadcast tier)")
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val ev1 = graft.graph.Centrality.eigenvector(e, iters = 30)
         .as[(Long, Double)].collect().toMap
+      assert(cache.isEmpty, "eigenvector left a cache (shuffle tier)")
       val pr1 = graft.graph.GraphOps.pageRank(e, iters = 10)
         .as[(Long, Double)].collect().toMap
+      assert(cache.isEmpty, "pageRank left a cache (shuffle tier)")
       assert(ev0.keySet == ev1.keySet && pr0.keySet == pr1.keySet)
       ev0.foreach { case (k2, v) => assert(math.abs(ev1(k2) - v) < 1e-9, s"eigen $k2") }
       pr0.foreach { case (k2, v) => assert(math.abs(pr1(k2) - v) < 1e-9, s"pagerank $k2") }

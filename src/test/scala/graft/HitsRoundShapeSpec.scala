@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.RDDScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import graft.graph.Centrality
 
@@ -8,40 +13,39 @@ import graft.graph.Centrality
   *
   *  - SHUFFLE path (large |V|): the eager per-round checkpoints hide the
   *    loop's joins from the final audited plan, so
-  *    `Centrality.hitsRoundForAudit` rebuilds one un-checkpointed
-  *    hub+auth round over the same materialized edge pair; this spec
-  *    pins its shape — both joins SHUFFLE_HASH (an SMJ would re-sort
-  *    the |E| side every round), the pre-partitioned |E| legs join
-  *    WITHOUT a fresh Exchange (the point of Ckpt.partitioned; a plain
-  *    AQE localCheckpoint re-shuffled the edge frame every round), and
-  *    only the |V|-row aggregation exchanges remain.
+  *    `PlanAudit.hitsRoundBody` runs the production `Centrality.hitsRound`
+  *    once, un-checkpointed, over the shuffle path's edge pair (the
+  *    `g_hits__round_body` row); this spec pins its shape — both joins
+  *    SHUFFLE_HASH (an SMJ would re-sort the |E| side every round), the
+  *    pre-partitioned |E| legs join WITHOUT a fresh Exchange (the
+  *    point of Ckpt.partitioned; a plain AQE localCheckpoint re-shuffled
+  *    the edge frame every round), and only the |V|-row aggregation
+  *    exchanges remain.
   *  - BROADCAST path (small |V|, what the catalog g_hits takes): the
   *    rounds stay LAZY, so the full hitsCounts plan itself must show
   *    broadcast joins and NO per-round shuffle of the edge frame.
   */
-class HitsRoundShapeSpec extends SparkSpec {
+class HitsRoundShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("shuffle-path round body: 2 shuffle-hash joins, no SMJ, no |E| re-shuffle") {
     val edges = spark.range(0, 5000)
       .select((col("id") % 123).as("src"), (col("id") % 77).as("dst"))
-    val round = Centrality.hitsRoundForAudit(edges)
-    val p = round.queryExecution.executedPlan.toString
+    val plan = PlanAudit.hitsRoundBody(edges).queryExecution.executedPlan
+    val p = plan.toString
 
-    assert("ShuffledHashJoin".r.findAllIn(p).length == 2, p)
-    assert(!p.contains("SortMergeJoin"), p)
+    assert(collect(plan) { case j: ShuffledHashJoinExec => j }.size == 2, p)
+    assert(collect(plan) { case j: SortMergeJoinExec => j }.isEmpty, p)
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
 
-    // the checkpointed edge frames surface as `Scan ExistingRDD`; if their
+    // the checkpointed edge frames surface as RDDScanExec; if their
     // HashPartitioning were lost, EnsureRequirements would insert an
-    // Exchange directly above the scan (one tree line below it)
-    val lines = p.linesIterator.toVector
-    lines.zipWithIndex.filter(_._1.contains("Exchange hashpartitioning")).foreach {
-      case (_, i) =>
-        val child = lines.drop(i + 1).find(l => l.trim.startsWith("+-") || l.trim.startsWith(":-"))
-        assert(!child.exists(_.contains("Scan ExistingRDD")),
-          s"edge frame re-shuffled at line $i:\n$p")
+    // Exchange directly above the scan
+    val exchanges = collect(plan) { case e: ShuffleExchangeExec => e }
+    exchanges.foreach { e =>
+      assert(!e.child.isInstanceOf[RDDScanExec],
+        s"edge frame re-shuffled by ${e.simpleString(80)}:\n$p")
     }
-    assert("Exchange hashpartitioning".r.findAllIn(p).length <= 3, p)
+    assert(exchanges.count(_.outputPartitioning.isInstanceOf[HashPartitioning]) <= 3, p)
   }
 
   test("broadcast-path full plan: broadcast rounds + one |V|-row full-outer assembly") {
