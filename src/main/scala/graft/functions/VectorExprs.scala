@@ -746,96 +746,6 @@ case class DotProductI8(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object FineKernel {
-  private val outSchema = StructType(Seq(
-    StructField("d", DoubleType, nullable = false),
-    StructField("list", IntegerType, nullable = false)))
-
-  /** (d, list)-lexicographic top-k fine lists WITHIN one cell, WITH the
-    * distances — the per-shard half of the sharded two-level assignment
-    * ([[graft.sim.Similarity.probeFrameSharded]]): each (row, probed
-    * cell) pair computes its cell-local top-k here, and the cross-cell
-    * merge re-ranks on the carried `d` (the same doubles
-    * [[TwoLevelKernel.probeLists]] computes over the union, so the
-    * merged result is value-identical — TwoLevelShardedSpec). Same
-    * arithmetic (`v·v + cc − 2·v·c`), same strictly-closer insertion
-    * with the (d, list) tie-break, same dim-mismatch/NaN skip
-    * semantics as the union kernel.
-    *
-    * fines: array<struct<list:int, centroid:array<double>, cc:double>>;
-    * returns array<struct<d:double, list:int>>, nearest first.
-    */
-  def fineTopK(vec: ArrayData, fines: ArrayData, k: Int): ArrayData = {
-    val dim = vec.numElements()
-    val nF = fines.numElements()
-    val cap = math.min(k, nF)
-    var vv = 0.0
-    var j = 0
-    while (j < dim) { val x = vec.getDouble(j); vv += x * x; j += 1 }
-    val fd = new Array[Double](cap)
-    val fl = new Array[Int](cap)
-    var filled = 0
-    def less(d1: Double, l1: Int, d2: Double, l2: Int): Boolean =
-      d1 < d2 || (d1 == d2 && l1 < l2)
-    var fi = 0
-    while (fi < nF) {
-      val f = fines.getStruct(fi, 3)
-      val cen = f.getArray(1)
-      if (cen.numElements() == dim) {
-        var dot = 0.0
-        var m = 0
-        while (m < dim) { dot += vec.getDouble(m) * cen.getDouble(m); m += 1 }
-        val dist = vv + f.getDouble(2) - 2.0 * dot
-        val li = f.getInt(0)
-        if (filled < cap) {
-          var pos = filled
-          while (pos > 0 && less(dist, li, fd(pos - 1), fl(pos - 1))) pos -= 1
-          var t = filled
-          while (t > pos) { fd(t) = fd(t - 1); fl(t) = fl(t - 1); t -= 1 }
-          fd(pos) = dist; fl(pos) = li; filled += 1
-        } else if (cap > 0 && less(dist, li, fd(cap - 1), fl(cap - 1))) {
-          var pos = cap - 1
-          while (pos > 0 && less(dist, li, fd(pos - 1), fl(pos - 1))) pos -= 1
-          var t = cap - 1
-          while (t > pos) { fd(t) = fd(t - 1); fl(t) = fl(t - 1); t -= 1 }
-          fd(pos) = dist; fl(pos) = li
-        }
-      }
-      fi += 1
-    }
-    val rows = new Array[Any](filled)
-    var i = 0
-    while (i < filled) {
-      rows(i) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](fd(i), fl(i)))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(rows)
-  }
-}
-
-/** [[FineKernel.fineTopK]] as a codegen'd expression:
-  * (vec array<double>, fines array<struct<list,centroid,cc>>) →
-  * array<struct<d,list>> of the cell-local (d, list)-nearest fines.
-  */
-case class FineTopKExpr(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("d", DoubleType, nullable = false),
-    StructField("list", IntegerType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_fine_topk"
-
-  override def nullSafeEval(vec: Any, fines: Any): Any =
-    FineKernel.fineTopK(vec.asInstanceOf[ArrayData], fines.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.FineKernel.fineTopK($a, $b, $k)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): FineTopKExpr =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Column-level entry points for graft's native expressions.
   *
   * Built on the public `ExpressionUtils.column/expression` bridge so the
@@ -888,10 +798,4 @@ object VectorF {
     */
   def twoLevelProbes(vec: Column, cells: Column, cProbe: Int, fineK: Int): Column =
     toCol(TwoLevelProbesExpr(toExpr(vec), toExpr(cells), cProbe, fineK))
-
-  /** Codegen'd cell-local fine top-k WITH distances (the sharded
-    * two-level assignment's per-shard half — see [[FineKernel]]).
-    */
-  def fineTopK(vec: Column, fines: Column, k: Int): Column =
-    toCol(FineTopKExpr(toExpr(vec), toExpr(fines), k))
 }

@@ -289,6 +289,14 @@ object Centrality {
         prev = hub
       }
     }
+    // the result reads only checkpoints, so both caches go: a run that
+    // stopped between checkpoints checkpoints its final iterate here
+    if (i % checkpointEvery != 0) {
+      hub = hub.localCheckpoint()
+      auth = auth.localCheckpoint()
+    }
+    e.unpersist(blocking = false)
+    nodes.unpersist(blocking = false)
     l1(hub, "h").select(col("node"), col("h").as("hub"))
       .join(l1(auth, "a").select(col("node"), col("a").as("authority")), "node")
   }
@@ -329,6 +337,8 @@ object Centrality {
     val nodes = allNodes(und)
     val n = nodes.count().toDouble
     val dists = bfsDistances(und, nodes, maxDepth)
+    // dists is a checkpoint: the result never reads the cache
+    und.unpersist(blocking = false)
     dists.groupBy(col("node"))
       .agg(count(lit(1)).as("r"), sum("dist").as("sumd"))
       .select(col("node"),
@@ -344,8 +354,9 @@ object Centrality {
     */
   def eccentricity(edges: DataFrame, maxDepth: Int = 30): DataFrame = {
     val und = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    bfsDistances(und, allNodes(und), maxDepth)
-      .groupBy(col("s").as("node"))
+    val dists = bfsDistances(und, allNodes(und), maxDepth)
+    und.unpersist(blocking = false) // dists is a checkpoint
+    dists.groupBy(col("s").as("node"))
       .agg(max("dist").as("eccentricity"))
   }
 
@@ -544,16 +555,14 @@ object Centrality {
   /** The SHUFFLE path's edge pair over [[hitsRaw]]: partitioned by d
     * (the hub leg) and by s (the auth leg) through Ckpt.partitioned, so
     * both |E| legs keep HashPartitioning under AQE. The partition count
-    * is sized to the DATA (what AQE coalesced `raw` to), not the static
-    * shuffle.partitions — 32 one-row-per-task stages measured ~2x slower
-    * per round than data-sized stages; at corpus scale AQE picks
-    * correspondingly more partitions, same code.
+    * is the session's, as in [[shuffleTier]]: the |V|-row count
+    * aggregates each round joins them to come out hash-partitioned at
+    * that count, and at any other count EnsureRequirements re-shuffles
+    * both |E| legs every round.
     */
-  private[graft] def hitsShuffleEdges(raw: DataFrame): (DataFrame, DataFrame) = {
-    val nPart = raw.rdd.getNumPartitions.max(1)
-    (graft.core.Ckpt.partitioned(raw.repartition(nPart, col("d"))),
-      graft.core.Ckpt.partitioned(raw.repartition(nPart, col("s"))))
-  }
+  private[graft] def hitsShuffleEdges(raw: DataFrame): (DataFrame, DataFrame) =
+    (graft.core.Ckpt.partitioned(raw.repartition(col("d"))),
+      graft.core.Ckpt.partitioned(raw.repartition(col("s"))))
 
   /** One hub+auth round of the [[hitsCounts]] SHUFFLE path, from the
     * previous auth counts to (hub, auth) over [[hitsShuffleEdges]];
@@ -695,7 +704,9 @@ object Centrality {
   def betweenness(edges: DataFrame, normalized: Boolean = true,
                   maxDepth: Int = 30): DataFrame = {
     val und = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = allNodes(und).persist(StorageLevel.MEMORY_AND_DISK)
+    // a checkpoint, not a cache: the output join reads it after `und`
+    // is released
+    val nodes = allNodes(und).localCheckpoint()
     val n = nodes.count().toDouble
 
     // forward: levels(s, node, dist, sigma)
@@ -745,6 +756,7 @@ object Centrality {
       .groupBy("node").agg(sum("delta").as("bsum"))
     // same n ≤ 2 guard as betweennessLocal (networkx _rescale semantics)
     val scale = if (normalized && n > 2) 1.0 / ((n - 1) * (n - 2)) else if (normalized) 1.0 else 0.5
+    und.unpersist(blocking = false) // levels and deltas are checkpoints
     nodes.join(raw, Seq("node"), "left")
       .select(col("node"), (coalesce(col("bsum"), lit(0.0)) * scale).as("betweenness"))
   }

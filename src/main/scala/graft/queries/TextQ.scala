@@ -633,9 +633,10 @@ object TextQ {
     // k-means fit), so the inverted-list mechanics — assignment, probing,
     // candidate join, exact rescoring, top-k — replay verbatim in DuckDB.
     // The PRODUCTION path (Similarity.ivfTopK, MLlib k-means quantizer
-    // trained on a bounded sample) shares every stage except the fit and
-    // is spec-checked instead: >=0.9 recall vs brute force plus
-    // fixed-seed run-to-run determinism (TextSpec) — a k-means fit is
+    // trained on a bounded sample) runs the same IVF body
+    // (Similarity.ivfPipeline) over its fitted centroids, so only the
+    // fit differs; it is spec-checked instead: >=0.9 recall vs brute
+    // force plus fixed-seed run-to-run determinism (TextSpec) — a k-means fit is
     // not SQL-replayable, so it stays out of the oracle catalog rather
     // than sitting as a permanent rows-only row.
     Q("s_ivf2", (s, dir) => {

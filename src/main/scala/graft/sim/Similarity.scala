@@ -229,52 +229,47 @@ object Similarity extends org.apache.spark.internal.Logging {
   private def pairDot(big: Boolean): (Column, Column) => Column =
     if (big) VectorF.dotpF else VectorF.dotp
 
+  /** The vector re-join shared by [[rescorePairs]] and [[rescoreTopK]]:
+    * join the prepped vectors onto id-only candidates on id column `a`
+    * (as va, na) and then `b` (as vb, nb) — AFTER candidate dedup, so
+    * only id pairs shuffle. Returns the joined frame and whether the big
+    * regime ran (one [[vectorSideTooBig]] estimate; both sides are `v`).
+    * Payload per [[vecPayload]]; big regime: memory-bounded build sides
+    * (the f32 vector payload is corpus-proportional — ∝ N/P per
+    * partition at fixed P, the ×6561 OOM class); below the budget the
+    * plan is the plain hinted join.
+    */
+  private def joinVectors(cands: DataFrame, v: DataFrame, idCol: String,
+                          a: String, b: String): (DataFrame, Boolean) = {
+    val big = vectorSideTooBig(v)
+    val vp = vecPayload(v, idCol, big)
+    val est = if (big) f32SideBytes(v) else BigInt(0)
+    def vJoin(probe: DataFrame, key: String, s: String): DataFrame = {
+      val side = vp.select(col(idCol).as(key), col("__v").as("v" + s), col("__n").as("n" + s))
+      if (big) boundedHashJoin(probe, side, Seq(key), est) else probe.join(side, key)
+    }
+    (vJoin(vJoin(cands, a, "a"), b, "b"), big)
+  }
+
   /** Exact-cosine rescore shared by the near-dup candidate paths
-    * ([[cosineDups]], [[Semantic.semanticDups]]): re-join the prepped
-    * vectors onto id-only (id_a, id_b) candidates — AFTER candidate
-    * dedup, so only id pairs shuffle — and keep pairs with cosine ≥
-    * `threshold`. Returns (id_a, id_b, cos). Vector side join strategy
-    * per [[vectorSideTooBig]]; payload per [[vecPayload]].
+    * ([[cosineDups]], [[Semantic.semanticDups]]): keep the (id_a, id_b)
+    * candidates with cosine ≥ `threshold`. Returns (id_a, id_b, cos).
     */
   private[sim] def rescorePairs(cands: DataFrame, v: DataFrame, idCol: String,
                                 threshold: Double): DataFrame = {
-    val big = vectorSideTooBig(v) // one estimate; both sides are v
-    val vp = vecPayload(v, idCol, big)
-    // big regime: memory-bounded build sides (the f32 vector payload is
-    // corpus-proportional — ∝ N/P per partition at fixed P, the ×6561
-    // OOM class); below the budget the plan is the plain hinted join
-    val est = if (big) f32SideBytes(v) else BigInt(0)
-    def vJoin(probe: DataFrame, side: DataFrame, key: String): DataFrame =
-      if (big) boundedHashJoin(probe, side, Seq(key), est)
-      else probe.join(side, key)
-    vJoin(vJoin(cands,
-        vp.select(col(idCol).as("id_a"), col("__v").as("va"), col("__n").as("na")), "id_a"),
-        vp.select(col(idCol).as("id_b"), col("__v").as("vb"), col("__n").as("nb")), "id_b")
-      .select(col("id_a"), col("id_b"),
+    val (pairs, big) = joinVectors(cands, v, idCol, "id_a", "id_b")
+    pairs.select(col("id_a"), col("id_b"),
         nanDiv(pairDot(big)(col("va"), col("vb")), col("na") * col("nb")).as("cos"))
       .where(col("cos") >= threshold)
   }
 
-  /** Vector re-join + exact-cosine top-k shared by the ANN paths
-    * ([[ivfTopK]], [[ivfTopKFixed]], [[lshTopK]]): join the prepped
-    * vectors onto id-only (query_id, neighbor_id) candidates and rank.
-    * Vector side join strategy per [[vectorSideTooBig]]; payload per
-    * [[vecPayload]].
+  /** Exact-cosine top-k of id-only (query_id, neighbor_id) candidates,
+    * shared by the ANN paths: the catalog regimes of [[ivfPipeline]]
+    * and [[lshTopK]], and [[topKViaBounds]]' survivors.
     */
   private def rescoreTopK(cands: DataFrame, v: DataFrame, idCol: String,
                           k: Int): DataFrame = {
-    val big = vectorSideTooBig(v) // one estimate; both sides are v
-    val vp = vecPayload(v, idCol, big)
-    // same memory-bounded build rule as [[rescorePairs]]
-    val est = if (big) f32SideBytes(v) else BigInt(0)
-    def vJoin(probe: DataFrame, side: DataFrame, key: String): DataFrame =
-      if (big) boundedHashJoin(probe, side, Seq(key), est)
-      else probe.join(side, key)
-    val pairs = vJoin(vJoin(cands,
-        vp.select(col(idCol).as("query_id"), col("__v").as("va"), col("__n").as("na")),
-        "query_id"),
-        vp.select(col(idCol).as("neighbor_id"), col("__v").as("vb"), col("__n").as("nb")),
-        "neighbor_id")
+    val (pairs, big) = joinVectors(cands, v, idCol, "query_id", "neighbor_id")
     topK(pairs, k, floatVecs = big)
   }
 
@@ -369,17 +364,15 @@ object Similarity extends org.apache.spark.internal.Logging {
                  threshold: Double, planes: Int = 8, tables: Int = 8,
                  maxBucket: Int = Int.MaxValue): DataFrame = {
     val v = prepped(vecs, idCol, vecCol)
-    if (!vectorSideTooBig(v)) {
+    val cands = if (!vectorSideTooBig(v)) {
       // catalog/bench regime — UNCHANGED plan (PLANS + oracle gates):
       // id-only candidate dedup, vectors re-join after the distinct
-      val sigs = sigRows(v, idCol, planes, tables)
-      val bounded = capGroups(sigs, maxBucket, "tbl", "sig")
+      val bounded = capGroups(sigRows(v, idCol, planes, tables), maxBucket, "tbl", "sig")
       val a = bounded.select(col(idCol).as("id_a"), col("tbl"), col("sig"))
       val b = bounded.select(col(idCol).as("id_b"), col("tbl"), col("sig"))
-      val cands = a.join(b, Seq("tbl", "sig"))
+      a.join(b, Seq("tbl", "sig"))
         .where(col("id_a") < col("id_b"))
         .select("id_a", "id_b").distinct()
-      rescorePairs(cands, v, idCol, threshold)
     } else {
       // Corpus-scale regime: fuse a LOSSLESS int8 cosine upper-bound
       // prefilter INTO the bucket self-join, so candidate pairs that
@@ -399,19 +392,13 @@ object Similarity extends org.apache.spark.internal.Logging {
       // are identical to the catalog branch; QuantPrefilterSpec pins
       // pair-set + cosine equality across regimes and the lossless
       // property on adversarial vectors.
-      val q = v.select(col(idCol),
-          lshProjections(col("__v"), planes, tables).as("__p"),
-          VectorF.quantI8(col("__v")).as("__q"), col("__n"))
-        .select(col(idCol), col("__q"), col("__n"),
-          explode(array((0 until tables).map(t =>
-            struct(lit(t).as("tbl"), packSignature(col("__p"), t, planes).as("sig"))): _*)).as("s"))
-        .select(col(idCol), col("s.tbl"), col("s.sig"), col("__q"), col("__n"))
-      val bounded = capGroups(q, maxBucket, "tbl", "sig")
-      val cands = boundedPairJoin(bounded, idCol, Seq("tbl", "sig"), threshold,
+      val bounded = capGroups(sigRows(withQuant(v), idCol, planes, tables, QuantCols),
+        maxBucket, "tbl", "sig")
+      boundedPairJoin(bounded, idCol, Seq("tbl", "sig"), threshold,
           estBytes = int8SideBytes(v, tables))
         .distinct()
-      rescorePairs(cands, v, idCol, threshold)
     }
+    rescorePairs(cands, v, idCol, threshold)
   }
 
   /** Upper bound on the EXACT dot v·w of two int8-quantized vectors
@@ -467,6 +454,22 @@ object Similarity extends org.apache.spark.internal.Logging {
     est - slack - (abs(est) + slack) * 1e-9
   }
 
+  /** The big regimes' int8 payload ([[graft.functions.QuantKernel]]) as
+    * `__q` beside the prepped columns; [[QuantCols]] is the pair every
+    * bounds join carries.
+    */
+  private def withQuant(v: DataFrame): DataFrame =
+    v.withColumn("__q", VectorF.quantI8(col("__v")))
+
+  private val QuantCols = Seq("__q", "__n")
+
+  /** One side of a bounds join: `df`'s id as `id`, the join `keys`, and
+    * the (__q, __n) payload as (q`s`, n`s`).
+    */
+  private def quantSide(df: DataFrame, idCol: String, id: String, s: String,
+                        keys: Seq[Column]): DataFrame =
+    df.select(col(idCol).as(id) +: keys :+ col("__q").as("q" + s) :+ col("__n").as("n" + s): _*)
+
   /** Bound-checked candidate pair self-join shared by the big-regime
     * near-dup paths ([[cosineDups]]' signature buckets,
     * [[Semantic.semanticDups]]' lists): self-join `bounded` —
@@ -493,10 +496,8 @@ object Similarity extends org.apache.spark.internal.Logging {
   private[sim] def boundedPairJoin(bounded: DataFrame, idCol: String,
                                    keyCols: Seq[String], threshold: Double,
                                    estBytes: BigInt): DataFrame = {
-    val a = bounded.select(col(idCol).as("id_a") +: keyCols.map(col) :+
-      col("__q").as("qa") :+ col("__n").as("na"): _*)
-    val b = bounded.select(col(idCol).as("id_b") +: keyCols.map(col) :+
-      col("__q").as("qb") :+ col("__n").as("nb"): _*)
+    val a = quantSide(bounded, idCol, "id_a", "a", keyCols.map(col))
+    val b = quantSide(bounded, idCol, "id_b", "b", keyCols.map(col))
     boundedHashJoin(a, b, keyCols, estBytes)
       .where(col("id_a") < col("id_b"))
       .where(quantUpper(col("qa"), col("qb")) >=
@@ -504,50 +505,6 @@ object Similarity extends org.apache.spark.internal.Logging {
       .select("id_a", "id_b")
   }
 
-  /** Lossless top-k candidate prefilter (two-phase bounded top-k): from
-    * a (query_id, neighbor_id, __ub, __lb) COSINE-bounds frame, compute
-    * each query's bar = the `thresholdRank`-th largest LOWER bound (no
-    * bar if a query has fewer finite lowers), keep candidates whose
-    * UPPER bound clears it, and exact-rescore only the survivors.
-    *
-    * Why the output is identical to exact top-k over ALL candidates:
-    * the bounds bracket the FLOAT64 cosine while [[topK]] here scores
-    * the FLOAT32 payload ([[vecPayload]] — |f32cos − f64cos| ≤ ~1.2e-7
-    * per pair), so a dropped candidate d has f32(d) ≤ f64(d) + 1.2e-7 ≤
-    * ub(d) + 1.2e-7 < bar − 1.5e-6 + 1.2e-7, while ≥ k distinct
-    * surviving candidates cᵢ (rank semantics below; ub ≥ lb always)
-    * have f32(cᵢ) ≥ f64(cᵢ) − 1.2e-7 ≥ lb(cᵢ) − 1.2e-7 ≥ bar − 1.2e-7.
-    * The gap between any survivor's and any dropped candidate's scored
-    * cosine is therefore > 1.5e-6 − 2·1.2e-7 = 1.26e-6 — more than one
-    * 6dp rounding quantum. That matters because [[topK]] ranks cosines
-    * ROUNDED to 6dp with an id tie-break: two scored cosines separated
-    * by less than one quantum can round EQUAL, and then the id
-    * tie-break could promote a pruned candidate in the exact-on-all
-    * ordering; values separated by MORE than 1e-6 can never round
-    * 6dp-equal, so the deflated bar restores strict post-rounding
-    * dominance — every dropped candidate rounds strictly below k
-    * survivors and loses under any tie-break. Margin budget for the
-    * 1.5e-6: 1e-6 (one 6dp quantum) + 2.5e-7 ([[F32CosDrift]] — one
-    * ~2⁻²³ term per scored side of the comparison) + 2.5e-7 headroom
-    * (the quant bounds already carry their own 1e-9-relative FP
-    * inflation). Degenerate pairs (NaN bounds from NaN/∞/zero-norm
-    * vectors) SURVIVE the filter — Spark orders NaN above every double,
-    * so NaN ub ≥ bar holds — and are then excluded by [[topK]] itself
-    * (their exact cosine is NaN); correctness never depends on pruning
-    * them.
-    *
-    * `thresholdRank` = k when each (query, candidate) appears once
-    * (IVF: MLlib assigns each neighbor to exactly one list). When a
-    * candidate can appear up to `m` times (LSH: one occurrence per
-    * colliding table), pass k·m: among the top k·m multiset entries at
-    * most (k−1)·m can come from candidates strictly above the k-th
-    * distinct lower L_k, so the k·m-th multiset lower ≤ L_k — a valid,
-    * slightly looser bar (and per-occurrence filtering stays
-    * deterministic per pair, so the post-filter distinct is unchanged
-    * semantics). The threshold aggregate is the map-side-bounded
-    * [[graft.functions.AggF.topKNeighbors]] — ≤ thresholdRank entries
-    * shuffle per (query, partition), never the candidate volume.
-    */
   /** Row-count cap for BROADCASTING the per-query bar frame into the
     * survivor filter (~28 B/row of (long, double) plus hash-relation
     * overhead → ~1.5 GB of broadcast at the cap — torrent-distributed
@@ -604,9 +561,63 @@ object Similarity extends org.apache.spark.internal.Logging {
                                    budgetBytes: Long = 256L << 20): Int =
     math.max(128 * 1024, (budgetBytes / (160L + 16L * thresholdRank)).toInt)
 
-  private def topKViaBounds(bounds: DataFrame, v: DataFrame, idCol: String,
+  /** Lossless top-k candidate prefilter (two-phase bounded top-k), the
+    * big-regime tail of [[ivfPipeline]] and [[lshTopK]]: join `probe`
+    * (query_id, keys…, qa, na) to `build` (neighbor_id, keys…, qb, nb)
+    * on `keys` ([[boundedHashJoin]], build side priced at `estBytes`),
+    * drop self pairs and bound each candidate's cosine inside the join's
+    * stage ([[cosBounds]] → __ub, __lb); then compute each query's bar =
+    * the `thresholdRank`-th largest LOWER bound (no bar if a query has
+    * fewer finite lowers), keep candidates whose UPPER bound clears it,
+    * and exact-rescore only the survivors.
+    *
+    * Why the output is identical to exact top-k over ALL candidates:
+    * the bounds bracket the FLOAT64 cosine while [[topK]] here scores
+    * the FLOAT32 payload ([[vecPayload]] — |f32cos − f64cos| ≤ ~1.2e-7
+    * per pair), so a dropped candidate d has f32(d) ≤ f64(d) + 1.2e-7 ≤
+    * ub(d) + 1.2e-7 < bar − 1.5e-6 + 1.2e-7, while ≥ k distinct
+    * surviving candidates cᵢ (rank semantics below; ub ≥ lb always)
+    * have f32(cᵢ) ≥ f64(cᵢ) − 1.2e-7 ≥ lb(cᵢ) − 1.2e-7 ≥ bar − 1.2e-7.
+    * The gap between any survivor's and any dropped candidate's scored
+    * cosine is therefore > 1.5e-6 − 2·1.2e-7 = 1.26e-6 — more than one
+    * 6dp rounding quantum. That matters because [[topK]] ranks cosines
+    * ROUNDED to 6dp with an id tie-break: two scored cosines separated
+    * by less than one quantum can round EQUAL, and then the id
+    * tie-break could promote a pruned candidate in the exact-on-all
+    * ordering; values separated by MORE than 1e-6 can never round
+    * 6dp-equal, so the deflated bar restores strict post-rounding
+    * dominance — every dropped candidate rounds strictly below k
+    * survivors and loses under any tie-break. Margin budget for the
+    * 1.5e-6: 1e-6 (one 6dp quantum) + 2.5e-7 ([[F32CosDrift]] — one
+    * ~2⁻²³ term per scored side of the comparison) + 2.5e-7 headroom
+    * (the quant bounds already carry their own 1e-9-relative FP
+    * inflation). Degenerate pairs (NaN bounds from NaN/∞/zero-norm
+    * vectors) SURVIVE the filter — Spark orders NaN above every double,
+    * so NaN ub ≥ bar holds — and are then excluded by [[topK]] itself
+    * (their exact cosine is NaN); correctness never depends on pruning
+    * them.
+    *
+    * `thresholdRank` = k when each (query, candidate) appears once
+    * (IVF: a neighbor is a member of its first probe list only, and a
+    * query's probed lists are distinct). When a candidate can appear
+    * up to `m` times (LSH: one occurrence per colliding table), pass
+    * k·m: among the top k·m multiset entries at most (k−1)·m can come
+    * from candidates strictly above the k-th distinct lower L_k, so
+    * the k·m-th multiset lower ≤ L_k — a valid,
+    * slightly looser bar (and per-occurrence filtering stays
+    * deterministic per pair, so the post-filter distinct is unchanged
+    * semantics). The threshold aggregate is the map-side-bounded
+    * [[graft.functions.AggF.topKNeighbors]] — ≤ thresholdRank entries
+    * shuffle per (query, partition), never the candidate volume.
+    */
+  private def topKViaBounds(probe: DataFrame, build: DataFrame, keys: Seq[String],
+                            estBytes: BigInt, v: DataFrame, idCol: String,
                             k: Int, thresholdRank: Int, dedup: Boolean): DataFrame = {
-    val spark = bounds.sparkSession
+    val spark = v.sparkSession
+    val (ub, lb) = cosBounds(col("qa"), col("qb"), col("na"), col("nb"))
+    val bounds = boundedHashJoin(probe, build, keys, estBytes)
+      .where(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), ub.as("__ub"), lb.as("__lb"))
     // The RAISED ObjectHashAggregate fallback threshold (see
     // barFallbackKeys — the default 128-key sort fallback spills the
     // candidate volume on one node) must be set BEFORE the bar frame is
@@ -681,14 +692,19 @@ object Similarity extends org.apache.spark.internal.Logging {
   private def cosBounds(qa: Column, qb: Column, na: Column, nb: Column): (Column, Column) =
     (nanDiv(quantUpper(qa, qb), na * nb), nanDiv(quantLower(qa, qb), na * nb))
 
-  /** (id, tbl, sig) signature rows shared by [[cosineDups]]'s catalog
-    * branch — one projection kernel pass, one explode.
+  /** (id, tbl, sig, extra…) signature rows — one projection kernel pass,
+    * one explode — shared by [[cosineDups]] and [[lshTopK]] in both
+    * regimes; the big regimes pass [[QuantCols]] as `extra`, the catalog
+    * regimes nothing (their plans unchanged).
     */
-  private def sigRows(v: DataFrame, idCol: String, planes: Int, tables: Int): DataFrame =
-    v.select(col(idCol), lshProjections(col("__v"), planes, tables).as("__p"))
-      .select(col(idCol), explode(array((0 until tables).map(t =>
-        struct(lit(t).as("tbl"), packSignature(col("__p"), t, planes).as("sig"))): _*)).as("s"))
-      .select(col(idCol), col("s.tbl"), col("s.sig"))
+  private def sigRows(v: DataFrame, idCol: String, planes: Int, tables: Int,
+                      extra: Seq[String] = Nil): DataFrame = {
+    val keep = col(idCol) +: extra.map(col)
+    v.select(keep :+ lshProjections(col("__v"), planes, tables).as("__p"): _*)
+      .select(keep :+ explode(array((0 until tables).map(t =>
+        struct(lit(t).as("tbl"), packSignature(col("__p"), t, planes).as("sig"))): _*)).as("s"): _*)
+      .select(col(idCol) +: col("s.tbl") +: col("s.sig") +: extra.map(col): _*)
+  }
 
   /** [[cosineDups]] with the LSH plane count chosen from the corpus
     * size by the documented capacity-∝-corpus rule ([[Capacity]]), so
@@ -733,14 +749,22 @@ object Similarity extends org.apache.spark.internal.Logging {
     val centArr = centroids.agg(
       array_sort(collect_list(struct(col("list"), col("centroid"),
         VectorF.dotp(col("centroid"), col("centroid")).as("cc")))).as("__cents"))
-    // `extra` columns of v ride along unchanged (the big-regime top-k
-    // prefilter carries the quantized payload through probing); the
-    // default Nil keeps the catalog projection — and plan — as-was
-    v.select((col(idCol) +: extra.map(col) :+ col("__v")): _*)
-      .crossJoin(broadcast(centArr))
-      .select(col(idCol) +: extra.map(col) :+
-        VectorF.nearestLists(col("__v"), col("__cents"), nProbe).as("lists"): _*)
+    perRowLists(v, idCol, extra, centArr,
+      VectorF.nearestLists(col("__v"), col("__cents"), nProbe))
   }
+
+  /** The 1-row broadcast-cross shape every quantizer kernel runs in:
+    * `table` (one row holding the quantizer) crosses onto `v`, and
+    * `kernel` (over `__v` and the table's column) becomes `lists`.
+    * `extra` columns of v ride along unchanged (the big regimes carry
+    * the quantized payload through probing); the default Nil keeps the
+    * catalog projection — and plan — as-was.
+    */
+  private def perRowLists(v: DataFrame, idCol: String, extra: Seq[String],
+                          table: DataFrame, kernel: Column): DataFrame =
+    v.select((col(idCol) +: extra.map(col) :+ col("__v")): _*)
+      .crossJoin(broadcast(table))
+      .select(col(idCol) +: extra.map(col) :+ kernel.as("lists"): _*)
 
   /** Bounded-sample k-means coarse quantizer shared by [[ivfTopK]] and
     * [[Semantic]]. A coarse quantizer doesn't need a converged
@@ -780,14 +804,11 @@ object Similarity extends org.apache.spark.internal.Logging {
     *     ([[graft.functions.TwoLevelKernel]]) walks — broadcast onto
     *     the corpus exactly like the single-level centroid array;
     *   - `centroids`: the flat (list, centroid) frame (global fine list
-    *     numbering), for the SemDeDup keep-farthest re-pick and specs;
-    *   - `nCells` / `nFineLists`: the realized counts (cells that drew
-    *     no training rows are dropped; per-cell fine counts are sample-
-    *     share-proportional, so Σ fine ≈ requested nLists ± nCells).
+    *     numbering), for the SemDeDup keep-farthest re-pick and specs.
+    * Cells that drew no training rows are dropped; per-cell fine counts
+    * are sample-share-proportional, so Σ fine ≈ the requested nLists.
     */
-  private[graft] case class TwoLevelQuantizer(structure: DataFrame,
-                                              centroids: DataFrame,
-                                              nCells: Int, nFineLists: Int)
+  private[graft] case class TwoLevelQuantizer(structure: DataFrame, centroids: DataFrame)
 
   private val tlFineSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("list",
@@ -889,13 +910,12 @@ object Similarity extends org.apache.spark.internal.Logging {
         .collect()
       // global fine-list numbering: (cell, within-cell index) ascending
       val byCell = fineRows.groupBy(_._1).toSeq.sortBy(_._1)
-      var nextList = 0
+      val flat = scala.collection.mutable.ArrayBuffer.empty[(Int, Seq[Double])]
       val cellRows = byCell.map { case (cell, rows) =>
         val gcent = coarseCents(cell)
         val fines = rows.sortBy(_._2).map { case (_, _, cen) =>
-          val r = org.apache.spark.sql.Row(nextList, cen.toSeq, TwoLevelFit.dotLR(cen, cen))
-          nextList += 1
-          r
+          flat += ((flat.size, cen.toSeq))
+          org.apache.spark.sql.Row(flat.size - 1, cen.toSeq, TwoLevelFit.dotLR(cen, cen))
         }
         org.apache.spark.sql.Row(gcent.toSeq, TwoLevelFit.dotLR(gcent, gcent),
           fines.toSeq)
@@ -907,12 +927,8 @@ object Similarity extends org.apache.spark.internal.Logging {
           org.apache.spark.sql.types.StructField("__cells",
             org.apache.spark.sql.types.ArrayType(tlCellSchema, containsNull = false),
             nullable = false))))
-      var li = -1
-      val flat = byCell.flatMap { case (_, rows) =>
-        rows.sortBy(_._2).map { case (_, _, cen) => li += 1; (li, cen.toSeq) }
-      }
-      val centroids = spark.createDataFrame(flat).toDF("list", "centroid")
-      TwoLevelQuantizer(structure, centroids, byCell.size, nextList)
+      val centroids = spark.createDataFrame(flat.toSeq).toDF("list", "centroid")
+      TwoLevelQuantizer(structure, centroids)
     } finally train.unpersist(blocking = false)
   }
 
@@ -925,157 +941,69 @@ object Similarity extends org.apache.spark.internal.Logging {
   private[graft] def twoLevelMemberships(v: DataFrame, idCol: String,
                                          structure: DataFrame, cProbe: Int,
                                          extra: Seq[String] = Nil): DataFrame =
-    v.select((col(idCol) +: extra.map(col) :+ col("__v")): _*)
-      .crossJoin(broadcast(structure))
-      .select(col(idCol) +: extra.map(col) :+
-        VectorF.twoLevelMemberships(col("__v"), col("__cells"), cProbe).as("lists"): _*)
+    perRowLists(v, idCol, extra, structure,
+      VectorF.twoLevelMemberships(col("__v"), col("__cells"), cProbe))
 
-  /** SHARDED two-level probe frame — the partitioned-quantizer topology
-    * for the one OPEN boundary-ledger row (round-14 verdict optional
-    * #6): the broadcast form ships the ENTIRE nLists·dim structure to
-    * every task (≈ 0.5 GB at 2²⁰ lists — past ~10⁸ rows/shard the
-    * structure itself outgrows a literal broadcast and the 19.6 MB
-    * ×2187 task-closure warning is the early smell). This form
-    * broadcasts only the COARSE level (G = √nLists cells ≈ 1.5 MB at
-    * 10⁹ rows) and partitions the fines BY CELL — each executor holds
-    * only its shard of the quantizer:
+  /** The one IVF top-k body behind [[ivfTopK]], [[ivfTopKTwoLevel]]
+    * and [[ivfTopKFixed]], which differ only in how a row gets its probe
+    * lists: `lists(vIn, extra)` returns (idCol, extra…, lists) with the
+    * row's nProbe nearest lists, nearest first — so the FIRST list is
+    * the row's assignment and the whole array its probe set. The probe
+    * frame is persisted: assignment and probing both derive from it, and
+    * it is small (id + nProbe ints per row, + the int8 payload in the big
+    * regime). Every neighbor is a member of exactly one list and a
+    * query's probed lists are distinct, so (query, neighbor) candidates
+    * are unique by construction — no dedup shuffle.
     *
-    *   1. coarse: rows find their cProbe nearest cells via the same
-    *      insertion-discipline kernel the union form uses
-    *      ([[graft.functions.NearestKernel]] over (cellIdx, gcent,
-    *      gcc) — identical (d, index) tie semantics);
-    *   2. shard join: (row, cell) pairs co-partition with the per-cell
-    *      fines frame (SHUFFLE_HASH pinned — broadcasting it would
-    *      rebuild the problem); each pair computes its CELL-LOCAL
-    *      (d, list) top-nProbe WITH distances
-    *      ([[graft.functions.FineKernel.fineTopK]]);
-    *   3. merge: one bounded aggregate per row re-ranks the ≤
-    *      cProbe·nProbe carried (d, list) pairs ([[graft.functions
-    *      .AggF.topKNeighbors]] on −d — same (d, list) lex order).
-    *
-    * Value-identical to the broadcast [[ivfTopKTwoLevel]] probe frame
-    * (same doubles, same tie-breaks — each cell's local top-nProbe is a
-    * superset of its contribution to the union's top-nProbe;
-    * TwoLevelShardedSpec pins equality incl. ties and the all-NaN
-    * degenerate row, which here needs the left join + empty-array
-    * coalesce). Cost: the row vector travels to its cProbe shards
-    * (cProbe × dim·8 B per row exchanged) + one bounded merge exchange,
-    * instead of nLists·dim·8 broadcast bytes × executors — the
-    * crossover favors sharding once nLists·dim·8 outgrows the
-    * broadcast ceiling, exactly the ledger row's regime.
+    * Catalog/bench regime: candidate equi-join on `list` → exact
+    * rescore ([[rescoreTopK]]; the audited s_ivf2 / s_ivf2l__full
+    * plans). Corpus-scale regime (vector side past broadcast): the probe
+    * frame carries the int8 payload (~90 B/row, CORPUS-proportional
+    * exchanges), cosine bounds compute INSIDE the probe join, and only
+    * bar-clearing survivors (≈ k per query) reach the exact f32 rescore
+    * ([[topKViaBounds]]) — the ×729 stress is the byte evidence (s_ivf2's
+    * f32 rescore payload, ~100 GB of candidate-volume shuffle, exceeded
+    * one node's disk at the fifth decade). `v` is the prepped, persisted
+    * vector frame.
     */
-  private[graft] def probeFrameSharded(vIn: DataFrame, idCol: String,
-                                       tl: TwoLevelQuantizer, cProbe: Int,
-                                       nProbe: Int,
-                                       extra: Seq[String] = Nil): DataFrame = {
-    val cellsEx = tl.structure
-      .select(posexplode(col("__cells")))
-      .select(col("pos").cast("int").as("cell"), col("col").as("c"))
-    val coarseArr = cellsEx.agg(
-      array_sort(collect_list(struct(col("cell").as("list"),
-        col("c.gcent").as("centroid"), col("c.gcc").as("cc")))).as("__coarse"))
-    val finesByCell = cellsEx.select(col("cell"), col("c.fines").as("__fines"))
-    val probed = vIn.select(col(idCol), col("__v"))
-      .crossJoin(broadcast(coarseArr))
-      .select(col(idCol), col("__v"),
-        posexplode(VectorF.nearestLists(col("__v"), col("__coarse"), cProbe)))
-      .withColumnRenamed("pos", "__cr").withColumnRenamed("col", "cell")
-    val perCell = probed.join(finesByCell.hint("SHUFFLE_HASH"), "cell")
-      .select(col(idCol), col("__cr"),
-        posexplode(VectorF.fineTopK(col("__v"), col("__fines"), nProbe)))
-      .select(col(idCol), col("__cr"), col("pos").as("__fi"),
-        col("col.d").as("__d"), col("col.list").as("__l"))
-    // two merge regimes, matching the union kernel's semantics exactly:
-    //  - finite distances: (d, list)-lexicographic top-nProbe
-    //    (topKNeighbors on −d ties on id asc = list asc);
-    //  - an all-NaN row (NaN vector — vv poisons every distance): the
-    //    union kernel's strictly-closer insertion never REPLACES, so
-    //    its fill phase keeps the FIRST fineK fines of the first
-    //    cProbe cells in scan order — reproduced by (cellRank,
-    //    fineIdx) order over the NaN entries. Mixed finite/NaN rows
-    //    need a NaN CENTROID, which fitTwoLevelQuantizer cannot
-    //    produce (degenerate vectors are excluded from the fit).
-    val lists = perCell
-      .groupBy(idCol)
-      .agg(
-        graft.functions.AggF.topKNeighbors(col("__l").cast("long"), -col("__d"),
-          nProbe).as("__tk"),
-        slice(array_sort(collect_list(when(isnan(col("__d")),
-          struct(col("__cr"), col("__fi"), col("__l"))))), 1, nProbe).as("__nan"))
-      .select(col(idCol),
-        when(size(col("__tk")) > 0,
-          transform(col("__tk"), x => x.getField("neighbor_id").cast("int")))
-          .otherwise(transform(col("__nan"), x => x.getField("__l")))
-          .as("lists"))
-    // left + coalesce: a row with no candidate cells at all (e.g. a
-    // dim-mismatched vector) gets EMPTY lists from the union kernel;
-    // here it produces no merge rows and must re-enter as empty
-    vIn.select((col(idCol) +: extra.map(col)): _*)
-      .join(lists, Seq(idCol), "left")
-      .withColumn("lists", coalesce(col("lists"), array().cast("array<int>")))
+  private def ivfPipeline(v: DataFrame, idCol: String, k: Int, nProbe: Int,
+                          lists: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
+    val big = vectorSideTooBig(v)
+    val near = (if (big) lists(withQuant(v), QuantCols) else lists(v, Nil))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def side(id: String, s: String, list: Column): DataFrame =
+      if (big) quantSide(near, idCol, id, s, Seq(list.as("list")))
+      else near.select(col(idCol).as(id), list.as("list"))
+    val assigned = side("neighbor_id", "b", element_at(col("lists"), 1))
+    val probes = side("query_id", "a", explode(col("lists")))
+    if (!big)
+      rescoreTopK(probes.join(assigned, "list")
+        .where(col("query_id") =!= col("neighbor_id"))
+        .select("query_id", "neighbor_id"), v, idCol, k)
+    else topKViaBounds(probes, assigned, Seq("list"),
+      int8SideBytes(v) + barPartialBytes(v.count(), nProbe, k), v, idCol, k,
+      thresholdRank = k, dedup = false)
   }
 
-  /** IVF (inverted-file) ANN: an MLlib k-means coarse quantizer assigns
-    * every vector to its nearest of `nLists` centroids (the inverted
-    * lists); each query probes its `nProbe` nearest centroids and scores
-    * exact cosine only inside those lists. The scale shape is the
-    * classic IVF-Flat: quantizer training is MLlib-distributed, probe
-    * assignment is a corpus × centroids scoring (centroids broadcast —
-    * nLists ≪ corpus), and candidate generation is an equi-join on the
-    * list id. Deterministic for a fixed seed.
+  /** IVF (inverted-file) ANN: an MLlib k-means coarse quantizer
+    * ([[fitQuantizer]], trained on a bounded sample) gives `nLists`
+    * centroids; each row's `nProbe` nearest of them ([[nearestLists]] —
+    * argmin L2, ties → smallest list id) are its probe lists, the first
+    * its assignment, and exact cosine is scored only inside the probed
+    * lists ([[ivfPipeline]]). The scale shape is the classic IVF-Flat:
+    * quantizer training is MLlib-distributed, assignment and probing are
+    * one corpus × centroids scoring pass (centroids broadcast — nLists ≪
+    * corpus), and candidate generation is an equi-join on the list id.
+    * Deterministic for a fixed seed.
     */
   def ivfTopK(vecs: DataFrame, idCol: String, vecCol: String, k: Int,
               nLists: Int = 16, nProbe: Int = 4, seed: Long = 42L): DataFrame = {
     import org.apache.spark.ml.functions.array_to_vector
     val v = prepped(vecs, idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val feats = v.select(col(idCol), array_to_vector(col("__v")).as("features"))
-    val model = fitQuantizer(feats, nLists, seed)
-    val assigned = model.transform(feats)
-      .select(col(idCol), col("prediction").as("list"))
-    val centroids = centroidFrame(v.sparkSession, model)
-    if (!vectorSideTooBig(v)) {
-      // catalog/bench regime — UNCHANGED plan. Probe the nProbe nearest
-      // centroids per query: per-row ranking over the broadcast
-      // centroid array (see nearestLists) — the N·nLists distance
-      // arithmetic runs inside one projection instead of materializing
-      // and window-shuffling N×nLists rows.
-      val probes = nearestLists(v, idCol, centroids, nProbe)
-        .select(col(idCol).as("query_id"), explode(col("lists")).as("list"))
-      // candidates: members of the probed lists. MLlib assigns each
-      // neighbor to exactly one list and probed lists are distinct, so
-      // the pairs are unique by construction — no dedup shuffle.
-      val cands = probes.join(assigned.select(col(idCol).as("neighbor_id"), col("list")), "list")
-        .where(col("query_id") =!= col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-      rescoreTopK(cands, v, idCol, k)
-    } else {
-      // Corpus-scale regime: the probe join carries int8-quantized
-      // payloads (~90 B/row, CORPUS-proportional exchanges), cosine
-      // bounds are computed INSIDE the join's stage, and only
-      // bar-clearing survivors (≈ k per query) reach the exact rescore
-      // — the float32 vector payload never ships per candidate. See
-      // [[topKViaBounds]] for the losslessness argument; the ×729
-      // stress is the byte evidence (s_ivf2's f32 rescore payload —
-      // ~100 GB of candidate-volume shuffle — exceeded one node's disk
-      // at the fifth decade, the exact boundary this removes).
-      val vq = v.withColumn("__q", VectorF.quantI8(col("__v")))
-      val probesQ = nearestLists(vq, idCol, centroids, nProbe, extra = Seq("__q", "__n"))
-        .select(col(idCol).as("query_id"), col("__q").as("qa"), col("__n").as("na"),
-          explode(col("lists")).as("list"))
-      val assignedQ = assigned
-        .join(vq.select(col(idCol), col("__q"), col("__n")), idCol)
-        .select(col(idCol).as("neighbor_id"), col("list"),
-          col("__q").as("qb"), col("__n").as("nb"))
-      val (ub, lb) = cosBounds(col("qa"), col("qb"), col("na"), col("nb"))
-      val bounds = boundedHashJoin(probesQ, assignedQ, Seq("list"),
-          int8SideBytes(v) + barPartialBytes(v.count(), nProbe, k))
-        .where(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"), ub.as("__ub"), lb.as("__lb"))
-      // pairs unique by construction (one list per neighbor) → rank k,
-      // no dedup
-      topKViaBounds(bounds, v, idCol, k, thresholdRank = k, dedup = false)
-    }
+    val centroids = centroidFrame(v.sparkSession, fitQuantizer(
+      v.select(col(idCol), array_to_vector(col("__v")).as("features")), nLists, seed))
+    ivfPipeline(v, idCol, k, nProbe, nearestLists(_, idCol, centroids, nProbe, _))
   }
 
   /** [[ivfTopK]] with the inverted-list count chosen from the corpus
@@ -1123,42 +1051,8 @@ object Similarity extends org.apache.spark.internal.Logging {
     val v = prepped(vecs, idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tl = fitTwoLevelQuantizer(v, nLists, seed)
-    def probeFrame(vIn: DataFrame, extra: Seq[String]): DataFrame =
-      vIn.select((col(idCol) +: extra.map(col) :+ col("__v")): _*)
-        .crossJoin(broadcast(tl.structure))
-        .select(col(idCol) +: extra.map(col) :+
-          VectorF.twoLevelProbes(col("__v"), col("__cells"), cProbe, nProbe).as("lists"): _*)
-    if (!vectorSideTooBig(v)) {
-      val near = probeFrame(v, Nil)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val assigned = near.select(col(idCol).as("neighbor_id"),
-        element_at(col("lists"), 1).as("list"))
-      val probes = near.select(col(idCol).as("query_id"),
-        explode(col("lists")).as("list"))
-      val cands = probes.join(assigned, "list")
-        .where(col("query_id") =!= col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-      rescoreTopK(cands, v, idCol, k)
-    } else {
-      // big regime: the ivfTopKFixed shape — int8 payload rides the
-      // persisted probe frame, bounds compute inside the probe join,
-      // bar-clearing survivors only reach the exact f32 rescore
-      val vq = v.withColumn("__q", VectorF.quantI8(col("__v")))
-      val near = probeFrame(vq, Seq("__q", "__n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val assignedQ = near.select(col(idCol).as("neighbor_id"),
-        element_at(col("lists"), 1).as("list"),
-        col("__q").as("qb"), col("__n").as("nb"))
-      val probesQ = near.select(col(idCol).as("query_id"),
-        col("__q").as("qa"), col("__n").as("na"),
-        explode(col("lists")).as("list"))
-      val (ub, lb) = cosBounds(col("qa"), col("qb"), col("na"), col("nb"))
-      val bounds = boundedHashJoin(probesQ, assignedQ, Seq("list"),
-          int8SideBytes(v) + barPartialBytes(v.count(), nProbe, k))
-        .where(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"), ub.as("__ub"), lb.as("__lb"))
-      topKViaBounds(bounds, v, idCol, k, thresholdRank = k, dedup = false)
-    }
+    ivfPipeline(v, idCol, k, nProbe, (vIn, extra) => perRowLists(vIn, idCol, extra,
+      tl.structure, VectorF.twoLevelProbes(col("__v"), col("__cells"), cProbe, nProbe)))
   }
 
   /** [[ivfTopKTwoLevel]] with the list count from the FLAT capacity
@@ -1180,8 +1074,8 @@ object Similarity extends org.apache.spark.internal.Logging {
   /** IVF with a FIXED deterministic coarse quantizer: the centroids are
     * the `nLists` lowest-id vectors (no k-means fit — pure relational
     * plan), assignment is argmin L2 over the broadcast centroids (ties →
-    * smallest list id), probing/candidates/rescoring identical to
-    * [[ivfTopK]]. Quantizer quality is worse than k-means, recall comes
+    * smallest list id), probing/candidates/rescoring the shared
+    * [[ivfPipeline]]. Quantizer quality is worse than k-means, recall comes
     * from `nProbe` — and every step replays in SQL, so this variant is
     * DuckDB-oracle-checkable end to end (the MLlib path keeps the
     * rows-only + recall-spec check).
@@ -1194,49 +1088,7 @@ object Similarity extends org.apache.spark.internal.Logging {
       .select(row_number().over(Window.partitionBy(lit(1)).orderBy(idCol)).as("__rn"),
         col("__v").as("centroid"))
       .select((col("__rn") - 1).as("list"), col("centroid"))
-    if (!vectorSideTooBig(v)) {
-      // catalog/bench regime — UNCHANGED plan (this variant is the
-      // DuckDB-oracle-checked one; its audited plan must stay
-      // byte-identical). Per-row nearest-nProbe (see nearestLists — no
-      // N×nLists shuffle); persisted because two consumers (assignment,
-      // probing) derive from it and the frame is tiny (id + nProbe ints
-      // per row).
-      val near = nearestLists(v, idCol, centroids, nProbe)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val assigned = near.select(col(idCol).as("neighbor_id"),
-        element_at(col("lists"), 1).as("list"))
-      val probes = near.select(col(idCol).as("query_id"),
-        explode(col("lists")).as("list"))
-      // every neighbor lives in EXACTLY one list and a query's probed lists
-      // are distinct, so (query, neighbor) candidates are unique by
-      // construction — the former .distinct() shuffled the full candidate
-      // set (the largest frame in the query) to dedup a set with no dups
-      val cands = probes.join(assigned, "list")
-        .where(col("query_id") =!= col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-      rescoreTopK(cands, v, idCol, k)
-    } else {
-      // corpus-scale regime: identical structure, but the persisted
-      // probe frame carries the int8 payload (~90 B/row — still
-      // corpus-proportional) so bounds compute inside the probe join
-      // and only bar-clearing survivors reach the exact rescore
-      // (see ivfTopK's big branch / topKViaBounds)
-      val vq = v.withColumn("__q", VectorF.quantI8(col("__v")))
-      val near = nearestLists(vq, idCol, centroids, nProbe, extra = Seq("__q", "__n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val assignedQ = near.select(col(idCol).as("neighbor_id"),
-        element_at(col("lists"), 1).as("list"),
-        col("__q").as("qb"), col("__n").as("nb"))
-      val probesQ = near.select(col(idCol).as("query_id"),
-        col("__q").as("qa"), col("__n").as("na"),
-        explode(col("lists")).as("list"))
-      val (ub, lb) = cosBounds(col("qa"), col("qb"), col("na"), col("nb"))
-      val bounds = boundedHashJoin(probesQ, assignedQ, Seq("list"),
-          int8SideBytes(v) + barPartialBytes(v.count(), nProbe, k))
-        .where(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"), ub.as("__ub"), lb.as("__lb"))
-      topKViaBounds(bounds, v, idCol, k, thresholdRank = k, dedup = false)
-    }
+    ivfPipeline(v, idCol, k, nProbe, nearestLists(_, idCol, centroids, nProbe, _))
   }
 
   /** ANN via LSH buckets: candidates share the exact signature in at least
@@ -1276,8 +1128,7 @@ object Similarity extends org.apache.spark.internal.Logging {
       // catalog/bench regime — UNCHANGED plan. id-only candidate pairs:
       // the distinct shuffles 16 bytes per pair, not two embedding
       // vectors.
-      val sigs = sigRows(v, idCol, planes, tables)
-      val bounded = capGroups(sigs, maxBucket, "tbl", "sig")
+      val bounded = capGroups(sigRows(v, idCol, planes, tables), maxBucket, "tbl", "sig")
       val a = bounded.select(col(idCol).as("query_id"), col("tbl"), col("sig"))
       val b = bounded.select(col(idCol).as("neighbor_id"), col("tbl"), col("sig"))
       val cands = a.join(b, Seq("tbl", "sig"))
@@ -1303,24 +1154,13 @@ object Similarity extends org.apache.spark.internal.Logging {
       // byte-identical.
       v.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val corpusRows = v.count()
-      val q = v.select(col(idCol),
-          lshProjections(col("__v"), planes, tables).as("__p"),
-          VectorF.quantI8(col("__v")).as("__q"), col("__n"))
-        .select(col(idCol), col("__q"), col("__n"),
-          explode(array((0 until tables).map(t =>
-            struct(lit(t).as("tbl"), packSignature(col("__p"), t, planes).as("sig"))): _*)).as("s"))
-        .select(col(idCol), col("s.tbl"), col("s.sig"), col("__q"), col("__n"))
-      val bounded = capGroups(q, maxBucket, "tbl", "sig")
-      val a = bounded.select(col(idCol).as("query_id"), col("tbl"), col("sig"),
-        col("__q").as("qa"), col("__n").as("na"))
-      val b = bounded.select(col(idCol).as("neighbor_id"), col("tbl"), col("sig"),
-        col("__q").as("qb"), col("__n").as("nb"))
-      val (ub, lb) = cosBounds(col("qa"), col("qb"), col("na"), col("nb"))
-      val bounds = boundedHashJoin(a, b, Seq("tbl", "sig"),
-          int8SideBytes(v, tables) + barPartialBytes(corpusRows, tables, k * tables))
-        .where(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"), ub.as("__ub"), lb.as("__lb"))
-      topKViaBounds(bounds, v, idCol, k, thresholdRank = k * tables, dedup = true)
+      val bounded = capGroups(sigRows(withQuant(v), idCol, planes, tables, QuantCols),
+        maxBucket, "tbl", "sig")
+      val keys = Seq("tbl", "sig")
+      topKViaBounds(quantSide(bounded, idCol, "query_id", "a", keys.map(col)),
+        quantSide(bounded, idCol, "neighbor_id", "b", keys.map(col)), keys,
+        int8SideBytes(v, tables) + barPartialBytes(corpusRows, tables, k * tables),
+        v, idCol, k, thresholdRank = k * tables, dedup = true)
     }
   }
 

@@ -15,6 +15,8 @@ class CentralitySpec extends SparkSpec {
     (4, 5), (4, 6), (4, 7), (5, 6), (5, 7), (6, 7), (3, 4), (7, 8)
   ).toDF("src", "dst")
 
+  private def cache = spark.sharedState.cacheManager
+
   test("triangles and clustering coefficient match networkx") {
     val tri = Map(0 -> 3L, 1 -> 3L, 2 -> 3L, 3 -> 3L, 4 -> 3L, 5 -> 3L,
       6 -> 3L, 7 -> 3L, 8 -> 0L)
@@ -34,14 +36,18 @@ class CentralitySpec extends SparkSpec {
     val g = Map(0 -> 0.4444444444, 1 -> 0.4444444444, 2 -> 0.4444444444,
       3 -> 0.6153846154, 4 -> 0.6666666667, 5 -> 0.5, 6 -> 0.5,
       7 -> 0.5333333333, 8 -> 0.3636363636)
+    cache.clearCache()
     val out = Centrality.closeness(edges).as[(Int, Double)].collect().toMap
+    assert(cache.isEmpty, "closeness left a cache")
     g.foreach { case (n, v) => assert(math.abs(out(n) - v) < 1e-9, s"closeness($n)") }
   }
 
   test("betweenness matches networkx (normalized)") {
     val g = Map(0 -> 0.0, 1 -> 0.0, 2 -> 0.0, 3 -> 0.5357142857,
       4 -> 0.5714285714, 5 -> 0.0, 6 -> 0.0, 7 -> 0.25, 8 -> 0.0)
+    cache.clearCache()
     val out = Centrality.betweenness(edges).as[(Int, Double)].collect().toMap
+    assert(cache.isEmpty, "betweenness left a cache")
     g.foreach { case (n, v) => assert(math.abs(out(n) - v) < 1e-9, s"betweenness($n)") }
     // the size-guarded local Brandes produces the same values
     val loc = Centrality.betweennessLocal(edges)
@@ -67,8 +73,11 @@ class CentralitySpec extends SparkSpec {
       3 -> 0.13717204, 4 -> 0.15080766, 5 -> 0.11919632, 6 -> 0.11919632,
       7 -> 0.12803193, 8 -> 0.0383406)
     val und = Centrality.symmetrize(edges)
-    val out = Centrality.hits(und, iters = 40)
+    cache.clearCache()
+    // 45 % checkpointEvery != 0: the run ends between checkpoints
+    val out = Centrality.hits(und, iters = 45)
       .select("node", "hub").as[(Int, Double)].collect().toMap
+    assert(cache.isEmpty, "hits left a cache")
     g.foreach { case (n, v) => assert(math.abs(out(n) - v) < 1e-4, s"hub($n)") }
   }
 
@@ -81,7 +90,9 @@ class CentralitySpec extends SparkSpec {
   test("eccentricity / diameter / radius match networkx") {
     val g = Map(0 -> 4, 1 -> 4, 2 -> 4, 3 -> 3, 4 -> 2, 5 -> 3, 6 -> 3,
       7 -> 3, 8 -> 4)
+    cache.clearCache()
     val out = Centrality.eccentricity(edges).as[(Int, Int)].collect().toMap
+    assert(cache.isEmpty, "eccentricity left a cache")
     g.foreach { case (n, v) => assert(out(n) == v, s"ecc($n)") }
     val dr = Centrality.diameterRadius(edges).as[(Int, Int)].head()
     assert(dr == ((4, 2)))
