@@ -56,11 +56,11 @@ object PlanAudit {
       ccRoundBody(graft.queries.GraphQ.nationGraph(s, dir))),
     "a10_kpp__bydate" -> ((s: SparkSession, dir: String) =>
       graft.queries.BacktestQ.a10ByDate(s, dir)._1),
-    // g_info's catalog row went driver-local in round 10 (size-guarded
-    // twin) — this audits the corpus-scale distributed form it guards
+    // g_info's catalog row takes the driver-local tier — this audits
+    // the corpus-scale distributed tier
     "g_info__distributed" -> ((s: SparkSession, dir: String) =>
       graft.graph.GraphOps.graphInfo(graft.queries.GraphQ.nationGraph(s, dir),
-        smallGraph = false)),
+        maxLocalEdges = 0)),
     // the composite training-data chain (score → gate → redact → exact
     // + near dedup → decontaminate) is spec-only (catalog frozen at 88)
     // but its end-to-end plan is the flagship 100 TB shape — audit it

@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import org.apache.spark.storage.StorageLevel
 
 /** Vertex centrality measures as DataFrame programs (SURVEY.md §2.9;
@@ -32,28 +33,44 @@ object Centrality {
       .where(col("src") =!= col("dst")).distinct()
   }
 
-  /** The [[symmetrize]]d edge list collected to the driver as (src, dst)
-    * longs, for the driver-local tiers: refuses (`require`) above
-    * `maxEdges` symmetrized edges unless the caller has `preGuarded` the
-    * count itself.
+  /** The one tier decision of the graph ops with a driver-local tier
+    * ([[closeness]], [[eccentricity]], [[betweenness]],
+    * [[GraphOps.connectedComponents]], [[GraphOps.graphInfo]],
+    * [[graft.text.NearDup.dupGroups]]). `local` runs on the
+    * [[symmetrize]]d edges collected as (src, dst) longs when the ids are
+    * integral, `maxLocalEdges > 0` and 2·|edges| ≤ `maxLocalEdges`;
+    * otherwise `distributed` runs. Symmetrize emits at most two rows per
+    * input row, so one count of the input bounds the collect, and
+    * `maxLocalEdges ≤ 0` forces the distributed tier without a count
+    * job. The local result's `ids` columns are cast back to the input's
+    * id type, so a result's schema does not depend on its tier.
     *
-    * The guard stays count-then-collect (2 jobs): the tempting one-job
-    * limit(maxEdges+1).collect() plans CollectLimitExec, whose
+    * The decision stays count-then-collect (2 jobs): the tempting
+    * one-job limit(maxEdges+1).collect() plans CollectLimitExec, whose
     * incremental partition fetch (1, then 4x, ...) runs FOUR sequential
     * rounds when a tiny graph never fills the limit — measured
     * g_components 0.60 -> 0.94 s before reverting (round 10).
     */
-  private[graph] def collectGuarded(edges: DataFrame, maxEdges: Long, fallback: String,
-                                    preGuarded: Boolean = false): Array[(Long, Long)] = {
+  private[graft] def localOrDistributed(edges: DataFrame, maxLocalEdges: Long, ids: String*)
+      (local: Array[(Long, Long)] => DataFrame)(distributed: => DataFrame): DataFrame = {
     val und = symmetrize(edges)
-    if (!preGuarded) {
-      val cnt = und.count()
-      require(cnt <= maxEdges,
-        s"driver-local guard: $cnt symmetrized edges > $maxEdges — use $fallback")
-    }
-    und.selectExpr("cast(src as long)", "cast(dst as long)")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    if (!integralIds(und, "src") || maxLocalEdges <= 0 || 2 * edges.count() > maxLocalEdges)
+      return distributed
+    val out = local(und.selectExpr("cast(src as long)", "cast(dst as long)")
+      .collect().map(r => (r.getLong(0), r.getLong(1))))
+    val idType = und.schema("src").dataType
+    out.select(out.columns.map(c => if (ids.contains(c)) col(c).cast(idType).as(c) else col(c)): _*)
   }
+
+  /** Whether every named column holds integral ids: the driver-local
+    * tiers pack ids into primitive longs, so strings, decimals and
+    * fractional ids stay on the distributed tiers.
+    */
+  private def integralIds(df: DataFrame, cols: String*): Boolean =
+    cols.forall(c => df.schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    })
 
   /** Undirected degrees from a symmetrized edge list. */
   private def degs(und: DataFrame): DataFrame =
@@ -331,34 +348,49 @@ object Centrality {
   /** Closeness centrality, networkx `wf_improved` form (graph.py
     * `nx.closeness_centrality`):
     * C(v) = ((r−1)/Σd) · ((r−1)/(n−1)) with r = #reachable incl. v.
+    * Graphs within `maxLocalEdges` run the driver-local BFS of
+    * [[bfsLocalStats]] (see [[localOrDistributed]]).
     */
-  def closeness(edges: DataFrame, maxDepth: Int = 30): DataFrame = {
-    val und = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = allNodes(und)
-    val n = nodes.count().toDouble
-    val dists = bfsDistances(und, nodes, maxDepth)
-    // dists is a checkpoint: the result never reads the cache
-    und.unpersist(blocking = false)
-    dists.groupBy(col("node"))
-      .agg(count(lit(1)).as("r"), sum("dist").as("sumd"))
-      .select(col("node"),
-        when(col("sumd") > 0,
-          ((col("r") - 1) / col("sumd")) * ((col("r") - 1) / (n - 1)))
-          .otherwise(0.0).as("closeness"))
-  }
+  def closeness(edges: DataFrame, maxDepth: Int = 30,
+                maxLocalEdges: Long = 200000L): DataFrame =
+    localOrDistributed(edges, maxLocalEdges, "node") { es =>
+      val (stats, n) = bfsLocalStats(es, maxDepth)
+      edges.sparkSession.createDataFrame(stats.toSeq.map { case (s, r, sumd, _) =>
+        (s, if (sumd > 0) ((r - 1).toDouble / sumd) * ((r - 1).toDouble / (n - 1)) else 0.0)
+      }).toDF("node", "closeness")
+    } {
+      val und = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
+      val nodes = allNodes(und)
+      val n = nodes.count().toDouble
+      val dists = bfsDistances(und, nodes, maxDepth)
+      // dists is a checkpoint: the result never reads the cache
+      und.unpersist(blocking = false)
+      dists.groupBy(col("node"))
+        .agg(count(lit(1)).as("r"), sum("dist").as("sumd"))
+        .select(col("node"),
+          when(col("sumd") > 0,
+            ((col("r") - 1) / col("sumd")) * ((col("r") - 1) / (n - 1)))
+            .otherwise(0.0).as("closeness"))
+    }
 
   /** Per-node eccentricity: the longest shortest path from each node to
     * any node in its connected component (graph.py:230 `nx.eccentricity`
     * — commented in the reference as "max distance of node to other").
     * Diameter = max eccentricity, radius = min (over a connected graph).
+    * Tiered like [[closeness]].
     */
-  def eccentricity(edges: DataFrame, maxDepth: Int = 30): DataFrame = {
-    val und = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    val dists = bfsDistances(und, allNodes(und), maxDepth)
-    und.unpersist(blocking = false) // dists is a checkpoint
-    dists.groupBy(col("s").as("node"))
-      .agg(max("dist").as("eccentricity"))
-  }
+  def eccentricity(edges: DataFrame, maxDepth: Int = 30,
+                   maxLocalEdges: Long = 200000L): DataFrame =
+    localOrDistributed(edges, maxLocalEdges, "node") { es =>
+      edges.sparkSession.createDataFrame(bfsLocalStats(es, maxDepth)._1.toSeq
+        .map { case (s, _, _, ecc) => (s, ecc) }).toDF("node", "eccentricity")
+    } {
+      val und = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
+      val dists = bfsDistances(und, allNodes(und), maxDepth)
+      und.unpersist(blocking = false) // dists is a checkpoint
+      dists.groupBy(col("s").as("node"))
+        .agg(max("dist").as("eccentricity"))
+    }
 
   /** One-row (diameter, radius) of each node's eccentricity — only
     * meaningful on a connected graph (nx raises there; we report the max
@@ -368,26 +400,23 @@ object Centrality {
     eccentricity(edges, maxDepth)
       .agg(max("eccentricity").as("diameter"), min("eccentricity").as("radius"))
 
-  /** Driver-local all-sources BFS over a PROVABLY-SMALL aggregated
-    * graph: (node, reachable, sum-of-distances, eccentricity) per
-    * source. The distributed BFS pays ~2 Spark jobs per level — the
-    * right trade on a billion-edge graph, pure overhead on a 25-node
-    * nation summary (where the reference's networkx call is
-    * milliseconds). Size-guarded like Community.greedyModularity: counts
-    * the symmetrized edges first and refuses above `maxEdges`. Values
-    * are identical to the distributed forms (spec'd equal); corpus-scale
-    * graphs keep [[closeness]]/[[eccentricity]].
+  /** Driver-local all-sources BFS, ≤ `maxDepth` levels, over the
+    * collected symmetrized edges of a small graph: (node, reachable,
+    * sum-of-distances, eccentricity) per source, and the node count.
+    * The distributed BFS pays ~2 Spark jobs per level — the right trade
+    * on a billion-edge graph, pure overhead on a 25-node nation summary
+    * (where the reference's networkx call is milliseconds). Values are
+    * identical to the distributed forms (spec'd equal).
     */
-  private def bfsLocalStats(edges: DataFrame, maxEdges: Long)
+  private def bfsLocalStats(es: Array[(Long, Long)], maxDepth: Int)
       : (Array[(Long, Int, Long, Int)], Int) = {
-    val es = collectGuarded(edges, maxEdges, "the distributed form")
     val adj = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
     val nodes = adj.keySet.toArray.sorted
     val stats = nodes.map { s =>
       val dist = scala.collection.mutable.LongMap[Int](s -> 0)
       var frontier = List(s)
       var d = 0
-      while (frontier.nonEmpty) {
+      while (frontier.nonEmpty && d < maxDepth) {
         d += 1
         frontier = frontier.flatMap(adj(_)).distinct
           .filter(m => !dist.contains(m))
@@ -420,9 +449,8 @@ object Centrality {
     *    ~0.2 s at 600k edges. The distributed tiers' wall time is
     *    stage-count × scheduler floor (2·iters sequential rounds, each
     *    a job), which a graph this small never amortizes: the same
-    *    size-guarded local-twin reasoning as
-    *    [[GraphOps.connectedComponentsLocal]], spec'd equal to both
-    *    distributed tiers (HitsRoundShapeSpec).
+    *    reasoning as the local tier of [[GraphOps.connectedComponents]],
+    *    spec'd equal to both distributed tiers (HitsRoundShapeSpec).
     *  - BROADCAST path (|V| ≤ maxBroadcastNodes, default 5M ≈ 80 MB of
     *    (long,long) rows): the whole 2·iters-round recurrence stays a
     *    single LAZY plan — each round joins the edge frame to the
@@ -465,14 +493,8 @@ object Centrality {
       count(lit(1)).as("m")).head()
     val approxV = probeRow.getLong(0) + probeRow.getLong(1)
     val edgeCount = probeRow.getLong(2)
-    // local tier packs ids into primitive longs — non-integral id types
-    // (strings, decimals) stay on the distributed tiers
-    val intIds = Seq(raw.schema("s").dataType, raw.schema("d").dataType).forall {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    if (intIds && edgeCount <= maxLocalEdges) return hitsCountsLocal(raw, iters)
+    if (integralIds(raw, "s", "d") && edgeCount <= maxLocalEdges)
+      return hitsCountsLocal(raw, iters)
     // zero-count nodes are NOT re-joined inside either loop — a zero
     // term contributes nothing to the next sum, so the sparse frames are
     // exact; the full node set (with 0s) falls out of the final
@@ -631,40 +653,14 @@ object Centrality {
         col("hub_walks"), col("auth_walks"))
   }
 
-  /** [[closeness]] (wf_improved), computed driver-locally under the
-    * [[bfsLocalStats]] size guard.
+  /** The local tier of [[betweenness]]: exact Brandes per source, BFS
+    * bounded at `maxDepth` levels, over the collected symmetrized edges.
+    * The distributed level-synchronous form pays ~2 Spark jobs per BFS
+    * level FORWARD and per level BACKWARD — pure scheduler overhead on a
+    * tiny aggregated graph. Values equal the distributed form (spec'd).
     */
-  def closenessLocal(edges: DataFrame, maxEdges: Long = 200000L): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val (stats, n) = bfsLocalStats(edges, maxEdges)
-    stats.toSeq.map { case (s, r, sumd, _) =>
-      (s, if (sumd > 0) ((r - 1).toDouble / sumd) * ((r - 1).toDouble / (n - 1)) else 0.0)
-    }.toDF("node", "closeness")
-  }
-
-  /** [[eccentricity]], computed driver-locally under the size guard. */
-  def eccentricityLocal(edges: DataFrame, maxEdges: Long = 200000L): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val (stats, _) = bfsLocalStats(edges, maxEdges)
-    stats.toSeq.map { case (s, _, _, ecc) => (s, ecc) }
-      .toDF("node", "eccentricity")
-  }
-
-  /** [[betweenness]] computed driver-locally under the [[bfsLocalStats]]
-    * size guard (the closenessLocal/eccentricityLocal precedent): exact
-    * Brandes per source over a collected adjacency list. The distributed
-    * level-synchronous form pays ~2 Spark jobs per BFS level FORWARD and
-    * per level BACKWARD — pure scheduler overhead on a tiny aggregated
-    * graph. Values equal the distributed form (spec'd); corpus-scale
-    * graphs keep [[betweenness]].
-    */
-  def betweennessLocal(edges: DataFrame, normalized: Boolean = true,
-                       maxEdges: Long = 200000L): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val es = collectGuarded(edges, maxEdges, "the distributed form")
+  private def brandes(es: Array[(Long, Long)], normalized: Boolean,
+                      maxDepth: Int): Seq[(Long, Double)] = {
     val adj = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sorted }
     val nodes = adj.keySet.toArray.sorted
     val bc = scala.collection.mutable.LongMap[Double]().withDefaultValue(0.0)
@@ -677,7 +673,7 @@ object Centrality {
       val queue = scala.collection.mutable.Queue[Long](s)
       while (queue.nonEmpty) {
         val v = queue.dequeue(); stack += v
-        for (w <- adj(v)) {
+        if (dist(v) < maxDepth) for (w <- adj(v)) {
           if (!dist.contains(w)) { dist(w) = dist(v) + 1; queue.enqueue(w) }
           if (dist(w) == dist(v) + 1) { sigma(w) += sigma(v); pred(w) = v :: pred(w) }
         }
@@ -692,72 +688,78 @@ object Centrality {
     // n ≤ 2 has no transit vertices — networkx _rescale leaves values
     // unscaled there; dividing by (n-1)(n-2) would yield Inf/NaN
     val scale = if (normalized && n > 2) 1.0 / ((n - 1.0) * (n - 2.0)) else if (normalized) 1.0 else 0.5
-    nodes.toSeq.map(x => (x, bc(x) * scale)).toDF("node", "betweenness")
+    nodes.toSeq.map(x => (x, bc(x) * scale))
   }
 
   /** Betweenness centrality via all-sources level-synchronous Brandes:
     * forward BFS accumulates path counts σ, the backward sweep per depth
     * level accumulates dependencies δ(v) = Σ_w σv/σw (1 + δw). Undirected,
     * endpoints excluded; `normalized` divides by (n−1)(n−2) (the networkx
-    * normalization combined with the undirected 1/2).
+    * normalization combined with the undirected 1/2). Graphs within
+    * `maxLocalEdges` run the driver-local [[brandes]] (see
+    * [[localOrDistributed]]).
     */
-  def betweenness(edges: DataFrame, normalized: Boolean = true,
-                  maxDepth: Int = 30): DataFrame = {
-    val und = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    // a checkpoint, not a cache: the output join reads it after `und`
-    // is released
-    val nodes = allNodes(und).localCheckpoint()
-    val n = nodes.count().toDouble
+  def betweenness(edges: DataFrame, normalized: Boolean = true, maxDepth: Int = 30,
+                  maxLocalEdges: Long = 200000L): DataFrame =
+    localOrDistributed(edges, maxLocalEdges, "node") { es =>
+      edges.sparkSession.createDataFrame(brandes(es, normalized, maxDepth))
+        .toDF("node", "betweenness")
+    } {
+      val und = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
+      // a checkpoint, not a cache: the output join reads it after `und`
+      // is released
+      val nodes = allNodes(und).localCheckpoint()
+      val n = nodes.count().toDouble
 
-    // forward: levels(s, node, dist, sigma)
-    var levels = nodes.select(col("node").as("s"), col("node"),
-      lit(0).as("dist"), lit(1.0).as("sigma")).localCheckpoint()
-    var frontier = levels
-    var depth = 0
-    while (depth < maxDepth && !frontier.isEmpty) {
-      depth += 1
-      val nxt = frontier.join(und, frontier("node") === und("src"))
-        .select(col("s"), und("dst").as("node"), col("sigma"))
-        .join(levels.select(col("s"), col("node")), Seq("s", "node"), "left_anti")
-        .groupBy("s", "node").agg(sum("sigma").as("sigma"))
-        .withColumn("dist", lit(depth))
-        .select("s", "node", "dist", "sigma")
-        .localCheckpoint()
-      levels = levels.unionByName(nxt).localCheckpoint()
-      frontier = nxt
-    }
-    val maxDist = levels.agg(max("dist")).head().getInt(0)
+      // forward: levels(s, node, dist, sigma)
+      var levels = nodes.select(col("node").as("s"), col("node"),
+        lit(0).as("dist"), lit(1.0).as("sigma")).localCheckpoint()
+      var frontier = levels
+      var depth = 0
+      while (depth < maxDepth && !frontier.isEmpty) {
+        depth += 1
+        val nxt = frontier.join(und, frontier("node") === und("src"))
+          .select(col("s"), und("dst").as("node"), col("sigma"))
+          .join(levels.select(col("s"), col("node")), Seq("s", "node"), "left_anti")
+          .groupBy("s", "node").agg(sum("sigma").as("sigma"))
+          .withColumn("dist", lit(depth))
+          .select("s", "node", "dist", "sigma")
+          .localCheckpoint()
+        levels = levels.unionByName(nxt).localCheckpoint()
+        frontier = nxt
+      }
+      val maxDist = levels.agg(max("dist")).head().getInt(0)
 
-    // backward: delta per level, deepest first
-    var deltas = levels.where(col("dist") === maxDist)
-      .select(col("s"), col("node"), col("dist"), lit(0.0).as("delta"))
-      .localCheckpoint()
-    for (lv <- maxDist to 1 by -1) {
-      val wLvl = deltas.where(col("dist") === lv)
-        .join(levels.where(col("dist") === lv)
-          .select(col("s"), col("node"), col("sigma")), Seq("s", "node"))
-        .select(col("s").as("ws"), col("node").as("wn"),
-          col("sigma").as("wsig"), col("delta"))
-      val vLvl = levels.where(col("dist") === lv - 1)
-        .select(col("s").as("vs"), col("node").as("vn"), col("sigma").as("vsig"))
-      val contrib = vLvl.join(und, col("vn") === und("src"))
-        .join(wLvl, col("vs") === col("ws") && und("dst") === col("wn"))
-        .groupBy(col("vs").as("s"), col("vn").as("node"))
-        .agg(sum(col("vsig") / col("wsig") * (lit(1.0) + col("delta"))).as("delta"))
-      // nodes at lv-1 with no successors at lv get delta 0
-      val lvl = levels.where(col("dist") === lv - 1)
-        .join(contrib, Seq("s", "node"), "left")
-        .select(col("s"), col("node"), col("dist"),
-          coalesce(col("delta"), lit(0.0)).as("delta"))
+      // backward: delta per level, deepest first
+      var deltas = levels.where(col("dist") === maxDist)
+        .select(col("s"), col("node"), col("dist"), lit(0.0).as("delta"))
         .localCheckpoint()
-      deltas = deltas.unionByName(lvl)
+      for (lv <- maxDist to 1 by -1) {
+        val wLvl = deltas.where(col("dist") === lv)
+          .join(levels.where(col("dist") === lv)
+            .select(col("s"), col("node"), col("sigma")), Seq("s", "node"))
+          .select(col("s").as("ws"), col("node").as("wn"),
+            col("sigma").as("wsig"), col("delta"))
+        val vLvl = levels.where(col("dist") === lv - 1)
+          .select(col("s").as("vs"), col("node").as("vn"), col("sigma").as("vsig"))
+        val contrib = vLvl.join(und, col("vn") === und("src"))
+          .join(wLvl, col("vs") === col("ws") && und("dst") === col("wn"))
+          .groupBy(col("vs").as("s"), col("vn").as("node"))
+          .agg(sum(col("vsig") / col("wsig") * (lit(1.0) + col("delta"))).as("delta"))
+        // nodes at lv-1 with no successors at lv get delta 0
+        val lvl = levels.where(col("dist") === lv - 1)
+          .join(contrib, Seq("s", "node"), "left")
+          .select(col("s"), col("node"), col("dist"),
+            coalesce(col("delta"), lit(0.0)).as("delta"))
+          .localCheckpoint()
+        deltas = deltas.unionByName(lvl)
+      }
+      val raw = deltas.where(col("node") =!= col("s"))
+        .groupBy("node").agg(sum("delta").as("bsum"))
+      // same n ≤ 2 guard as brandes (networkx _rescale semantics)
+      val scale = if (normalized && n > 2) 1.0 / ((n - 1) * (n - 2)) else if (normalized) 1.0 else 0.5
+      und.unpersist(blocking = false) // levels and deltas are checkpoints
+      nodes.join(raw, Seq("node"), "left")
+        .select(col("node"), (coalesce(col("bsum"), lit(0.0)) * scale).as("betweenness"))
     }
-    val raw = deltas.where(col("node") =!= col("s"))
-      .groupBy("node").agg(sum("delta").as("bsum"))
-    // same n ≤ 2 guard as betweennessLocal (networkx _rescale semantics)
-    val scale = if (normalized && n > 2) 1.0 / ((n - 1) * (n - 2)) else if (normalized) 1.0 else 0.5
-    und.unpersist(blocking = false) // levels and deltas are checkpoints
-    nodes.join(raw, Seq("node"), "left")
-      .select(col("node"), (coalesce(col("bsum"), lit(0.0)) * scale).as("betweenness"))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics as declarative DataFrame plans (SURVEY.md §2.9;
@@ -146,32 +146,40 @@ object GraphOps {
   /** Connected components of an undirected graph by iterated min-label
     * propagation: every node repeatedly adopts the smallest component id
     * in its closed neighborhood until a fixed point (≤ component-diameter
-    * rounds). Deterministic; returns (node, component) with component =
-    * the smallest node id in the component.
+    * rounds, at most `maxIters`). Deterministic; returns (node, component)
+    * with component = the smallest node id in the component.
     *
     * Each round is one join + one aggregation; the iterate is eagerly
     * localCheckpoint'ed (referenced twice: by the neighbor-min join and
     * the convergence anti-check — un-materialized it doubles lineage per
-    * round).
+    * round). Graphs within `maxLocalEdges` take the driver-local
+    * union-find of [[components]] instead (see
+    * [[Centrality.localOrDistributed]]): the min-label iteration costs
+    * ~2 Spark jobs per diameter step — pure scheduler overhead at 25
+    * nodes.
     */
-  def connectedComponents(edges: DataFrame, maxIters: Int = 50): DataFrame = {
-    // the label frame is re-joined to the edges every round, so which
-    // side moves depends on |V| — see [[Centrality.tieredByKey]]
-    // no release: graphInfo's later symmetrize(edges) reads this cache
-    val (und, hinted, _) = Centrality.tieredByKey(Centrality.symmetrize(edges), "dst")
-    var labels = und.select(col("src").as("node")).distinct()
-      .withColumn("component", col("node")).localCheckpoint()
-    var changed = true
-    var it = 0
-    while (changed && it < maxIters) {
-      it += 1
-      val next = ccRound(und, labels, hinted).localCheckpoint()
-      changed = !next.as("a").join(hinted(labels.as("b")), "node")
-        .where(col("a.component") =!= col("b.component")).isEmpty
-      labels = next
+  def connectedComponents(edges: DataFrame, maxIters: Int = 50,
+                          maxLocalEdges: Long = 200000L): DataFrame =
+    Centrality.localOrDistributed(edges, maxLocalEdges, "node", "component") { es =>
+      edges.sparkSession.createDataFrame(components(es).toSeq).toDF("node", "component")
+    } {
+      // the label frame is re-joined to the edges every round, so which
+      // side moves depends on |V| — see [[Centrality.tieredByKey]]
+      // no release: graphInfo's later symmetrize(edges) reads this cache
+      val (und, hinted, _) = Centrality.tieredByKey(Centrality.symmetrize(edges), "dst")
+      var labels = und.select(col("src").as("node")).distinct()
+        .withColumn("component", col("node")).localCheckpoint()
+      var changed = true
+      var it = 0
+      while (changed && it < maxIters) {
+        it += 1
+        val next = ccRound(und, labels, hinted).localCheckpoint()
+        changed = !next.as("a").join(hinted(labels.as("b")), "node")
+          .where(col("a.component") =!= col("b.component")).isEmpty
+        labels = next
+      }
+      labels
     }
-    labels
-  }
 
   /** One min-label round of [[connectedComponents]]: every node adopts
     * the smallest label among itself and its neighbors in `und` (the
@@ -186,43 +194,13 @@ object GraphOps {
         least(col("component"), coalesce(col("__nc"), col("component"))).as("component"))
   }
 
-  /** Driver-local union-find components for a PROVABLY-SMALL aggregated
-    * graph (size-guarded collect, the closenessLocal/greedyModularity
-    * precedent): same (node, component = smallest member id) contract as
-    * [[connectedComponents]], which remains the corpus-scale path. The
-    * min-label iteration costs ~2 Spark jobs per diameter step — pure
-    * scheduler overhead at 25 nodes.
+  /** Union-find over a collected edge array with path compression:
+    * (node, component) for every node of `es`, the MIN root id winning
+    * each union (matching the distributed min-label propagation) — the
+    * local tier of [[connectedComponents]], [[graphInfo]] and
+    * [[graft.text.NearDup.dupGroups]].
     */
-  def connectedComponentsLocal(edges: DataFrame, maxEdges: Long = 200000L): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    connectedComponentsLocalPairs(edges, maxEdges).toSeq.toDF("node", "component")
-  }
-
-  /** Driver-local core of [[connectedComponentsLocal]]: (node → min
-    * component id) pairs as a plain array, for callers that continue
-    * locally (group sizes, keep/drop) instead of round-tripping the tiny
-    * result through another Spark job — see [[graft.text.NearDup.dupGroups]].
-    */
-  def connectedComponentsLocalPairs(edges: DataFrame,
-                                    maxEdges: Long = 200000L,
-                                    preGuarded: Boolean = false): Array[(Long, Long)] = {
-    // preGuarded (r17): a caller that has ALREADY proven the symmetrized
-    // count fits (symmetrize dedups and drops self-loops, so it emits
-    // ≤ 2× the input pairs — dupGroups knows its exact pair count from
-    // the persist-materializing probe) skips the redundant count job.
-    val es = Centrality.collectGuarded(edges, maxEdges, "connectedComponents", preGuarded)
-    val find = unionFind(es)
-    es.map(_._1).distinct.map(n => (n, find(n)))
-  }
-
-  /** Union-find over a collected edge array with path compression;
-    * the MIN root id wins each union (matching the distributed
-    * min-label propagation). Returns the `find` closure — shared by
-    * [[connectedComponentsLocalPairs]] and [[graphInfoLocal]] so the
-    * min-id invariant can't drift between the two local twins.
-    */
-  private def unionFind(es: Array[(Long, Long)]): Long => Long = {
+  private[graft] def components(es: Array[(Long, Long)]): Array[(Long, Long)] = {
     val parent = scala.collection.mutable.LongMap[Long]()
     def find(x: Long): Long = {
       var r = x
@@ -235,7 +213,7 @@ object GraphOps {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb) // min id wins
     }
-    find
+    es.map(_._1).distinct.map(n => (n, find(n)))
   }
 
   /** One-row whole-graph summary (graph.py:30-86 `graph_info`, undirected
@@ -245,45 +223,43 @@ object GraphOps {
     *
     * Everything except the component iteration is ONE lazy plan; the
     * component frame comes from [[connectedComponents]] (inherently
-    * iterative) — or, with `smallGraph = true`, from the size-guarded
-    * local union-find — and joins in as a small aggregate.
+    * iterative) and joins in as a small aggregate. Graphs within
+    * `maxLocalEdges` take the driver-local [[summary]] instead (see
+    * [[Centrality.localOrDistributed]]).
     */
-  def graphInfo(edges: DataFrame, smallGraph: Boolean = false): DataFrame = {
-    if (smallGraph) return graphInfoLocal(edges)
-    val cc = Centrality.clusteringCoefficient(edges)
-    val compFrame = connectedComponents(edges)
-    val comp = compFrame
-      .groupBy("component").agg(count(lit(1)).as("csz"))
-      .agg(count(lit(1)).as("components"), max("csz").as("largest_component"))
-    val und = Centrality.symmetrize(edges)
-    val base = cc.agg(
-      count(lit(1)).as("nodes"),
-      (sum(col("triangles")) / 3).cast("long").as("triangles"),
-      sum(col("degree") * (col("degree") - 1) / 2).as("wedges"),
-      avg(col("clustering")).as("avg_clustering"))
-    val m = und.agg((count(lit(1)) / 2).cast("long").as("edges"))
-    base.crossJoin(m).crossJoin(comp).select(
-      col("nodes"), col("edges"),
-      // nodes ≥ 2 guard: an empty graph's 0·(0−1) divisor is a hard
-      // DIVIDE_BY_ZERO under ANSI mode (Spark 4 default), not a null
-      when(col("nodes") >= 2,
-        col("edges") * 2.0 / (col("nodes") * (col("nodes") - 1))).as("density"),
-      when(col("wedges") > 0, col("triangles") * 3.0 / col("wedges"))
-        .otherwise(0.0).as("transitivity"),
-      col("avg_clustering"),
-      col("components"), col("largest_component"))
-  }
+  def graphInfo(edges: DataFrame, maxLocalEdges: Long = 200000L): DataFrame =
+    Centrality.localOrDistributed(edges, maxLocalEdges)(summary(edges.sparkSession, _)) {
+      val cc = Centrality.clusteringCoefficient(edges)
+      val compFrame = connectedComponents(edges, maxLocalEdges = 0)
+      val comp = compFrame
+        .groupBy("component").agg(count(lit(1)).as("csz"))
+        .agg(count(lit(1)).as("components"), max("csz").as("largest_component"))
+      val und = Centrality.symmetrize(edges)
+      val base = cc.agg(
+        count(lit(1)).as("nodes"),
+        (sum(col("triangles")) / 3).cast("long").as("triangles"),
+        sum(col("degree") * (col("degree") - 1) / 2).as("wedges"),
+        avg(col("clustering")).as("avg_clustering"))
+      val m = und.agg((count(lit(1)) / 2).cast("long").as("edges"))
+      base.crossJoin(m).crossJoin(comp).select(
+        col("nodes"), col("edges"),
+        // nodes ≥ 2 guard: an empty graph's 0·(0−1) divisor is a hard
+        // DIVIDE_BY_ZERO under ANSI mode (Spark 4 default), not a null
+        when(col("nodes") >= 2,
+          col("edges") * 2.0 / (col("nodes") * (col("nodes") - 1))).as("density"),
+        when(col("wedges") > 0, col("triangles") * 3.0 / col("wedges"))
+          .otherwise(0.0).as("transitivity"),
+        col("avg_clustering"),
+        col("components"), col("largest_component"))
+    }
 
-  /** Size-guarded driver-local twin of [[graphInfo]] — the same pattern
-    * as [[connectedComponentsLocal]]: count the symmetrized edges first,
-    * `require`-refuse above `maxEdges`, and otherwise compute the whole
-    * 1-row summary in one pass over the collected edge list. The
-    * distributed form runs ~4 independent job chains (triangle joins,
-    * edge count, component agg, final crossJoins) whose scheduler
-    * overhead dwarfs a tiny graph (g_info measured 1.16 s on the 5-node
-    * sf0.1 nation graph; this path ~0.15 s). GraphInfoSpec pins equality
-    * with the distributed twin on random graphs; above the guard the
-    * distributed form is the corpus path, unchanged.
+  /** The local tier of [[graphInfo]]: the whole 1-row summary in one
+    * pass over the collected symmetrized edges. The distributed form
+    * runs ~4 independent job chains (triangle joins, edge count,
+    * component agg, final crossJoins) whose scheduler overhead dwarfs a
+    * tiny graph (g_info measured 1.16 s on the 5-node sf0.1 nation
+    * graph; this path ~0.15 s). GraphInfoSpec pins equality with the
+    * distributed tier on random graphs.
     *
     * Arithmetic mirrors the distributed/oracle form operation-for-
     * operation: triangles = Σ per-node / 3 in integers, wedges =
@@ -292,13 +268,11 @@ object GraphOps {
     * (ulp-level order sensitivity is absorbed by the catalog's round-6
     * projection, same as the distributed sum's partition order).
     */
-  def graphInfoLocal(edges: DataFrame, maxEdges: Long = 200000L): DataFrame = {
-    val spark = edges.sparkSession
+  private def summary(spark: SparkSession, es: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
-    val es = Centrality.collectGuarded(edges, maxEdges, "graphInfo(smallGraph=false)")
     val schema = Seq("nodes", "edges", "density", "transitivity",
       "avg_clustering", "components", "largest_component")
-    // empty graph: the distributed twin's global aggregates over zero
+    // empty graph: the distributed tier's global aggregates over zero
     // rows yield (0, 0, null density — via its nodes≥2 guard — and
     // transitivity 0.0 via the wedges>0 guard, null avg, 0 components,
     // null max); mirror that row instead of letting empty.max throw
@@ -315,8 +289,8 @@ object GraphOps {
     // Per-node triangle counts by FORWARD adjacency over a degree order
     // (count each triangle once at its lowest-ordered vertex, credit all
     // three corners): O(Σ fwd-degree²) ≤ O(m^1.5), where the naive
-    // all-neighbor-pairs loop is O(Σ d²) — a 100k-edge star passes the
-    // edge guard yet would cost 5·10⁹ set probes single-threaded there.
+    // all-neighbor-pairs loop is O(Σ d²) — a 100k-edge star is within the
+    // local bound yet would cost 5·10⁹ set probes single-threaded there.
     // Pre-resolve the degree order to dense int indices once — the
     // merge-intersect inner loop then runs pure primitive int compares
     // (a LongMap probe per comparison would undo the rewrite's point)
@@ -362,9 +336,7 @@ object GraphOps {
       clusterSum += (if (d >= 2) t * 2.0 / (d * (d - 1)) else 0.0)
     }
     val triangles = triTotal / 3
-    // components: shared union-find (min id wins)
-    val find = unionFind(es)
-    val compSizes = nodes.groupBy(find).map(_._2.length)
+    val compSizes = components(es).groupBy(_._2).values.map(_.length)
     Seq((n, m,
         m * 2.0 / (n * (n - 1)),
         if (wedges > 0) triangles * 3.0 / wedges else 0.0,

@@ -102,9 +102,8 @@ object GraphQ {
     // graph.py:228) — all-sources BFS in Spark, recursive CTE in the
     // oracle.
     Q("g_closeness", (s, dir) => {
-      // size-guarded local BFS — see g_ecc; Centrality.closeness is the
-      // corpus-scale path
-      Centrality.closenessLocal(nationGraph(s, dir))
+      // the ≤ 25-node nation graph takes closeness' driver-local tier
+      Centrality.closeness(nationGraph(s, dir))
         .select(bi(col("node")).as("node"), r6(col("closeness")).as("closeness"))
     }, Some(s"""
       WITH RECURSIVE $edgeSql,
@@ -183,9 +182,8 @@ object GraphQ {
     // Integer path counts are cross-engine exact; only the final ratio
     // sum is float (round 6 both sides, like the Brandes deltas).
     Q("g_betweenness", (s, dir) => {
-      // size-guarded local Brandes — see g_ecc; Centrality.betweenness
-      // (level-synchronous distributed Brandes) is the corpus-scale path
-      Centrality.betweennessLocal(nationGraph(s, dir), normalized = true)
+      // local Brandes tier — see g_ecc
+      Centrality.betweenness(nationGraph(s, dir), normalized = true)
         .select(bi(col("node")).as("node"), r6(col("betweenness")).as("betweenness"))
     }, Some(s"""
       WITH $edgeSql,
@@ -275,10 +273,10 @@ object GraphQ {
     // shortest path within the component; same all-sources BFS as
     // closeness, max instead of sum.
     Q("g_ecc", (s, dir) => {
-      // the aggregated nation graph is ≤ 25 nodes — the size-guarded
-      // local BFS (same values, spec'd equal to the distributed form)
+      // the aggregated nation graph is ≤ 25 nodes — the driver-local
+      // BFS tier (same values, spec'd equal to the distributed tier)
       // skips ~2 Spark jobs per BFS level
-      Centrality.eccentricityLocal(nationGraph(s, dir))
+      Centrality.eccentricity(nationGraph(s, dir))
         .select(bi(col("node")).as("node"), bi(col("eccentricity")).as("eccentricity"))
     }, Some(s"""
       WITH RECURSIVE $edgeSql,
@@ -297,9 +295,8 @@ object GraphQ {
     // graph.py:73-76) — min-label propagation in Spark, recursive
     // reachability CTE in the oracle.
     Q("g_components", (s, dir) => {
-      // size-guarded local union-find — see g_ecc; connectedComponents
-      // (min-label propagation) is the corpus-scale path
-      GraphOps.connectedComponentsLocal(nationGraph(s, dir))
+      // local union-find tier — see g_ecc
+      GraphOps.connectedComponents(nationGraph(s, dir))
         .select(bi(col("node")).as("node"), bi(col("component")).as("component"))
     }, Some(s"""
       WITH RECURSIVE $edgeSql,
@@ -314,7 +311,7 @@ object GraphQ {
     // Whole-graph one-row summary (graph_info graph.py:30-86): counts,
     // density, transitivity, average clustering, components.
     Q("g_info", (s, dir) => {
-      GraphOps.graphInfo(nationGraph(s, dir), smallGraph = true)
+      GraphOps.graphInfo(nationGraph(s, dir))
         .select(bi(col("nodes")).as("nodes"), bi(col("edges")).as("edges"),
           r6(col("density")).as("density"),
           r6(col("transitivity")).as("transitivity"),

@@ -401,18 +401,6 @@ object Similarity extends org.apache.spark.internal.Logging {
     rescorePairs(cands, v, idCol, threshold)
   }
 
-  /** Upper bound on the EXACT dot v·w of two int8-quantized vectors
-    * (`struct<q, s, l1>` per [[graft.functions.QuantKernel]]):
-    *
-    *   v·w ≤ s_a·s_b·(q_a·q_b) + (s_b/2)‖a‖₁ + (s_a/2)‖b‖₁ + n·s_a·s_b/4
-    *
-    * with the integer dot exact, kept in PRODUCT form (compare against
-    * threshold·‖a‖·‖b‖ — no division) and inflated 1e-9 relative —
-    * absolute in (|est|+slack), so a negative est inflates upward
-    * too — to dominate the handful of double roundings here.
-    * QuantPrefilterSpec hammers the ≥-exact-dot property on
-    * adversarial vectors.
-    */
   /** The shared (est, slack) pair BOTH bound directions are built
     * from — one definition, so the lb ≤ v·w ≤ ub sandwich cannot drift
     * asymmetric under a future edit to either formula.
@@ -437,6 +425,18 @@ object Similarity extends org.apache.spark.internal.Logging {
     */
   private[sim] val F32CosDrift = 2.5e-7
 
+  /** Upper bound on the EXACT dot v·w of two int8-quantized vectors
+    * (`struct<q, s, l1>` per [[graft.functions.QuantKernel]]):
+    *
+    *   v·w ≤ s_a·s_b·(q_a·q_b) + (s_b/2)‖a‖₁ + (s_a/2)‖b‖₁ + n·s_a·s_b/4
+    *
+    * with the integer dot exact, kept in PRODUCT form (compare against
+    * threshold·‖a‖·‖b‖ — no division) and inflated 1e-9 relative —
+    * absolute in (|est|+slack), so a negative est inflates upward
+    * too — to dominate the handful of double roundings here.
+    * QuantPrefilterSpec hammers the ≥-exact-dot property on
+    * adversarial vectors.
+    */
   private[sim] def quantUpper(qa: Column, qb: Column): Column = {
     val (est, slack) = estSlack(qa, qb)
     est + slack + (abs(est) + slack) * 1e-9

@@ -184,9 +184,9 @@ object CorpusPipeline {
     val drops = NearDup.dupGroups(pairs)
       .where(col("doc_id") =!= col("keep_id"))
       .select(col("doc_id").as(idCol))
-    // dupGroups consumed the pairs EAGERLY (its size-probe count) and
-    // its output is independent of them (driver rows below the local
-    // guard, per-round localCheckpoints above it), so the shingle cache
+    // dupGroups consumed the pairs EAGERLY (its tier count) and its
+    // output is independent of them (driver rows on its local tier,
+    // per-round localCheckpoints on the distributed one), so the shingle cache
     // is dead weight from here — release it instead of pinning one
     // shingle frame per clean() call for the session.
     releaseShingles()

@@ -191,53 +191,45 @@ object NearDup {
     * A≈B and B≈C put A,B,C in one group even if A,C never matched), each
     * doc mapped to its group's smallest id as the canonical keeper.
     * Returns (doc_id, keep_id, group_size); docs with no near-dup are
-    * absent (they keep themselves). Min-label propagation — distributed,
-    * rounds bounded by the largest group's diameter, which for dedup
-    * graphs is small (clusters are near-cliques).
+    * absent (they keep themselves). Above `maxLocalEdges`, min-label
+    * propagation — distributed, rounds bounded by the largest group's
+    * diameter, which for dedup graphs is small (clusters are
+    * near-cliques).
     */
   def dupGroups(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-                maxLocalPairs: Long = 100000L): DataFrame = {
+                maxLocalEdges: Long = 200000L): DataFrame = {
     // the verified pairs are the OUTPUT of the whole minhash pipeline and
     // feed every CC round (or the local collect) — persist them so the
     // shingle/signature/verify chain runs once, not once per consumer
     val p = pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nPairs = p.count() // materializes the persist; doubles as the size probe
     // dedup pair graphs are usually TINY relative to the corpus (the
-    // near-dup rate is per-mille at web scale): below the guard the
-    // driver-local union-find replaces the min-label iteration's ~2 Spark
-    // actions + localCheckpoint per diameter round (pure scheduler
-    // overhead on a ~100-row pair set). Above it, distributed CC stays
-    // the corpus-scale path.
-    if (nPairs <= maxLocalPairs) {
-      // local tier finishes LOCALLY: the union-find result is already on
-      // the driver, so the group-size count and keep-join are a hash map
-      // and a lookup — not two more Spark shuffles over a ~100-row frame
-      // (r10; was groupBy(component) + join on the toDF'd result)
-      // preGuarded: nPairs ≤ maxLocalPairs is established above and
-      // symmetrize emits ≤ 2·nPairs rows ≤ the maxEdges passed here, so
-      // the local tier's own count job is provably redundant (r17 —
-      // one fewer eager job per dupGroups call)
-      val comps = graft.graph.GraphOps
-        .connectedComponentsLocalPairs(p, maxEdges = 2 * maxLocalPairs + 16,
-          preGuarded = true)
-      p.unpersist(blocking = false)
-      val sizes = comps.groupBy(_._2).map { case (c, xs) => (c, xs.length.toLong) }
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      comps.toSeq.map { case (n, c) => (n, c, sizes(c)) }
-        .toDF("doc_id", "keep_id", "group_size")
-    } else {
-      val comps = graft.graph.GraphOps.connectedComponents(p)
-      // the distributed CC materializes eagerly (per-round localCheckpoint),
-      // so the returned frame no longer depends on the persisted pairs —
-      // release them instead of pinning one cached frame per call
-      p.unpersist(blocking = false)
+    // near-dup rate is per-mille at web scale): within `maxLocalEdges`
+    // the driver-local union-find replaces the min-label iteration's ~2
+    // Spark actions + localCheckpoint per diameter round. The tier
+    // decision's count materializes the persist.
+    val out = graft.graph.Centrality.localOrDistributed(p, maxLocalEdges, "doc_id", "keep_id") {
+      es =>
+        // the local tier finishes LOCALLY: the union-find result is
+        // already on the driver, so the group-size count and keep-join
+        // are a hash map and a lookup — not two more Spark shuffles over
+        // a ~100-row frame (r10)
+        val comps = graft.graph.GraphOps.components(es)
+        val sizes = comps.groupBy(_._2).map { case (c, xs) => (c, xs.length.toLong) }
+        pairs.sparkSession.createDataFrame(comps.toSeq.map { case (n, c) => (n, c, sizes(c)) })
+          .toDF("doc_id", "keep_id", "group_size")
+    } {
+      val comps = graft.graph.GraphOps.connectedComponents(p, maxLocalEdges = 0)
       val sizes = comps.groupBy("component").agg(count(lit(1)).as("group_size"))
       comps.join(sizes, "component")
         .select(col("node").as("doc_id"), col("component").as("keep_id"),
           col("group_size"))
     }
+    // both tiers read the pairs eagerly (the collect, or the per-round
+    // localCheckpoints), so the returned frame no longer depends on the
+    // persist — release it instead of pinning one cached frame per call
+    p.unpersist(blocking = false)
+    out
   }
 
   /** 64-bit SimHash over word tokens: sign-sum of per-token hash bits.

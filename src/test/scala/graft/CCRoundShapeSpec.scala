@@ -83,10 +83,12 @@ class CCRoundShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("shuffle tier equals broadcast tier exactly (forced via threshold -1)") {
     val e = spark.range(0, 3000)
       .select((col("id") % 211).as("src"), ((col("id") * 7) % 191 + 300).as("dst"))
-    val expect = GraphOps.connectedComponents(e)
+    // maxLocalEdges = 0: both runs take the distributed tier
+    val expect = GraphOps.connectedComponents(e, maxLocalEdges = 0)
       .as[(Long, Long)].collect().toMap
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val got = GraphOps.connectedComponents(e).as[(Long, Long)].collect().toMap
+      val got = GraphOps.connectedComponents(e, maxLocalEdges = 0)
+        .as[(Long, Long)].collect().toMap
       assert(got == expect, "shuffle-tier labels diverge from broadcast tier")
     }
   }

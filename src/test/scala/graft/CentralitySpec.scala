@@ -40,6 +40,8 @@ class CentralitySpec extends SparkSpec {
     val out = Centrality.closeness(edges).as[(Int, Double)].collect().toMap
     assert(cache.isEmpty, "closeness left a cache")
     g.foreach { case (n, v) => assert(math.abs(out(n) - v) < 1e-9, s"closeness($n)") }
+    assertTiersAgree(Centrality.closeness(edges), Centrality.closeness(edges, maxLocalEdges = 0))
+    assert(cache.isEmpty, "closeness' distributed tier left a cache")
   }
 
   test("betweenness matches networkx (normalized)") {
@@ -49,14 +51,13 @@ class CentralitySpec extends SparkSpec {
     val out = Centrality.betweenness(edges).as[(Int, Double)].collect().toMap
     assert(cache.isEmpty, "betweenness left a cache")
     g.foreach { case (n, v) => assert(math.abs(out(n) - v) < 1e-9, s"betweenness($n)") }
-    // the size-guarded local Brandes produces the same values
-    val loc = Centrality.betweennessLocal(edges)
-      .select(col("node").cast("int"), col("betweenness"))
-      .as[(Int, Double)].collect().toMap
-    g.foreach { case (n, v) => assert(math.abs(loc(n) - v) < 1e-9, s"local($n)") }
-    intercept[IllegalArgumentException] {
-      Centrality.betweennessLocal(edges, maxEdges = 3)
-    }
+    assertTiersAgree(Centrality.betweenness(edges),
+      Centrality.betweenness(edges, maxLocalEdges = 0))
+    assert(cache.isEmpty, "betweenness' distributed tier left a cache")
+    // 14 input edges: the local tier holds up to a bound of 2·14, and one
+    // below it the op falls back to the distributed tier
+    assertTiersAgree(Centrality.betweenness(edges, maxLocalEdges = 28),
+      Centrality.betweenness(edges, maxLocalEdges = 27))
   }
 
   test("eigenvector centrality matches networkx") {
@@ -94,6 +95,9 @@ class CentralitySpec extends SparkSpec {
     val out = Centrality.eccentricity(edges).as[(Int, Int)].collect().toMap
     assert(cache.isEmpty, "eccentricity left a cache")
     g.foreach { case (n, v) => assert(out(n) == v, s"ecc($n)") }
+    assertTiersAgree(Centrality.eccentricity(edges),
+      Centrality.eccentricity(edges, maxLocalEdges = 0))
+    assert(cache.isEmpty, "eccentricity's distributed tier left a cache")
     val dr = Centrality.diameterRadius(edges).as[(Int, Int)].head()
     assert(dr == ((4, 2)))
   }
@@ -112,6 +116,26 @@ class CentralitySpec extends SparkSpec {
     assert(math.abs(info._4 - 0.7272727272727273) < 1e-12, s"transitivity ${info._4}")
     assert(math.abs(info._5 - 0.5909090909090909) < 1e-12, s"avg_clustering ${info._5}")
     assert(info._6 == 2 && info._7 == 9, "components / largest")
+    assertTiersAgree(GraphOps.connectedComponents(e2),
+      GraphOps.connectedComponents(e2, maxLocalEdges = 0))
+    assertTiersAgree(GraphOps.graphInfo(e2), GraphOps.graphInfo(e2, maxLocalEdges = 0))
+  }
+
+  test("string ids run the distributed tier and match the integer graph") {
+    import graft.graph.GraphOps
+    // single-digit ids, so "n<i>" orders like i and the smallest-id
+    // component label maps over too
+    val named = edges.select(concat(lit("n"), col("src")).as("src"),
+      concat(lit("n"), col("dst")).as("dst"))
+    def relabel(df: org.apache.spark.sql.DataFrame, ids: String*) =
+      df.select(df.columns.map(c =>
+        if (ids.contains(c)) concat(lit("n"), col(c)).as(c) else col(c)): _*)
+    // the relabelled integer results run locally with string ids, so each
+    // check also pins the string graph's tier and its string id columns
+    assertTiersAgree(relabel(Centrality.closeness(edges), "node"), Centrality.closeness(named))
+    assertTiersAgree(relabel(GraphOps.connectedComponents(edges), "node", "component"),
+      GraphOps.connectedComponents(named))
+    assertTiersAgree(GraphOps.graphInfo(edges), GraphOps.graphInfo(named))
   }
 }
 
@@ -173,34 +197,15 @@ class CommunitySpec extends SparkSpec {
       .filter(e => e._1 != e._2)
     val tri = Seq((100, 101), (101, 102), (102, 100))
     val edges = (blob ++ tri).toDF("src", "dst")
-    def m(df: org.apache.spark.sql.DataFrame, v: String) =
-      df.select(col("node").cast("long"), col(v).cast("double"))
-        .as[(Long, Double)].collect().toMap
-    val cDist = m(Centrality.closeness(edges), "closeness")
-    val cLoc = m(Centrality.closenessLocal(edges), "closeness")
-    assert(cDist.keySet == cLoc.keySet)
-    cDist.foreach { case (k, v) => assert(math.abs(v - cLoc(k)) < 1e-12, s"node $k") }
-    val eDist = m(Centrality.eccentricity(edges), "eccentricity")
-    val eLoc = m(Centrality.eccentricityLocal(edges), "eccentricity")
-    assert(eDist == eLoc)
     import graft.graph.GraphOps
-    // the guard refuses oversized graphs, on every local tier
-    intercept[IllegalArgumentException] {
-      Centrality.closenessLocal(edges, maxEdges = 10)
-    }
-    intercept[IllegalArgumentException] {
-      Centrality.eccentricityLocal(edges, maxEdges = 10)
-    }
-    intercept[IllegalArgumentException] {
-      GraphOps.connectedComponentsLocal(edges, maxEdges = 10)
-    }
+    // a bound of 10 is below 2·|edges|: each op falls back to its
+    // distributed tier, with the local tier's values
+    assertTiersAgree(Centrality.closeness(edges), Centrality.closeness(edges, maxLocalEdges = 10))
+    assertTiersAgree(Centrality.eccentricity(edges),
+      Centrality.eccentricity(edges, maxLocalEdges = 10))
     // local union-find components equal the distributed min-label form
-    val ccDist = GraphOps.connectedComponents(edges)
-      .select(col("node").cast("long"), col("component").cast("long"))
-      .as[(Long, Long)].collect().toMap
-    val ccLoc = GraphOps.connectedComponentsLocal(edges)
-      .as[(Long, Long)].collect().toMap
-    assert(ccDist == ccLoc)
+    assertTiersAgree(GraphOps.connectedComponents(edges),
+      GraphOps.connectedComponents(edges, maxLocalEdges = 10))
   }
 
   test("hitsCounts: exact hub/auth path counts on a hand-computed triangle") {

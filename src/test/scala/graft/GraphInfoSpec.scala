@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.graph.GraphOps
 
-/** The size-guarded local graphInfo twin must equal the distributed
-  * form value-for-value (same contract as the CC local/distributed
+/** graphInfo's driver-local tier must equal its distributed tier
+  * value-for-value (same contract as the CC local/distributed
   * equality) — random graphs across densities, incl. disconnected and
   * triangle-free shapes.
   */
@@ -21,28 +21,20 @@ class GraphInfoSpec extends SparkSpec {
   test("local twin equals the distributed graphInfo on random graphs") {
     for ((seed, n, m) <- Seq((1, 12, 30), (2, 25, 40), (3, 8, 8), (4, 40, 20), (5, 60, 400))) {
       val edges = randomEdges(seed, n, m)
-      val local = GraphOps.graphInfoLocal(edges).collect().head
-      val dist = GraphOps.graphInfo(edges, smallGraph = false).collect().head
-      assert(local.getLong(0) == dist.getLong(0), s"nodes seed=$seed")
-      assert(local.getLong(1) == dist.getLong(1), s"edges seed=$seed")
-      assert(math.abs(local.getDouble(2) - dist.getDouble(2)) < 1e-12, s"density seed=$seed")
-      assert(math.abs(local.getDouble(3) - dist.getDouble(3)) < 1e-9, s"transitivity seed=$seed")
-      assert(math.abs(local.getDouble(4) - dist.getDouble(4)) < 1e-9, s"avg_clustering seed=$seed")
-      assert(local.getLong(5) == dist.getLong(5), s"components seed=$seed")
-      assert(local.getLong(6) == dist.getLong(6), s"largest seed=$seed")
+      assertTiersAgree(GraphOps.graphInfo(edges), GraphOps.graphInfo(edges, maxLocalEdges = 0))
     }
   }
 
   test("triangle-free and fully-connected edge cases") {
     // star: no triangles, transitivity 0, one component
     val star = (1L to 6L).map(i => (0L, i)).toDF("src", "dst")
-    val s = GraphOps.graphInfoLocal(star).collect().head
+    val s = GraphOps.graphInfo(star).collect().head
     assert(s.getLong(0) == 7 && s.getLong(1) == 6)
     assert(s.getDouble(3) == 0.0 && s.getLong(5) == 1 && s.getLong(6) == 7)
     // two disjoint triangles: clustering 1, transitivity 1, two components
     val tris = Seq((0L, 1L), (1L, 2L), (2L, 0L), (10L, 11L), (11L, 12L), (12L, 10L))
       .toDF("src", "dst")
-    val t = GraphOps.graphInfoLocal(tris).collect().head
+    val t = GraphOps.graphInfo(tris).collect().head
     assert(t.getLong(0) == 6 && t.getLong(1) == 6)
     assert(math.abs(t.getDouble(3) - 1.0) < 1e-12 && math.abs(t.getDouble(4) - 1.0) < 1e-12)
     assert(t.getLong(5) == 2 && t.getLong(6) == 3)
@@ -50,12 +42,7 @@ class GraphInfoSpec extends SparkSpec {
 
   test("empty edge set matches the distributed zero-row-aggregate summary") {
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
-    val l = GraphOps.graphInfoLocal(empty).collect().head
-    val d = GraphOps.graphInfo(empty, smallGraph = false).collect().head
-    for (i <- 0 until 7) {
-      assert(l.isNullAt(i) == d.isNullAt(i), s"field $i nullity: $l vs $d")
-      if (!l.isNullAt(i)) assert(l.get(i) == d.get(i), s"field $i: $l vs $d")
-    }
+    assertTiersAgree(GraphOps.graphInfo(empty), GraphOps.graphInfo(empty, maxLocalEdges = 0))
   }
 
   test("hub graph: degree-ordered triangle counting matches the distributed form") {
@@ -64,19 +51,11 @@ class GraphInfoSpec extends SparkSpec {
     val spokes = (1L to 200L).map(i => (0L, i))
     val ring = (1L until 200L).map(i => (i, i + 1)) :+ (200L, 1L)
     val edges = (spokes ++ ring).toDF("src", "dst")
-    val local = GraphOps.graphInfoLocal(edges).collect().head
-    val dist = GraphOps.graphInfo(edges, smallGraph = false).collect().head
-    for (i <- Seq(0, 1, 5, 6)) assert(local.getLong(i) == dist.getLong(i), s"field $i")
-    for (i <- Seq(2, 3, 4)) assert(math.abs(local.getDouble(i) - dist.getDouble(i)) < 1e-9, s"field $i")
-    // each ring edge closes exactly one triangle through the hub
-    assert(math.abs(local.getDouble(3) - dist.getDouble(3)) < 1e-9)
+    assertTiersAgree(GraphOps.graphInfo(edges), GraphOps.graphInfo(edges, maxLocalEdges = 0))
   }
 
-  test("guard refuses above maxEdges and the distributed path remains") {
+  test("above maxLocalEdges graphInfo runs the distributed tier") {
     val edges = randomEdges(9, 50, 60)
-    val e = intercept[IllegalArgumentException](
-      GraphOps.graphInfoLocal(edges, maxEdges = 10L))
-    assert(e.getMessage.contains("guard"))
-    assert(GraphOps.graphInfo(edges, smallGraph = false).count() == 1)
+    assertTiersAgree(GraphOps.graphInfo(edges), GraphOps.graphInfo(edges, maxLocalEdges = 10))
   }
 }

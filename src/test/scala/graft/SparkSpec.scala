@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,6 +24,29 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** The tier a size-tiered graph op took: a driver-local result is a
+    * local relation once optimized, a distributed one reads Spark data.
+    */
+  def tierOf(df: DataFrame): String =
+    if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) "local" else "distributed"
+
+  /** A size-tiered graph op on its local tier (`local`) and on its
+    * distributed tier (`dist`): the same column names and types, and the
+    * same rows, doubles within 1e-9 (the tiers sum in different orders).
+    */
+  def assertTiersAgree(local: DataFrame, dist: DataFrame): Unit = {
+    assert(tierOf(local) == "local" && tierOf(dist) == "distributed")
+    def fields(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    assert(fields(local) == fields(dist), "the schema depends on the tier")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString(","))
+    val (l, d) = (rows(local), rows(dist))
+    assert(l.length == d.length, s"${l.length} local rows vs ${d.length} distributed")
+    l.zip(d).foreach { case (a, b) => a.zip(b).foreach {
+      case (x: Double, y: Double) => assert(math.abs(x - y) < 1e-9, s"$a vs $b")
+      case (x, y) => assert(x == y, s"$a vs $b")
+    } }
   }
 }
 

@@ -77,6 +77,8 @@ class TextOpsSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSet
     assert(out == Set((2L, 2L, 3L), (5L, 2L, 3L), (9L, 2L, 3L),
       (7L, 7L, 2L), (8L, 7L, 2L)))
+    // the distributed min-label tier: same rows and schema
+    assertTiersAgree(NearDup.dupGroups(pairs), NearDup.dupGroups(pairs, maxLocalEdges = 0))
   }
 
   test("bpeish token count: letters, digits, punctuation") {
