@@ -146,8 +146,10 @@ object GraphOps {
   /** Connected components of an undirected graph by iterated min-label
     * propagation: every node repeatedly adopts the smallest component id
     * in its closed neighborhood until a fixed point (≤ component-diameter
-    * rounds, at most `maxIters`). Deterministic; returns (node, component)
-    * with component = the smallest node id in the component.
+    * + 1 rounds; labels only fall, so it always ends). Both tiers run to
+    * convergence, so they return the same labels on any graph.
+    * Deterministic; returns (node, component) with component = the
+    * smallest node id in the component.
     *
     * Each round is one join + one aggregation; the iterate is eagerly
     * localCheckpoint'ed (referenced twice: by the neighbor-min join and
@@ -158,8 +160,7 @@ object GraphOps {
     * ~2 Spark jobs per diameter step — pure scheduler overhead at 25
     * nodes.
     */
-  def connectedComponents(edges: DataFrame, maxIters: Int = 50,
-                          maxLocalEdges: Long = 200000L): DataFrame =
+  def connectedComponents(edges: DataFrame, maxLocalEdges: Long = 200000L): DataFrame =
     Centrality.localOrDistributed(edges, maxLocalEdges, "node", "component") { es =>
       edges.sparkSession.createDataFrame(components(es).toSeq).toDF("node", "component")
     } {
@@ -170,9 +171,7 @@ object GraphOps {
       var labels = und.select(col("src").as("node")).distinct()
         .withColumn("component", col("node")).localCheckpoint()
       var changed = true
-      var it = 0
-      while (changed && it < maxIters) {
-        it += 1
+      while (changed) {
         val next = ccRound(und, labels, hinted).localCheckpoint()
         changed = !next.as("a").join(hinted(labels.as("b")), "node")
           .where(col("a.component") =!= col("b.component")).isEmpty

@@ -121,6 +121,16 @@ class CentralitySpec extends SparkSpec {
     assertTiersAgree(GraphOps.graphInfo(e2), GraphOps.graphInfo(e2, maxLocalEdges = 0))
   }
 
+  test("connectedComponents converges on both tiers on a path longer than 50 rounds") {
+    import graft.graph.GraphOps
+    // diameter 60: min-label propagation needs 60 rounds to carry label 0
+    // to node 60, past the 50-round cap the distributed loop once had
+    val path = (0 until 60).map(i => (i, i + 1)).toDF("src", "dst")
+    val local = GraphOps.connectedComponents(path)
+    assert(local.as[(Int, Int)].collect().toSet == (0 to 60).map((_, 0)).toSet)
+    assertTiersAgree(local, GraphOps.connectedComponents(path, maxLocalEdges = 0))
+  }
+
   test("string ids run the distributed tier and match the integer graph") {
     import graft.graph.GraphOps
     // single-digit ids, so "n<i>" orders like i and the smallest-id
@@ -200,7 +210,8 @@ class CommunitySpec extends SparkSpec {
     import graft.graph.GraphOps
     // a bound of 10 is below 2·|edges|: each op falls back to its
     // distributed tier, with the local tier's values
-    assertTiersAgree(Centrality.closeness(edges), Centrality.closeness(edges, maxLocalEdges = 10))
+    assertTiersAgree(Centrality.closeness(edges), Centrality.closeness(edges, maxLocalEdges = 10),
+      tol = Map("closeness" -> 1e-12))
     assertTiersAgree(Centrality.eccentricity(edges),
       Centrality.eccentricity(edges, maxLocalEdges = 10))
     // local union-find components equal the distributed min-label form
