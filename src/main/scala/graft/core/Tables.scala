@@ -1,5 +1,6 @@
 package graft.core
 
+import graft.streaming.LocalCheckpointFiles
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -43,7 +44,8 @@ object Tables {
     * query is planned on it. Idempotent. Also installs the native as-of
     * join's planner strategy ([[graft.plans.AsOfStrategy]]), after any
     * strategies the session already has, so building a query never
-    * writes session state.
+    * writes session state, and the checkpoint file manager of every
+    * streaming query ([[graft.streaming.LocalCheckpointFiles]]).
     */
   def tune(spark: SparkSession): SparkSession = {
     val strategies = spark.experimental.extraStrategies
@@ -59,6 +61,7 @@ object Tables {
     // calendars, breakpoints) are small even at 100 TB fact scale.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set(LocalCheckpointFiles.confKey, classOf[LocalCheckpointFiles].getName)
     spark
   }
 

@@ -56,15 +56,6 @@ object EventStreams {
       .select(col(keyCol), col("session_window.start").as("s_start"),
         col("session_window.end").as("s_end"), col("n"))
 
-  /** Per-key running cumulative sum + drawdown over an unbounded stream
-    * via `flatMapGroupsWithState` — the W3/W4 (cumsum / running-max
-    * drawdown) STREAMING twins. Windows over unbounded history are not
-    * expressible with streaming window aggregates; the (cum, peak) pair
-    * is exactly the custom state SURVEY §2.8 calls for. Within a
-    * micro-batch each group's rows process in event-time order; state
-    * carries across batches. Works identically on a batch Dataset
-    * (flatMapGroupsWithState on a batch source sees one "batch").
-    */
   /** STREAMING backward as-of: a union of reference updates (side "q",
     * e.g. quotes) and observations (side "t", e.g. trades) keyed by
     * symbol; per micro-batch the group's rows process in (ts, side)
@@ -194,6 +185,15 @@ object EventStreams {
     intervalJoin(left.withWatermark(leftTs, lateness),
       right.withWatermark(rightTs, lateness), key, leftTs, rightTs, before)
 
+  /** Per-key running cumulative sum + drawdown over an unbounded stream
+    * via `flatMapGroupsWithState` — the W3/W4 (cumsum / running-max
+    * drawdown) STREAMING twins. Windows over unbounded history are not
+    * expressible with streaming window aggregates; the (cum, peak) pair
+    * is exactly the custom state SURVEY §2.8 calls for. Within a
+    * micro-batch each group's rows process in event-time order; state
+    * carries across batches. Works identically on a batch Dataset
+    * (flatMapGroupsWithState on a batch source sees one "batch").
+    */
   def runningDrawdown(events: Dataset[KeyedValue]): Dataset[RunningOut] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.key)

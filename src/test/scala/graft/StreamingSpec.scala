@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -292,6 +293,106 @@ class StreamingSpec extends SparkSpec {
     val viaState = EventStreams.runningDrawdown(staticEvents.toDS())
       .collect().map(r => (r.key, r.ts.getTime - t0) -> (r.cum, r.drawdown)).toMap
     assert(viaState == out)
+  }
+
+  test("checkpoints restore across a restart under either checkpoint file manager") {
+    import graft.streaming.{EventStreams, KeyedValue, LocalCheckpointFiles, RunningOut}
+    import org.apache.spark.sql.{DataFrame, Dataset, Row}
+    import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
+    import scala.jdk.CollectionConverters._
+    implicit val sqlCtx = spark.sqlContext
+    val t0 = 1700000000000L
+    val rows = (0 until 240).map(i =>
+      KeyedValue(s"k${i % 4}", new Timestamp(t0 + i * 37000L), (i % 7) - 3.0))
+    val (h1, h2) = rows.splitAt(150)
+    // far ahead of h2: moves the watermark past h2's windows for the last batch
+    val sentinel = KeyedValue("zz", new Timestamp(t0 + 100 * 3600000L), 0.0)
+    val fed = rows :+ sentinel
+    val sparkManager =
+      LocalCheckpointFiles.confKey -> classOf[FileContextBasedCheckpointFileManager].getName
+
+    // no watermark-only batches, so a stop never races one
+    withConf("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      for (sparkFirst <- Seq(true, false)) {
+        val ck = java.nio.file.Files.createTempDirectory("ckpt-restart").toString
+        val byUser = MemoryStream[KeyedValue]
+        val byType = MemoryStream[KeyedValue]
+        val drawdown = new java.util.concurrent.ConcurrentLinkedQueue[RunningOut]
+        val tumbling = new java.util.concurrent.ConcurrentLinkedQueue[Row]
+        val toDrawdown: (Dataset[RunningOut], Long) => Unit = (b, _) => b.collect().foreach(drawdown.add)
+        val toTumbling: (DataFrame, Long) => Unit = (b, _) => b.collect().foreach(tumbling.add)
+
+        /** Starts both queries on their checkpoints, feeds each batch and
+          * stops them; returns the tumbling query's last watermark.
+          */
+        def half(underSpark: Boolean, batches: Seq[KeyedValue]*): String = {
+          def run(): String = {
+            val qs = Seq(
+              EventStreams.runningDrawdown(byUser.toDS()).writeStream.foreachBatch(toDrawdown)
+                .option("checkpointLocation", s"$ck/drawdown").start(),
+              EventStreams.tumblingAggStream(byType.toDF(), "key", "ts", "value", "5 minutes",
+                  "10 minutes")
+                .writeStream.outputMode("append").foreachBatch(toTumbling)
+                .option("checkpointLocation", s"$ck/tumbling").start())
+            try batches.foreach { b =>
+              byUser.addData(b)
+              byType.addData(b)
+              qs.foreach(_.processAllAvailable())
+            } finally qs.foreach(_.stop())
+            qs(1).lastProgress.eventTime.get("watermark")
+          }
+          if (underSpark) withConf(sparkManager)(run()) else run()
+        }
+        half(sparkFirst, h1)
+        val watermark = half(!sparkFirst, h2, Seq(sentinel))
+        def crc(q: String, batch: Int) = new java.io.File(s"$ck/$q/commits/.$batch.crc").exists
+        val crcs = Seq("drawdown", "tumbling").map(q => q -> (crc(q, 0), crc(q, 1)))
+        JavaUtils.deleteRecursively(new java.io.File(ck))
+
+        val ddBatch = EventStreams.runningDrawdown(fed.toDS()).collect()
+        assert(drawdown.asScala.toSeq.sortBy(r => (r.key, r.ts.getTime)) ==
+          ddBatch.toSeq.sortBy(r => (r.key, r.ts.getTime)), s"sparkFirst=$sparkFirst")
+        val wm = Timestamp.from(java.time.Instant.parse(watermark))
+        val aggBatch = EventStreams.tumblingAgg(fed.toDF(), "key", "ts", "value", "5 minutes")
+          .where(col("w_end") <= lit(wm)).collect()
+        assert(tumbling.asScala.toSeq.map(_.toString).sorted == aggBatch.toSeq.map(_.toString).sorted,
+          s"sparkFirst=$sparkFirst")
+        // a window holding rows of both halves: its first half came back from the state store
+        assert(aggBatch.exists(r => r.getAs[Timestamp]("w_start").getTime <= h1.last.ts.getTime &&
+          h2.head.ts.getTime < r.getAs[Timestamp]("w_end").getTime))
+        // each half wrote through its own manager: only Spark's leaves .crc sidecars
+        for ((q, (first, second)) <- crcs)
+          assert(first == sparkFirst && second == !sparkFirst, s"$q sparkFirst=$sparkFirst")
+      }
+    }
+  }
+
+  test("a tuned session's stateful query writes its checkpoint with no .crc sidecar") {
+    import graft.streaming.{EventStreams, KeyedValue}
+    import scala.jdk.CollectionConverters._
+    implicit val sqlCtx = spark.sqlContext
+    val ck = java.nio.file.Files.createTempDirectory("ckpt-nocrc")
+    val mem = MemoryStream[KeyedValue]
+    val q = EventStreams.runningDrawdown(mem.toDS()).writeStream
+      .format("memory").queryName("dd_nocrc").outputMode("append")
+      .option("checkpointLocation", ck.toString).start()
+    for (b <- 0 until 3) {
+      mem.addData(KeyedValue(s"k$b", new Timestamp(1700000000000L + b * 1000L), 1.0))
+      q.processAllAvailable()
+    }
+    q.stop()
+    val files = java.nio.file.Files.walk(ck).iterator.asScala
+      .filter(java.nio.file.Files.isRegularFile(_)).map(ck.relativize(_).toString).toList
+    JavaUtils.deleteRecursively(ck.toFile)
+    // the checkpoint is all there: offsets, commits and state-store deltas of 3 batches
+    assert(Seq("offsets/2", "commits/2").forall(files.contains), files)
+    assert(files.count(_.endsWith("/3.delta")) == spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      files)
+    // Hadoop's local writer (which forks chmod and readlink per file)
+    // leaves a hidden `.<name>.crc` sidecar per file; Spark's own state
+    // checksum files are `<name>.crc`
+    assert(files.exists(_.endsWith("/3.delta.crc")), files)
+    assert(!files.exists(f => f.split('/').last.matches("\\..*\\.crc")), files)
   }
 
   test("streaming LSH near-dup candidates equal batch candidate pairs across batches") {

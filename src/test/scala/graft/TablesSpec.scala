@@ -84,4 +84,12 @@ class TablesSpec extends SparkSpec {
     }
     assert(jobs == 0)
   }
+
+  test("tune installs the as-of strategy and the checkpoint file manager once") {
+    Tables.tune(spark)
+    Tables.tune(spark)
+    assert(spark.experimental.extraStrategies.count(_ == graft.plans.AsOfStrategy) == 1)
+    assert(spark.conf.get(graft.streaming.LocalCheckpointFiles.confKey) ==
+      classOf[graft.streaming.LocalCheckpointFiles].getName)
+  }
 }
