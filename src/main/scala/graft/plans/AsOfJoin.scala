@@ -1,46 +1,51 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeSet, GenericInternalRow, JoinedRow, NullsFirst, NullsLast, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.graftx.Bridge
 
 /** Native sort-merge as-of join (SURVEY.md §4.2.1 — the declared 100 TB
   * endgame for the J2/J3/W8 family): a custom logical node, planner
-  * strategy, and physical operator.
+  * strategy, and physical operator — the one as-of execution path, built
+  * by [[graft.ops.AsOf]] for every call.
   *
   * Physical shape: both sides hash-clustered on the join keys and sorted
-  * by (keys, time) — EnsureRequirements inserts exactly one exchange +
-  * sort per side — then each partition pair is a LINEAR single-pass
-  * merge: the right cursor trails the left one, carrying the latest
-  * qualifying value row. No candidate-pair expansion (vs the decorrelated
-  * range-join form), no window materialization of the union frame (vs the
-  * union-merge form); memory per task is O(1) beyond the sorters.
+  * by (keys, time), the right side then by its optional `tieBreak` —
+  * EnsureRequirements inserts exactly one exchange + sort per side — then
+  * each partition pair is a LINEAR single-pass merge. Backward, the right
+  * cursor trails the left one, carrying the latest qualifying value row;
+  * forward, it drops the right rows before the left row and reads the head
+  * without consuming it. One value row is carried whole, so every
+  * attribute comes from the same prevailing row even when that row holds
+  * nulls. No candidate-pair expansion (vs the decorrelated range-join
+  * form), no materialization of a unioned frame (vs the union-merge forms
+  * kept as spec references); memory per task is O(1) beyond the sorters.
+  *
+  * Right-side ties at one (key, time) resolve by `tieBreak`: backward keeps
+  * the greatest (nulls lowest), forward the least (nulls highest), the
+  * orders the right child is sorted in. Without it, any tied row may win.
   *
   * Installed through `spark.experimental.extraStrategies` by
   * [[graft.core.Tables.tune]], so only a tuned session can plan it (an
-  * untuned one finds no plan for `AsOfJoinPlan`). It is the path
-  * [[graft.ops.AsOf.joinBackward]] takes whenever no `tieBreak` is
-  * given, and is differential-tested against the union-merge form
-  * `AsOf.unionMergeBackward` (AsOfStrategySpec, AsOfPropertySpec).
+  * untuned one finds no plan for `AsOfJoinPlan`).
   */
 case class AsOfJoinPlan(left: LogicalPlan, right: LogicalPlan,
                         leftKeys: Seq[Attribute], rightKeys: Seq[Attribute],
                         leftTime: Attribute, rightTime: Attribute,
-                        rightValues: Seq[Attribute], allowExact: Boolean)
+                        rightValues: Seq[Attribute], allowExact: Boolean,
+                        tieBreak: Option[Attribute], forward: Boolean)
     extends BinaryNode {
   override def output: Seq[Attribute] =
     left.output ++ rightValues.map(_.withNullability(true))
   // every left column passes through to the output — declare them all
   // referenced so ColumnPruning cannot cut them; the right side prunes
-  // down to keys + time + carried values (desirable)
-  override def references: org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(
-      left.output ++ rightKeys ++ Seq(rightTime) ++ rightValues ++ leftKeys :+ leftTime)
+  // down to keys + time + carried values + tie-break (desirable)
+  override def references: AttributeSet =
+    AttributeSet(left.output ++ rightKeys ++ Seq(rightTime) ++ rightValues ++
+      tieBreak ++ leftKeys :+ leftTime)
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): AsOfJoinPlan =
     copy(left = newLeft, right = newRight)
@@ -48,8 +53,8 @@ case class AsOfJoinPlan(left: LogicalPlan, right: LogicalPlan,
 
 object AsOfStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case AsOfJoinPlan(l, r, lk, rk, lt, rt, rv, ae) =>
-      SortMergeAsOfExec(lk, rk, lt, rt, rv, ae, planLater(l), planLater(r)) :: Nil
+    case AsOfJoinPlan(l, r, lk, rk, lt, rt, rv, ae, tb, fw) =>
+      SortMergeAsOfExec(lk, rk, lt, rt, rv, ae, tb, fw, planLater(l), planLater(r)) :: Nil
     case _ => Nil
   }
 }
@@ -57,6 +62,7 @@ object AsOfStrategy extends SparkStrategy {
 case class SortMergeAsOfExec(leftKeys: Seq[Attribute], rightKeys: Seq[Attribute],
                              leftTime: Attribute, rightTime: Attribute,
                              rightValues: Seq[Attribute], allowExact: Boolean,
+                             tieBreak: Option[Attribute], forward: Boolean,
                              left: SparkPlan, right: SparkPlan)
     extends SparkPlan with BinaryExecNode {
 
@@ -78,16 +84,22 @@ case class SortMergeAsOfExec(leftKeys: Seq[Attribute], rightKeys: Seq[Attribute]
   override def requiredChildDistribution: Seq[Distribution] =
     Seq(ClusteredDistribution(leftKeys, requireAllClusterKeys = true),
       ClusteredDistribution(rightKeys, requireAllClusterKeys = true))
+  // within a (key, time) tie the merge meets the winning right row last
+  // going backward and first going forward
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
     (leftKeys :+ leftTime).map(a => SortOrder(a, Ascending)),
-    (rightKeys :+ rightTime).map(a => SortOrder(a, Ascending)))
+    (rightKeys :+ rightTime).map(a => SortOrder(a, Ascending)) ++ tieBreak.map(a =>
+      SortOrder(a, Ascending, if (forward) NullsLast else NullsFirst, Seq.empty)))
   override def outputOrdering: Seq[SortOrder] =
     (leftKeys :+ leftTime).map(a => SortOrder(a, Ascending))
 
   protected override def doExecute(): RDD[InternalRow] = {
     val lOut = left.output
     val rOut = right.output
-    val exact = allowExact
+    // a right row at the left row's time is passed over backward when it
+    // may match (allowExact) and forward when it may not
+    val passTies = allowExact != forward
+    val fwd = forward
     val lKeysB = leftKeys
     val rKeysB = rightKeys
     val lTimeB = leftTime
@@ -126,6 +138,7 @@ case class SortMergeAsOfExec(leftKeys: Seq[Attribute], rightKeys: Seq[Attribute]
         } else hasHead = false
       pull()
 
+      // backward: the last right row passed over; forward: the head
       var curKey: UnsafeRow = null
       var curVal: UnsafeRow = null
       lIter.map { l =>
@@ -135,12 +148,16 @@ case class SortMergeAsOfExec(leftKeys: Seq[Attribute], rightKeys: Seq[Attribute]
           val kc = keyOrd.compare(headKey, lk)
           kc < 0 || (kc == 0 && {
             val tc = timeOrd.compare(headTime, lt)
-            tc < 0 || (exact && tc == 0)
+            tc < 0 || (passTies && tc == 0)
           })
         }) {
           curKey = headKey
           curVal = headVal
           pull()
+        }
+        if (fwd) {
+          curKey = if (hasHead) headKey else null
+          curVal = headVal
         }
         val matched = curKey != null && keyOrd.compare(curKey, lk) == 0
         outProj(joined(l, if (matched) curVal else nullVals))
@@ -151,28 +168,4 @@ case class SortMergeAsOfExec(leftKeys: Seq[Attribute], rightKeys: Seq[Attribute]
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): SortMergeAsOfExec =
     copy(left = newLeft, right = newRight)
-}
-
-object AsOfJoin {
-
-  /** Backward as-of join through the native operator: left columns plus
-    * `valueCols` from the latest right row with rightTime ≤ leftTime
-    * (strict < when `allowExact` is false), matched on `keys`.
-    * `right` must not share value-column names with `left`.
-    */
-  def joinBackward(left: DataFrame, right: DataFrame, keys: Seq[String],
-                   timeCol: String, valueCols: Seq[String],
-                   allowExact: Boolean = true): DataFrame = {
-    val spark = left.sparkSession
-    val lPlan = Bridge.analyzed(left)
-    val rPlan = Bridge.analyzed(right)
-    def attr(p: LogicalPlan, n: String): Attribute =
-      p.output.find(_.name == n).getOrElse(
-        throw new IllegalArgumentException(s"column $n not found"))
-    Bridge.ofRows(spark, AsOfJoinPlan(
-      lPlan, rPlan,
-      keys.map(attr(lPlan, _)), keys.map(attr(rPlan, _)),
-      attr(lPlan, timeCol), attr(rPlan, timeCol),
-      valueCols.map(attr(rPlan, _)), allowExact))
-  }
 }

@@ -13,7 +13,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * the dominant repeated cost (shuffling the fact table per query) into
   * a one-time write-layout decision. The same layout serves the as-of
   * family: both inputs of [[graft.ops.AsOf.joinBackward]] bucketed by
-  * the entity key co-partition the union-merge.
+  * the entity key co-partition the sort-merge as-of operator (no
+  * exchange, only a per-bucket sort).
   *
   * Spark bucketing rides the session catalog (`saveAsTable` with an
   * explicit `path`), so buckets survive restarts and register with any

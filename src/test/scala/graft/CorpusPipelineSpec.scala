@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.functions._
 import graft.ops.Dedup
 import graft.text.{CorpusPipeline, Decontaminate, NearDup, TextOps}
@@ -32,9 +33,12 @@ class CorpusPipelineSpec extends SparkSpec {
   // parquet-backed (not Seq.toDF): ConvertToLocalRelation would evaluate
   // a LocalRelation pipeline at OPTIMIZATION time, leaving no physical
   // plan to assert on — parquet inputs give the real scan → kernel →
-  // gate plan a deployment sees
+  // gate plan a deployment sees. The frames read lazily across tests, so
+  // their files live until the suite ends.
+  private val dir = java.nio.file.Files.createTempDirectory("pipe")
+  override def afterAll(): Unit = JavaUtils.deleteRecursively(dir.toFile)
+
   private lazy val corpus = {
-    val dir = java.nio.file.Files.createTempDirectory("pipe").toString
     Seq(
       // 1, 2: exact dups AFTER redaction (differ only in the email)
       (1L, base1 + "contact alice@example.com for details"),
@@ -56,7 +60,6 @@ class CorpusPipelineSpec extends SparkSpec {
   }
 
   private lazy val benchmark = {
-    val dir = java.nio.file.Files.createTempDirectory("pipe").toString
     Seq(
       "question: what is the capital city of france paris obviously answer",
       "unrelated benchmark prompt about chemistry and physics")

@@ -156,28 +156,30 @@ class LineDedupSpec extends SparkSpec {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
-    val dir = java.nio.file.Files.createTempDirectory("linededup").toString
-    docs.write.mode("overwrite").parquet(s"$dir/docs")
-    val corpus = spark.read.parquet(s"$dir/docs")
-    val out = LineDedup.dedupLines(corpus, "doc_id", "text")
-    // the patch join's broadcast is an AQE runtime decision (the rebuilt
-    // side has no pre-execution stats), so execute first and read the
-    // FINAL adaptive plan
-    out.collect(): Unit
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan.collect { case n => n }
-      case other => other.collect { case n => n }
+    withTempDir("linededup") { d =>
+      val dir = d.toString
+      docs.write.mode("overwrite").parquet(s"$dir/docs")
+      val corpus = spark.read.parquet(s"$dir/docs")
+      val out = LineDedup.dedupLines(corpus, "doc_id", "text")
+      // the patch join's broadcast is an AQE runtime decision (the rebuilt
+      // side has no pre-execution stats), so execute first and read the
+      // FINAL adaptive plan
+      out.collect(): Unit
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan.collect { case n => n }
+        case other => other.collect { case n => n }
+      }
+      val all = nodes(out.queryExecution.executedPlan)
+      assert(!all.exists(_.isInstanceOf[CartesianProductExec]))
+      assert(!all.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]))
+      // the full document text crosses the wire only inside the affected-doc
+      // rebuild (as exploded lines); no exchange carries the corpus text col
+      val textShuffles = all.collect {
+        case s: ShuffleExchangeExec if s.child.output.exists(_.name == "text") => s
+      }
+      assert(textShuffles.isEmpty,
+        s"corpus text column crossed an exchange:\n${textShuffles.mkString("\n")}")
     }
-    val all = nodes(out.queryExecution.executedPlan)
-    assert(!all.exists(_.isInstanceOf[CartesianProductExec]))
-    assert(!all.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]))
-    // the full document text crosses the wire only inside the affected-doc
-    // rebuild (as exploded lines); no exchange carries the corpus text col
-    val textShuffles = all.collect {
-      case s: ShuffleExchangeExec if s.child.output.exists(_.name == "text") => s
-    }
-    assert(textShuffles.isEmpty,
-      s"corpus text column crossed an exchange:\n${textShuffles.mkString("\n")}")
     spark.sharedState.cacheManager.clearCache()
   }
 }

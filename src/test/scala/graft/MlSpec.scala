@@ -59,31 +59,32 @@ class IngestSpec extends SparkSpec {
   import spark.implicits._
 
   test("CSV ingest coerces per declared schema with reference rules") {
-    val dir = java.nio.file.Files.createTempDirectory("ingest").toFile
-    val f = new java.io.File(dir, "t.csv")
-    val pw = new java.io.PrintWriter(f)
-    pw.println("PERMNO ,Ret,Shrout,Name")
-    pw.println("1,0.05,100,acme corp")
-    pw.println("2,n/a,,widget 12-34 inc")
-    pw.println("2,0.07,50,widget two")  // dup pk: keep last by columns
-    pw.close()
-    val schema = StructType(Seq(
-      StructField("permno", IntegerType), StructField("ret", DoubleType),
-      StructField("shrout", LongType), StructField("name", StringType)))
-    val out = Ingest.readCsv(spark, f.getAbsolutePath, schema, pk = Seq("permno"))
-      .as[(Int, Option[Double], Long, String)].collect()
-      .map(r => r._1 -> r).toMap
-    assert(out(1)._2.contains(0.05) && out(1)._3 == 100L)
-    val r2 = out(2)
-    assert(r2._3 == 50L || r2._3 == 0L)        // one of the dups survived
-    assert(out.size == 2)                      // pk dedup
-    // float coercion: 'n/a' -> null on whichever row shows it
-    val all = Ingest.readCsv(spark, f.getAbsolutePath, schema)
-      .where(col("permno") === 2)
-    assert(all.where(col("ret").isNull).count() == 1)
-    // CRSP digit-dash rule
-    val names = all.select("name").as[String].collect().toSet
-    assert(names.contains("widget 1234 inc"))
+    withTempDir("ingest") { dir =>
+      val f = dir.resolve("t.csv").toFile
+      val pw = new java.io.PrintWriter(f)
+      pw.println("PERMNO ,Ret,Shrout,Name")
+      pw.println("1,0.05,100,acme corp")
+      pw.println("2,n/a,,widget 12-34 inc")
+      pw.println("2,0.07,50,widget two")  // dup pk: keep last by columns
+      pw.close()
+      val schema = StructType(Seq(
+        StructField("permno", IntegerType), StructField("ret", DoubleType),
+        StructField("shrout", LongType), StructField("name", StringType)))
+      val out = Ingest.readCsv(spark, f.getAbsolutePath, schema, pk = Seq("permno"))
+        .as[(Int, Option[Double], Long, String)].collect()
+        .map(r => r._1 -> r).toMap
+      assert(out(1)._2.contains(0.05) && out(1)._3 == 100L)
+      val r2 = out(2)
+      assert(r2._3 == 50L || r2._3 == 0L)        // one of the dups survived
+      assert(out.size == 2)                      // pk dedup
+      // float coercion: 'n/a' -> null on whichever row shows it
+      val all = Ingest.readCsv(spark, f.getAbsolutePath, schema)
+        .where(col("permno") === 2)
+      assert(all.where(col("ret").isNull).count() == 1)
+      // CRSP digit-dash rule
+      val names = all.select("name").as[String].collect().toSet
+      assert(names.contains("widget 1234 inc"))
+    }
   }
 
   test("screens drop and keep by value sets") {
@@ -272,12 +273,13 @@ class SplitsSpec extends SparkSpec {
   }
 
   test("per-group sampling plan: bounded aggregate + broadcast semi join, no window sort") {
-    val dir = java.nio.file.Files.createTempDirectory("wsample").toString
-    sourced.write.mode("overwrite").parquet(s"$dir/docs")
-    val corpus = spark.read.parquet(s"$dir/docs")
-    val out = Splits.sampleWeightedPerGroup(corpus, "id", "w", "src", 10)
-    out.collect(): Unit // AQE decides the semi-join strategy at runtime
-    val plan = out.queryExecution.executedPlan.toString
+    val plan = withTempDir("wsample") { dir =>
+      sourced.write.mode("overwrite").parquet(s"$dir/docs")
+      val corpus = spark.read.parquet(s"$dir/docs")
+      val out = Splits.sampleWeightedPerGroup(corpus, "id", "w", "src", 10)
+      out.collect(): Unit // AQE decides the semi-join strategy at runtime
+      out.queryExecution.executedPlan.toString
+    }
     assert(plan.contains("graft_topk_neighbors"), s"expected bounded top-k aggregate:\n$plan")
     assert(!plan.contains("Window"), s"per-group sampling must not sort via a window:\n$plan")
     assert(plan.contains("BroadcastHashJoin"), s"winner semi join should broadcast:\n$plan")

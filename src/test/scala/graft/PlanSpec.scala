@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import graft.plans.SortMergeAsOfExec
 import graft.queries.Catalog
 
 /** Physical-plan discipline checks: predicates reach the parquet scan,
@@ -7,7 +11,7 @@ import graft.queries.Catalog
   * nested-loop join (SURVEY.md §4 — these are the properties that decide
   * whether the same plan survives a 100 TB scale-up).
   */
-class PlanSpec extends SparkSpec {
+class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -25,9 +29,12 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"), p)
   }
 
-  test("j2_asof plans sort-merge over the union, never a nested loop") {
-    val p = plan("j2_asof")
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
+  test("j2_asof plans the sort-merge as-of operator, never a nested loop") {
+    val p = Catalog.queries("j2_asof")(spark, dir).queryExecution.executedPlan
+    assert(collect(p) { case m: SortMergeAsOfExec => m }.size == 1, p.treeString)
+    assert(collect(p) {
+      case j @ (_: BroadcastNestedLoopJoinExec | _: CartesianProductExec) => j
+    }.isEmpty, p.treeString)
   }
 
   test("j6_range binned interval join is a real equi-join") {
@@ -71,15 +78,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("t_jaccard's adaptive final plan reuses the shingle exchange") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    val helper = new AdaptiveSparkPlanHelper {}
     // the shingle fold is not persisted: exchange reuse is what runs it
     // once for the sizes and both sides of the self-join
     def reused(): Int = {
       val df = Catalog.queries("t_jaccard")(spark, dir)
       df.collect() // runs df's own QueryExecution, so its final plan is set
-      helper.collectWithSubqueries(df.queryExecution.executedPlan) {
+      collectWithSubqueries(df.queryExecution.executedPlan) {
         case r: ReusedExchangeExec => r
       }.size
     }
@@ -98,53 +103,58 @@ class PlanSpec extends SparkSpec {
     import graft.sources.Bucketing
     import graft.ops.AsOf
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("asofbuckets").toString
-    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val left = (0 until 2000).map(i => (i % 50, i / 50 * 10, i.toDouble))
-        .toDF("k", "t", "x")
-      val right = (0 until 1000).map(i => (i % 50, i / 50 * 23, i * 1.5))
-        .toDF("k", "t", "v")
-      Bucketing.writeBucketed(left, "asof_l", s"$dir/l", Seq("k"), 8)
-      Bucketing.writeBucketed(right, "asof_r", s"$dir/r", Seq("k"), 8)
-      val j = AsOf.joinBackward(Bucketing.table(spark, "asof_l"),
-        Bucketing.table(spark, "asof_r"), Seq("k"), "t", Seq("v"),
-        allowExact = true)
-      val p = j.queryExecution.executedPlan.toString
-      assert(p.contains("SortMergeAsOf"), p.take(800)) // native operator engaged
-      assert(!p.contains("Exchange"), p.take(2000)) // co-located: zero shuffle
-      // values still correct vs the union-merge library form
-      val lib = AsOf.unionMergeBackward(Bucketing.table(spark, "asof_l"),
-        Bucketing.table(spark, "asof_r"), Seq("k"), "t", Seq("v"),
-        allowExact = true)
-      val a = j.select("k", "t", "x", "v").as[(Int, Int, Double, Option[Double])]
-        .collect().sorted.toSeq
-      val b = lib.select("k", "t", "x", "v").as[(Int, Int, Double, Option[Double])]
-        .collect().sorted.toSeq
-      assert(a == b)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS asof_l")
-      spark.sql("DROP TABLE IF EXISTS asof_r")
+    withTempDir("asofbuckets") { dir =>
+      try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val left = (0 until 2000).map(i => (i % 50, i / 50 * 10, i.toDouble))
+          .toDF("k", "t", "x")
+        val right = (0 until 1000).map(i => (i % 50, i / 50 * 23, i * 1.5))
+          .toDF("k", "t", "v")
+        Bucketing.writeBucketed(left, "asof_l", s"$dir/l", Seq("k"), 8)
+        Bucketing.writeBucketed(right, "asof_r", s"$dir/r", Seq("k"), 8)
+        for (tieBreak <- Seq(None, Some("v"))) {
+          val j = AsOf.joinBackward(Bucketing.table(spark, "asof_l"),
+            Bucketing.table(spark, "asof_r"), Seq("k"), "t", Seq("v"),
+            allowExact = true, tieBreak = tieBreak)
+          val p = j.queryExecution.executedPlan
+          assert(collect(p) { case m: SortMergeAsOfExec => m }.size == 1, p.treeString)
+          // co-located: zero shuffle
+          assert(collect(p) { case e: ShuffleExchangeExec => e }.isEmpty, p.treeString)
+          // values still correct vs the union-merge twin
+          val twin = SpecTwins.unionMergeBackward(Bucketing.table(spark, "asof_l"),
+            Bucketing.table(spark, "asof_r"), Seq("k"), "t", Seq("v"),
+            allowExact = true, tieBreak = tieBreak)
+          val a = j.select("k", "t", "x", "v").as[(Int, Int, Double, Option[Double])]
+            .collect().sorted.toSeq
+          val b = twin.select("k", "t", "x", "v").as[(Int, Int, Double, Option[Double])]
+            .collect().sorted.toSeq
+          assert(a == b, s"tieBreak=$tieBreak")
+        }
+      } finally {
+        spark.sql("DROP TABLE IF EXISTS asof_l")
+        spark.sql("DROP TABLE IF EXISTS asof_r")
+      }
     }
   }
 
   test("bucketed-by-key join plans with no exchange and no sort") {
     import graft.sources.Bucketing
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("buckets").toString
-    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val a = (0 until 1000).map(i => (i % 100, i.toDouble)).toDF("k", "x")
-      val b = (0 until 500).map(i => (i % 100, i.toString)).toDF("k", "s")
-      Bucketing.writeBucketed(a, "bspec_a", s"$dir/a", Seq("k"), 8)
-      Bucketing.writeBucketed(b, "bspec_b", s"$dir/b", Seq("k"), 8)
-      val joined = Bucketing.table(spark, "bspec_a")
-        .join(Bucketing.table(spark, "bspec_b"), "k")
-      val p = joined.queryExecution.executedPlan.toString
-      assert(p.contains("SortMergeJoin"), p)
-      assert(!p.contains("Exchange"), p) // co-located: zero shuffle
-      assert(joined.count() == 5000)     // 10 x 5 per key over 100 keys
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS bspec_a")
-      spark.sql("DROP TABLE IF EXISTS bspec_b")
+    withTempDir("buckets") { dir =>
+      try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val a = (0 until 1000).map(i => (i % 100, i.toDouble)).toDF("k", "x")
+        val b = (0 until 500).map(i => (i % 100, i.toString)).toDF("k", "s")
+        Bucketing.writeBucketed(a, "bspec_a", s"$dir/a", Seq("k"), 8)
+        Bucketing.writeBucketed(b, "bspec_b", s"$dir/b", Seq("k"), 8)
+        val joined = Bucketing.table(spark, "bspec_a")
+          .join(Bucketing.table(spark, "bspec_b"), "k")
+        val p = joined.queryExecution.executedPlan.toString
+        assert(p.contains("SortMergeJoin"), p)
+        assert(!p.contains("Exchange"), p) // co-located: zero shuffle
+        assert(joined.count() == 5000)     // 10 x 5 per key over 100 keys
+      } finally {
+        spark.sql("DROP TABLE IF EXISTS bspec_a")
+        spark.sql("DROP TABLE IF EXISTS bspec_b")
+      }
     }
   }
 }

@@ -10,7 +10,7 @@ import graft.text.Edgar
 class FredMdSpec extends SparkSpec {
   import spark.implicits._
 
-  private def writeFixture(): String = {
+  private def onFixture[T](body: String => T): T = withTempDir("fredmd") { dir =>
     val csv =
       """sasdate,RPI,W875RX1x
         |Transform:,5,2
@@ -18,29 +18,33 @@ class FredMdSpec extends SparkSpec {
         |4/1/1959,2593.6,2434.8
         |5/1/1959,2610.4,2452.7
         |""".stripMargin
-    val f = Files.createTempFile("fredmd", ".csv")
+    val f = dir.resolve("fredmd.csv")
     Files.writeString(f, csv)
-    f.toString
+    body(f.toString)
   }
 
   test("parse: transform-code header split, x-suffix strip, month-end dates") {
-    val parsed = FredMd.parse(spark, writeFixture())
-    assert(parsed.meta("transform") == Map("RPI" -> 5, "W875RX1" -> 2))
-    assert(parsed.data.columns.toSeq == Seq("date", "RPI", "W875RX1"))
-    val dates = parsed.data.select("date").as[Int].collect().sorted
-    assert(dates.toSeq == Seq(19590331, 19590430, 19590531))
+    onFixture { path =>
+      val parsed = FredMd.parse(spark, path)
+      assert(parsed.meta("transform") == Map("RPI" -> 5, "W875RX1" -> 2))
+      assert(parsed.data.columns.toSeq == Seq("date", "RPI", "W875RX1"))
+      val dates = parsed.data.select("date").as[Int].collect().sorted
+      assert(dates.toSeq == Seq(19590331, 19590430, 19590531))
+    }
   }
 
   test("tcode transforms: 5 = diff(log), 2 = diff") {
-    val parsed = FredMd.parse(spark, writeFixture())
-    val long = FredMd.melt(parsed.data)
-    val w = Window.partitionBy("series").orderBy("date")
-    val t5 = FredMd.transform(long.where(col("series") === "RPI"), "value", w, 5)
-      .where(col("date") === 19590430).select("transformed").as[Double].head()
-    assert(math.abs(t5 - (math.log(2593.6) - math.log(2583.56))) < 1e-12)
-    val t2 = FredMd.transform(long.where(col("series") === "W875RX1"), "value", w, 2)
-      .where(col("date") === 19590531).select("transformed").as[Double].head()
-    assert(math.abs(t2 - (2452.7 - 2434.8)) < 1e-12)
+    onFixture { path =>
+      val parsed = FredMd.parse(spark, path)
+      val long = FredMd.melt(parsed.data)
+      val w = Window.partitionBy("series").orderBy("date")
+      val t5 = FredMd.transform(long.where(col("series") === "RPI"), "value", w, 5)
+        .where(col("date") === 19590430).select("transformed").as[Double].head()
+      assert(math.abs(t5 - (math.log(2593.6) - math.log(2583.56))) < 1e-12)
+      val t2 = FredMd.transform(long.where(col("series") === "W875RX1"), "value", w, 2)
+        .where(col("date") === 19590531).select("transformed").as[Double].head()
+      assert(math.abs(t2 - (2452.7 - 2434.8)) < 1e-12)
+    }
   }
 
   test("tcode 7: diff of pct_change") {
@@ -224,13 +228,15 @@ class EdgarIndexSpec extends SparkSpec {
         |320193|Apple Inc.|10-K|2023-11-03|edgar/data/320193/0000320193-23-000106.txt
         |789019|MICROSOFT CORP|10-Q|2023-01-24|edgar/data/789019/0000950170-23-001409.txt
         |""".stripMargin
-    val f = Files.createTempFile("master", ".idx")
-    Files.writeString(f, idx)
-    val out = Edgar.parseMasterIndex(spark, f.toString)
-    val rows = out.collect().map(r => (r.getInt(0), r.getString(2), r.getInt(3)))
-    assert(rows.length == 2)
-    assert(rows.contains((320193, "10-K", 20231103)))
-    assert(rows.contains((789019, "10-Q", 20230124)))
+    withTempDir("master") { dir =>
+      val f = dir.resolve("master.idx")
+      Files.writeString(f, idx)
+      val out = Edgar.parseMasterIndex(spark, f.toString)
+      val rows = out.collect().map(r => (r.getInt(0), r.getString(2), r.getInt(3)))
+      assert(rows.length == 2)
+      assert(rows.contains((320193, "10-K", 20231103)))
+      assert(rows.contains((789019, "10-Q", 20230124)))
+    }
   }
 }
 

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.BeforeAndAfterAll
@@ -24,6 +26,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** Run `body` on a new temp directory named `prefix…`, then delete the
+    * directory and everything in it, so no spec run leaves files behind.
+    */
+  def withTempDir[T](prefix: String)(body: Path => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir)
+    finally JavaUtils.deleteRecursively(dir.toFile)
   }
 
   /** The tier a size-tiered graph op took: a driver-local result is a

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.Bridge
 import org.apache.spark.sql.types._
@@ -318,6 +319,53 @@ object SpecTwins {
             - lit(2.0) * VectorF.dotp(col("__v"), c.getField("centroid"))).as("d"),
             c.getField("list").as("list")))), 1, nProbe).as("__near"))
       .select(col(idCol), transform(col("__near"), x => x.getField("list")).as("lists"))
+  }
+
+  /** Union-merge formulation of `AsOf.joinBackward` (spec-only twin; the
+    * native merge's differential reference): tag both sides, union on the
+    * key, sort by (time, side, tieBreak nulls first), and carry the latest
+    * right ROW forward as one `last(struct(values), ignoreNulls)` window.
+    * `tieBreak` must be one of `valueCols`.
+    */
+  def unionMergeBackward(left: DataFrame, right: DataFrame, keys: Seq[String],
+                         timeCol: String, valueCols: Seq[String],
+                         allowExact: Boolean = true,
+                         tieBreak: Option[String] = None): DataFrame =
+    unionMerge(left, right, keys, timeCol, valueCols, allowExact, tieBreak, forward = false)
+
+  /** Union-merge formulation of `AsOf.joinForward` (spec-only twin): the
+    * mirror of [[unionMergeBackward]], `first(struct(values), ignoreNulls)`
+    * over the following rows, tieBreak nulls last.
+    */
+  def unionMergeForward(left: DataFrame, right: DataFrame, keys: Seq[String],
+                        timeCol: String, valueCols: Seq[String],
+                        allowExact: Boolean = true,
+                        tieBreak: Option[String] = None): DataFrame =
+    unionMerge(left, right, keys, timeCol, valueCols, allowExact, tieBreak, forward = true)
+
+  // a left row's struct is null, so ignoreNulls skips it
+  private def unionMerge(left: DataFrame, right: DataFrame, keys: Seq[String],
+                         timeCol: String, valueCols: Seq[String], allowExact: Boolean,
+                         tieBreak: Option[String], forward: Boolean): DataFrame = {
+    // right rows sort before (0) or after (2) left rows at equal time, so
+    // the carry sees them exactly when they may match
+    val rightSide = if (allowExact != forward) 0 else 2
+    val lTagged = left.withColumn("__side", lit(1))
+    val rTagged = right.select(keys.map(col) ++ Seq(col(timeCol),
+      struct(valueCols.map(col): _*).as("__vs"), lit(rightSide).as("__side")): _*)
+    val unioned = lTagged.unionByName(rTagged, allowMissingColumns = true)
+    val tb = tieBreak.map(c => col("__vs").getField(c))
+      .map(c => if (forward) c.asc_nulls_last else c.asc_nulls_first).toSeq
+    val ordered = Window.partitionBy(keys.map(col): _*)
+      .orderBy((Seq(col(timeCol).asc, col("__side").asc) ++ tb): _*)
+    val filled = if (forward)
+      first(col("__vs"), ignoreNulls = true)
+        .over(ordered.rowsBetween(Window.currentRow, Window.unboundedFollowing))
+    else
+      last(col("__vs"), ignoreNulls = true)
+        .over(ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    unioned.withColumn("__fs", filled).where(col("__side") === 1)
+      .select(left.columns.map(col) ++ valueCols.map(c => col("__fs").getField(c).as(c)): _*)
   }
 
   private val langWords: Seq[(String, Seq[String])] = Seq(

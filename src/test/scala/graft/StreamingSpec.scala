@@ -171,7 +171,7 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.key, r.ts.getTime - t0) -> r.prevailing).toMap
     assert(strict(("A", 5000L)).contains(11.0), s"strict: $strict")
 
-    // the batch union-merge as-of agrees on the same rows
+    // the batch as-of join agrees on the same rows
     val trades = Seq(("A", 1L, 99.0), ("A", 3L, 98.0), ("B", 0L, 50.0), ("A", 5L, 97.0))
       .toDF("key", "t", "value")
     val quotes = Seq(("A", 0L, 10.0), ("A", 2L, 11.0), ("A", 5L, 12.0))

@@ -55,13 +55,15 @@ class TablesSpec extends SparkSpec {
 
   test("schemaDrift names each differing, missing and undeclared column") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("drift").toString
-    Seq((1L, "x")).toDF("r_regionkey", "r_comment")
-      .write.parquet(s"$dir/region.parquet")
-    assert(Tables.schemaDrift(spark, dir) == Seq(
-      "region.r_regionkey: declared INT, file has BIGINT",
-      "region.r_name: declared STRING, missing from file",
-      "region.r_comment: STRING in file, not declared"))
+    withTempDir("drift") { d =>
+      val dir = d.toString
+      Seq((1L, "x")).toDF("r_regionkey", "r_comment")
+        .write.parquet(s"$dir/region.parquet")
+      assert(Tables.schemaDrift(spark, dir) == Seq(
+        "region.r_regionkey: declared INT, file has BIGINT",
+        "region.r_name: declared STRING, missing from file",
+        "region.r_comment: STRING in file, not declared"))
+    }
   }
 
   test("declared-schema reads equal schema-inferring reads") {
