@@ -23,8 +23,11 @@ object Bench {
 
   /** Builds `fn`'s plan under the job group `<tag>|build` and forces it
     * with a noop write under `<tag>|run`, so a [[Layers]] listener can
-    * split the run's jobs by phase. A failure is reported on stderr and
-    * returned as `ok = false`.
+    * split the run's jobs by phase. Both run in one [[graft.core.Scope]],
+    * closed afterwards: the query's cached intermediates (shingles, edge
+    * lists) go with it, which keeps each measurement independent and
+    * bounds heap growth over the run. A failure is reported on stderr
+    * and returned as `ok = false`.
     */
   def runTagged(spark: SparkSession, tag: String, name: String,
                 fn: (SparkSession, String) => DataFrame, dir: String): Phases = {
@@ -32,7 +35,7 @@ object Bench {
     val t0 = System.nanoTime()
     var t1 = 0L
     def secs(a: Long, b: Long) = (b - a) / 1e9
-    try {
+    try graft.core.Scope.within {
       sc.setJobGroup(s"$tag|build", name)
       val df = fn(spark, dir)
       t1 = System.nanoTime()
@@ -118,10 +121,9 @@ object Bench {
           SparkEntry.queries.toSeq.sortBy(_._1)
             .filter { case (n, _) => only.forall(_.contains(n)) }
             .foreach { case (name, fn) =>
-            try fn(spark, wd).write.format("noop").mode("overwrite").save()
+            try graft.core.Scope.within(fn(spark, wd).write.format("noop").mode("overwrite").save())
             catch { case e: Throwable =>
               System.err.println(s"[bench] warmup $name failed: ${e.getMessage}") }
-            spark.sharedState.cacheManager.clearCache()
           }
           warmed = true
         case None =>
@@ -173,11 +175,6 @@ object Bench {
         val ph = runTagged(spark, s"$p|$name", name, SparkEntry.queries(name), sfDir)
         phases += ((p, name, ph))
         val dt = if (ph.ok) Some(ph.build + ph.run) else None
-        // queries persist intermediates internally (exploded shingles, edge
-        // lists); dropping them between queries keeps each measurement
-        // independent and bounds heap growth over the 70+ query run (an 8g
-        // heap used to hit multi-second GC stalls near the end)
-        spark.sharedState.cacheManager.clearCache()
         perPass(name) = perPass.getOrElse(name, Nil) :+ dt
       }
     }

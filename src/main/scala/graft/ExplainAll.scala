@@ -42,9 +42,8 @@ object ExplainAll {
     var failed = 0
     for (name <- names) {
       try {
-        val df = SparkEntry.queries(name)(spark, dir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val txt = graft.core.Scope.within(SparkEntry.queries(name)(spark, dir)
+          .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
         val pw = new java.io.PrintWriter(s"$outDir/${name}_$suffix.txt")
         try pw.println(txt) finally pw.close()
         System.err.println(s"[explainall] $name ok")
@@ -52,7 +51,6 @@ object ExplainAll {
         failed += 1
         System.err.println(s"[explainall] $name FAILED: ${e.getMessage}")
       }
-      spark.sharedState.cacheManager.clearCache()
     }
     spark.stop()
     if (failed > 0) {

@@ -169,7 +169,7 @@ object PlanAudit {
       // every cached relation's build plan recursively (a persist-using
       // query renders 100s of phantom operators), while InMemoryTableScan
       // has no children so traversal counts only the outer query
-      val executed = fn(spark, sfDir).queryExecution.executedPlan
+      val executed = graft.core.Scope.within(fn(spark, sfDir).queryExecution.executedPlan)
       // initialPlan (post-EnsureRequirements) so Exchanges are visible;
       // inputPlan would show the tree before shuffles are inserted
       val root: SparkPlan = executed match {
@@ -194,7 +194,6 @@ object PlanAudit {
         else if (bnlj > 0 || cart > 0) { violations ::= name; "VIOLATION" }
         else ""
       rows += f"| $name | $bhj | $smj | $shj | $bnlj | $cart | $shuffles | $bcasts | ${fileScans.size} | $pushed | $cached | $flag |"
-      spark.sharedState.cacheManager.clearCache()
     }
 
     val md = new StringBuilder

@@ -1,5 +1,5 @@
 package graft
-import graft.core.Tables
+import graft.core.{Scope, Tables}
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -35,13 +35,13 @@ object Verify {
     }
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.iterator.filter { case (n, _) => chosen(n) }.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // one scope per query: its close drops the query's cached
+      // intermediates, which bounds heap over the run
+      try Scope.within(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // drop per-query persisted intermediates — bounds heap over the run
-      spark.sharedState.cacheManager.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -41,19 +41,6 @@ object EventStudy {
       .withColumn("tstat", col("mean") / (col("std") / sqrt(col("n"))))
       .orderBy("rel")
 
-  /** Post-event drift window stat: mean of `valueCol` over rel in
-    * [relFrom, relTo] per event, then a one-sample t across events
-    * (eventstudy.py:264-278).
-    */
-  def windowStat(paths: DataFrame, valueCol: String,
-                 relFrom: Int, relTo: Int): DataFrame = {
-    paths.where(col("rel").between(relFrom, relTo))
-      .groupBy("event_id").agg(avg(col(valueCol)).as("x"))
-      .agg(avg(col("x")).as("mean"), stddev_samp(col("x")).as("std"),
-        count(lit(1)).as("n"))
-      .withColumn("tstat", col("mean") / (col("std") / sqrt(col("n"))))
-  }
-
   /** Kolari-Pape-Pynnönen (2018) eqn 15 overlap-corrected summary
     * (eventstudy.py:181-284 fit):
     *

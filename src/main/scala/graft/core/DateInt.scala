@@ -23,12 +23,6 @@ object DateInt {
   /** int YYYYMMDD → month 1-12 (busday.py:380-387). */
   def monthOf(d: Column): Column = ((d / 100) % 100).cast("int")
 
-  /** int YYYYMMDD → day of month (busday.py:389-395). */
-  def dayOf(d: Column): Column = (d % 100).cast("int")
-
-  /** int YYYYMM bucket (for month-grain grouping / binned range joins). */
-  def yyyymm(d: Column): Column = (d / 100).cast("int")
-
   /** Calendar month-end rounding of an int date (busday.py:329-344):
     * last calendar day of the month containing `d`.
     */
@@ -39,9 +33,6 @@ object DateInt {
       .otherwise(when((y % 4 === 0 && y % 100 =!= 0) || y % 400 === 0, 29).otherwise(28))
     (y * 10000 + m * 100 + lastDay).cast("int")
   }
-
-  /** Begin-of-month int date. */
-  def begmo(d: Column): Column = ((d / 100).cast("int") * 100 + 1).cast("int")
 
   /** Quarter-end rounding (busday.py:346-370). */
   def endqr(d: Column): Column = {

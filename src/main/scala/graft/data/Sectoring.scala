@@ -1,7 +1,5 @@
 package graft.data
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** Fama-French Siccodes industry-definition parse (reference
   * `FFReader.sectoring` `ffreader.py:66-150`): the text format alternates
   * sector headers ("49 Other  Almost Nothing") with SIC ranges
@@ -56,13 +54,5 @@ object Sectoring {
     }
     (labels.map { case (s, _, n, d) => SicRow(s, n, d) } ++ extra.values)
       .groupBy(_.sic).map(_._2.head).toSeq.sortBy(_.sic)
-  }
-
-  /** Breakpoint DataFrame from a Siccodes text file. */
-  def siccodes(spark: SparkSession, path: String, nSectors: Int): DataFrame = {
-    import spark.implicits._
-    val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path))
-    parseSiccodes(scala.jdk.CollectionConverters.ListHasAsScala(lines).asScala.toSeq,
-      nSectors).toDF()
   }
 }

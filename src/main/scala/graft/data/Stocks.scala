@@ -74,16 +74,6 @@ class Stocks(facts: DataFrame, id: String = "permno", date: String = "date") {
       .withColumn("rel", col("t") - col("t0"))
       .select(col(id), col("event_date"), col("rel"), col(date), col(field))
   }
-
-  /** Universe screen + cap deciles, NYSE breakpoints
-    * (CRSP.get_universe crsp.py:196-257): `section` must carry cap and
-    * nyse columns; returns deciles of cap with NYSE-only breakpoints.
-    */
-  def capDeciles(section: DataFrame, capCol: String = "cap",
-                 nyseCol: String = "nyse"): DataFrame = {
-    val pop = section.where(col(nyseCol) && col(capCol) > 0)
-    graft.ops.Fractiles.split(section.where(col(capCol) > 0), pop, capCol, 10, "decile")
-  }
 }
 
 /** Signals store (SURVEY.md §2.1 S18, §2.5 W1; reference:

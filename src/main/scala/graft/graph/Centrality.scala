@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-import org.apache.spark.storage.StorageLevel
+import graft.core.Scope
 
 /** Vertex centrality measures as DataFrame programs (SURVEY.md §2.9;
   * reference `finds/recipes/graph.py:185-233` `nodes_centrality` on
@@ -115,9 +115,9 @@ object Centrality {
   private def allNodes(und: DataFrame): DataFrame =
     und.select(col("src").as("node")).distinct()
 
-  /** Materialized edge frame, join-side hint and release handle for the
-    * per-round joins of [[GraphOps.connectedComponents]], [[eigenvector]]
-    * and [[GraphOps.pageRank]], tiered on |V|. Below the broadcast
+  /** Materialized edge frame and join-side hint for the per-round joins
+    * of [[GraphOps.connectedComponents]], [[eigenvector]] and
+    * [[GraphOps.pageRank]], tiered on |V|. Below the broadcast
     * threshold AQE broadcasts the |V|-row state frame at runtime, so the
     * edges stay a plain persisted cache and the joins stay un-hinted;
     * pre-partitioning there is a strict loss (measured on a
@@ -128,23 +128,24 @@ object Centrality {
     * src ∪ dst riding the materialization the loop needs anyway (±2% vs
     * a threshold with wide headroom); counting `src` alone would miss
     * pageRank's sink-only nodes, which its rank frame still carries.
-    * The handle unpersists the broadcast tier's cache; the shuffle tier
-    * has already dropped it for the checkpoint.
+    * The broadcast tier's cache belongs to the caller's [[Scope]] (a
+    * loop that is done with it releases it early); the shuffle tier has
+    * already dropped it for the checkpoint.
     */
   private[graph] def tieredByKey(edges0: DataFrame, key: String)
-      : (DataFrame, DataFrame => DataFrame, () => Unit) = {
+      : (DataFrame, DataFrame => DataFrame) = {
     val bcThresh = org.apache.spark.sql.graftx.Bridge
       .broadcastThreshold(edges0.sparkSession)
-    val cached = edges0.persist(StorageLevel.MEMORY_AND_DISK)
+    val cached = Scope.persist(edges0)
     val nv = cached.select(explode(array(col("src"), col("dst"))).as("node"))
       .agg(approx_count_distinct(col("node"))).head().getLong(0)
     // a state row ≈ two longs + row overhead in the broadcast relation
     val big = bcThresh < 0 || nv * 48L > bcThresh
-    if (!big) (cached, (df: DataFrame) => df, () => cached.unpersist(blocking = false))
+    if (!big) (cached, (df: DataFrame) => df)
     else {
-      val (p, hinted) = shuffleTier(cached, key)
-      cached.unpersist(blocking = false)
-      (p, hinted, () => ())
+      val tier = shuffleTier(cached, key)
+      Scope.release(cached)
+      tier
     }
   }
 
@@ -174,13 +175,12 @@ object Centrality {
     // oriented edges with the (deg, id) order key on both endpoints
     // o feeds THREE join legs (e1, e2, the closing edge) — persist so the
     // und+degree subtree compiles and evaluates once, not three times
-    val o = und
+    val o = Scope.persist(und
       .join(d.select(col("node").as("src"), col("deg").as("ds")), "src")
       .join(d.select(col("node").as("dst"), col("deg").as("dd")), "dst")
       .where(struct(col("ds"), col("src")) < struct(col("dd"), col("dst")))
       .select(col("src").as("u"), col("dst").as("v"),
-        struct(col("dd"), col("dst")).as("ordv"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        struct(col("dd"), col("dst")).as("ordv")))
     val tri = o.as("e1").join(o.as("e2"),
         col("e1.u") === col("e2.u") && col("e1.ordv") < col("e2.ordv"))
       .select(col("e1.u").as("a"), col("e1.v").as("b"), col("e2.v").as("c"))
@@ -227,8 +227,8 @@ object Centrality {
   def eigenvector(edges: DataFrame, iters: Int = 100,
                   normalizeEvery: Int = 10): DataFrame = {
     // per-round edge join tiered on |V| — see [[tieredByKey]]
-    val (und, hinted, release) = tieredByKey(symmetrize(edges), "src")
-    val nodes = allNodes(und).persist(StorageLevel.MEMORY_AND_DISK)
+    val (und, hinted) = tieredByKey(symmetrize(edges), "src")
+    val nodes = Scope.persist(allNodes(und))
     def normalized(v: DataFrame): DataFrame = {
       val n2 = v.agg(sqrt(sum(col("x") * col("x"))).as("__n2"))
       v.crossJoin(n2).select(col("node"), (col("x") / col("__n2")).as("x"))
@@ -256,8 +256,8 @@ object Centrality {
       }
     }
     // the result reads only the checkpointed iterate
-    nodes.unpersist(blocking = false)
-    release()
+    Scope.release(nodes)
+    Scope.release(und)
     normalized(x).select(col("node"), col("x").as("eigenvector"))
   }
 
@@ -267,10 +267,9 @@ object Centrality {
     */
   def hits(edges: DataFrame, iters: Int = 100,
            checkpointEvery: Int = 10): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = Scope.persist(edges.select(col("src"), col("dst")))
+    val nodes = Scope.persist(e.select(col("src").as("node"))
+      .unionAll(e.select(col("dst").as("node"))).distinct())
     val nInv = lit(1.0) / nodes.count().toDouble
     // L1-normalize only at checkpoints + at the end (see eigenvector:
     // a per-step norm doubles the plan per iteration)
@@ -312,8 +311,8 @@ object Centrality {
       hub = hub.localCheckpoint()
       auth = auth.localCheckpoint()
     }
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
+    Scope.release(e)
+    Scope.release(nodes)
     l1(hub, "h").select(col("node"), col("h").as("hub"))
       .join(l1(auth, "a").select(col("node"), col("a").as("authority")), "node")
   }
@@ -359,12 +358,12 @@ object Centrality {
         (s, if (sumd > 0) ((r - 1).toDouble / sumd) * ((r - 1).toDouble / (n - 1)) else 0.0)
       }).toDF("node", "closeness")
     } {
-      val und = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
+      val und = Scope.persist(symmetrize(edges))
       val nodes = allNodes(und)
       val n = nodes.count().toDouble
       val dists = bfsDistances(und, nodes, maxDepth)
       // dists is a checkpoint: the result never reads the cache
-      und.unpersist(blocking = false)
+      Scope.release(und)
       dists.groupBy(col("node"))
         .agg(count(lit(1)).as("r"), sum("dist").as("sumd"))
         .select(col("node"),
@@ -385,9 +384,9 @@ object Centrality {
       edges.sparkSession.createDataFrame(bfsLocalStats(es, maxDepth)._1.toSeq
         .map { case (s, _, _, ecc) => (s, ecc) }).toDF("node", "eccentricity")
     } {
-      val und = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
+      val und = Scope.persist(symmetrize(edges))
       val dists = bfsDistances(und, allNodes(und), maxDepth)
-      und.unpersist(blocking = false) // dists is a checkpoint
+      Scope.release(und) // dists is a checkpoint
       dists.groupBy(col("s").as("node"))
         .agg(max("dist").as("eccentricity"))
     }
@@ -705,7 +704,7 @@ object Centrality {
       edges.sparkSession.createDataFrame(brandes(es, normalized, maxDepth))
         .toDF("node", "betweenness")
     } {
-      val und = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
+      val und = Scope.persist(symmetrize(edges))
       // a checkpoint, not a cache: the output join reads it after `und`
       // is released
       val nodes = allNodes(und).localCheckpoint()
@@ -758,7 +757,7 @@ object Centrality {
         .groupBy("node").agg(sum("delta").as("bsum"))
       // same n ≤ 2 guard as brandes (networkx _rescale semantics)
       val scale = if (normalized && n > 2) 1.0 / ((n - 1) * (n - 2)) else if (normalized) 1.0 else 0.5
-      und.unpersist(blocking = false) // levels and deltas are checkpoints
+      Scope.release(und) // levels and deltas are checkpoints
       nodes.join(raw, Seq("node"), "left")
         .select(col("node"), (coalesce(col("bsum"), lit(0.0)) * scale).as("betweenness"))
     }

@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.core.Scope
 
 /** Community detection + partition quality as DataFrame programs
   * (SURVEY.md §2.9; reference `finds/recipes/graph.py:234-287`
@@ -26,7 +26,7 @@ object Community {
     * Returns (node, community) with community = the label fixed point.
     */
   def labelPropagation(edges: DataFrame, maxIters: Int = 20): DataFrame = {
-    val und = Centrality.symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    val und = Scope.persist(Centrality.symmetrize(edges))
     var labels = und.select(col("src").as("node")).distinct()
       .withColumn("label", col("node")).localCheckpoint()
     var changed = true
@@ -68,8 +68,7 @@ object Community {
       var comm = g.select(col("src").as("node")).distinct()
         .withColumn("community", col("node")).localCheckpoint()
       val totalW = g.agg(sum("w")).head().getDouble(0) // = 2m
-      val deg = g.groupBy(col("src").as("node")).agg(sum("w").as("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val deg = Scope.persist(g.groupBy(col("src").as("node")).agg(sum("w").as("deg")))
 
       var round = 0
       var stable = false

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 
 /** Graph analytics as declarative DataFrame plans (SURVEY.md §2.9;
   * reference: `finds/recipes/graph.py:185-317` on networkx).
@@ -58,9 +59,8 @@ object GraphOps {
     // deg (one row per node) backs TWO broadcast joins (deg_a, deg_b);
     // persisting the tiny aggregate stops the second broadcast from
     // re-running the full edge scan + distinct-count shuffle
-    val deg = edges.groupBy(col(node).as("n"))
-      .agg(count_distinct(col(neighbor)).as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val deg = Scope.persist(edges.groupBy(col(node).as("n"))
+      .agg(count_distinct(col(neighbor)).as("deg")))
     // one groupBy builds the sorted adjacency list per shared neighbor; a
     // native generator then emits its d(d−1)/2 pairs — no self-join. The
     // per-neighbor weights (1/log d, 1/d) come from size(ns) = the true
@@ -165,9 +165,10 @@ object GraphOps {
       edges.sparkSession.createDataFrame(components(es).toSeq).toDF("node", "component")
     } {
       // the label frame is re-joined to the edges every round, so which
-      // side moves depends on |V| — see [[Centrality.tieredByKey]]
-      // no release: graphInfo's later symmetrize(edges) reads this cache
-      val (und, hinted, _) = Centrality.tieredByKey(Centrality.symmetrize(edges), "dst")
+      // side moves depends on |V| — see [[Centrality.tieredByKey]]. The
+      // edge cache stays with the caller's scope: graphInfo's later
+      // symmetrize(edges) reads it
+      val (und, hinted) = Centrality.tieredByKey(Centrality.symmetrize(edges), "dst")
       var labels = und.select(col("src").as("node")).distinct()
         .withColumn("component", col("node")).localCheckpoint()
       var changed = true
@@ -359,10 +360,9 @@ object GraphOps {
     // per-round edge join tiered on |V|: the edge frame is materialized
     // ONCE (it used to re-run its upstream subtree every round — each
     // round is its own job) — see [[Centrality.tieredByKey]]
-    val (edges, hinted, release) =
-      Centrality.tieredByKey(edges0.select(col("src"), col("dst")), "src")
-    val nodes = edges.select(col("src").as("node"))
-      .unionAll(edges.select(col("dst").as("node"))).distinct().cache()
+    val (edges, hinted) = Centrality.tieredByKey(edges0.select(col("src"), col("dst")), "src")
+    val nodes = Scope.persist(edges.select(col("src").as("node"))
+      .unionAll(edges.select(col("dst").as("node"))).distinct())
     val n = nodes.count().toDouble
     val outDeg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("out"))
     var ranks = nodes.withColumn("rank", lit(1.0 / n))
@@ -381,8 +381,8 @@ object GraphOps {
         .localCheckpoint()
     }
     // the result reads only the checkpointed ranks
-    nodes.unpersist(blocking = false)
-    release()
+    Scope.release(nodes)
+    Scope.release(edges)
     ranks
   }
 }

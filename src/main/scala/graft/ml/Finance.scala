@@ -36,21 +36,6 @@ object Finance {
     }.sum / price
   }
 
-  /** Modified duration (finance.py:177-196). */
-  def modifiedDuration(coupon: Double, n: Int, m: Int, price: Double,
-                       ytm: Double, par: Double = 1.0): Double =
-    macaulayDuration(coupon, n, m, price, Seq(ytm), par) / (1 + ytm / 2)
-
-  /** Modified convexity (finance.py:198-221). */
-  def modifiedConvexity(coupon: Double, n: Int, m: Int, price: Double,
-                        ytm: Double, par: Double = 1.0): Double = {
-    (1 to n).map { t =>
-      math.pow(1 + ytm / m, -t) *
-        (math.pow(t.toDouble / m, 2) + t / (2.0 * m)) *
-        (coupon / m + (if (t == n) par else 0.0))
-    }.sum / (price * math.pow(1 + ytm / m, 2))
-  }
-
   /** Bootstrap the spot rate to maturity of a par bond from its yield and
     * the shorter spots (finance.py:85-106): used iteratively to build a
     * spot curve from a par-yield curve.

@@ -1,10 +1,12 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.analysis.TypeCoercion
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.Bridge
+import org.apache.spark.sql.types.DataType
 import graft.plans.AsOfJoinPlan
 
 /** As-of (backward / forward) joins — the single most load-bearing operator
@@ -17,7 +19,12 @@ import graft.plans.AsOfJoinPlan
   * ([[graft.plans.AsOfJoinPlan]], SURVEY §4.2.1), NOT a range join: one
   * exchange + one sort per side on the join key, then a linear merge per
   * partition with zero candidate-pair explosion — at 100 TB both sides
-  * hash-partition by key (AQE handles skew). The merge carries the
+  * hash-partition by key. Every row of one key lands in one task, and
+  * AQE's skew-join split does not apply to this node (it matches only
+  * sort-merge and shuffled-hash joins), so a hot key is one long task.
+  * Each key pair and the time pair are compared in their common wider
+  * type (int against bigint as bigint, date against timestamp as
+  * timestamp); a pair with none is rejected. The merge carries the
   * prevailing right ROW whole, not per-column fills, so every attribute
   * comes from the same row even when that row carries nulls (per-column
   * fills would stitch a null attribute from an older row, diverging from
@@ -83,23 +90,43 @@ object AsOf {
     * fresh names (fresh attribute ids) first: the node is not a Catalyst
     * join, so the analyzer dedups no ids under it, and two sides read from
     * one scan would otherwise carry the same ids into the merge.
+    *
+    * A key or time column whose two sides differ in type is cast to the
+    * common wider type on the side that needs it (the left side's cast
+    * rides in an extra column that the result drops): the merge compares
+    * both sides with one ordering, and the shuffle must hash a key to the
+    * same partition from either side.
     */
   private def merge(left: DataFrame, right: DataFrame, keys: Seq[String],
                     timeCol: String, valueCols: Seq[String], allowExact: Boolean,
                     tieBreak: Option[String], forward: Boolean): DataFrame = {
+    def typeOf(df: DataFrame, c: String): DataType =
+      df.schema.find(_.name == c).getOrElse(
+        throw new IllegalArgumentException(s"column $c not found")).dataType
+    val wide = (keys :+ timeCol).map { c =>
+      val (l, r) = (typeOf(left, c), typeOf(right, c))
+      c -> TypeCoercion.findWiderTypeWithoutStringPromotion(Seq(l, r)).getOrElse(
+        throw new IllegalArgumentException(
+          s"as-of column $c: ${l.simpleString} and ${r.simpleString} have no common type"))
+    }.toMap
+    def cast(df: DataFrame, c: String): Option[DataType] =
+      wide.get(c).filter(_ != typeOf(df, c))
     val rCols = ((keys :+ timeCol) ++ valueCols ++ tieBreak).distinct
-    val rPlan = Bridge.analyzed(right.select(
-      rCols.zipWithIndex.map { case (c, i) => col(c).as(s"__asof_r$i") }: _*))
+    val rPlan = Bridge.analyzed(right.select(rCols.zipWithIndex.map { case (c, i) =>
+      cast(right, c).fold(col(c))(col(c).cast).as(s"__asof_r$i") }: _*))
     val rAttr = rCols.zip(rPlan.output).toMap
-    val lPlan = Bridge.analyzed(left)
-    def lAttr(n: String): Attribute = lPlan.output.find(_.name == n).getOrElse(
-      throw new IllegalArgumentException(s"column $n not found"))
+    val lOut = Bridge.analyzed(left).output
+    val lCast = (keys :+ timeCol).distinct.flatMap(c => cast(left, c).map(c -> _))
+    val lPlan = Bridge.analyzed(if (lCast.isEmpty) left else left.select(col("*") +:
+      lCast.zipWithIndex.map { case ((c, t), i) => col(c).cast(t).as(s"__asof_l$i") }: _*))
+    val lCastAttr = lCast.map(_._1).zip(lPlan.output.drop(lOut.length)).toMap
+    def lAttr(n: String): Attribute = lCastAttr.getOrElse(n, lOut.find(_.name == n).get)
     val node = AsOfJoinPlan(lPlan, rPlan,
       keys.map(lAttr), keys.map(rAttr),
       lAttr(timeCol), rAttr(timeCol),
       valueCols.map(rAttr), allowExact, tieBreak.map(rAttr), forward)
     val carried = node.output.drop(lPlan.output.length)
-    Bridge.ofRows(left.sparkSession, Project(lPlan.output ++
+    Bridge.ofRows(left.sparkSession, Project(lOut ++
       carried.zip(valueCols).map { case (a, c) => Alias(a, c)() }, node))
   }
 }

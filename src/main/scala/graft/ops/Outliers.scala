@@ -63,12 +63,4 @@ object Outliers {
         when(col(valueCol) < fl || col(valueCol) > fh, lit(null))
           .otherwise(col(valueCol)))
   }
-
-  /** Null-aware weighted mean `Σ w·x / Σ w` over rows where both are
-    * non-null (`weighted_average` `filters.py:208-228`).
-    */
-  def weightedMean(x: Column, w: Column): Column = {
-    val both = x.isNotNull && w.isNotNull
-    sum(when(both, x * w)) / sum(when(both, w))
-  }
 }

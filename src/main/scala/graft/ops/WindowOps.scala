@@ -17,10 +17,6 @@ object WindowOps {
   def ffill(v: Column, w: WindowSpec): Column =
     last(v, ignoreNulls = true).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
 
-  /** Backward-fill mirror. */
-  def bfill(v: Column, w: WindowSpec): Column =
-    first(v, ignoreNulls = true).over(w.rowsBetween(Window.currentRow, Window.unboundedFollowing))
-
   /** Tick test (`align_trades` `taq.py:412-413`): sign of price change vs
     * previous trade — `np.sign(diff).fillna(0)` exactly, so zero-change
     * trades and the first trade get sign 0 (the reference keeps zeros;

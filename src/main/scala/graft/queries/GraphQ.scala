@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Scope, Tables}
 import graft.graph.{Centrality, Community, GraphOps}
 import QHelp._
 
@@ -48,10 +48,9 @@ object GraphQ {
     // partition of ~600 pair rows. Persisted: the graph queries run
     // several actions (BFS levels, modularity aggregates) over this.
     import org.apache.spark.sql.expressions.Window
-    t.withColumn("__thr", avg("w").over(Window.partitionBy(lit(1))) * 1.2)
+    Scope.persist(t.withColumn("__thr", avg("w").over(Window.partitionBy(lit(1))) * 1.2)
       .where(col("w") >= col("__thr"))
-      .select(col("a").as("src"), col("b").as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("a").as("src"), col("b").as("dst")))
   }
 
   // MATERIALIZED: the oracles reference und/nodes many times (unrolled

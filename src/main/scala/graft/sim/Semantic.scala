@@ -2,6 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 import graft.functions.VectorF
 
 /** SemDeDup-style semantic deduplication over an embedding column: a
@@ -81,37 +82,23 @@ object Semantic {
     */
   def semanticDups(vecs: DataFrame, idCol: String, vecCol: String,
                    threshold: Double, nLists: Int = 16, nProbe: Int = 1,
-                   seed: Long = 42L, maxList: Int = Int.MaxValue): DataFrame =
-    semanticDupsWithRelease(vecs, idCol, vecCol, threshold, nLists, nProbe,
-      seed, maxList)._1
-
-  /** [[semanticDups]] plus a release handle that unpersists the two
-    * internal caches (prepped vectors, capped assignment) — the
-    * [[graft.text.NearDup.minHashDedupWithRelease]] shape (round-11
-    * ADVICE): call it after materializing the pairs; later
-    * re-evaluations stay correct, they just recompute.
-    */
-  def semanticDupsWithRelease(vecs: DataFrame, idCol: String, vecCol: String,
-                              threshold: Double, nLists: Int = 16, nProbe: Int = 1,
-                              seed: Long = 42L, maxList: Int = Int.MaxValue)
-      : (DataFrame, () => Unit) = {
+                   seed: Long = 42L, maxList: Int = Int.MaxValue): DataFrame = {
     requireNearDupThreshold(threshold, "semanticDups")
-    val (pairs, _, _, _, release) = dupsParts(vecs, idCol, vecCol, threshold,
-      nLists, nProbe, seed, maxList)
-    (pairs, release)
+    dupsParts(vecs, idCol, vecCol, threshold, nLists, nProbe, seed, maxList)._1
   }
 
   /** Pairs + the frames the keep-policy re-pick needs: (pairs, prepped
     * vectors (persisted), nearest-list assignment (id, list) — one row
     * per vector, its single nearest list; maxList-capped vectors may be
     * absent at nProbe = 1, but capped vectors have no pairs and so no
-    * group membership either — the fitted centroid frame, and a release
-    * thunk unpersisting both internal caches).
+    * group membership either — and the fitted centroid frame). The
+    * pairs read the two internal caches (prepped vectors, capped
+    * assignment) lazily; the caller's [[Scope]] releases them.
     */
   private def dupsParts(vecs: DataFrame, idCol: String, vecCol: String,
                         threshold: Double, nLists: Int, nProbe: Int,
                         seed: Long, maxList: Int)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, () => Unit) = {
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     require(threshold >= -1.0 && threshold <= 1.0, s"cosine threshold: $threshold")
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
     // internal column names: "list"/"lists" key the candidate rows,
@@ -125,8 +112,7 @@ object Semantic {
     import org.apache.spark.ml.functions.array_to_vector
     // persisted: feeds the quantizer sample, the assignment pass, and
     // both rescore joins (the ivfTopK convention — same lifetime note)
-    val v = Similarity.prepped(vecs, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val v = Scope.persist(Similarity.prepped(vecs, idCol, vecCol))
     // nLists = 1 is the exactness degenerate (candidate scope = all
     // pairs) and MLlib requires k >= 2 — its one centroid is the global
     // mean directly (what a k=1 Lloyd step converges to), so the
@@ -175,12 +161,7 @@ object Semantic {
     // recomputes the first element (keepFarthest + nProbe > 1 only)
     val assignment = if (nProbe == 1) bounded.select(col(idCol), col("list"))
       else assignedFirst
-    val release = () => {
-      v.unpersist(blocking = false)
-      bounded.unpersist(blocking = false)
-      ()
-    }
-    (pairs, v, assignment, centroids, release)
+    (pairs, v, assignment, centroids)
   }
 
   /** Shared pair-generation tail of the flat and two-level scopes: cap
@@ -197,8 +178,7 @@ object Semantic {
   private def pairsFromMembers(member: DataFrame, v: DataFrame, idCol: String,
                                threshold: Double, maxList: Int, big: Boolean,
                                dedup: Boolean, memberFanout: Int): (DataFrame, DataFrame) = {
-    val bounded = Similarity.capGroups(member, maxList, "list")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bounded = Scope.persist(Similarity.capGroups(member, maxList, "list"))
     val joined = if (!big) {
       val a = bounded.select(col(idCol).as("id_a"), col("list"))
       val b = bounded.select(col(idCol).as("id_b"), col("list"))
@@ -232,28 +212,6 @@ object Semantic {
                     threshold: Double, nLists: Int = 16, nProbe: Int = 1,
                     seed: Long = 42L, maxList: Int = Int.MaxValue,
                     keepFarthest: Boolean = false): DataFrame = {
-    val (out, release) = semanticDedupWithRelease(vecs, idCol, vecCol,
-      threshold, nLists, nProbe, seed, maxList, keepFarthest)
-    // the min-id policy's output is already cache-independent (dupGroups
-    // is eager), so release immediately — no pinned frames per call
-    // (round-11 ADVICE). keepFarthest re-reads the caches lazily in the
-    // re-pick, so THAT arm stays pinned while the frame is live; use
-    // [[semanticDedupWithRelease]] to reclaim it in long sessions.
-    if (!keepFarthest) release()
-    out
-  }
-
-  /** [[semanticDedup]] plus a release handle for the two internal
-    * caches (the [[semanticDupsWithRelease]] contract): call after
-    * materializing the result. With `keepFarthest = false` the result
-    * is already eager and the handle may be called immediately; with
-    * `keepFarthest = true` the re-pick reads the caches lazily, so
-    * release only after the result is materialized.
-    */
-  def semanticDedupWithRelease(vecs: DataFrame, idCol: String, vecCol: String,
-                               threshold: Double, nLists: Int = 16, nProbe: Int = 1,
-                               seed: Long = 42L, maxList: Int = Int.MaxValue,
-                               keepFarthest: Boolean = false): (DataFrame, () => Unit) = {
     requireNearDupThreshold(threshold, "semanticDedup")
     dedupFromParts(dupsParts(vecs, idCol, vecCol, threshold, nLists, nProbe,
       seed, maxList), idCol, keepFarthest)
@@ -261,14 +219,17 @@ object Semantic {
 
   /** Shared keep/drop tail of the flat and two-level dedups: connected
     * components over the pair graph, then (optionally) the SemDeDup
-    * keep-farthest re-pick on the dup subset.
+    * keep-farthest re-pick on the dup subset. The min-id policy's output
+    * is cache-independent (dupGroups is eager), so `parts` is built in a
+    * nested [[Scope]] that releases its caches at once; the re-pick reads
+    * them lazily, so they stay with the caller's scope.
     */
-  private def dedupFromParts(parts: (DataFrame, DataFrame, DataFrame, DataFrame, () => Unit),
-                             idCol: String, keepFarthest: Boolean): (DataFrame, () => Unit) = {
-    val (pairs, v, assignedFirst, centroids, release) = parts
-    val groups = graft.text.NearDup.dupGroups(pairs)
-    val out = if (!keepFarthest) groups
+  private def dedupFromParts(parts: => (DataFrame, DataFrame, DataFrame, DataFrame),
+                             idCol: String, keepFarthest: Boolean): DataFrame =
+    if (!keepFarthest) Scope.within(graft.text.NearDup.dupGroups(parts._1))
     else {
+      val (pairs, v, assignedFirst, centroids) = parts
+      val groups = graft.text.NearDup.dupGroups(pairs)
       // distance to own centroid for the dup subset only: semi-join the
       // grouped ids, then one broadcast-centroid join. d² suffices for
       // the argmax (monotone) — no sqrt.
@@ -288,8 +249,6 @@ object Semantic {
       groups.join(keepers, groups("keep_id") === keepers("__grp"))
         .select(col("doc_id"), col("__newkeep").as("keep_id"), col("group_size"))
     }
-    (out, release)
-  }
 
   // ───────────────────────────────────────────────────────────────────
   // Two-level (hierarchical) scope — the corpus-scale quantizer
@@ -342,21 +301,9 @@ object Semantic {
     */
   def semanticDupsTwoLevel(vecs: DataFrame, idCol: String, vecCol: String,
                            threshold: Double, nLists: Int = 16, cProbe: Int = 2,
-                           seed: Long = 42L, maxList: Int = Int.MaxValue): DataFrame =
-    semanticDupsTwoLevelWithRelease(vecs, idCol, vecCol, threshold, nLists,
-      cProbe, seed, maxList)._1
-
-  /** [[semanticDupsTwoLevel]] plus the release handle for the two
-    * internal caches (the [[semanticDupsWithRelease]] contract).
-    */
-  def semanticDupsTwoLevelWithRelease(vecs: DataFrame, idCol: String, vecCol: String,
-                                      threshold: Double, nLists: Int = 16, cProbe: Int = 2,
-                                      seed: Long = 42L, maxList: Int = Int.MaxValue)
-      : (DataFrame, () => Unit) = {
+                           seed: Long = 42L, maxList: Int = Int.MaxValue): DataFrame = {
     requireNearDupThreshold(threshold, "semanticDupsTwoLevel")
-    val (pairs, _, _, _, release) = dupsPartsTwoLevel(vecs, idCol, vecCol,
-      threshold, nLists, cProbe, seed, maxList)
-    (pairs, release)
+    dupsPartsTwoLevel(vecs, idCol, vecCol, threshold, nLists, cProbe, seed, maxList)._1
   }
 
   /** UNGUARDED mid-threshold twin of [[semanticDupsTwoLevel]] for the
@@ -383,21 +330,6 @@ object Semantic {
                             threshold: Double, nLists: Int = 16, cProbe: Int = 2,
                             seed: Long = 42L, maxList: Int = Int.MaxValue,
                             keepFarthest: Boolean = false): DataFrame = {
-    val (out, release) = semanticDedupTwoLevelWithRelease(vecs, idCol, vecCol,
-      threshold, nLists, cProbe, seed, maxList, keepFarthest)
-    // min-id output is eager (dupGroups) — release immediately, the
-    // semanticDedup convention; keepFarthest reads the caches lazily
-    if (!keepFarthest) release()
-    out
-  }
-
-  /** [[semanticDedupTwoLevel]] plus the release handle (the
-    * [[semanticDedupWithRelease]] contract).
-    */
-  def semanticDedupTwoLevelWithRelease(vecs: DataFrame, idCol: String, vecCol: String,
-                                       threshold: Double, nLists: Int = 16, cProbe: Int = 2,
-                                       seed: Long = 42L, maxList: Int = Int.MaxValue,
-                                       keepFarthest: Boolean = false): (DataFrame, () => Unit) = {
     requireNearDupThreshold(threshold, "semanticDedupTwoLevel")
     dedupFromParts(dupsPartsTwoLevel(vecs, idCol, vecCol, threshold, nLists,
       cProbe, seed, maxList), idCol, keepFarthest)
@@ -405,19 +337,17 @@ object Semantic {
 
   /** Two-level pairs + the frames the keep-policy re-pick needs — the
     * [[dupsParts]] tuple shape: (pairs, prepped vectors (persisted),
-    * first-membership assignment (id, list), flat fine-centroid frame,
-    * release thunk).
+    * first-membership assignment (id, list), flat fine-centroid frame).
     */
   private def dupsPartsTwoLevel(vecs: DataFrame, idCol: String, vecCol: String,
                                 threshold: Double, nLists: Int, cProbe: Int,
                                 seed: Long, maxList: Int)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, () => Unit) = {
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     require(threshold >= -1.0 && threshold <= 1.0, s"cosine threshold: $threshold")
     require(cProbe >= 1, s"cProbe must be >= 1, got $cProbe")
     require(!Set("list", "lists", "cos", "centroid", "__v", "__n", "__q").contains(idCol),
       s"id column name '$idCol' is reserved by semanticDupsTwoLevel — rename it first")
-    val v = Similarity.prepped(vecs, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val v = Scope.persist(Similarity.prepped(vecs, idCol, vecCol))
     val tl = Similarity.fitTwoLevelQuantizer(v, nLists, seed)
     val big = Similarity.vectorSideTooBig(v)
     val vq = if (big) v.withColumn("__q", VectorF.quantI8(col("__v"))) else v
@@ -433,11 +363,6 @@ object Semantic {
       maxList, big, dedup = cProbe > 1, memberFanout = cProbe)
     val assignment = if (cProbe == 1) bounded.select(col(idCol), col("list"))
       else mem.select(col(idCol), element_at(col("lists"), 1).as("list"))
-    val release = () => {
-      v.unpersist(blocking = false)
-      bounded.unpersist(blocking = false)
-      ()
-    }
-    (pairs, v, assignment, tl.centroids, release)
+    (pairs, v, assignment, tl.centroids)
   }
 }

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 import graft.functions.VectorF
 
 /** Similarity search over embedding columns (`Array[Float]`) — the
@@ -646,7 +647,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     val (thr, nQueries) =
       try {
         spark.conf.set(fbKey, barFallbackKeys(thresholdRank).toString)
-        val t = bounds
+        val t = Scope.persist(bounds
           .groupBy("query_id")
           .agg(graft.functions.AggF.topKNeighbors(col("neighbor_id"), col("__lb"),
             thresholdRank).as("__tk"))
@@ -656,8 +657,7 @@ object Similarity extends org.apache.spark.internal.Logging {
               // drift (+ headroom): see the post-rounding dominance
               // argument and margin budget in the scaladoc
               .otherwise(element_at(col("__tk"), thresholdRank).getField("cos") - 1.5e-6)
-              .as("__thr"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              .as("__thr")))
         // size-aware bar join (one corpus-proportional count on the
         // persisted bar frame — the only eager step this op adds):
         // within BarBroadcastMaxRows the bar BROADCASTS and the
@@ -873,10 +873,9 @@ object Similarity extends org.apache.spark.internal.Logging {
     // .TwoLevelKernel]]), so they still flow through the pair paths
     val finite = v.select(col("__v")).where(!exists(col("__v"),
       x => isnan(x) || abs(x) === lit(Double.PositiveInfinity)))
-    val train = (if (n > sampleTarget)
+    val train = Scope.persist(if (n > sampleTarget)
       finite.sample(withReplacement = false, sampleTarget.toDouble / n, seed)
     else finite)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val trainCnt = train.count()
       require(trainCnt > 0,
@@ -929,7 +928,7 @@ object Similarity extends org.apache.spark.internal.Logging {
             nullable = false))))
       val centroids = spark.createDataFrame(flat.toSeq).toDF("list", "centroid")
       TwoLevelQuantizer(structure, centroids)
-    } finally train.unpersist(blocking = false)
+    } finally Scope.release(train)
   }
 
   /** Two-level membership projection: each row of `v` (prepped; `extra`
@@ -969,8 +968,8 @@ object Similarity extends org.apache.spark.internal.Logging {
   private def ivfPipeline(v: DataFrame, idCol: String, k: Int, nProbe: Int,
                           lists: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
     val big = vectorSideTooBig(v)
-    val near = (if (big) lists(withQuant(v), QuantCols) else lists(v, Nil))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val near = Scope.persist(
+      if (big) lists(withQuant(v), QuantCols) else lists(v, Nil))
     def side(id: String, s: String, list: Column): DataFrame =
       if (big) quantSide(near, idCol, id, s, Seq(list.as("list")))
       else near.select(col(idCol).as(id), list.as("list"))
@@ -999,8 +998,7 @@ object Similarity extends org.apache.spark.internal.Logging {
   def ivfTopK(vecs: DataFrame, idCol: String, vecCol: String, k: Int,
               nLists: Int = 16, nProbe: Int = 4, seed: Long = 42L): DataFrame = {
     import org.apache.spark.ml.functions.array_to_vector
-    val v = prepped(vecs, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val v = Scope.persist(prepped(vecs, idCol, vecCol))
     val centroids = centroidFrame(v.sparkSession, fitQuantizer(
       v.select(col(idCol), array_to_vector(col("__v")).as("features")), nLists, seed))
     ivfPipeline(v, idCol, k, nProbe, nearestLists(_, idCol, centroids, nProbe, _))
@@ -1048,8 +1046,7 @@ object Similarity extends org.apache.spark.internal.Logging {
                       seed: Long = 42L): DataFrame = {
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
     val cProbe = nProbe + 2
-    val v = prepped(vecs, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val v = Scope.persist(prepped(vecs, idCol, vecCol))
     val tl = fitTwoLevelQuantizer(v, nLists, seed)
     ivfPipeline(v, idCol, k, nProbe, (vIn, extra) => perRowLists(vIn, idCol, extra,
       tl.structure, VectorF.twoLevelProbes(col("__v"), col("__cells"), cProbe, nProbe)))
@@ -1082,8 +1079,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     */
   def ivfTopKFixed(vecs: DataFrame, idCol: String, vecCol: String, k: Int,
                    nLists: Int = 16, nProbe: Int = 4): DataFrame = {
-    val v = prepped(vecs, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val v = Scope.persist(prepped(vecs, idCol, vecCol))
     val centroids = v.orderBy(col(idCol)).limit(nLists)
       .select(row_number().over(Window.partitionBy(lit(1)).orderBy(idCol)).as("__rn"),
         col("__v").as("centroid"))
@@ -1152,7 +1148,7 @@ object Similarity extends org.apache.spark.internal.Logging {
       // makes int8SideBytes' optimizer estimate cache-accurate. Catalog
       // regime (the branch above) is untouched — no persist, plans
       // byte-identical.
-      v.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      Scope.persist(v)
       val corpusRows = v.count()
       val bounded = capGroups(sigRows(withQuant(v), idCol, planes, tables, QuantCols),
         maxBucket, "tbl", "sig")

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.core.Scope
 import graft.functions.QuantKernel
 
 /** One hyperplane-LSH-banded vector row: `bucket` renders (table,
@@ -95,22 +96,7 @@ object AnnStream {
                        planes: Int = 8, tables: Int = 8,
                        maxBucketSize: Int = 256,
                        ttlMs: Long = Long.MaxValue,
-                       threshold: Option[Double] = None): Dataset[AnnCandidate] =
-    cosineCandidatesReleasable(vecs, idCol, vecCol, tsCol, planes, tables,
-      maxBucketSize, ttlMs, threshold)._1
-
-  /** [[cosineCandidates]] plus a release handle that unpersists the op's
-    * internal projection cache (no-op on streams) — targeted release for
-    * long-lived drivers, instead of the global clearCache that would also
-    * evict the caller's cached frames (round-5 ADVICE).
-    */
-  def cosineCandidatesReleasable(vecs: DataFrame, idCol: String, vecCol: String,
-                       tsCol: Option[String] = None,
-                       planes: Int = 8, tables: Int = 8,
-                       maxBucketSize: Int = 256,
-                       ttlMs: Long = Long.MaxValue,
-                       threshold: Option[Double] = None)
-      : (Dataset[AnnCandidate], () => Unit) = {
+                       threshold: Option[Double] = None): Dataset[AnnCandidate] = {
     import vecs.sparkSession.implicits._
     val tsExpr: Column = tsCol match {
       // unix_millis, NOT cast-to-long×1000: the long cast floors to whole
@@ -127,11 +113,9 @@ object AnnStream {
     // barrier CollapseProject inlines the full hyperplane projection into
     // every packSignature slice, recomputing it per table (the same
     // pathology fixed for the minhash fold in NearDupStream). The
-    // returned Dataset is lazy, so the persist outlives this call — the
-    // paired release handle unpersists exactly this frame after the
-    // caller's action.
-    val p = if (vecs.isStreaming) p0
-      else p0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // returned Dataset is lazy and reads the cache, so it belongs to the
+    // caller's [[Scope]], whose close releases it.
+    val p = if (vecs.isStreaming) p0 else Scope.persist(p0)
     val banded = p.select(col("id"), col("vec"), col("ts"),
         explode(array((0 until tables).map(t =>
           struct(lit(t).as("tbl"),
@@ -141,7 +125,7 @@ object AnnStream {
       .as[VecBanded]
 
     val grouped = banded.groupByKey(_.bucket)
-    val result = threshold match {
+    threshold match {
       case None => grouped.flatMapGroupsWithState[VecBucketState, AnnCandidate](
         OutputMode.Append, GroupStateTimeout.NoTimeout)(
         exactPairs(maxBucketSize, ttlMs))
@@ -149,10 +133,6 @@ object AnnStream {
         OutputMode.Append, GroupStateTimeout.NoTimeout)(
         boundedPairs(maxBucketSize, ttlMs, t))
     }
-    val release: () => Unit =
-      if (vecs.isStreaming) () => ()
-      else () => { p.unpersist(blocking = false); () }
-    (result, release)
   }
 
   private def dot(a: Array[Double], b: Array[Double]): Double = {

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.core.Scope
 
 /** One LSH-banded row: `bucket` is the string-rendered (band, signature
   * slice) key, `sig` the full MinHash signature, `ts` the event time in
@@ -62,21 +63,7 @@ object NearDupStream {
                     tsCol: Option[String] = None,
                     shingleWidth: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
                     maxBucketSize: Int = 256,
-                    ttlMs: Long = Long.MaxValue): Dataset[LshCandidate] =
-    lshCandidatesReleasable(docs, idCol, textCol, tsCol, shingleWidth,
-      bands, rowsPerBand, maxBucketSize, ttlMs)._1
-
-  /** [[lshCandidates]] plus a release handle that unpersists the op's
-    * internal signature cache (no-op on streams). Long-lived drivers that
-    * embed this op should call the handle after their action instead of
-    * the sledgehammer `cacheManager.clearCache()`, which would also evict
-    * the caller's own cached frames (round-5 ADVICE).
-    */
-  def lshCandidatesReleasable(docs: DataFrame, idCol: String, textCol: String,
-                    tsCol: Option[String] = None,
-                    shingleWidth: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
-                    maxBucketSize: Int = 256,
-                    ttlMs: Long = Long.MaxValue): (Dataset[LshCandidate], () => Unit) = {
+                    ttlMs: Long = Long.MaxValue): Dataset[LshCandidate] = {
     import docs.sparkSession.implicits._
     val nHashes = bands * rowsPerBand
     val tsExpr: Column = tsCol match {
@@ -103,12 +90,9 @@ object NearDupStream {
     // persist at NearDup.scala:84-87, same reason; measured 2.3x on
     // e_lshdup). Streaming frames cannot persist — there the per-batch
     // incremental plan evaluates each row once anyway. The returned
-    // Dataset is LAZY, so the persist outlives this call — the paired
-    // release handle unpersists exactly this frame after the caller's
-    // action (the test harness's clearCache between queries also works,
-    // but evicts everything).
-    val sig = if (docs.isStreaming) sig0
-      else sig0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // Dataset is LAZY and reads the cache, so it belongs to the caller's
+    // [[Scope]], whose close releases it.
+    val sig = if (docs.isStreaming) sig0 else Scope.persist(sig0)
     // same banding as NearDup.lshBands, but the full signature rides
     // along (the state needs it for the agreement estimate)
     val bandRows = (0 until bands).map { b =>
@@ -120,7 +104,7 @@ object NearDupStream {
       .select(concat_ws(":", col("bb.band"), concat_ws(",", col("bb.bucket"))).as("bucket"),
         col("id"), col("sig"), col("ts"))
       .as[BandKeyed]
-    val result = banded.groupByKey(_.bucket)
+    banded.groupByKey(_.bucket)
       .flatMapGroupsWithState[BucketState, LshCandidate](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: String, it: Iterator[BandKeyed], state: GroupState[BucketState]) =>
@@ -153,9 +137,5 @@ object NearDupStream {
           state.update(st)
           out.iterator
       }
-    val release: () => Unit =
-      if (docs.isStreaming) () => ()
-      else () => { sig.unpersist(blocking = false); () }
-    (result, release)
   }
 }

@@ -94,22 +94,4 @@ object Taq {
           / sum(when(col("prev_mid").isNotNull, col("volume"))))
           .as("eff_halfspread"))
   }
-
-  /** Time-weighted quote bins (bin_quotes taq.py:417-491, A8): each
-    * quote's state lasts until the next quote; its weight in a bin is the
-    * OVERLAP of [us, next_us) with the bin — a quote spanning several
-    * bins contributes to each (the reference's reindex-onto-union(ts,
-    * bin-edges) semantics, including the cross-bin forward fill).
-    *
-    * Implementation: explode each quote's validity interval onto the bin
-    * grid it covers, then weighted aggregation per (symbol, bin). The
-    * explode factor is bounded by interval length / bin width.
-    */
-  def binQuotes(quotes: DataFrame, binUs: Long, sessionEndUs: Long): DataFrame =
-    graft.ops.TimeWeighted.bins(
-      quotes
-        .withColumn("spread", col("ask") - col("bid"))
-        .withColumn("mid", (col("bid") + col("ask")) / 2),
-      Seq("symbol"), "us", "seqno",
-      Seq("spread", "mid", "bidsize", "asksize"), binUs, sessionEndUs)
 }

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 import graft.ops.Dedup
 
 /** The end-to-end training-data cleaning chain (builder brief §2.10's
@@ -91,31 +92,7 @@ object CorpusPipeline {
             maxOverlap: Double = 0.0,
             lineDedupMinDocs: Option[Int] = None,
             lmModel: Option[NgramLm.Model] = None,
-            maxLmBits: Double = 12.0): DataFrame =
-    cleanWithRelease(corpus, idCol, textCol, benchmark, benchTextCol,
-      minQuality, maxDupLineFrac, maxTopBigramFrac, shingleWidth, bands,
-      rowsPerBand, nearDupThreshold, decontaminateWidth, maxOverlap,
-      lineDedupMinDocs, lmModel, maxLmBits)._1
-
-  /** [[clean]] plus a release handle for the internal scored-survivor
-    * persist (the [[LineDedup.dedupLinesWithRelease]] shape — round-11
-    * verdict closed the API asymmetry): call it after materializing the
-    * result when cleaning many corpora in one session; later
-    * re-evaluations of the returned frame stay correct, they just
-    * recompute the scored survivors.
-    */
-  def cleanWithRelease(corpus: DataFrame, idCol: String, textCol: String,
-                       benchmark: DataFrame, benchTextCol: String,
-                       minQuality: Double = 0.65,
-                       maxDupLineFrac: Double = 0.30,
-                       maxTopBigramFrac: Double = 0.20,
-                       shingleWidth: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
-                       nearDupThreshold: Double = 0.5,
-                       decontaminateWidth: Int = 8,
-                       maxOverlap: Double = 0.0,
-                       lineDedupMinDocs: Option[Int] = None,
-                       lmModel: Option[NgramLm.Model] = None,
-                       maxLmBits: Double = 12.0): (DataFrame, () => Unit) = {
+            maxLmBits: Double = 12.0): DataFrame = {
     // stage 0 (opt-in) — cross-document boilerplate-line scrub on the
     // RAW corpus; everything downstream sees the de-boilerplated text.
     // pinWidth wraps the RAW corpus in both arms (never the dedupLines
@@ -167,35 +144,51 @@ object CorpusPipeline {
     // shingle head, the near-dup anti-join left side, and the
     // decontamination membership probe) — without the persist the
     // corpus scan + kernel projection re-execute once per consumer,
-    // which at 100 TB is two full extra corpus scans. This persist
-    // stays pinned as long as the RETURNED frame is live (it reads the
-    // cache lazily); a caller cleaning many corpora in one session
-    // releases it after materializing the result via the
-    // [[cleanWithRelease]] handle — the same contract as
-    // [[NearDup.minHashDedup]]'s shingle persist.
-    val exactKept = Dedup.keepFirst(gated, Seq(textCol), Seq(col(idCol)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // which at 100 TB is two full extra corpus scans. The RETURNED frame
+    // reads this cache lazily, so it lives as long as the caller's
+    // [[Scope]].
+    val exactKept = Scope.persist(Dedup.keepFirst(gated, Seq(textCol), Seq(col(idCol))))
 
     // stage 5 — near dedup: verified MinHash pairs → duplicate groups →
-    // drop non-canonical members (transitive: A≈B≈C keeps only min id)
-    val (pairs, releaseShingles) = NearDup.minHashDedupWithRelease(
-      exactKept.select(col(idCol), col(textCol)), idCol, textCol,
-      shingleWidth, bands, rowsPerBand, nearDupThreshold)
-    val drops = NearDup.dupGroups(pairs)
+    // drop non-canonical members (transitive: A≈B≈C keeps only min id).
+    // dupGroups consumes the pairs EAGERLY (its tier count) and its
+    // output is independent of them (driver rows on its local tier,
+    // per-round localCheckpoints on the distributed one), so the
+    // shingle cache is dead weight once it returns: a nested scope
+    // releases it instead of pinning one shingle frame per clean() call.
+    val drops = Scope.within(NearDup.dupGroups(NearDup.minHashDedup(
+        exactKept.select(col(idCol), col(textCol)), idCol, textCol,
+        shingleWidth, bands, rowsPerBand, nearDupThreshold)))
       .where(col("doc_id") =!= col("keep_id"))
       .select(col("doc_id").as(idCol))
-    // dupGroups consumed the pairs EAGERLY (its tier count) and its
-    // output is independent of them (driver rows on its local tier,
-    // per-round localCheckpoints on the distributed one), so the shingle cache
-    // is dead weight from here — release it instead of pinning one
-    // shingle frame per clean() call for the session.
-    releaseShingles()
     val nearKept = exactKept.join(drops, Seq(idCol), "left_anti")
 
     // stage 6 — benchmark decontamination on the surviving corpus
-    val out = Decontaminate.decontaminate(nearKept, idCol, textCol,
+    Decontaminate.decontaminate(nearKept, idCol, textCol,
       benchmark, benchTextCol, decontaminateWidth, maxOverlap)
-    (out, () => { exactKept.unpersist(blocking = false); () })
+  }
+
+  /** [[clean]] run in its own [[Scope]]: the handle closes that scope,
+    * which releases the caches the cleaned frame reads. Call it once the
+    * frame is consumed. Kept for the benchmark's corpus operation; a
+    * caller that runs its own scope calls [[clean]].
+    */
+  def cleanWithRelease(corpus: DataFrame, idCol: String, textCol: String,
+                       benchmark: DataFrame, benchTextCol: String,
+                       minQuality: Double = 0.65,
+                       maxDupLineFrac: Double = 0.30,
+                       maxTopBigramFrac: Double = 0.20,
+                       shingleWidth: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
+                       nearDupThreshold: Double = 0.5,
+                       decontaminateWidth: Int = 8,
+                       maxOverlap: Double = 0.0,
+                       lineDedupMinDocs: Option[Int] = None,
+                       lmModel: Option[NgramLm.Model] = None,
+                       maxLmBits: Double = 12.0): (DataFrame, () => Unit) = {
+    val (out, scope) = Scope.open(clean(corpus, idCol, textCol, benchmark, benchTextCol,
+      minQuality, maxDupLineFrac, maxTopBigramFrac, shingleWidth, bands, rowsPerBand,
+      nearDupThreshold, decontaminateWidth, maxOverlap, lineDedupMinDocs, lmModel, maxLmBits))
+    (out, () => scope.close())
   }
 
   /** Training-prep tail: window the cleaned corpus into model-context

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 
 /** Cross-document line-level deduplication: remove lines whose trimmed
   * text recurs across `minDocs`-or-more distinct documents — the
@@ -87,21 +88,11 @@ object LineDedup {
     * the surviving lines rejoined with '\n' in original order (documents
     * whose every line is boilerplate keep an empty text), and a
     * `lines_removed` count is appended. All other columns pass through.
-    * The internal hit set stays persisted while the returned frame is
-    * live; use [[dedupLinesWithRelease]] when cleaning many corpora in
-    * one session.
+    * The returned frame reads the internal hit-set cache, which the
+    * caller's [[Scope]] releases when it closes.
     */
   def dedupLines(corpus: DataFrame, idCol: String, textCol: String,
-                 minDocs: Int = 2, minLineChars: Int = 4): DataFrame =
-    dedupLinesWithRelease(corpus, idCol, textCol, minDocs, minLineChars)._1
-
-  /** [[dedupLines]] plus a release handle that unpersists the internal
-    * hit-set cache (the [[NearDup.minHashDedupWithRelease]] shape) —
-    * call it after materializing the result; later re-evaluations of
-    * the returned frame stay correct, they just recompute the hits.
-    */
-  def dedupLinesWithRelease(corpus: DataFrame, idCol: String, textCol: String,
-                            minDocs: Int = 2, minLineChars: Int = 4): (DataFrame, () => Unit) = {
+                 minDocs: Int = 2, minLineChars: Int = 4): DataFrame = {
     require(!corpus.columns.contains("lines_removed"),
       "input already has a 'lines_removed' column — drop or rename it first")
     Reserved.foreach(r => require(!corpus.columns.contains(r),
@@ -114,10 +105,9 @@ object LineDedup {
     // counts) would each re-derive the whole frequency subtree — two
     // extra corpus passes — and the hit set is ∝ boilerplate, not the
     // corpus.
-    val hits = linesOf(corpus, idCol, textCol)
+    val hits = Scope.persist(linesOf(corpus, idCol, textCol)
       .join(frequent, candidateKey(minLineChars) === col("__key"))
-      .select(col("__id"), col("__pos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("__id"), col("__pos")))
     // Broadcast-lie guard (round 15, the minhash-fix sweep): `hits` and
     // the frames derived from it (`rebuilt`, `removed`) are ∝
     // boilerplate — corpus-proportional on any corpus with prevalent
@@ -174,11 +164,10 @@ object LineDedup {
           .otherwise(col(textCol)).as(textCol)
       case c => col(c)
     } :+ coalesce(col("__removed"), lit(0L)).as("lines_removed")
-    val out = corpus
+    corpus
       .join(noBcastPatch(rebuilt), col(idCol) === rebuilt("__id"), "left")
       .drop("__id")
       .join(noBcastPatch(removed), col(idCol) === removed("__id"), "left")
       .select(outCols.toIndexedSeq: _*)
-    (out, () => { hits.unpersist(); () })
   }
 }

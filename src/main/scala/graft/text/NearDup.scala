@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Scope
 
 /** Near-duplicate detection for the LLM-data pipeline surface:
   * exact (hash-groupBy), n-gram Jaccard, MinHash+LSH, and SimHash — all
@@ -45,7 +46,7 @@ object NearDup {
     * per-partition build maps grow as N/P while the local stress fixes
     * P = 32, whereas SMJ spills gracefully and is the exact plan the
     * fast ×729 run executed) — see the broadcast-lie
-    * note in [[minHashDedupWithRelease]], which passes it from an EXACT
+    * note in [[minHashDedup]], which passes it from an EXACT
     * row-count probe: band signatures are repetitive longs that lz4
     * compresses far below their in-memory size, so AQE's runtime
     * re-plan — reading COMPRESSED shuffle bytes against the broadcast
@@ -86,25 +87,16 @@ object NearDup {
     * distinct per doc, so |A∩B| is a groupBy-count over matching
     * (pair, shingle) rows and |A∪B| = |A|+|B|−|A∩B| — linear in shared
     * shingles instead of quadratic array intersection per candidate.
+    *
+    * The returned pairs read the persisted shingle frame lazily, so the
+    * cache lives as long as the caller's [[Scope]]. A caller that
+    * consumes the pairs eagerly (as [[dupGroups]] does) can run both in
+    * a nested scope to release the shingles at once;
+    * [[CorpusPipeline.clean]] does.
     */
   def minHashDedup(docs: DataFrame, idCol: String, textCol: String,
                    shingleWidth: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
-                   threshold: Double = 0.5): DataFrame =
-    minHashDedupWithRelease(docs, idCol, textCol, shingleWidth, bands,
-      rowsPerBand, threshold)._1
-
-  /** [[minHashDedup]] plus a release handle for the persisted shingle
-    * frame. The public op's returned pairs frame depends LAZILY on that
-    * persist, so it must stay pinned for the session; a caller that
-    * consumes the pairs EAGERLY (e.g. [[dupGroups]], whose size-probe
-    * count materializes them) can call the handle afterwards to release
-    * the cache instead of pinning one shingle frame per invocation —
-    * [[CorpusPipeline.clean]] does exactly that.
-    */
-  private[graft] def minHashDedupWithRelease(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleWidth: Int, bands: Int, rowsPerBand: Int,
-      threshold: Double): (DataFrame, () => Unit) = {
+                   threshold: Double = 0.5): DataFrame = {
     // the shingle fold is the expensive per-row kernel and feeds THREE
     // consumers (signatures, sizes, the exploded verify join) — persist it
     // once instead of recomputing the fold per branch (the round-1 plan
@@ -123,10 +115,9 @@ object NearDup {
     // serial materialization path while the fold it widens already
     // overlaps the candidate/verify shuffles (the original widening
     // A/B's verdict, still true).
-    val sh = docs
+    val sh = Scope.persist(docs
       .select(col(idCol), TextOps.shingleHashes(col(textCol), shingleWidth).as("hs"))
-      .where(size(col("hs")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .where(size(col("hs")) > 0))
     val sig = sh.withColumn("sig",
       graft.functions.HashF.minhashPolySigHashes(col("hs"), bands * rowsPerBand))
     // Size probe for the broadcast-lie guard: when the banded or
@@ -176,13 +167,12 @@ object NearDup {
     // sizes stays un-hinted: one 12-byte row per doc — its broadcast
     // build is sub-second at any decade measured, and hinting it would
     // force a shuffle of the (small) verified-pair stream for nothing
-    val verified = inter
+    inter
       .join(sizes.select(col(idCol).as("id_a"), col("nsh").as("na")), "id_a")
       .join(sizes.select(col(idCol).as("id_b"), col("nsh").as("nb")), "id_b")
       .select(col("id_a"), col("id_b"),
         round(col("inter").cast("double") / (col("na") + col("nb") - col("inter")), 6).as("jaccard"))
       .where(col("jaccard") >= threshold)
-    (verified, () => { sh.unpersist(blocking = false); () })
   }
 
   /** Near-duplicate CLUSTERS from verified pair output — the corpus-dedup
@@ -201,8 +191,7 @@ object NearDup {
     // the verified pairs are the OUTPUT of the whole minhash pipeline and
     // feed every CC round (or the local collect) — persist them so the
     // shingle/signature/verify chain runs once, not once per consumer
-    val p = pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val p = Scope.persist(pairs.select(col(idA).as("src"), col(idB).as("dst")))
     // dedup pair graphs are usually TINY relative to the corpus (the
     // near-dup rate is per-mille at web scale): within `maxLocalEdges`
     // the driver-local union-find replaces the min-label iteration's ~2
@@ -228,7 +217,7 @@ object NearDup {
     // both tiers read the pairs eagerly (the collect, or the per-round
     // localCheckpoints), so the returned frame no longer depends on the
     // persist — release it instead of pinning one cached frame per call
-    p.unpersist(blocking = false)
+    Scope.release(p)
     out
   }
 
@@ -288,9 +277,8 @@ object NearDup {
     // pinWidth: the tokenize+simhash kernel is the plan's serial head and
     // ran at scan width (one task for the whole sf0.1 table — the scan is
     // byte-split, the kernel is CPU-dense); no-op on a wide corpus scan.
-    val sigs = graft.core.Tables.pinWidth(docs)
-      .select(col(idCol), simHash(col(textCol)).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = Scope.persist(graft.core.Tables.pinWidth(docs)
+      .select(col(idCol), simHash(col(textCol)).as("sig")))
     val banded = sigs.select(col(idCol), col("sig"),
       explode(array((0 until nb).map { bnd =>
         val width = if (bnd == nb - 1) 64 - w * (nb - 1) else w
@@ -347,9 +335,8 @@ object NearDup {
     // ×243 banded self-join broadcasting a 10.9 M-row driver relation
     // while ×729 ran SMJ)
     val bandsBig = simHashBandedBig(docs, bandCuts.length, sigBytes = 24)
-    val sigs = graft.core.Tables.pinWidth(docs)
-      .select(col(idCol), simHash128(col(textCol)).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = Scope.persist(graft.core.Tables.pinWidth(docs)
+      .select(col(idCol), simHash128(col(textCol)).as("sig")))
     val banded = sigs.select(col(idCol), col("sig"),
       explode(array(bandCuts.zipWithIndex.map { case ((half, off, w), bnd) =>
         struct(lit(bnd).as("band"),

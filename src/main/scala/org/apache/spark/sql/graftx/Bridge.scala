@@ -44,6 +44,13 @@ object Bridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .queryExecution.optimizedPlan.stats.sizeInBytes
 
+  /** The plan of the `CacheManager` entry that serves `df`, if any. */
+  def cachedPlan(df: org.apache.spark.sql.DataFrame)
+      : Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] =
+    df.sparkSession.sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]])
+      .map(_.plan)
+
   /** The job group a job was submitted under, read with Spark's own
     * (`private[spark]`) property key.
     */

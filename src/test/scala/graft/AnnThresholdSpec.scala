@@ -71,12 +71,10 @@ class AnnThresholdSpec extends SparkSpec {
     q.stop()
     val streamed = spark.table("ann_thr_batchpar")
       .select("id_a", "id_b").distinct().as[(Long, Long)].collect().toSet
-    val (batchDs, release) = AnnStream.cosineCandidatesReleasable(
-      all.toDF("vec_id", "embedding"), "vec_id", "embedding",
-      planes = 6, tables = 8, maxBucketSize = 1000, threshold = Some(t))
-    val batch = batchDs.toDF().select("id_a", "id_b").distinct()
-      .as[(Long, Long)].collect().toSet
-    release()
+    val batch = graft.core.Scope.within(AnnStream.cosineCandidates(
+        all.toDF("vec_id", "embedding"), "vec_id", "embedding",
+        planes = 6, tables = 8, maxBucketSize = 1000, threshold = Some(t))
+      .toDF().select("id_a", "id_b").distinct().as[(Long, Long)].collect().toSet)
     assert(streamed.nonEmpty && streamed == batch,
       s"streamed ${streamed.size} vs batch ${batch.size}")
   }

@@ -125,4 +125,67 @@ class AsOfPropertySpec extends SparkSpec {
       }
     }
   }
+
+  // keys and times spread over negative values: an int slot read as a
+  // long, or a date read as a timestamp, would misorder or miss rows
+  private val signedGen = Gen.listOfN(120, for {
+    k <- Gen.choose(-3, 3)
+    t <- Gen.choose(-40, 40)
+  } yield (k * 70000, t))
+
+  test("mixed key and time types agree with the twins (int, bigint, date, timestamp)") {
+    // (left key, right key, left time, right time); a time given as an
+    // integer day d reads d days from the epoch as a date and midnight
+    // of that day as a timestamp
+    val shapes = Seq(
+      ("bigint", "int", "bigint", "int"),
+      ("int", "bigint", "int", "bigint"),
+      ("int", "int", "date", "timestamp"),
+      ("bigint", "bigint", "timestamp", "date"))
+    def typed(df: DataFrame, keyType: String, timeType: String) = df.select(
+      col("k").cast(keyType).as("k"),
+      (timeType match {
+        case "date" => date_add(lit("1970-01-01").cast("date"), col("t"))
+        case "timestamp" => timestamp_seconds(col("t").cast("long") * 86400L)
+        case t => col("t").cast(t)
+      }).as("t"),
+      col("payload"))
+    for (seed <- Seq(5L, 77L)) {
+      val leftRows = sample(signedGen, seed).zipWithIndex
+        .map { case ((k, t), i) => (k, t, i.toLong) }
+      val rightRows = sample(signedGen, seed + 1).distinct.zipWithIndex
+        .map { case ((k, t), i) => (k, t, i.toDouble) }
+      val left0 = leftRows.toDF("k", "t", "payload")
+      val right0 = rightRows.toDF("k", "t", "payload")
+      for ((lk, rk, lt, rt) <- shapes; forward <- Seq(false, true); exact <- Seq(true, false)) {
+        val left = typed(left0, lk, lt).withColumnRenamed("payload", "rid")
+        val right = typed(right0, rk, rt).withColumnRenamed("payload", "v")
+        def rows(df: DataFrame) = df.select(col("rid").cast("long"), col("v"))
+          .as[(Long, Option[Double])].collect().toMap
+        val (native, twin) =
+          if (forward) (AsOf.joinForward(left, right, Seq("k"), "t", Seq("v"), exact),
+            SpecTwins.unionMergeForward(left, right, Seq("k"), "t", Seq("v"), exact))
+          else (AsOf.joinBackward(left, right, Seq("k"), "t", Seq("v"), exact),
+            SpecTwins.unionMergeBackward(left, right, Seq("k"), "t", Seq("v"), exact))
+        val ctx = s"seed=$seed keys=$lk/$rk times=$lt/$rt forward=$forward exact=$exact"
+        val want = rows(twin)
+        assert(want.values.count(_.isDefined) > leftRows.size / 4, s"vacuous twin ($ctx)")
+        assert(rows(native) == want, s"native vs union-merge twin ($ctx)")
+        assert(native.schema("k").dataType == left.schema("k").dataType &&
+          native.schema("t").dataType == left.schema("t").dataType,
+          s"the left columns keep their types ($ctx)")
+      }
+    }
+  }
+
+  test("a key or time pair with no common type is rejected") {
+    val left = Seq(("a", 1, 0L)).toDF("k", "t", "rid")
+    val right = Seq((1, 1, 2.0)).toDF("k", "t", "v")
+    intercept[IllegalArgumentException](
+      AsOf.joinBackward(left, right, Seq("k"), "t", Seq("v")))
+    val dated = Seq((1, 0L)).toDF("k", "rid")
+      .withColumn("t", date_add(lit("1970-01-01").cast("date"), lit(1)))
+    intercept[IllegalArgumentException](
+      AsOf.joinForward(dated, right, Seq("k"), "t", Seq("v")))
+  }
 }

@@ -26,7 +26,7 @@ import graft.graph.GraphOps
   *  - Tier equivalence: the shuffle tier (forced via broadcast
   *    threshold -1) must produce exactly the broadcast tier's labels.
   *  - eigenvector/pageRank release every cache they persist, on both
-  *    tiers (`Centrality.tieredByKey`'s handle plus their node frame).
+  *    tiers (`Centrality.tieredByKey`'s edge cache plus their node frame).
   */
 class CCRoundShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._

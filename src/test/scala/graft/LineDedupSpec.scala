@@ -109,14 +109,14 @@ class LineDedupSpec extends SparkSpec {
     intercept[IllegalArgumentException](LineDedup.dedupLines(counted, "doc_id", "text"))
   }
 
-  test("dedupLinesWithRelease: release unpersists the hit cache; the frame stays correct") {
+  test("dedupLines in a scope: closing it unpersists the hit cache; the frame stays correct") {
     spark.sharedState.cacheManager.clearCache() // isolate from earlier tests
-    val (out, release) = LineDedup.dedupLinesWithRelease(docs, "doc_id", "text")
+    val (out, scope) = graft.core.Scope.open(LineDedup.dedupLines(docs, "doc_id", "text"))
     val before = out.select("doc_id", "text").as[(Long, String)].collect().toMap
     assert(!spark.sharedState.cacheManager.isEmpty, "hit set should be cached")
-    release()
+    scope.close()
     assert(spark.sharedState.cacheManager.isEmpty,
-      "release() must drop the internal hit cache")
+      "closing the scope must drop the internal hit cache")
     // re-evaluation after release recomputes and agrees
     assert(out.select("doc_id", "text").as[(Long, String)].collect().toMap == before)
   }

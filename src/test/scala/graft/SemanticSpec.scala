@@ -34,13 +34,13 @@ class SemanticSpec extends SparkSpec {
     // arm exercises the prefilter's survivor volume at the loosest
     // accepted threshold; the guard owns everything below it
     for (threshold <- Seq(0.7, 0.9)) {
-      def run() = {
-        val (pairs, release) = Semantic.semanticDupsWithRelease(vecs, "vec_id",
+      // one scope per run: don't pin 8 MEMORY_AND_DISK caches in the
+      // shared session
+      def run() = graft.core.Scope.within {
+        Semantic.semanticDups(vecs, "vec_id",
           "embedding", threshold = threshold, nLists = 8, nProbe = 2, maxList = 10000)
-        val out = pairs.select(col("id_a"), col("id_b"), col("cos"))
+          .select(col("id_a"), col("id_b"), col("cos"))
           .as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
-        release() // don't pin 8 MEMORY_AND_DISK caches in the shared session
-        out
       }
       val cat = run()
       val big = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(run())
@@ -218,29 +218,30 @@ class SemanticSpec extends SparkSpec {
       .sameElements(Array("id_a", "id_b", "cos")))
   }
 
-  test("release handles drop the internal caches; frames stay correct after release") {
+  test("closing the scope drops the internal caches; frames stay correct after close") {
+    import graft.core.Scope
     spark.sharedState.cacheManager.clearCache() // isolate from earlier tests
-    val (pairs, release) = Semantic.semanticDupsWithRelease(
-      clustered, "vec_id", "embedding", 0.95, nLists = 10, seed = 7L)
+    val (pairs, scope) = Scope.open(Semantic.semanticDups(
+      clustered, "vec_id", "embedding", 0.95, nLists = 10, seed = 7L))
     val before = pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(!spark.sharedState.cacheManager.isEmpty, "vector/assignment caches live")
-    release()
+    scope.close()
     assert(spark.sharedState.cacheManager.isEmpty,
-      "release() must unpersist both internal caches")
-    // re-evaluation after release recomputes and agrees
+      "closing the scope must unpersist both internal caches")
+    // re-evaluation after the close recomputes and agrees
     assert(pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet == before)
     // the default min-id dedup is eager and releases its caches itself
     Semantic.semanticDedup(clustered, "vec_id", "embedding", 0.95,
       nLists = 10, seed = 7L).count()
     assert(spark.sharedState.cacheManager.isEmpty,
       "semanticDedup (min-id policy) must not pin caches after returning")
-    // keepFarthest reads the caches lazily — its WithRelease twin hands
-    // the caller the same handle
-    val (far, releaseFar) = Semantic.semanticDedupWithRelease(
+    // keepFarthest reads the caches lazily, so they stay with the scope
+    val (far, farScope) = Scope.open(Semantic.semanticDedup(
       clustered, "vec_id", "embedding", 0.95, nLists = 10, seed = 7L,
-      keepFarthest = true)
+      keepFarthest = true))
     val want = far.select("doc_id", "keep_id").as[(Long, Long)].collect().toSet
-    releaseFar()
+    assert(!spark.sharedState.cacheManager.isEmpty, "keepFarthest reads the caches lazily")
+    farScope.close()
     assert(spark.sharedState.cacheManager.isEmpty)
     assert(far.select("doc_id", "keep_id").as[(Long, Long)].collect().toSet == want)
   }

@@ -543,27 +543,26 @@ class StreamingSpec extends SparkSpec {
     assert(pairs == Set((1L, 2L), (3L, 4L)), s"pairs: $pairs")
   }
 
-  test("releasable batch ops unpersist their internal cache via the handle") {
+  test("batch ops in a scope: closing it unpersists their internal cache") {
+    import graft.core.Scope
     import graft.streaming.{AnnStream, NearDupStream}
     val cm = spark.sharedState.cacheManager
     cm.clearCache()
 
     val docs = Seq((1L, "aa bb cc dd ee ff"), (2L, "aa bb cc dd ee gg"))
       .toDF("doc_id", "text")
-    val (cands, release) =
-      NearDupStream.lshCandidatesReleasable(docs, "doc_id", "text")
+    val (cands, scope) = Scope.open(NearDupStream.lshCandidates(docs, "doc_id", "text"))
     cands.collect()
     assert(!cm.isEmpty, "batch path should persist the signature frame")
-    release()
-    assert(cm.isEmpty, "release handle should unpersist the op's cache")
+    scope.close()
+    assert(cm.isEmpty, "closing the scope should unpersist the op's cache")
 
     val vecs = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.9f, 0.1f)))
       .toDF("vec_id", "embedding")
-    val (acands, arelease) =
-      AnnStream.cosineCandidatesReleasable(vecs, "vec_id", "embedding")
+    val (acands, ascope) = Scope.open(AnnStream.cosineCandidates(vecs, "vec_id", "embedding"))
     acands.collect()
     assert(!cm.isEmpty, "batch path should persist the projection frame")
-    arelease()
-    assert(cm.isEmpty, "release handle should unpersist the op's cache")
+    ascope.close()
+    assert(cm.isEmpty, "closing the scope should unpersist the op's cache")
   }
 }

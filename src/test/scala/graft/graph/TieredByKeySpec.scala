@@ -22,7 +22,7 @@ class TieredByKeySpec extends graft.SparkSpec {
   test("sink-heavy directed graph picks the shuffle tier past the threshold") {
     // src alone is 3 nodes (144 B of rank rows), src ∪ dst is 2,003 (96 kB)
     val tier = withConf("spark.sql.autoBroadcastJoinThreshold" -> "10000") {
-      val (edges, hinted, _) = Centrality.tieredByKey(sinkHeavy, "src")
+      val (edges, hinted) = Centrality.tieredByKey(sinkHeavy, "src")
       assert(edges.count() == 2000)
       shuffleHinted(hinted)
     }
@@ -30,8 +30,9 @@ class TieredByKeySpec extends graft.SparkSpec {
   }
 
   test("the same graph keeps the broadcast tier under the session threshold") {
-    val (_, hinted, release) = Centrality.tieredByKey(sinkHeavy, "src")
-    assert(!shuffleHinted(hinted))
-    release()
+    graft.core.Scope.within {
+      val (_, hinted) = Centrality.tieredByKey(sinkHeavy, "src")
+      assert(!shuffleHinted(hinted))
+    }
   }
 }

@@ -110,14 +110,11 @@ class TwoLevelSpec extends graft.SparkSpec {
     val base = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.01")
     val vecs = base.union(base.orderBy("vec_id").limit(20)
       .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"), col("label")))
-    def run() = {
-      val (pairs, release) = Semantic.semanticDupsTwoLevelWithRelease(vecs,
+    def run() = graft.core.Scope.within {
+      Semantic.semanticDupsTwoLevel(vecs,
         "vec_id", "embedding", threshold = 0.9, nLists = 8, cProbe = 2,
         maxList = 10000)
-      val out = pairs.as[(Long, Long, Double)].collect()
-        .map(r => (r._1, r._2) -> r._3).toMap
-      release()
-      out
+        .as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
     }
     val cat = run()
     val big = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(run())
@@ -228,11 +225,9 @@ class TwoLevelSpec extends graft.SparkSpec {
     groups.groupBy(_._2).foreach { case (keep, members) =>
       assert(members.map(_._1).min == keep)
     }
-    val (far, release) = Semantic.semanticDedupTwoLevelWithRelease(df, "vec_id",
+    val farRows = graft.core.Scope.within(Semantic.semanticDedupTwoLevel(df, "vec_id",
       "embedding", threshold = 0.9, nLists = 16, cProbe = 2, seed = 42L,
-      keepFarthest = true)
-    val farRows = far.as[(Long, Long, Long)].collect()
-    release()
+      keepFarthest = true).as[(Long, Long, Long)].collect())
     // same groups, one keeper per group, keeper is a member
     assert(farRows.map(_._1).sorted.toSeq == groups.map(_._1).sorted.toSeq)
     farRows.groupBy(_._2).foreach { case (keep, members) =>

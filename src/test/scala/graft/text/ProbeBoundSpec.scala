@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Round-15 pin of the broadcast-probe's length bound (round-14 verdict
-  * #5): the MERGE-hint guards in [[NearDup.minHashDedupWithRelease]]
+  * #5): the MERGE-hint guards in [[NearDup.minHashDedup]]
   * and the t_jaccard probe estimate the exploded-shingle frame from raw
   * text length — if an adversarial corpus makes the estimate read LOW,
   * the guard silently re-admits the AQE broadcast-lie driver build the
