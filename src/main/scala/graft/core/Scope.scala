@@ -80,38 +80,41 @@ object Scope {
     try body finally current.set(prev)
   }
 
-  /** `df.persist(level)`, registered with the current scope if there is
-    * one.
+  /** `df.persist(MEMORY_AND_DISK)`, registered with the current scope if
+    * there is one. The persist (which plans the query) runs outside the
+    * lock that guards the registry; a race on whether the cache was
+    * there before at worst leaves one cache unregistered.
     */
-  def persist(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    active match {
-      case None => df.persist(level)
-      case Some(s) => synchronized {
-        val fresh = Bridge.cachedPlan(df).isEmpty
-        df.persist(level)
-        // a scope closed since `active` read it registers nothing
-        if (!s.closed) Bridge.cachedPlan(df).foreach { plan =>
-          find(df, plan) match {
-            case Some(e) =>
-              if (!s.held.contains(e)) { e.holders += 1; s.held += e }
-            case None =>
-              if (fresh) { val e = new Entry(df, plan); entries += e; s.held += e }
-          }
-        }
-        df
+  def persist(df: DataFrame): DataFrame = {
+    val scope = active
+    val fresh = scope.nonEmpty && Bridge.cachedPlan(df).isEmpty
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    scope.foreach(s => Bridge.cachedPlan(df).foreach(register(s, df, _, fresh)))
+    df
+  }
+
+  private def register(s: Scope, df: DataFrame, plan: LogicalPlan, fresh: Boolean): Unit =
+    synchronized {
+      // a scope closed since `active` read it registers nothing
+      if (!s.closed) find(df, plan) match {
+        case Some(e) =>
+          if (!s.held.contains(e)) { e.holders += 1; s.held += e }
+        case None =>
+          if (fresh) { val e = new Entry(df, plan); entries += e; s.held += e }
       }
     }
 
   /** Gives back, ahead of its scope's close, a cache that an op
     * persisted and no longer reads: the current scope drops its hold,
     * and the cache is unpersisted without blocking unless another open
-    * scope still holds it. A cache that no scope holds (one persisted
-    * outside any scope) is unpersisted at once; one that only other
-    * scopes hold is left to them.
+    * scope still holds it. Outside any scope the cache is unpersisted at
+    * once. Inside a scope, a cache that the scope does not hold (one
+    * persisted outside any scope, or one that only other scopes hold) is
+    * left to its owner.
     */
   def release(df: DataFrame): Unit = synchronized {
     Bridge.cachedPlan(df).flatMap(find(df, _)) match {
-      case None => df.unpersist(blocking = false)
+      case None => if (active.isEmpty) df.unpersist(blocking = false)
       case Some(e) => active.filter(_.held.contains(e)).foreach { s =>
         s.held -= e
         drop(e)

@@ -112,4 +112,19 @@ class ScopeSpec extends SparkSpec {
     assert(mine.storageLevel.useMemory, "the scope released a cache it did not take")
     mine.unpersist()
   }
+
+  test("an op that persists and releases a plan the caller cached outside every scope leaves it") {
+    import spark.implicits._
+    cm.clearCache()
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+    // hits persists and then releases exactly this plan
+    val mine = edges.select("src", "dst").persist()
+    Scope.within(noop(graft.graph.Centrality.hits(edges, iters = 3)))
+    assert(mine.storageLevel.useMemory, "the op's release evicted the caller's cache")
+    assert(entries == 1)
+    mine.unpersist()
+    // outside any scope the same release is a plain unpersist
+    graft.graph.Centrality.hits(edges.select("src", "dst").persist(), iters = 3).count()
+    assert(cm.isEmpty)
+  }
 }
